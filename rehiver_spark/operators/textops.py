@@ -264,9 +264,10 @@ def repetition_stats(
     # trim strips ONLY 0x20 spaces, so a tab/newline-only doc would
     # pass a trim!='' filter with zero tokens and the ratio divisions
     # below would raise DIVIDE_BY_ZERO under ANSI mode). A size(_tk)
-    # filter AFTER the projection gets predicate-pushed INTO it and
-    # re-evaluates the tokenize chain (the x57b cliff class); the
-    # rlike form stays a scan-level pushdown on the raw column
+    # filter AFTER the projection gets predicate-pushed INTO it, so
+    # the tokenize chain runs twice per row (once in the pushed
+    # condition, once in the output); the rlike form stays a
+    # scan-level pushdown on the raw column
     base = df.filter(
         F.col(text_col).isNotNull() & F.col(text_col).rlike(r"\S")
     ).select(
@@ -1780,311 +1781,4 @@ def dedup_substrings(
         F.coalesce(F.col("n_cut_spans"), F.lit(0))
         .cast("bigint")
         .alias("n_cut_spans"),
-    )
-
-
-def dedup_substrings_pruned(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window_tokens: int = 20,
-    min_run: int = 40,
-    impl: str = "arrow",
-) -> DataFrame:
-    """X57's cost knob for 100 TB: :func:`dedup_substrings` shuffles
-    one row per corpus token TWICE. This variant guarantees the
-    published semantics only for duplicated runs of ≥ ``min_run``
-    tokens and, in exchange, shuffles (1) only winnowed fingerprints
-    (expected ~2/(w+1) of positions, w = min_run − window_tokens + 1 —
-    the Schleimer/Wilkerson/Aiken density) to find CANDIDATE docs, then
-    (2) only the candidate docs through the exact stride-1 pipeline.
-    Non-candidate docs pass through untouched (normalized token join —
-    byte-identical to what reconstruction would emit for them).
-
-    Why winnowing and not a positional stride: stride-s sampling is
-    alignment-SENSITIVE — the two copies of a duplicated run generally
-    sit at different offsets mod s, so their sampled windows are
-    different substrings and never collide. Winnowing selects windows
-    by CONTENT (each sliding window of w consecutive L-window hashes
-    keeps its minimum), so identical text selects identical hashes:
-    any duplicated run of ≥ min_run = w + L − 1 tokens fully contains
-    one such w-window in each copy, both select the same min → ≥ 2
-    distinct (doc, pos) selections of that hash → every involved doc
-    becomes a candidate. Guarantee, not heuristic.
-
-    Declared coarsening (the knob's honest price): duplications of
-    length ≥ window_tokens but < min_run are excised only when every
-    involved doc happens to be a candidate anyway; with
-    ``min_run == window_tokens`` (w = 1, every position selected) the
-    result is IDENTICAL to the exact form — test-pinned.
-
-    Keep-first order among candidates is the exact form's (id, pos)
-    rule; docs outside the candidate set cannot claim "first
-    occurrence", which is exactly the restriction stated above.
-
-    ``impl="arrow"`` (default since round 8) runs the per-window
-    argmin selection as one vectorized numpy kernel
-    (``sliding_window_view`` min/argmin, the x50/x51 Arrow-kernel
-    pattern); ``impl="expr"`` keeps it as pure Columns — zero Python,
-    whole plan JVM-side, the oracle-shaped twin. At sf0.1 the two are
-    within 10% of each other (2.76 expr vs 2.99 s arrow) once the
-    REAL bottleneck was fixed — a ``filter(size(_h) > 0)`` that
-    predicate pushdown folded into the hash projection, evaluating
-    the md5 window transform twice (an 8× cliff; see the inline
-    note). At sf10 the margin flips decisively: the w = 15
-    interpreted slice/min HOF costs 33.9 s for the candidate stage vs
-    12.1 s arrow (round-8 measurement, identical candidate sets) —
-    selection is O(n·w) in C vs 15 interpreted lambda evaluations per
-    position, and the Arrow boundary ships only the token-window hash
-    array (small, unlike the per-CHARACTER arrays that made the x14
-    kernel a net loss — see BASELINE round 8). Bit-identical results
-    (exact int64 mins; np.argmin's first-minimum rule ==
-    ``array_position``'s first occurrence; equivalence test-pinned),
-    so the oracle twin certifies both.
-    """
-    src, base, cand_docs, _fp_occ = _winnow_candidates(
-        df, id_col, text_col, window_tokens, min_run, impl
-    )
-    return _assemble_pruned(
-        src, base, cand_docs, id_col, text_col, window_tokens
-    )
-
-
-def _winnow_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    window_tokens: int,
-    min_run: int,
-    impl: str,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Stage 1 of the pruned substring dedup — winnow fingerprint
-    selection and candidate-doc identification. Shared by
-    :func:`dedup_substrings_pruned` and :func:`dedup_substrings_auto`
-    (whose decision probe IS this stage, so choosing the pruned branch
-    wastes nothing). Returns (src, base, cand_docs, fp_occ); the
-    fingerprint occurrences and candidate set are persisted (2-3
-    consumers each — see the persist note inline). ``fp_occ`` is
-    returned so a caller that abandons this stage (the auto dial's
-    exact branch) can unpersist BOTH relations promptly instead of
-    leaving them to the track_persist high-water eviction."""
-    from rehiver_spark.functions.hashing import md5_hash60
-
-    L, R = window_tokens, min_run
-    if R < L:
-        raise ValueError(f"min_run ({R}) must be >= window_tokens ({L})")
-    w = R - L + 1
-    src = ensure_parallelism(df)
-    toks = tokens(F.col(text_col))
-    base = src.select(F.col(id_col), toks.alias("_t"))
-    n_win = F.greatest(F.size(F.col("_t")) - L + 1, F.lit(0))
-    wins = F.transform(
-        F.sequence(F.lit(1), n_win),
-        lambda i: md5_hash60(F.array_join(F.slice(F.col("_t"), i, L), " ")),
-    )
-    # projection BARRIER (the X14 lesson): the hash array must
-    # materialize once per row — inlined into the per-window slice
-    # lambda it re-hashes per window, O(n·w) md5 calls
-    hashed = base.select(
-        id_col,
-        F.when(n_win > 0, wins)
-        .otherwise(F.array().cast("array<bigint>"))
-        .alias("_h"),
-    )
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-    # NO ``filter(size(_h) > 0)`` here: predicate pushdown folds the
-    # filter INTO the hash projection and the md5 transform evaluates
-    # twice (once in the pushed condition, once in the output) —
-    # measured 0.44 → 3.42 s at sf0.1, an 8× cliff. Empty docs are
-    # instead dropped inside each impl (the kernel skips them; the
-    # expr form's when-gate yields NULL, which explode drops) — the
-    # same gating discipline dedup_substrings uses for its explode.
-    if impl == "arrow":
-        from rehiver_spark.session import ship_package
-
-        ship_package(df.sparkSession)
-        # the id column keeps ITS OWN type end-to-end: the output
-        # schema echoes hashed's id field (string ids are as valid as
-        # longs — the exact path and the expr impl both handle them),
-        # and inside the kernel ids stay in the input Series' dtype
-        # rather than being forced through np.int64
-        id_dt = hashed.schema[id_col].dataType.simpleString()
-
-        def _select(batches):
-            import numpy as np
-            import pandas as pd
-            from numpy.lib.stride_tricks import sliding_window_view
-
-            for pdf in batches:
-                ids, poss, fps = [], [], []
-                for did, h in zip(pdf[id_col], pdf["_h"]):
-                    a = np.asarray(h, dtype=np.int64)
-                    if len(a) == 0:
-                        continue
-                    if len(a) >= w:
-                        win = sliding_window_view(a, w)
-                        # first-minimum argmin == array_position's
-                        # first occurrence == the expr tie-break
-                        pos = np.unique(np.arange(len(win)) + win.argmin(axis=1)) + 1
-                    else:
-                        pos = np.array([a.argmin() + 1])
-                    ids.extend([did] * len(pos))
-                    poss.extend(pos.tolist())
-                    fps.extend(a[pos - 1].tolist())
-                # explicit dtypes: an empty batch would otherwise
-                # yield object columns Arrow cannot cast (ids inherit
-                # the input column's dtype, int or object alike)
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
-                        "pos": np.asarray(poss, dtype=np.int32),
-                        "fp": np.asarray(fps, dtype=np.int64),
-                    }
-                )
-
-        fp_occ = hashed.mapInPandas(
-            _select, f"{id_col} {id_dt}, pos int, fp long"
-        )
-    else:
-        n_sel = F.greatest(F.size(F.col("_h")) - w + 1, F.lit(1))
-        mins = F.transform(
-            F.sequence(F.lit(1), n_sel),
-            lambda i: F.struct(
-                (
-                    i
-                    + F.array_position(
-                        F.slice(F.col("_h"), i, w),
-                        F.array_min(F.slice(F.col("_h"), i, w)),
-                    )
-                    - 1
-                ).alias("pos"),
-                F.array_min(F.slice(F.col("_h"), i, w)).alias("fp"),
-            ),
-        )
-        sel = F.when(F.size(F.col("_h")) > 0, F.array_distinct(mins))
-        fp_occ = (
-            hashed.select(id_col, F.explode(sel).alias("_f")).select(
-                id_col, F.col("_f.pos").alias("pos"), F.col("_f.fp").alias("fp")
-            )
-        )
-    # a fingerprint hash selected at >= 2 distinct (doc, pos) sites —
-    # across docs OR twice within one doc — marks every holder doc a
-    # candidate; the count shuffles only fingerprint rows. fp_occ and
-    # cand_docs are PERSISTED (winnow-density-sized, ~2n/(w+1) rows
-    # and |candidate docs| rows): each is read by 2-3 consumers below,
-    # and without the persist every consumer re-derives the whole
-    # hash+select pass — measured 5.6 → 2.9 s at sf0.1
-    from rehiver_spark.session import track_persist
-
-    fp_occ = track_persist(fp_occ)
-    dup_fp = (
-        fp_occ.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") >= 2)
-        .select("fp")
-    )
-    cand_docs = track_persist(
-        fp_occ.join(dup_fp, "fp", "left_semi").select(id_col).distinct()
-    )
-    return src, base, cand_docs, fp_occ
-
-
-def _assemble_pruned(
-    src: DataFrame,
-    base: DataFrame,
-    cand_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    L: int,
-) -> DataFrame:
-    """Stage 2 of the pruned substring dedup: the exact stride-1
-    pipeline over candidate docs only, normalized-token passthrough
-    for everyone else."""
-    deduped = dedup_substrings(
-        src.join(cand_docs, id_col, "left_semi"), id_col, text_col, L
-    )
-    passthru = base.join(cand_docs, id_col, "left_anti").select(
-        id_col,
-        F.coalesce(F.array_join(F.col("_t"), " "), F.lit("")).alias(
-            "cleaned_text"
-        ),
-        F.coalesce(F.size(F.col("_t")), F.lit(0))
-        .cast("bigint")
-        .alias("n_tokens_before"),
-        F.coalesce(F.size(F.col("_t")), F.lit(0))
-        .cast("bigint")
-        .alias("n_tokens_after"),
-        F.lit(0).cast("bigint").alias("n_cut_spans"),
-    )
-    return deduped.unionByName(passthru)
-
-
-def dedup_substrings_auto(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window_tokens: int = 20,
-    min_run: int = 40,
-    density_cutoff: float | None = None,
-    impl: str = "arrow",
-) -> DataFrame:
-    """Dial between :func:`dedup_substrings` (exact) and
-    :func:`dedup_substrings_pruned` (r6 verdict task 3).
-
-    ``density_cutoff=None`` (the default since r12) short-circuits to
-    the EXACT branch with NO probe. The r6-era operating curve
-    ("pruned wins at 9% candidate density") was re-measured on the
-    r12 tree and the pruned branch is now DOMINATED at every operating
-    point — real fixture sf0.1 8.6% density: exact 2.34 s vs pruned
-    4.01 s; real sf10 31%: 13.64 vs 18.63; synthetic short-doc 500k
-    corpus at 1/5/15% planted density: 7.3 vs 8.5-10.7; synthetic
-    long-doc (400-token) corpus at 1/8%: 20.8 vs 24.5-25.7 (receipts
-    in BASELINE.md §Round 12). The r11 winnow zip_with/least cascade
-    sped the fingerprint SELECTION, but the pruned pipeline still pays
-    the full winnow pass (~2/3 of the exact pass's total cost at sf10)
-    before restricting anything — the restriction never earns it back.
-    Choose :func:`dedup_substrings_pruned` explicitly when you want
-    its RELAXED contract (only runs ≥ ``min_run`` removed), not for
-    speed.
-
-    A numeric ``density_cutoff`` keeps the legacy measured dial:
-    candidate density is computed from the pruned form's own stage 1
-    (winnow fingerprints → docs holding a ≥2-site fingerprint), fully
-    reused when the decision is "pruned"; the decision is logged
-    (``rehiver_spark.operators.textops`` logger, INFO) and the legacy
-    path stays EAGER (two count() jobs before the lazy plan returns).
-    Semantics follow the chosen branch; forced-branch equivalence is
-    property-tested in tests/test_property.py.
-    """
-    import logging
-
-    if density_cutoff is None:
-        logging.getLogger(__name__).info(
-            "dedup_substrings_auto: exact branch (r12 default — pruned "
-            "measured dominated at every operating point, no probe run)"
-        )
-        return dedup_substrings(df, id_col, text_col, window_tokens)
-    src, base, cand_docs, fp_occ = _winnow_candidates(
-        df, id_col, text_col, window_tokens, min_run, impl
-    )
-    n_docs = src.count()
-    n_cand = cand_docs.count() if n_docs else 0
-    density = (n_cand / n_docs) if n_docs else 0.0
-    chosen = "exact" if density > density_cutoff else "pruned"
-    logging.getLogger(__name__).info(
-        "dedup_substrings_auto: %d/%d candidate docs (density %.3f, "
-        "cutoff %.3f) -> %s branch",
-        n_cand, n_docs, density, density_cutoff, chosen,
-    )
-    if chosen == "exact":
-        # stage-1 relations are probe-only on this branch — release
-        # their cached partitions now (the pruned branch instead reuses
-        # both in the result plan, where unpersisting early would void
-        # the persist)
-        fp_occ.unpersist()
-        cand_docs.unpersist()
-        return dedup_substrings(src, id_col, text_col, window_tokens)
-    return _assemble_pruned(
-        src, base, cand_docs, id_col, text_col, window_tokens
     )

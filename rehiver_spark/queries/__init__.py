@@ -13,7 +13,7 @@ group module:
 
 Registry ORDER (which decides the driver's 50-query correctness
 window) is set explicitly by :func:`load_all` after all imports —
-see the rotation note there.
+see the ``_DRIVER_WINDOW`` note.
 
 Conventions (FIXTURES.md determinism rules):
 - every aggregate/computed column is aliased IDENTICALLY in Spark and
@@ -49,52 +49,11 @@ def query(name: str, oracle: str | None = None):
 
 
 # The driver's correctness harness records only the FIRST 50 entries
-# of the registry, so the front of the dict is a scarce resource the
-# rounds rotate deliberately.
-#
-# STANDING ROTATION POLICY (adopted round 7, per the r6 verdict):
-#   1. every query gets a driver row at least every 3 rounds — a name
-#      whose newest driver row is 3 rounds old MUST enter the next
-#      window;
-#   2. queries materially touched in a round (operator code or query
-#      body changed) always enter the NEXT round's window;
-#   3. brand-new queries enter the window of the round that adds them;
-#   4. remaining slots fill with the oldest-evidence names first.
-#
-# Round-13 window under that policy (history: r2-r3 recorded r/c; r4
-# rotated x/e in; r5 rotated the 44 displaced r/c back + x40 + 5
-# touched; r6 recorded the 19 never-recorded r5 additions + x57b + 30
-# r4-stale; r7 recorded the 15 r4-stale + x22b + 2 touched + 6
-# streaming + 4 mm_* + 18 r + c1-c4; r8 recorded the 19 committed
-# r5-stale + x25 + x57c + 5 touched + 26 r6-row holders; r9 recorded
-# the committed 21 sketch/stream/BPE names + 6 touched + mm_* + the
-# full r-surface; r10 recorded its committed 20 + 7 touched + the
-# c5-c18 block + x1-x5 + x10/x11; r11 recorded its committed 24 +
-# c17d2 + 5 touched + the x41-x57 sketch/stream/BPE block; r12
-# recorded its committed 21 + 5 touched + 24 r10-row holders):
-#   - the committed 23 (pre-declared in round 12 as _R13_COMMITTED):
-#     the core relational c-block whose r10 rows turn 3 rounds old
-#     here (rule 1) plus x57c/x9/x9p, touched in r12 AFTER that
-#     round's window was recorded (rule 2) — FIRST;
-#   - touched this round (rule 2): r1/r2/r3 (fixed-width '!(p)rest'
-#     exact classes in the Column glob compiler), r10/r11/r12 (the
-#     bucketed snapshot store), x2/x17 (PPJoin+ length filter in
-#     jaccard_pairs), x7/x7p/x29 (auto-scaled est-gate margin), x40
-#     (per-gram source-set re-plan);
-#   - 15 of the 42 remaining r11-row holders (rule 4 — oldest
-#     evidence first, families contiguous): x12-x28/x31 text/dedup
-#     block. (x57b was demoted from the registry mid-round and then
-#     restored — the optimization-phase contract freezes the declared
-#     set; it sits outside the window on its r11 row + pytest pin —
-#     BASELINE §Round 13.)
-# OUTSIDE the window and why that is safe: every name not listed has
-# an r11 or r12 driver row on code untouched since; the 27 leftover
-# r11-row holders are the committed r14 window under rule 1
-# (_R14_COMMITTED below).
-_R14_COMMITTED = (
-    # the 27 r11-row holders the r13 rotation could not fit — their
-    # rows turn 3 rounds old in r14, so they MUST enter that window
-    # (rule 1), plus whatever r14 touches (rule 2)
+# of the registry. Rule for this window: a query touched by a change
+# (operator code or query body changed) enters it; the names with the
+# oldest driver evidence fill the rest. Every query outside it is
+# re-verified locally by tools/check_oracle.py (the identical gate).
+_DRIVER_WINDOW = (
     "c17d2_stream_join_linear", "x22b_semdedup_scaled",
     "x32_corpus_report", "x33_quality_select", "x36_vocab_topk",
     "x37_chunk_reassembly", "x38_corpus_drift", "x39_hybrid_search",
@@ -105,108 +64,22 @@ _R14_COMMITTED = (
     "x54_pipeline_yield", "x55_sketch_filter", "x56_stream_hdr",
     "x57_substring_dedup", "x6c_portable_sample", "x8_simhash_pairs",
     "x8p_simhash",
-)
-_R13_COMMITTED = (
-    # kept for the r12→r13 audit trail (test_engine pins the r13
-    # window starts with exactly these 23)
-    "c1_projection", "c2_filter", "c3_join", "c4_range_join",
-    "c5_asof_join", "c6_agg", "c6b_percentile", "c7_rollup", "c7b_cube",
-    "c8_window", "c9_topk", "c10_setops", "c10b_except_all",
-    "c11_string", "c12_datetime", "c13_math", "c14_array", "c15_json",
-    "c16_dedup", "c18_pandas_udf",
-    "x57c_substring_dedup_auto", "x9_lsh_cosine_neardup", "x9p_lsh_cosine",
-)
-_R13_WINDOW = (
-    # kept for the r13→r14 audit trail (the round-13 window exactly)
-    *_R13_COMMITTED,
-    "r1_glob_match", "r2_glob_filter", "r3_path_capture",
-    "r10_detect_changes", "r11_changes_filter", "r12_snapshot_commit",
-    "x2_jaccard_pairs", "x7_minhash_pairs", "x7p_minhash_lsh",
-    "x17_dedup_clusters", "x29_fuzzy_dedup", "x40_source_overlap",
-    "x12_redact_pii", "x13_stratified_sample", "x15_contamination",
-    "x16_repetition", "x19_pipeline", "x20_training_mix",
-    "x21_winnow_contamination", "x21f_winnow_fast", "x23_span_dedup",
-    "x24_url_dedup", "x25_charlm_quality", "x26_quantize_int8",
-    "x27_line_dedup", "x28_incremental_dedup",
-    "x31_semantic_decontamination",
-)
-_R15_COMMITTED = (
-    # the 26 r12-row holders the r14 rotation could not fit — their
-    # rows turn 3 rounds old in r15, so they MUST enter that window
-    # (rule 1), plus whatever r15 touches (rule 2)
-    "c18b_python_udtf",
-    "r4_partition_parse", "r5_partition_format", "r6_partition_prune",
-    "r7_missing_keys", "r8_time_partition_path", "r8b_time_path_tz",
-    "r9_time_range_paths", "r13_s3key_codec", "r14_valid_bucket_name",
-    "r15_content_type", "r16_object_catalog", "r17_stream_process",
-    "x1_exact_dedup", "x3_cosine_topk", "x4_text_stats", "x5_tf_idf",
-    "x6_approx", "x6b_sampling", "x10_ivf_topk", "x11_chunking",
-    "x18_sequence_packing", "x30_zorder_layout", "x35_epoch_shuffle",
-    "x46_bpe_learn", "x46b_bpe_apply",
-)
-# Round-14 window under the standing policy, rotated AFTER the round's
-# last code commit (the r13 verdict's task 5 — no window query may run
-# code newer than its last driver row):
-#   - the committed 27 (_R14_COMMITTED: r11-row holders whose rows turn
-#     3 rounds old here, rule 1) — FIRST;
-#   - touched this round (rule 2): x9/x9p (dgemm-screen verify kernel +
-#     BLAS thread cap), x14/x21/x21f (byte-sliced winnow grams),
-#     r10/r11/r12/x28 (bucketed-scan ordering flag), x22 (matmul
-#     kernels under the BLAS cap);
-#   - the five post-rotation r13 touches the r13 window missed
-#     (verdict task 5; rotation rule 2 names them): x57b, x34, c17c,
-#     c17d, c17f (x8/x8p/x57/x44/x52/x56/c17d2 are already in the
-#     committed 27);
-#   - remaining 8 slots (rule 4, oldest evidence first, families
-#     contiguous): the mm_* block and the rest of the c17 family
-#     (r12 rows).
-# OUTSIDE and why that is safe: every name not listed has an r12 or
-# r13 driver row on code untouched since; the 26 leftover r12-row
-# holders are the committed r15 window (_R15_COMMITTED above).
-_DRIVER_WINDOW = (
-    *_R14_COMMITTED,
-    # touched this round (rule 2)
-    "x9_lsh_cosine_neardup",
-    "x9p_lsh_cosine",
-    "x14_winnow_fingerprints",
-    "x21_winnow_contamination",
-    "x21f_winnow_fast",
-    "r10_detect_changes",
-    "r11_changes_filter",
-    "r12_snapshot_commit",
-    "x28_incremental_dedup",
-    "x22_semdedup",
-    # post-rotation r13 touches without a driver row on current code
-    "x57b_substring_dedup_pruned",
-    "x34_incremental_neardup",
-    "c17c_streaming_exec",
-    "c17d_stream_join",
-    "c17f_stream_dedup",
-    # oldest-evidence fill (rule 4), families contiguous
-    "mm_decode",
-    "mm_features",
-    "mm_frame_plan",
-    "mm_resize",
-    "c17_tumbling_window",
-    "c17_session_window",
-    "c17e_stream_static_join",
-    "c17g_sliding_window",
+    "x9_lsh_cosine_neardup", "x9p_lsh_cosine",
+    "x14_winnow_fingerprints", "x21_winnow_contamination",
+    "x21f_winnow_fast", "r10_detect_changes", "r11_changes_filter",
+    "r12_snapshot_commit", "x28_incremental_dedup", "x22_semdedup",
+    "c18b_python_udtf", "x34_incremental_neardup",
+    "c17c_streaming_exec", "c17d_stream_join", "c17f_stream_dedup",
+    "mm_decode", "mm_features", "mm_frame_plan", "mm_resize",
+    "c17_tumbling_window", "c17_session_window",
+    "c17e_stream_static_join", "c17g_sliding_window",
 )
 
 
 def load_all() -> None:
-    """Import all group modules (idempotent), then order the registry.
-
-    Import order alone does not control the driver window: after the
-    imports, the registry is reordered to the explicit 50-name
-    ``_DRIVER_WINDOW`` (round-14 rotation under the standing policy —
-    see the note above), with everything else after in import order.
-    Every query outside the window keeps its r12/r13 driver row on
-    untouched code (the leftover r12-row holders are the committed r15
-    window), and all are re-verified locally by tools/check_oracle.py
-    (the identical gate). Do not change ``_DRIVER_WINDOW`` without
-    checking driver-window coverage (tests/test_engine.py pins it).
-    """
+    """Import all group modules (idempotent), then order the registry:
+    the 50 ``_DRIVER_WINDOW`` names first, everything else after in
+    import order (tests/test_engine.py pins the window)."""
     from rehiver_spark.queries import x_ops  # noqa: F401  (isort: skip)
     from rehiver_spark.queries import e_ops  # noqa: F401  (X28-X57 + c18b + c17g)
     from rehiver_spark.queries import r_ops  # noqa: F401

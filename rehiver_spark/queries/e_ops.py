@@ -1,13 +1,9 @@
-"""X28–X57b + C18b + C17g: round-4/5/6 scale-path extensions (SURVEY
-§2 Part B) — 35 queries.
+"""X28–X57 + C18b + C17g: round-4/5 scale-path extensions (SURVEY
+§2 Part B) — 34 queries.
 
-Import order no longer decides the driver's 50-query correctness
+Import order does not decide the driver's 50-query correctness
 window: ``load_all`` reorders the registry explicitly after importing
-all modules (see ``rehiver_spark/queries/__init__.py``). The round-6
-rotation puts this module's never-recorded r5 additions (x41–x57
-incl. the streaming-state trio and x21f) and the new x57b inside the
-window; the rest keep their r4/r5 driver rows or the judge's
-r5-session oracle re-runs.
+all modules (see ``rehiver_spark/queries/__init__.py``).
 
 Round-4 block:
 - X28 incremental exact dedup: dedup a new batch against a persisted
@@ -56,11 +52,6 @@ Round-5 block:
 - X53 ANN recall audit (measured n_probe operating curve).
 - X54 curation yield report / X55 sketch-driven outlier filter.
 - X57 exact substring dedup at any alignment (Lee et al. stride-1).
-
-Round-6 block:
-- X57b substring-dedup cost knob: winnow-fingerprint candidate
-  pre-filter (guaranteed for duplicated runs ≥ min_run), exact
-  stride-1 pass over candidates only.
 """
 
 from __future__ import annotations
@@ -2093,193 +2084,6 @@ def _x57_sql() -> str:
     LEFT JOIN rebuilt r USING (doc_id)
     LEFT JOIN spans s USING (doc_id)
     """
-
-
-_SSD_R = 29  # pruned-variant min_run → winnow window w = R − L + 1 = 15
-
-
-def _x57b_sql() -> str:
-    from rehiver_spark.functions.hashing import md5_hash60_sql
-
-    L, R = _SSD_L, _SSD_R
-    w = R - L + 1
-    h = md5_hash60_sql(f"array_to_string(t[i:i+{L - 1}], ' ')")
-    win = f"h[i:i+{w - 1}]"
-    return f"""
-    WITH base AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-    harr AS (
-      SELECT doc_id, t,
-        CASE WHEN len(t) >= {L}
-          THEN list_transform(range(1, len(t) - {L} + 2), i -> {h})
-          ELSE []::BIGINT[] END AS h
-      FROM base
-    ),
-    fps AS (
-      SELECT DISTINCT doc_id,
-        i + list_position({win}, list_min({win})) - 1 AS pos,
-        list_min({win}) AS fp
-      FROM harr, unnest(range(1, greatest(len(h) - {w} + 1, 1) + 1)) AS u(i)
-      WHERE len(h) > 0
-    ),
-    dupfp AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) >= 2),
-    cand AS (
-      SELECT DISTINCT doc_id FROM fps WHERE fp IN (SELECT fp FROM dupfp)
-    ),
-    occ AS (
-      SELECT b.doc_id, i AS pos, {h.replace("t[", "b.t[")} AS hh
-      FROM (SELECT base.doc_id, base.t AS t FROM base JOIN cand USING (doc_id)) b,
-        unnest(range(1, greatest(len(b.t) - {L} + 1, 0) + 1)) AS u(i)
-    ),
-    cut AS (
-      SELECT doc_id, pos FROM (
-        SELECT doc_id, pos,
-          row_number() OVER (PARTITION BY hh ORDER BY doc_id, pos) AS rn
-        FROM occ
-      ) WHERE rn > 1
-    ),
-    isl AS (
-      SELECT doc_id, pos,
-        sum(new) OVER (PARTITION BY doc_id ORDER BY pos
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-      FROM (
-        SELECT doc_id, pos,
-          CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END AS new
-        FROM (
-          SELECT doc_id, pos,
-            max(pos + {L}) OVER (PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-          FROM cut
-        )
-      )
-    ),
-    iv AS (
-      SELECT doc_id, g, min(pos) AS s, max(pos) + {L} AS e
-      FROM isl GROUP BY doc_id, g
-    ),
-    tok_rows AS (
-      SELECT b.doc_id, i AS idx, b.t[i] AS tok
-      FROM (SELECT base.doc_id, base.t AS t FROM base JOIN cand USING (doc_id)) b,
-        unnest(range(1, len(b.t) + 1)) AS u(i)
-    ),
-    kept AS (
-      SELECT tr.doc_id, tr.idx, tr.tok FROM tok_rows tr
-      WHERE NOT EXISTS (
-        SELECT 1 FROM iv
-        WHERE iv.doc_id = tr.doc_id AND tr.idx >= iv.s AND tr.idx < iv.e
-      )
-    ),
-    rebuilt AS (
-      SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS cleaned,
-        CAST(count(*) AS BIGINT) AS n_after
-      FROM kept GROUP BY doc_id
-    ),
-    spans AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans FROM iv GROUP BY doc_id)
-    SELECT b.doc_id,
-      CASE WHEN c.doc_id IS NOT NULL
-        THEN substr(sha256(coalesce(r.cleaned, '')), 1, 16)
-        ELSE substr(sha256(coalesce(array_to_string(b.t, ' '), '')), 1, 16)
-      END AS cleaned_sha16,
-      CAST(coalesce(len(b.t), 0) AS BIGINT) AS n_tokens_before,
-      CAST(CASE WHEN c.doc_id IS NOT NULL
-        THEN coalesce(r.n_after, 0) ELSE coalesce(len(b.t), 0)
-      END AS BIGINT) AS n_tokens_after,
-      CAST(CASE WHEN c.doc_id IS NOT NULL
-        THEN coalesce(s.n_spans, 0) ELSE 0 END AS BIGINT) AS n_cut_spans
-    FROM base b
-    LEFT JOIN cand c USING (doc_id)
-    LEFT JOIN rebuilt r USING (doc_id)
-    LEFT JOIN spans s USING (doc_id)
-    """
-
-
-@query("x57b_substring_dedup_pruned", _x57b_sql())
-def x57b_substring_dedup_pruned(spark, sf_dir):
-    """X57b: the 100 TB cost knob on X57 — winnow-fingerprint candidate
-    pre-filter (guarantee: every duplicated run ≥ min_run = 29 tokens
-    is excised exactly as X57 excises it; Schleimer/Wilkerson/Aiken
-    selection, so the filter is alignment-INVARIANT), then the exact
-    stride-1 pipeline over candidate docs only. Shuffle volume drops
-    from 2× corpus tokens to ~2/(w+1) of positions (fingerprints) plus
-    the candidate subset — the knob a 100 TB run turns when the full
-    Lee-et-al pass is too expensive. min_run == L degenerates to X57
-    exactly (test-pinned).
-
-    Adjudication note (r13): the pruned branch measured dominated-or-
-    tied at every operating point across two rounds of grids — r12:
-    real sf0.1 2.34 vs 4.01 s, real sf10 13.6 vs 18.6 s, 400-token
-    synthetic 20.8 vs 24.5 s; r13 (the judge-suggested long-doc
-    regime): 30k × 1500-token docs at 1% planted density, w = 50
-    (min_run 64): exact 20.3 vs pruned 19.97 s (a tie inside noise),
-    w = 114 (min_run 128): 19.04 vs 19.31 s. The winnow selection pass
-    is per-token map work comparable to the exact pass's, so only
-    shuffle shrinks — never enough to pay for the extra pass at any
-    tested shape (BASELINE.md §Round 13). The r12 verdict's option-b
-    demotion was applied mid-r13 and then REVERSED in the same round:
-    the optimization-phase contract freezes the declared query set
-    (a query that disappears is a regression regardless of speed), so
-    the query stays registered; the dominated-branch finding stands
-    as documentation (X57auto already dispatches to the exact branch
-    by default), and the pytest oracle pin in tests/test_textops.py
-    is kept as belt-and-braces evidence."""
-    from rehiver_spark.operators.textops import dedup_substrings_pruned
-
-    d = tables(spark, sf_dir, ["documents"])["documents"]
-    out = dedup_substrings_pruned(
-        d, window_tokens=_SSD_L, min_run=_SSD_R
-    )
-    return out.select(
-        "doc_id",
-        F.substring(F.sha2(F.col("cleaned_text"), 256), 1, 16).alias(
-            "cleaned_sha16"
-        ),
-        "n_tokens_before",
-        "n_tokens_after",
-        "n_cut_spans",
-    )
-
-
-def _x57c_sql() -> str:
-    """Oracle twin of the substring-dedup dial's r12 DEFAULT: the
-    exact branch, short-circuited with no probe. The r6-era density
-    dispatch was re-measured on the r12 tree and the pruned branch is
-    dominated at every operating point (BASELINE.md §Round 12), so
-    ``dedup_substrings_auto``'s default emits exactly the x57 body —
-    this oracle pins that short-circuit end-to-end; the legacy numeric
-    dial (probe + CASE dispatch) stays covered by the forced-branch
-    property tests and the crossover unit test."""
-    return _x57_sql()
-
-
-@query("x57c_substring_dedup_auto", _x57c_sql())
-def x57c_substring_dedup_auto(spark, sf_dir):
-    """X57auto as a declared query (r7 verdict task 2; re-dialed r12):
-    the dial between X57's exact stride-1 substring dedup and X57b's
-    winnow-pruned form. Since r12 the DEFAULT short-circuits to the
-    exact branch with no probe — the pruned branch measured dominated
-    at every operating point on the current tree (sf0.1 8.6% density:
-    2.34 vs 4.01 s; sf10 31%: 13.6 vs 18.6 s; synthetic 1-15%
-    short/long-doc corpora all the same way — receipts in BASELINE.md
-    §Round 12), so the probe would be pure overhead (~2/3 of the exact
-    pass at sf10). This query pins the short-circuit: auto's default
-    output must hash-match the exact body. A numeric density_cutoff
-    keeps the legacy measured dial (property- and unit-tested).
-    Reference parity: the pick-the-cheap-path-automatically pattern of
-    findMatchingObjects (src/index.ts:1237-1366)."""
-    from rehiver_spark.operators.textops import dedup_substrings_auto
-
-    d = tables(spark, sf_dir, ["documents"])["documents"]
-    out = dedup_substrings_auto(
-        d, window_tokens=_SSD_L, min_run=_SSD_R
-    )
-    return out.select(
-        "doc_id",
-        F.substring(F.sha2(F.col("cleaned_text"), 256), 1, 16).alias(
-            "cleaned_sha16"
-        ),
-        "n_tokens_before",
-        "n_tokens_after",
-        "n_cut_spans",
-    )
 
 
 @query("x57_substring_dedup", _x57_sql())

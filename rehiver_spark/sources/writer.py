@@ -81,8 +81,19 @@ def write_bucketed(
     Bucketing requires the session catalog (``saveAsTable``); plain
     ``.save(path)`` silently drops bucket specs — that is a Spark
     constraint, not a choice.
+
+    The input is repartitioned on the bucket columns first, so every
+    bucket is exactly ONE file: otherwise each write task emits its
+    own file per bucket, and Spark reports a bucketed scan's sortBy
+    ordering only for single-file buckets (without it the join keeps
+    a Sort on each side).
     """
-    w = df.write.mode(mode).format(fmt).bucketBy(n_buckets, *bucket_cols)
+    w = (
+        df.repartition(n_buckets, *bucket_cols)
+        .write.mode(mode)
+        .format(fmt)
+        .bucketBy(n_buckets, *bucket_cols)
+    )
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)

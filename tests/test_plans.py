@@ -378,18 +378,6 @@ def test_x51_seeding_plan_is_take_ordered(spark):
     assert "Window" not in plan
 
 
-def test_x57b_pruned_fingerprint_phase_shape(spark, queries):
-    """X57b's reason to exist is shuffle volume: the candidate
-    pre-filter must never cartesian, the candidate-doc restriction
-    must ride semi/anti joins (broadcast at this scale — the
-    fingerprint relation is the only thing shuffled), and the gram
-    hash array must materialize behind the projection barrier (the
-    X14 lesson: inlined, it re-hashes per window)."""
-    p = plan_of(queries["x57b_substring_dedup_pruned"](spark, SF))
-    assert "CartesianProduct" not in p
-    assert "LeftSemi" in p and "LeftAnti" in p
-
-
 def test_x22b_adaptive_semdedup_has_no_cartesian_pair_stage(spark, queries):
     """The k∝N dial must keep the SemDeDup scaling shape: centroid
     assignment is the round-8 map-only Arrow kernel (the collected

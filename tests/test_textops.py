@@ -718,122 +718,6 @@ def test_dedup_substrings_on_real_corpus_matches_reference(spark):
     assert any(b != a for b, a, _ in got.values())  # fixture has real dups
 
 
-def test_dedup_substrings_pruned_min_run_eq_L_is_exact(spark):
-    """min_run == window_tokens ⇒ w = 1 ⇒ every position fingerprinted
-    ⇒ every doc holding any duplicated window is a candidate — the
-    pruned form must be IDENTICAL to the exact form (the knob's zero
-    setting), on the real corpus."""
-    from rehiver_spark.operators.textops import (
-        dedup_substrings,
-        dedup_substrings_pruned,
-    )
-
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    key = lambda r: (  # noqa: E731
-        r["doc_id"],
-        r["cleaned_text"],
-        r["n_tokens_before"],
-        r["n_tokens_after"],
-        r["n_cut_spans"],
-    )
-    exact = sorted(map(key, dedup_substrings(df, window_tokens=15).collect()))
-    pruned = sorted(
-        map(
-            key,
-            dedup_substrings_pruned(
-                df, window_tokens=15, min_run=15
-            ).collect(),
-        )
-    )
-    assert exact == pruned
-
-
-def test_dedup_substrings_pruned_guarantees_long_runs(spark):
-    """Any duplicated run ≥ min_run tokens must be excised exactly as
-    the exact form excises it (winnowing guarantee), while a short
-    cross-doc duplication (≥ L, < min_run) between two otherwise
-    duplicate-free docs is the declared miss."""
-    from rehiver_spark.operators.textops import (
-        dedup_substrings,
-        dedup_substrings_pruned,
-    )
-
-    L, R = 8, 16
-    long_run = " ".join(f"r{i}" for i in range(R))  # exactly min_run tokens
-    short_run = " ".join(f"s{i}" for i in range(L))  # L tokens < min_run
-    filler1 = " ".join(f"a{i}" for i in range(10))
-    filler2 = " ".join(f"b{i}" for i in range(10))
-    docs = [
-        (0, filler1 + " " + long_run + " tail0"),
-        (1, "head1 " + long_run + " " + filler2),  # different alignment
-        (2, "head2 " + short_run + " tail2"),
-        (3, "head3x " + short_run + " tail3x"),
-        (4, "totally unrelated words only here"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    exact = {
-        r["doc_id"]: (r["cleaned_text"], r["n_cut_spans"])
-        for r in dedup_substrings(df, window_tokens=L).collect()
-    }
-    pruned = {
-        r["doc_id"]: (r["cleaned_text"], r["n_cut_spans"])
-        for r in dedup_substrings_pruned(
-            df, window_tokens=L, min_run=R
-        ).collect()
-    }
-    # the >= min_run duplication: both involved docs handled exactly
-    assert pruned[0] == exact[0] and pruned[1] == exact[1]
-    assert pruned[1][1] >= 1  # doc 1's copy of the long run was cut
-    # the short duplication's docs are not candidates: pass through
-    assert pruned[2][1] == 0 and pruned[3][1] == 0
-    assert exact[3][1] == 1  # ...which the exact form does excise
-    # untouched doc identical either way
-    assert pruned[4] == exact[4]
-
-
-def test_dedup_substrings_pruned_rejects_bad_min_run(spark):
-    import pytest as _pytest
-
-    from rehiver_spark.operators.textops import dedup_substrings_pruned
-
-    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="min_run"):
-        dedup_substrings_pruned(df, window_tokens=10, min_run=9)
-
-
-def test_dedup_substrings_pruned_arrow_equals_expr(spark):
-    """The Arrow selection kernel must be bit-identical to the pure
-    Column form (np.argmin first-minimum == array_position first
-    occurrence), on the real corpus."""
-    from rehiver_spark.operators.textops import dedup_substrings_pruned
-
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    key = lambda r: (  # noqa: E731
-        r["doc_id"],
-        r["cleaned_text"],
-        r["n_tokens_before"],
-        r["n_tokens_after"],
-        r["n_cut_spans"],
-    )
-    a = sorted(
-        map(
-            key,
-            dedup_substrings_pruned(
-                df, window_tokens=15, min_run=29, impl="arrow"
-            ).collect(),
-        )
-    )
-    e = sorted(
-        map(
-            key,
-            dedup_substrings_pruned(
-                df, window_tokens=15, min_run=29, impl="expr"
-            ).collect(),
-        )
-    )
-    assert a == e
-
-
 def test_repetition_stats_whitespace_only_docs_emit_no_row(spark):
     """r6 advisor (high): Spark's trim strips only 0x20 spaces, so a
     tab/newline-only document slipped past the old trim!=''
@@ -859,142 +743,6 @@ def test_repetition_stats_whitespace_only_docs_emit_no_row(spark):
     rows = repetition_stats(df).collect()
     assert [r["doc_id"] for r in rows] == [6]
     assert rows[0]["n_tokens"] == 4
-
-
-def test_dedup_substrings_pruned_arrow_handles_string_ids(spark):
-    """r6 advisor (low): the arrow path hard-coded the id column as
-    long (np.int64 cast + 'long' in the mapInPandas schema), crashing
-    on string doc ids that the expr impl and the exact form accept.
-    The schema now echoes the input id type; both impls must agree on
-    a string-id corpus."""
-    from rehiver_spark.operators.textops import dedup_substrings_pruned
-
-    run = " ".join(f"w{i}" for i in range(30))
-    df = spark.createDataFrame(
-        [
-            ("doc-a", run + " tail alpha beta"),
-            ("doc-b", "fresh start " + run),
-            ("doc-c", "nothing shared at all in this one document"),
-        ],
-        "doc_id string, text string",
-    )
-    key = lambda r: tuple(r)  # noqa: E731
-    got = {
-        impl: sorted(
-            map(
-                key,
-                dedup_substrings_pruned(
-                    df, window_tokens=10, min_run=20, impl=impl
-                ).collect(),
-            )
-        )
-        for impl in ("arrow", "expr")
-    }
-    assert got["arrow"] == got["expr"]
-    assert {r[0] for r in got["expr"]} == {"doc-a", "doc-b", "doc-c"}
-
-
-def test_dedup_substrings_auto_crossover_decisions(spark, caplog):
-    """The LEGACY numeric dial's decision logic on the two regimes it
-    was built for (r6 verdict task 3; since r12 reached only via an
-    explicit density_cutoff): sparse duplication → pruned branch (and
-    on a corpus whose only duplication is SHORTER than min_run, that
-    choice is visible in the output — the short dup survives, where
-    exact would cut it); dense duplication → exact branch (logged),
-    because nearly every doc would go through the exact pipeline
-    anyway."""
-    import logging
-
-    from rehiver_spark.operators.textops import (
-        dedup_substrings,
-        dedup_substrings_auto,
-    )
-
-    L, R = 5, 15  # w = 11: candidate guarantee needs a 15-token run
-    short_dup = "s1 s2 s3 s4 s5 s6"  # 6-token shared run: L ≤ 6 < R
-    sparse = spark.createDataFrame(
-        [
-            (1, short_dup + " " + " ".join(f"a{i}" for i in range(20))),
-            (2, " ".join(f"b{i}" for i in range(20)) + " " + short_dup),
-            (3, " ".join(f"c{i}" for i in range(26))),
-            (4, " ".join(f"d{i}" for i in range(26))),
-        ],
-        "doc_id long, text string",
-    )
-    with caplog.at_level(logging.INFO, "rehiver_spark.operators.textops"):
-        caplog.clear()
-        got = {
-            r["doc_id"]: r["n_tokens_after"]
-            for r in dedup_substrings_auto(
-                sparse, window_tokens=L, min_run=R, density_cutoff=0.2
-            ).collect()
-        }
-        assert "-> pruned branch" in caplog.text
-    # pruned semantics: no doc is a candidate, the short dup survives
-    assert got[2] == 26
-    exact = {
-        r["doc_id"]: r["n_tokens_after"]
-        for r in dedup_substrings(sparse, window_tokens=L).collect()
-    }
-    assert exact[2] == 20  # exact WOULD have cut it — the dial matters
-    long_run = " ".join(f"z{i}" for i in range(18))  # ≥ min_run tokens
-    dense = spark.createDataFrame(
-        [
-            (1, long_run + " one extra"),
-            (2, "prefix " + long_run),
-            (3, long_run),
-            (4, " ".join(f"u{i}" for i in range(12))),
-        ],
-        "doc_id long, text string",
-    )
-    with caplog.at_level(logging.INFO, "rehiver_spark.operators.textops"):
-        caplog.clear()
-        out = dedup_substrings_auto(
-            dense, window_tokens=L, min_run=R, density_cutoff=0.2
-        )
-        rows = {r["doc_id"]: r["n_tokens_after"] for r in out.collect()}
-        assert "-> exact branch" in caplog.text  # density 3/4 > 0.2
-    assert rows == {
-        r["doc_id"]: r["n_tokens_after"]
-        for r in dedup_substrings(dense, window_tokens=L).collect()
-    }
-    # r12 default (density_cutoff=None): short-circuits to exact with
-    # NO probe — identical output to the exact form on BOTH corpora,
-    # including the sparse one where the legacy dial picks pruned
-    with caplog.at_level(logging.INFO, "rehiver_spark.operators.textops"):
-        caplog.clear()
-        short = {
-            r["doc_id"]: r["n_tokens_after"]
-            for r in dedup_substrings_auto(
-                sparse, window_tokens=L, min_run=R
-            ).collect()
-        }
-        assert "no probe run" in caplog.text
-    assert short == exact  # the default follows exact semantics now
-
-
-def test_x57c_query_matches_dispatched_branch(spark, caplog):
-    """The REGISTERED auto-dial query (x57c, round 8; re-dialed r12)
-    must emit exactly what the exact branch emits — since r12 the
-    default short-circuits to exact with no probe (the pruned branch
-    measured dominated at every operating point), so the query is
-    pinned against x57's output at the query shape the driver actually
-    runs (same L/R constants, same sha16 projection)."""
-    import logging
-
-    from rehiver_spark.queries import QUERIES, load_all
-
-    load_all()
-    sf = "/root/testdata/sf0.001"
-    with caplog.at_level(logging.INFO, "rehiver_spark.operators.textops"):
-        caplog.clear()
-        got = sorted(
-            map(tuple, QUERIES["x57c_substring_dedup_auto"](spark, sf).collect())
-        )
-        assert "dedup_substrings_auto" in caplog.text
-        assert "no probe run" in caplog.text  # the r12 short-circuit
-    want = sorted(map(tuple, QUERIES["x57_substring_dedup"](spark, sf).collect()))
-    assert got == want
 
 
 def test_repetition_stats_arrow_equals_expr(spark):
@@ -1085,34 +833,3 @@ def test_charlm_score_arrow_model_guard_falls_back(spark):
     got = sorted(map(key, charlm_score(df, impl="arrow", max_model_rows=1).collect()))
     want = sorted(map(key, charlm_score(df, impl="join").collect()))
     assert got == want
-
-
-def test_x57b_demoted_oracle_pin(spark):
-    """x57b's mid-r13 demotion was reversed (the optimization-phase
-    contract freezes the declared query set), but this pin stays: the
-    pruned branch measured dominated-or-tied at every operating point
-    (receipts in BASELINE.md §Round 13 and the query docstring), and
-    the pin keeps the query + its DuckDB oracle verified every pytest
-    run with the same comparison the driver harness uses (row count,
-    columns, canonical value multiset) at sf0.01."""
-    import duckdb
-
-    from rehiver_spark.queries.e_ops import _x57b_sql, x57b_substring_dedup_pruned
-    from tools.check_oracle import canon_rows
-
-    sf_dir = "/root/testdata/sf0.01"
-    df = x57b_substring_dedup_pruned(spark, sf_dir)
-    scols = [c.lower() for c in df.columns]
-    srows = [tuple(r) for r in df.collect()]
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
-    )
-    rel = con.sql(_x57b_sql())
-    ocols = [c.lower() for c in rel.columns]
-    orows = rel.fetchall()
-
-    assert sorted(scols) == sorted(ocols)
-    assert len(srows) == len(orows) > 0
-    assert canon_rows(srows, scols) == canon_rows(orows, ocols)

@@ -124,26 +124,47 @@ def test_objects_datasource(spark):
 
 def test_bucketed_join_is_shuffle_free(spark):
     """The co-located-join claim, verified in the physical plan: both
-    sides bucketed on the join key → no Exchange above either scan."""
+    sides bucketed on the join key → no Exchange above either scan,
+    and — with ONE sorted file per bucket even from a multi-partition
+    input — no Sort either."""
+    import collections
+    import re
+
     from rehiver_spark.sources.writer import write_bucketed
 
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
+    # 4 input partitions: 4 write tasks, each of which would emit its
+    # own file per bucket without the pre-write repartition
+    li = (
+        spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+        .select("l_orderkey", "l_quantity")
+        .repartition(4)
     )
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
+    o = (
+        spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+        .select("o_orderkey", "o_totalprice")
+        .repartition(4)
     )
     write_bucketed(li, "t_li_bkt", ["l_orderkey"], 8, sort_cols=["l_orderkey"])
     write_bucketed(o, "t_o_bkt", ["o_orderkey"], 8, sort_cols=["o_orderkey"])
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
+        for t in ("t_li_bkt", "t_o_bkt"):
+            # bucket files are named part-…_<bucket id>.c<nnn>…
+            per_bucket = collections.Counter(
+                re.search(r"_(\d{5})\.c\d{3}", f).group(1)
+                for f in spark.table(t).inputFiles()
+            )
+            assert max(per_bucket.values()) == 1, (t, per_bucket)
         j = spark.table("t_li_bkt").join(
             spark.table("t_o_bkt"), F.col("l_orderkey") == F.col("o_orderkey")
         )
         p = j._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in p
         assert "Exchange" not in p  # bucket co-location: NO shuffle either side
+        # the scans report their sortBy order, so neither side is
+        # re-sorted ("Sort [" — SortMergeJoin itself contains "Sort")
+        assert "Sort [" not in p
         # correctness unchanged vs the unbucketed join
         assert j.count() == li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).count()
     finally:
