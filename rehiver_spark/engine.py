@@ -112,7 +112,11 @@ class Engine:
             del self._metadata_cache
 
     def get_object_metadata(self, bucket: str, key: str):
-        return self.metadata_cache().get(bucket, key)
+        try:
+            cache = self._metadata_cache
+        except AttributeError:  # first use builds the default cache
+            cache = self.metadata_cache()
+        return cache.get(bucket, key)
 
     def put_object(self, bucket: str, key: str, body, **kw):
         """Write-through with cache invalidation (reference putObject →

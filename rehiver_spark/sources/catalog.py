@@ -24,7 +24,9 @@ so dedup/filter/join run on executors. For reads, prefer
 
 from __future__ import annotations
 
+import functools
 import os
+import re
 import urllib.parse
 from datetime import datetime, timezone
 
@@ -216,22 +218,28 @@ def decode_s3_key_col(key: Column | str) -> Column:
 
 # ---------------------------------------------------------------------------
 # Bucket-name validation (reference isValidBucketName, src/index.ts:35-75)
+#
+# Both rails anchor at the absolute end of input: Python fullmatch, Java
+# ``\z``. A plain ``$`` also matches before a final line terminator
+# (``\n`` in Python; ``\n``, ``\r``, ``\u2028``... in Java), so it would
+# accept "abc\n" on both rails and "abc\r" on the Column rail only.
+# The Python verdict is memoized per name (bounded): MetadataCache.get
+# validates the same few bucket names on every lookup.
 # ---------------------------------------------------------------------------
 
-_BUCKET_RE = r"^[a-z0-9][a-z0-9.-]{1,61}[a-z0-9]$"
-_IP_RE = r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}$"
+_BUCKET_RE = re.compile(r"[a-z0-9][a-z0-9.-]{1,61}[a-z0-9]")
+_IP_RE = re.compile(r"\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}")
 
 
+@functools.lru_cache(maxsize=1024)
 def is_valid_bucket_name(name: str) -> bool:
-    import re
-
     if not 3 <= len(name) <= 63:
         return False
-    if not re.match(_BUCKET_RE, name):
+    if not _BUCKET_RE.fullmatch(name):
         return False
     if ".." in name or ".-" in name or "-." in name:
         return False
-    if re.match(_IP_RE, name):
+    if _IP_RE.fullmatch(name):
         return False
     if name.startswith(("xn--", "sthree-")) or name.endswith(("-s3alias", "--ol-s3")):
         return False
@@ -243,11 +251,11 @@ def valid_bucket_name_col(name: Column | str) -> Column:
     return (
         (F.length(c) >= 3)
         & (F.length(c) <= 63)
-        & c.rlike(_BUCKET_RE)
+        & c.rlike(rf"^{_BUCKET_RE.pattern}\z")
         & ~c.contains("..")
         & ~c.contains(".-")
         & ~c.contains("-.")
-        & ~c.rlike(_IP_RE)
+        & ~c.rlike(rf"^{_IP_RE.pattern}\z")
         & ~c.startswith("xn--")
         & ~c.startswith("sthree-")
         & ~c.endswith("-s3alias")

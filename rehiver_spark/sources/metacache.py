@@ -111,7 +111,11 @@ class MetadataCache:
     immediately while ONE daemon thread re-fetches in the background
     (errors there are swallowed, reference parity).
 
-    Thread-safe; all bookkeeping under one lock, fetches outside it.
+    Thread-safe. All bookkeeping is under one lock and no fetch runs
+    while it is held: a hit takes one critical section (lookup, TTL
+    check, LRU touch, hit count, refresh-ahead decision); a miss takes
+    two — miss count plus in-flight registration before the fetch, and
+    the generation-checked store plus the in-flight drain after it.
     """
 
     def __init__(
@@ -144,22 +148,20 @@ class MetadataCache:
 
     def _fetch_begin(self, ck: str) -> int:
         """Register an in-flight fetch; returns the generation to check
-        before storing its result."""
-        with self._lock:
-            self._pending_fetch[ck] = self._pending_fetch.get(ck, 0) + 1
-            return self._gen.get(ck, 0)
+        before storing its result. Caller holds ``self._lock``."""
+        self._pending_fetch[ck] = self._pending_fetch.get(ck, 0) + 1
+        return self._gen.get(ck, 0)
 
     def _fetch_end(self, ck: str) -> None:
-        with self._lock:
-            n = self._pending_fetch.get(ck, 1) - 1
-            if n <= 0:
-                self._pending_fetch.pop(ck, None)
-                self._gen.pop(ck, None)
-            else:
-                self._pending_fetch[ck] = n
+        """Unregister an in-flight fetch. Caller holds ``self._lock``."""
+        n = self._pending_fetch.get(ck, 1) - 1
+        if n <= 0:
+            self._pending_fetch.pop(ck, None)
+            self._gen.pop(ck, None)
+        else:
+            self._pending_fetch[ck] = n
 
-    @staticmethod
-    def _cache_key(bucket: str, key: str) -> tuple[str, str]:
+    def get(self, bucket: str, key: str):
         if not is_valid_bucket_name(bucket):
             raise ValueError(f"Invalid bucket name: {bucket}")
         # '%'-in-key → decode before fetching: REFERENCE PARITY
@@ -167,53 +169,45 @@ class MetadataCache:
         # it) — a key whose literal name contains '%xx' text is fetched
         # decoded there too; callers with such keys pre-encode them.
         safe = decode_s3_key(key) if "%" in key else key
-        return f"{bucket}:{safe}", safe
-
-    def get(self, bucket: str, key: str):
-        ck, safe = self._cache_key(bucket, key)
-        if self.enabled:
-            hit = False
-            needs_refresh = False
-            value = None
-            # bookkeeping under the lock; the refresh fetch (which may
-            # run inline when background=False) happens OUTSIDE it —
-            # the lock is non-reentrant
-            with self._lock:
-                e = self._data.get(ck)
-                if e is not None:
-                    age = time.monotonic() - e.stored_at
-                    if age < self.ttl:
-                        self._data.move_to_end(ck)
-                        self.stats.hits += 1
-                        hit = True
-                        value = e.value
-                        needs_refresh = (
-                            age > self.ttl * self.refresh_threshold / 100.0
-                            and ck not in self._pending_refresh
-                        )
-                        if needs_refresh:
-                            self._pending_refresh.add(ck)
-                    else:
-                        del self._data[ck]  # expired
-            if hit:
-                if needs_refresh:
-                    self._refresh(bucket, safe, ck)
-                return value
+        ck = f"{bucket}:{safe}"
+        # one critical section decides hit or miss and does its
+        # bookkeeping; the fetch and the refresh (which may run inline
+        # when background=False) happen OUTSIDE it — the lock is
+        # non-reentrant
         with self._lock:
-            self.stats.misses += 1
-        gen = self._fetch_begin(ck)
+            e = self._data.get(ck) if self.enabled else None
+            if e is not None:
+                age = time.monotonic() - e.stored_at
+                if age < self.ttl:
+                    self._data.move_to_end(ck)
+                    self.stats.hits += 1
+                    if (
+                        age <= self.ttl * self.refresh_threshold / 100.0
+                        or ck in self._pending_refresh
+                    ):
+                        return e.value
+                    self._pending_refresh.add(ck)
+                else:
+                    del self._data[ck]  # expired
+                    e = None
+            if e is None:
+                self.stats.misses += 1
+                gen = self._fetch_begin(ck)
+        if e is not None:  # a hit past the refresh threshold
+            self._refresh(bucket, safe, ck)
+            return e.value
+        value = None
         try:
             value = retry_with_backoff(lambda: self.fetcher(bucket, safe))
-            if value is not None and self.enabled:
-                with self._lock:
-                    # an invalidate() that landed while this miss-fetch
-                    # was in flight bumped the generation: storing now
-                    # would resurrect pre-invalidation metadata for ttl
-                    if self._gen.get(ck, 0) == gen:
-                        self._store(ck, value)
-            return value
         finally:
-            self._fetch_end(ck)
+            with self._lock:
+                # an invalidate() that landed while this miss-fetch was
+                # in flight bumped the generation: storing now would
+                # resurrect pre-invalidation metadata for ttl
+                if value is not None and self.enabled and self._gen.get(ck, 0) == gen:
+                    self._store(ck, value)
+                self._fetch_end(ck)
+        return value
 
     def _store(self, ck: str, value) -> None:
         self._data[ck] = _Entry(value)
@@ -223,7 +217,8 @@ class MetadataCache:
             self.stats.evictions += 1
 
     def _refresh(self, bucket: str, safe_key: str, ck: str) -> None:
-        gen = self._fetch_begin(ck)
+        with self._lock:
+            gen = self._fetch_begin(ck)
 
         def work():
             try:
@@ -238,7 +233,7 @@ class MetadataCache:
             finally:
                 with self._lock:
                     self._pending_refresh.discard(ck)
-                self._fetch_end(ck)
+                    self._fetch_end(ck)
 
         if self.background:
             threading.Thread(target=work, daemon=True).start()

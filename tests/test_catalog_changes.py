@@ -182,6 +182,10 @@ def test_bucket_names(spark):
         "-leading",  # bad first char
         "trailing-",  # bad last char
         "a" * 64,  # too long
+        "abc\n",  # trailing line terminators: "$" would accept these
+        "my-bucket\n",
+        "abc\r",
+        "abc\u2028",
     ]
     for n in valid:
         assert is_valid_bucket_name(n), n

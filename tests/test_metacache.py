@@ -249,3 +249,126 @@ def test_invalidate_during_miss_fetch_not_resurrected():
     assert cache.get("test-bucket", "a/k.parquet")["etag"] == "new-etag"
     # and the guard bookkeeping is fully drained (bounded memory)
     assert not cache._gen and not cache._pending_fetch
+
+
+def test_miss_fetch_error_propagates_and_drains():
+    """A non-retryable fetch error reaches the caller after one attempt,
+    caches nothing, counts one miss and leaves no in-flight state."""
+    from rehiver_spark.sources.metacache import MetadataCache
+
+    calls = []
+
+    def fetch(bucket, key):
+        calls.append(key)
+        raise KeyError("AccessDenied")
+
+    c = MetadataCache(fetcher=fetch, background=False)
+    with pytest.raises(KeyError):
+        c.get("bkt", "k")
+    assert len(calls) == 1 and len(c) == 0
+    assert c.stats.misses == 1 and c.stats.hits == 0
+    assert not c._pending_fetch and not c._gen
+
+
+def test_miss_fetch_retries_throttling_then_caches(monkeypatch):
+    import functools
+
+    from rehiver_spark.sources import metacache
+
+    slept = []
+    monkeypatch.setattr(
+        metacache,
+        "retry_with_backoff",
+        functools.partial(metacache.retry_with_backoff, sleep=slept.append),
+    )
+    calls = []
+
+    def fetch(bucket, key):
+        calls.append(key)
+        if len(calls) < 3:
+            raise metacache.RetryableError("SlowDown")
+        return {"key": key}
+
+    c = metacache.MetadataCache(fetcher=fetch, background=False)
+    assert c.get("bkt", "k") == {"key": "k"}
+    assert len(calls) == 3 and len(slept) == 2
+    assert c.get("bkt", "k") == {"key": "k"} and len(calls) == 3  # cached
+    assert c.stats.misses == 1 and c.stats.hits == 1
+    assert not c._pending_fetch and not c._gen
+
+
+def test_disabled_cache_counts_misses_and_drains():
+    from rehiver_spark.sources.metacache import MetadataCache
+
+    c = MetadataCache(fetcher=lambda b, k: {"key": k}, enabled=False)
+    for _ in range(3):
+        assert c.get("bkt", "k") == {"key": "k"}
+    assert c.stats.misses == 3 and c.stats.hits == 0
+    assert len(c) == 0 and not c._pending_fetch and not c._gen
+
+
+def test_concurrent_get_invalidate_stress():
+    """8 threads mix get and write+invalidate over 50 keys through a
+    16-entry cache whose entries expire and refresh inline. Counters
+    must not lose updates, the LRU bound must hold, in-flight state
+    must drain, and once a key's version is bumped and the key
+    invalidated, no later get may return an older version."""
+    import random
+    import sys
+    import threading
+
+    from rehiver_spark.sources.metacache import MetadataCache
+
+    n_threads, ops, n_keys = 8, 1500, 50
+    keys = [f"k{i}" for i in range(n_keys)]
+    vlock = threading.Lock()
+    version = dict.fromkeys(keys, 0)
+    floor = dict.fromkeys(keys, 0)  # version every later get must reach
+
+    def fetch(bucket, key):
+        with vlock:
+            return {"key": key, "v": version[key]}
+
+    c = MetadataCache(
+        fetcher=fetch, max_size=16, ttl=0.01, refresh_threshold=10, background=False
+    )
+    gets = [0] * n_threads
+    errors = []
+
+    def worker(t):
+        rng = random.Random(t)
+        try:
+            for _ in range(ops):
+                k = keys[min(int(rng.expovariate(0.1)), n_keys - 1)]
+                if rng.random() < 0.2:
+                    with vlock:
+                        version[k] += 1
+                        v = version[k]
+                    c.invalidate("bkt", k)
+                    with vlock:
+                        floor[k] = max(floor[k], v)
+                else:
+                    with vlock:
+                        f = floor[k]
+                    got = c.get("bkt", k)
+                    gets[t] += 1
+                    if got["v"] < f:
+                        errors.append((k, got["v"], f))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors[:5]
+    assert c.stats.hits + c.stats.misses == sum(gets)
+    assert len(c) <= c.max_size
+    assert not c._pending_fetch and not c._gen and not c._pending_refresh

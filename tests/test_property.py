@@ -104,6 +104,35 @@ def test_s3key_codec_roundtrip_both_rails(spark, keys):
         assert r["enc"] == encode_s3_key(r["key"]), r
 
 
+_LINE_ENDS = ["\n", "\r", "\u2028"]
+_BUCKET_CHARS = list(string.ascii_lowercase + string.digits + ".-_" + string.ascii_uppercase) + _LINE_ENDS
+_OCTETS = st.lists(st.integers(0, 9999).map(str), min_size=3, max_size=5).map(".".join)
+# near-valid names: a legal-alphabet or IP-shaped core, optionally
+# wrapped in a reserved affix and/or followed by one line terminator
+# (the case a "$"-anchored pattern lets through)
+_NEAR_BUCKET = st.tuples(
+    st.sampled_from(["", "", "xn--", "sthree-"]),
+    st.one_of(st.text(alphabet=list(string.ascii_lowercase + string.digits + ".-"), max_size=70), _OCTETS),
+    st.sampled_from(["", "", "-s3alias", "--ol-s3"]),
+    st.sampled_from(["", ""] + _LINE_ENDS),
+).map("".join)
+BUCKET_NAME = st.one_of(st.text(alphabet=_BUCKET_CHARS, max_size=70), _NEAR_BUCKET).filter(
+    lambda n: len(n) <= 70
+)
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(BUCKET_NAME, min_size=1, max_size=40))
+def test_bucket_name_driver_column_agree(spark, names):
+    from rehiver_spark.sources.catalog import is_valid_bucket_name, valid_bucket_name_col
+
+    df = spark.createDataFrame([(n,) for n in names], "name string")
+    got = {r["name"]: r["ok"] for r in df.select("name", valid_bucket_name_col("name").alias("ok")).collect()}
+    for n in names:
+        # twice: the memoized verdict must equal the first computation
+        assert is_valid_bucket_name(n) == is_valid_bucket_name(n) == got[n], repr(n)
+
+
 @settings(max_examples=15, deadline=None)
 @given(st.lists(PATH, min_size=1, max_size=30))
 def test_segment_glob_driver_column_agree(spark, paths):
