@@ -417,20 +417,16 @@ def minhash_signature(
     bit-for-bit, and the md5 count drops num_hashes-fold vs hashing
     per (i, shingle). Since r12 this path is ALL JVM expression work
     inside one map-only projection: ``transform`` computes the base
-    hash once per shingle (functions/hashing.md5_hash60 — the same
-    expression the relational form uses post-explode), then a single
+    hash once per shingle (functions/hashing.md5_hash60), then a single
     ``aggregate`` folds the shingle axis with a ``zip_with``/``least``
     step against a literal (a_i, c_i) array — no pandas UDF (the
     pre-r12 hashlib form measured 87 s standalone at sf10 where the
-    JVM forms take ~4.5 s), no explode, and — unlike
-    :func:`minhash_signatures_relational` — NO shuffle: the row never
+    JVM forms take ~4.5 s), no explode, and NO shuffle: the row never
     leaves its partition, so at small scale there is no stage floor to
     amortize (the r11 x34 envelope breach) and at large scale the
-    hash-aggregate Exchange disappears entirely. Requires non-empty
-    shingle arrays (shingles() guarantees [""] minimum).
-
-    Bit-identical to :func:`minhash_signatures_relational` in both
-    hash modes (test-pinned).
+    hash-aggregate Exchange of an explode + min-aggregate form
+    disappears entirely. Requires non-empty shingle arrays (shingles()
+    guarantees [""] minimum).
     """
     sh = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
 
@@ -484,69 +480,17 @@ def minhash_signatures(
     Column form.
 
     Since r12 this is the scale path for every consumer: the Column
-    form runs entirely JVM-side with NO shuffle (the r11
-    :func:`minhash_signatures_relational` explode + min-agg shape pays
-    a hash-aggregate Exchange whose stage floor broke the x34 sf0.1
-    envelope), and measured faster at BOTH ends — sf0.1 corpus
-    2.37→0.83 s (md5) / 1.88→0.62 s (xxhash64), sf10 450k docs
-    10.96→8.28 s / 10.85→7.29 s — with bit-identical output
-    (bit_xor-checksum-pinned, r12; parity test pins all three forms).
+    form runs entirely JVM-side with NO shuffle (the r11 explode +
+    min-agg shape paid a hash-aggregate Exchange whose stage floor
+    broke the x34 sf0.1 envelope), and measured faster at BOTH ends —
+    sf0.1 corpus 2.37→0.83 s (md5) / 1.88→0.62 s (xxhash64), sf10 450k
+    docs 10.96→8.28 s / 10.85→7.29 s.
     """
     return df.select(
         F.col(id_col),
         minhash_signature(
             F.col(shingle_col), num_hashes, seed, hash_fn
         ).alias("sig"),
-    )
-
-
-def minhash_signatures_relational(
-    df: DataFrame,
-    id_col: str,
-    shingle_col: str,
-    num_hashes: int = 32,
-    seed: int = 42,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """``(id, sig array<bigint>)`` via the RELATIONAL formulation:
-    explode shingles, hash each ONCE on the JVM, ``num_hashes``
-    min-aggregates in one map-side-combinable hash aggregate — the
-    same shape as :func:`simhash_signatures`.
-
-    SUPERSEDED as the default path (r12): :func:`minhash_signatures`
-    (the map-only JVM Column form) is bit-identical in both hash modes
-    (test-pinned) and measured faster at every scale — this form pays
-    a hash-aggregate Exchange the Column form avoids entirely (sf0.1
-    corpus 2.37 vs 0.83 s md5; sf10 450k docs 10.96 vs 8.28 s). It was
-    the r11 replacement for the per-shingle hashlib pandas UDF
-    (87 s standalone at sf10) and is kept as the explode-shaped
-    reference twin: its partial-aggregate shape is what a SQL oracle
-    mirrors, and the 3-way parity test pins all forms together.
-    Requires non-empty shingle arrays (``shingles()`` guarantees
-    ``[""]`` minimum) — a row with an empty array would simply vanish
-    at the explode.
-    """
-    ex = df.select(F.col(id_col), F.explode(shingle_col).alias("_mh_s"))
-    if hash_fn == "md5":
-        a_co, c_co = minhash_affine_consts(num_hashes, seed)
-        h = md5_hash60(F.concat(F.lit(f"{seed}:"), F.col("_mh_s"))) % F.lit(
-            _MH_DOMAIN
-        )
-        ex = ex.withColumn("_mh_h", h)
-        aggs = [
-            F.min(
-                (F.col("_mh_h") * F.lit(a_co[i]) + F.lit(c_co[i])) % F.lit(_MH_P)
-            ).alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        aggs = [
-            F.min(F.xxhash64(F.lit(seed), F.lit(i), F.col("_mh_s"))).alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
-    return ex.groupBy(id_col).agg(*aggs).select(
-        F.col(id_col),
-        F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("sig"),
     )
 
 

@@ -193,7 +193,6 @@ def repetition_stats(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Gopher-style repetition quality signals per document:
 
@@ -204,115 +203,43 @@ def repetition_stats(
     High top-gram fractions flag boilerplate/spam (repeated nav text,
     keyword stuffing) — the standard pre-training repetition filters.
 
-    Plan: entirely MAP-SIDE — no explode, no shuffle, in BOTH impls.
-    The stats a doc needs are all within-row. The exploded formulation
-    would shuffle the full gram multiset on (doc, gram) — keys that
-    are nearly unique, so partial aggregation reduces nothing and
-    every token crosses the wire; at 100 TB that is the whole corpus
-    re-shuffled for a per-row answer. Documents with zero tokens
-    produce no output row (nothing to measure).
+    Plan: entirely MAP-SIDE — no explode, no shuffle. The stats a doc
+    needs are all within-row. The exploded formulation would shuffle
+    the full gram multiset on (doc, gram) — keys that are nearly
+    unique, so partial aggregation reduces nothing and every token
+    crosses the wire; at 100 TB that is the whole corpus re-shuffled
+    for a per-row answer. Documents with zero tokens produce no output
+    row (nothing to measure).
 
-    ``impl="arrow"`` (default, round 8 — the x25 playbook): text is
-    normalized JVM-side (``normalize_text`` — trim/``\\s+``-collapse/
-    lower stay on Java semantics: ASCII-only ``\\s``, 0x20-only trim,
-    UTF8String lowercasing; nothing Unicode-sensitive is re-implemented
-    in Python), then ONE mapInPandas pass splits on the single space
-    the normalization guarantees and computes all four stats via
-    factorize + np.unique — C-speed hash/sort kernels. The expression
-    form (kept as ``impl="expr"``, the oracle-shaped twin) pays Spark's
-    interpreted higher-order functions: the run-length ``aggregate``
-    fold, the ``zip_with`` bigram build and the per-element lambda
-    evaluation are NOT whole-stage-codegen'd — profiled as the
-    largest remaining sf10 outlier (12.8 s, 27× growth at 100× data,
-    BASELINE.md round 7). Bit-identical outputs (equal integer counts
-    → identical IEEE double quotients; equivalence test-pinned), so
-    the oracle twin certifies both.
-    """
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-    if impl == "arrow":
-        return _repetition_stats_arrow(df, text_col, id_col)
+    Text is normalized JVM-side (``normalize_text`` — trim/``\\s+``
+    collapse/lower stay on Java semantics: ASCII-only ``\\s``,
+    0x20-only trim, UTF8String lowercasing; nothing Unicode-sensitive
+    is re-implemented in Python), then ONE mapInPandas pass splits on
+    the single space the normalization guarantees and computes all
+    four stats via factorize + np.unique — C-speed hash/sort kernels.
 
-    def max_multiplicity(arr: Column) -> Column:
-        """Longest run in the sorted array == max element multiplicity."""
-        zero = F.lit(0).cast("bigint")
-        return F.aggregate(
-            F.array_sort(arr),
-            F.struct(
-                F.lit(None).cast("string").alias("prev"),
-                zero.alias("run"),
-                zero.alias("best"),
-            ),
-            lambda acc, x: F.struct(
-                x.alias("prev"),
-                F.when(x.eqNullSafe(acc["prev"]), acc["run"] + 1)
-                .otherwise(F.lit(1).cast("bigint"))
-                .alias("run"),
-                F.greatest(
-                    acc["best"],
-                    F.when(x.eqNullSafe(acc["prev"]), acc["run"] + 1).otherwise(
-                        F.lit(1).cast("bigint")
-                    ),
-                ).alias("best"),
-            ),
-            lambda acc: acc["best"],
-        )
+    Semantics:
 
-    df = ensure_parallelism(df)
-    # empty-doc exclusion via the RAW text (rlike '\S' ⟺ tokens(text)
-    # non-empty — tokenize splits on the regex class \s, and Spark's
-    # trim strips ONLY 0x20 spaces, so a tab/newline-only doc would
-    # pass a trim!='' filter with zero tokens and the ratio divisions
-    # below would raise DIVIDE_BY_ZERO under ANSI mode). A size(_tk)
-    # filter AFTER the projection gets predicate-pushed INTO it, so
-    # the tokenize chain runs twice per row (once in the pushed
-    # condition, once in the output); the rlike form stays a
-    # scan-level pushdown on the raw column
-    base = df.filter(
-        F.col(text_col).isNotNull() & F.col(text_col).rlike(r"\S")
-    ).select(
-        F.col(id_col).alias("_id"),
-        tokens(F.col(text_col)).alias("_tk"),
-        word_ngrams(F.col(text_col), 2).alias("_bg"),
-    )
-    return base.select(
-        F.col("_id").alias(id_col),
-        F.size("_tk").cast("bigint").alias("n_tokens"),
-        (F.size(F.array_distinct("_tk")) / F.size("_tk")).alias("distinct_token_ratio"),
-        (max_multiplicity(F.col("_tk")) / F.size("_tk")).alias("top_token_frac"),
-        (max_multiplicity(F.col("_bg")) / F.size("_bg")).alias("top_bigram_frac"),
-    )
-
-
-def _repetition_stats_arrow(
-    df: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
-    """Arrow path of :func:`repetition_stats` — see its docstring.
-
-    Parity notes (the reasons this is bit-identical to the expr form):
-
-    - the JVM does ALL Unicode-sensitive work (``normalize_text``);
-      the kernel receives a string whose only separator is 0x20, so
-      ``str.split(" ")`` + drop-empties reproduces ``tokens()``
-      exactly (Python and Java agree on literal-space splitting with
-      trailing empties kept-then-filtered);
+    - tokens are exactly ``tokens(text)``: the normalized text has
+      0x20 as its only separator, so ``str.split(" ")`` + drop-empties
+      reproduces the JVM tokenizer;
     - word bigrams are counted as CODE PAIRS of factorized tokens —
       tokens cannot contain spaces post-normalization, so pair
-      identity ≡ the expr form's ``concat_ws(" ", a, b)`` string
-      identity; a 1-token doc contributes its single token as its one
-      "gram" (``word_ngrams``'s short-text rule) → frac 1.0, which is
-      the kernel's multiplicity-init value;
-    - ratios are int64/int64 true division in float64 — identical
-      IEEE operation to Spark's double Divide on the same exact
-      integers (callers round JVM-side, so rounding parity is moot).
+      identity ≡ ``concat_ws(" ", a, b)`` string identity; a 1-token
+      doc contributes its single token as its one "gram"
+      (``word_ngrams``'s short-text rule) → frac 1.0;
+    - ratios are int64/int64 true division in float64 — the same IEEE
+      operation as Spark's double Divide on the same exact integers.
     """
     from rehiver_spark.session import ship_package
 
     ship_package(df.sparkSession)
     df = ensure_parallelism(df)
-    # same scan-level empty-doc gate as the expr form (see its inline
-    # note: rlike('\\S') on the RAW column stays a pushdown and is ⟺
-    # tokens(text) non-empty, so every kernel row has ≥1 token)
+    # empty-doc exclusion via the RAW text: rlike('\\S') ⟺ tokens(text)
+    # non-empty (tokenize splits on the regex class \\s, and Spark's trim
+    # strips ONLY 0x20, so a tab/newline-only doc would pass a
+    # trim != '' filter with zero tokens), so every kernel row has ≥1
+    # token; the rlike form stays a scan-level pushdown on the raw column
     base = df.filter(
         F.col(text_col).isNotNull() & F.col(text_col).rlike(r"\S")
     ).select(F.col(id_col), normalize_text(F.col(text_col)).alias("_nt"))
@@ -1110,7 +1037,6 @@ def charlm_score(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "arrow",
     max_model_rows: int = 1 << 18,
 ) -> DataFrame:
     """CCNet-style LM quality signal (Wenzek et al. 2020 use a 5-gram
@@ -1119,7 +1045,7 @@ def charlm_score(
     every document by cross-entropy under that model. Outlier documents
     (boilerplate, encoding junk, wrong-language) score high.
 
-    ``impl="arrow"`` (default, round 7): the model is charset²-bounded
+    The model is charset²-bounded
     (254 distinct bigrams on the test corpus — independent of corpus
     size), so it is trained by per-batch vectorized partial counts
     (numpy utf-32 code-point arrays → uint64 bigram codes; the shuffle
@@ -1131,16 +1057,14 @@ def charlm_score(
     round-robin repartition on few-file inputs, input-row-sized;
     absent when the source is already parallel — sf10 receipts:
     9.9 MB → 0.2 MB shuffle write, BASELINE.md round 7).
-    The previous formulation (kept as ``impl="join"``, the
-    oracle-shaped twin) exploded one row per corpus character and
-    re-grouped it per doc — profiled at sf10 (500k docs): 14.4 s for
-    one explode+HOF gram pass and 9.5 s for the per-char regroup, the
-    x21 corpus-char-shuffle class. Both impls are equivalence-tested
-    on the real corpus; if the model exceeds ``max_model_rows`` the
-    arrow impl falls back to the join form (a corpus whose charset²
-    outgrows the driver is not a char-bigram use case).
+    If the model exceeds ``max_model_rows`` it falls back to the
+    relational join form, which explodes one row per corpus character
+    and re-groups it per doc (sf10, 500k docs: 14.4 s for one
+    explode+HOF gram pass and 9.5 s for the per-char regroup) but
+    never collects the model to the driver. A corpus whose charset²
+    outgrows the driver is not a char-bigram use case.
 
-    Determinism contract (arrow impl): training and scoring are two
+    Determinism contract (Arrow form): training and scoring are two
     separate jobs over the SAME input plan, so the input must be
     deterministic between them — ``persist()`` or write it first if
     its lineage involves ``sample()``/``limit()``/changing files.
@@ -1154,16 +1078,13 @@ def charlm_score(
     engine (numpy utf-32 == Python ord == Spark/DuckDB substr).
 
     Output: (id, n_bigrams, cross_entropy); docs with fewer than two
-    chars have no bigrams and emit no row (both impls).
+    chars have no bigrams and emit no row (both forms).
     """
-    if impl not in ("arrow", "join"):
-        raise ValueError(f"impl must be 'arrow' or 'join', got {impl!r}")
     df = ensure_parallelism(df)
-    if impl == "arrow":
-        out = _charlm_score_arrow(df, id_col, text_col, max_model_rows)
-        if out is not None:
-            return out
-        # model over the guard: fall through to the join form
+    out = _charlm_score_arrow(df, id_col, text_col, max_model_rows)
+    if out is not None:
+        return out
+    # model over the guard: fall through to the join form
     # materialize the normalized text ONCE — an inlined expression would
     # re-run the regex normalization inside every per-char lambda call
     base = df.select(
@@ -1303,7 +1224,7 @@ def _charlm_score_arrow(
     if len(probe) > max_model_rows:
         logging.getLogger(__name__).warning(
             "charlm_score: distinct bigrams exceed max_model_rows=%d; "
-            "falling back to impl='join'",
+            "falling back to the relational join form",
             max_model_rows,
         )
         parts.unpersist()
@@ -1360,11 +1281,11 @@ def _charlm_score_arrow(
                     "charlm_score: scored bigram absent from the trained "
                     "model — the input DataFrame is not deterministic "
                     "between the model job and the scoring job; "
-                    "materialize it (persist/write) or use impl='join'"
+                    "materialize it (persist/write) first"
                 )
             sums = np.zeros(len(texts), dtype=np.float64)
             np.add.at(sums, doc_idx, logs)
-            keep = nb > 0  # <2-char docs emit no row (join-impl parity)
+            keep = nb > 0  # <2-char docs have no bigrams: no row
             n = nb[keep].astype(np.float64)
             ce = -sums[keep] / n
             yield pd.DataFrame(

@@ -942,9 +942,10 @@ def _assign_cells_arrow(normed: DataFrame, cents: DataFrame) -> DataFrame:
     carrying BOTH vectors — through an interpreted fold and a
     row_number shuffle. At the k clamp the per-row cost is k·d
     multiply-adds in C; the flat-assignment wall at 100 TB is therefore
-    compute, not the N×k row blowup the expr plan pays.
+    compute, not the N×k row blowup the broadcast-join plan pays.
 
-    Bit parity with the expr form (equivalence test-pinned):
+    Bit parity with :func:`_assign_to_cells`, the broadcast-join form
+    :func:`ivf_topk` uses (equivalence test-pinned):
 
     - scores accumulate SEQUENTIALLY over dimensions (one ``+=`` per
       dimension over the batch×k block) — the exact left-to-right
@@ -956,10 +957,10 @@ def _assign_cells_arrow(normed: DataFrame, cents: DataFrame) -> DataFrame:
       NaN scores (an inf-element centroid) propagate and ``argmax``
       returns the first NaN column — the same hijack Spark's
       NaN-sorts-greatest ordering produces;
-    - mixed dimensions follow the expr twin EXACTLY (round-9 advisor
-      fix — the old single-``d`` kernel collapsed every off-``d`` row
-      into the smallest cell, and one oversized malformed centroid
-      flipped ``d`` for the whole corpus): ``zip_with`` pads the
+    - mixed dimensions follow ``_assign_to_cells`` EXACTLY (round-9
+      advisor fix — the old single-``d`` kernel collapsed every
+      off-``d`` row into the smallest cell, and one oversized malformed
+      centroid flipped ``d`` for the whole corpus): ``zip_with`` pads the
       shorter array with NULL, so a (row, centroid) score is non-NULL
       only when BOTH are valid (non-NULL, no NULL element) AND equal
       length. Centroids are therefore grouped BY DIMENSION; each row
@@ -1036,7 +1037,7 @@ def _assign_cells_arrow(normed: DataFrame, cents: DataFrame) -> DataFrame:
                     acc = np.zeros((len(xb), len(cm)), dtype=np.float64)
                     for j in range(dim):
                         # sequential per-dimension accumulation == the
-                        # expr fold's left-to-right sum, bit for bit
+                        # aggregate(zip_with) left-to-right sum, bit for bit
                         acc += xb[:, j : j + 1] * cm[:, j][None, :]
                     loc = np.argmax(acc, axis=1)
                     val = acc[np.arange(len(xb)), loc]
@@ -1244,7 +1245,6 @@ def semdedup(
     max_cell_rows: int | str | None = "auto",
     max_split_rounds: int = 4,
     centroids: DataFrame | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embeddings, then within each cluster
@@ -1258,10 +1258,8 @@ def semdedup(
     SQL. At scale the centroids would come from k-means on a sample;
     only the seeding changes, not the plan.
 
-    Plan shape (the SemDeDup scaling argument), ``impl="arrow"``
-    default since round 8 — both corpus-scale stages are vectorized
-    kernels, with the relational forms kept as the oracle-shaped
-    ``"expr"`` twin (bit-equality test-pinned):
+    Plan shape (the SemDeDup scaling argument) — both corpus-scale
+    stages are vectorized kernels:
 
     - centroid assignment is MAP-ONLY (:func:`_assign_cells_arrow`):
       the clamp-bounded centroid table is collected and embedded in
@@ -1278,9 +1276,9 @@ def semdedup(
 
     At the k clamp (k = 65536, N ≥ ~4.3e9) per-row assignment is k·d
     multiply-adds — 4.2M flops/row at d=64, a vectorized-C cost that
-    scales linearly with N across executors; the expr form at that
-    point would materialize 65536 rows per input row, which is why
-    the arrow path is the default. If even k·d/row is too hot, fit
+    scales linearly with N across executors; a broadcast-join
+    assignment at that point would materialize 65536 rows per input
+    row. If even k·d/row is too hot, fit
     external ``centroids`` hierarchically (coarse ~√k cells → probe —
     the :func:`ivf_topk` machinery) and pass them in; the dial is the
     ``centroids`` parameter, not a semantics change.
@@ -1324,13 +1322,8 @@ def semdedup(
         .limit(n_cells)
         .select(F.col(id_col).alias("cell_id"), l2_normalize(vec_col).alias("_centv"))
     )
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
     normed = emb.select(F.col(id_col).alias("_id"), l2_normalize(vec_col).alias("_v"))
-    if impl == "arrow":
-        assigned = _assign_cells_arrow(normed, cents)
-    else:
-        assigned = _assign_to_cells(normed, cents)
+    assigned = _assign_cells_arrow(normed, cents)
     # the assignment feeds BOTH the prior-max stage and the final join,
     # so without a cache the corpus-scale kernel runs twice; one lazy
     # localCheckpoint (materialized by whichever action comes first,
@@ -1343,11 +1336,7 @@ def semdedup(
         assigned = _split_hot_cells(assigned, int(max_cell_rows), max_split_rounds)
     else:
         assigned = assigned.localCheckpoint(eager=False)
-    prior = (
-        _prior_max_arrow(assigned)
-        if impl == "arrow"
-        else _prior_max_expr(assigned)
-    )
+    prior = _prior_max_arrow(assigned)
     out = assigned.join(prior, "_id", "left").select(
         F.col("_id").alias(id_col),
         F.col("cell_id").cast("bigint").alias("cell_id"),
@@ -1357,75 +1346,45 @@ def semdedup(
     return out
 
 
-def _prior_max_expr(assigned: DataFrame) -> DataFrame:
-    """Within-cell prior-max via the relational pair join — the
-    oracle-shaped twin of :func:`_prior_max_arrow`. ``assigned`` =
-    (_id, cell_id, _v); returns (_id, _maxprior) for every id that has
-    at least one lower-id cell member (NULL _maxprior when all its
-    pair cosines are NULL)."""
-    a = assigned.select(
-        F.col("_id").alias("_ida"), F.col("cell_id").alias("cell_id"), F.col("_v").alias("_va")
-    )
-    b = assigned.select(
-        F.col("_id").alias("_idb"), F.col("cell_id").alias("cell_id"), F.col("_v").alias("_vb")
-    )
-    return (
-        a.join(b, "cell_id")
-        .filter(F.col("_ida") < F.col("_idb"))
-        .select(
-            F.col("_idb").alias("_id"),
-            F.aggregate(
-                F.zip_with("_va", "_vb", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("_cos"),
-        )
-        .groupBy("_id")
-        .agg(F.max("_cos").alias("_maxprior"))
-    )
-
-
 def _prior_max_arrow(assigned: DataFrame) -> DataFrame:
     """Within-cell prior-max as ONE applyInPandas pass per cell
-    (round 8): the expr pair join materializes pop²/2 rows per cell —
-    each carrying BOTH 64-dim arrays — and evaluates every cosine
-    through Spark's interpreted HOF fold; at sf10 (240k rows, k=491,
-    ~1.2e8 pairs) that stage alone ran for minutes while the numpy
-    form computes the same cell in a few ms. Here the corpus shuffles
-    ONCE on cell_id (N rows — the same exchange the pair join needs
-    anyway, minus the second copy and the pair blowup) and each cell
-    computes its pop×pop cosine matrix in C.
+    (round 8): a relational pair join materializes pop²/2 rows per
+    cell — each carrying BOTH 64-dim arrays — and evaluates every
+    cosine through Spark's interpreted HOF fold; at sf10 (240k rows,
+    k=491, ~1.2e8 pairs) that stage alone ran for minutes while the
+    numpy form computes the same cell in a few ms. Here the corpus
+    shuffles ONCE on cell_id and each cell computes its pop×pop cosine
+    matrix in C. ``assigned`` = (_id, cell_id, _v); returns
+    (_id, _maxprior).
 
-    Bit parity with the expr twin (equivalence test-pinned):
+    Semantics (the x22/x22b DuckDB twins reproduce them):
 
     - cosines accumulate SEQUENTIALLY per dimension (the x25/x16
       discipline — one ``+=`` per dimension over the pop×pop block),
-      bit-identical to the ``aggregate(zip_with)`` left-to-right fold;
+      bit-identical to an ``aggregate(zip_with)`` left-to-right fold;
     - the per-member reduction is a plain max over the same float
       set (order-independent), taken over strictly-lower ids; ids
       sort ascending in the kernel — for string ids pandas' code-point
       ordering equals Spark's UTF8 binary ``<`` (UTF-8 preserves
       code-point order);
-    - NULL vectors (l2_normalize zero-norm) join every pair with a
-      NULL cosine in the expr form, so the kernel excludes them from
-      both sides and emits NULL _maxprior for them (→ the caller's
-      coalesce(-1.0)), and they never contribute to other members'
-      maxima;
-    - mixed dimensions follow the expr twin exactly (round-9 advisor
-      fix — the old kernel's ok-mask only checked ``is not None``, so
-      one malformed-length embedding made ``np.vstack`` raise on the
-      whole cell): ``zip_with`` pads the shorter array with NULL →
-      NULL product → NULL cosine, so a pair scores non-NULL only when
-      both sides are valid AND equal length. The prior-max therefore
+    - NULL vectors (l2_normalize zero-norm) have a NULL cosine to
+      every member, so the kernel excludes them from both sides and
+      emits NULL _maxprior for them (→ the caller's coalesce(-1.0)),
+      and they never contribute to other members' maxima;
+    - mixed dimensions (round-9 advisor fix — the old kernel's ok-mask
+      only checked ``is not None``, so one malformed-length embedding
+      made ``np.vstack`` raise on the whole cell): a pair scores
+      non-NULL only when both sides are valid (non-NULL, no NULL
+      element) AND equal length, as under ``zip_with``'s NULL
+      padding. The prior-max therefore
       runs independently per LENGTH GROUP (lower-id same-length
       members only); each group's min-id member, every off-group and
       invalid member, gets NULL _maxprior.
 
     Memory: pop² doubles per cell — ``max_cell_rows`` ("auto" = 16×
     the expected cell size) bounds it; with the cap disabled a
-    degenerate all-one-cell input costs pop² memory where the expr
-    twin costs pop² ROWS through the exchange, so the kernel is never
-    the worse regime.
+    degenerate all-one-cell input costs pop² memory (a pair join would
+    cost pop² ROWS through the exchange).
     """
     import numpy as np
     import pandas as pd
@@ -1673,7 +1632,6 @@ def jl_project(
     out_col: str = "proj",
     seed: int = 42,
     scale: int = 10000,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Johnson–Lindenstrauss random projection (X50): reduce ``dim``-d
     embeddings to ``out_dim`` dims with deterministic Rademacher ±1
@@ -1689,83 +1647,62 @@ def jl_project(
     one division by the literal scale·sqrt(out_dim) — so the oracle
     reproduces every projected coordinate bit-for-bit.
 
-    ``impl="arrow"`` (default) runs the whole projection as ONE
-    Arrow-batched int64 matmul — higher-order-function expressions
-    never enter codegen, and out_dim·dim interpreted multiply-adds per
-    row cost ~10× the batched matmul (measured 2.37 → 0.26 s at
-    sf0.1). ``impl="expr"`` keeps the pure Column-expression form
-    (no Python workers anywhere); both produce bit-identical output
-    (int64 dots are exact in either engine; equivalence test-pinned).
+    The projection runs as ONE Arrow-batched int64 matmul —
+    higher-order-function expressions never enter codegen, and
+    out_dim·dim interpreted multiply-adds per row cost ~10× the
+    batched matmul (measured 2.37 → 0.26 s at sf0.1). NULL, wrong-dim
+    and element-NULL/NaN embeddings project to NULL.
     """
+    if dim < 1 or out_dim < 1 or scale < 1:
+        raise ValueError(
+            f"jl_project: dim, out_dim and scale must be >= 1, "
+            f"got dim={dim}, out_dim={out_dim}, scale={scale}"
+        )
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
     planes = rademacher_planes(dim, out_dim, seed)
     div = float(scale) * math.sqrt(out_dim)
-    if impl == "arrow":
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
+    P = np.ascontiguousarray(np.asarray(planes, dtype=np.int64).T)
 
-        P = np.ascontiguousarray(np.asarray(planes, dtype=np.int64).T)
-
-        def _proj(s):
-            if len(s) == 0:
-                return pd.Series([], dtype=object)
-            vals = s.to_numpy()
-            # NULL / wrong-dim / element-null embeddings project to
-            # NULL (np.vstack over None crashes the stage; a NaN
-            # element — how Arrow delivers a null ELEMENT — survives
-            # vstack but turns np.rint(...).astype(int64) into
-            # INT64_MIN garbage); expr impl matches
-            valid = np.array(
-                [
-                    v is not None
-                    and len(v) == P.shape[0]
-                    and not np.isnan(np.asarray(v, dtype=np.float64)).any()
-                    for v in vals
-                ]
-            )
-            out = np.empty(len(vals), dtype=object)
-            out[~valid] = None
-            if valid.any():
-                x = np.vstack(vals[valid]).astype(np.float64)
-                q = np.rint(x * scale).astype(np.int64)
-                dots = q @ P
-                # np.round is half-to-even vs Spark's HALF_UP: a
-                # mismatch needs an exact .5 at the 6th decimal,
-                # impossible when div is irrational and measure-zero
-                # otherwise (pinned by the expr/arrow equivalence test)
-                proj = np.round(dots / div, 6)
-                # object-array boolean assignment rejects a 2-D rhs;
-                # place each row individually
-                for idx, row in zip(np.flatnonzero(valid), proj):
-                    out[idx] = row
-            return pd.Series(out)
-
-        _proj.__annotations__ = {"s": pd.Series, "return": pd.Series}
-        udf = pandas_udf(_proj, "array<double>")
-        return df.withColumn(out_col, udf(as_double(vec_col)))
-    if impl != "expr":
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-    v = as_double(vec_col)
-    q = F.transform(v, lambda x: F.round(x * scale, 0).cast("bigint"))
-    coords = [
-        F.round(
-            F.aggregate(
-                F.zip_with(q, F.lit(p), lambda x, y: x * y),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).cast("double")
-            / F.lit(div),
-            6,
+    def _proj(s):
+        if len(s) == 0:
+            return pd.Series([], dtype=object)
+        vals = s.to_numpy()
+        # NULL / wrong-dim / element-null embeddings project to
+        # NULL (np.vstack over None crashes the stage; a NaN
+        # element — how Arrow delivers a null ELEMENT — survives
+        # vstack but turns np.rint(...).astype(int64) into
+        # INT64_MIN garbage)
+        valid = np.array(
+            [
+                v is not None
+                and len(v) == P.shape[0]
+                and not np.isnan(np.asarray(v, dtype=np.float64)).any()
+                for v in vals
+            ]
         )
-        for p in planes
-    ]
-    # NULL / wrong-dim / element-null-or-NaN vectors → NULL projection
-    # (matches the arrow impl's validity mask exactly)
-    clean = ~F.exists(v, lambda x: x.isNull() | F.isnan(x))
-    return df.withColumn(
-        out_col,
-        F.when(v.isNotNull() & (F.size(v) == dim) & clean, F.array(*coords)),
-    )
+        out = np.empty(len(vals), dtype=object)
+        out[~valid] = None
+        if valid.any():
+            x = np.vstack(vals[valid]).astype(np.float64)
+            q = np.rint(x * scale).astype(np.int64)
+            dots = q @ P
+            # np.round is half-to-even vs Spark's HALF_UP: a
+            # mismatch needs an exact .5 at the 6th decimal,
+            # impossible when div is irrational and measure-zero
+            # otherwise (pinned by the jl_project_sql comparison test)
+            proj = np.round(dots / div, 6)
+            # object-array boolean assignment rejects a 2-D rhs;
+            # place each row individually
+            for idx, row in zip(np.flatnonzero(valid), proj):
+                out[idx] = row
+        return pd.Series(out)
+
+    _proj.__annotations__ = {"s": pd.Series, "return": pd.Series}
+    udf = pandas_udf(_proj, "array<double>")
+    return df.withColumn(out_col, udf(as_double(vec_col)))
 
 
 def jl_project_sql(
@@ -1803,16 +1740,14 @@ def kmeans_quantized(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     scale: int = 10000,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Fully DISTRIBUTED Lloyd's k-means on the integer grid (X51) —
     the clustering primitive for topic-balancing and diversity
     sampling that the sampled-centroid IVF trainer (ivf_topk) cannot
     provide: every iteration sees the WHOLE corpus, not a driver-side
     sample. The corpus never reaches the driver; the only driver
-    traffic is the k·dim-integer centroid relation once per round in
-    the arrow impl (the bounded CC-scalar class), and none at all in
-    the expr impl.
+    traffic is the k·dim-integer centroid relation once per round (the
+    bounded CC-scalar class).
 
     Deterministic and bit-portable by construction:
 
@@ -1822,37 +1757,33 @@ def kmeans_quantized(
       order cannot change the result), which keeps every distance an
       exact ``sum((q_i − c_i)²)`` BIGINT bounded by dim·(2·scale·|x|)²
       regardless of corpus size — no overflow at any n;
-    - assignment ties break on cell id via lexicographic struct-min.
+    - assignment ties break on the lowest cell id.
 
-    Per iteration: one broadcast join (corpus × k centroids, centroids
-    are k rows), one partial-combined groupBy — the corpus shuffles
-    ONCE per iteration on cell id with 64 BIGINT sums as the payload.
-    Grid quantization perturbs each coordinate by < 1/scale, the same
+    Per iteration: assignment WITHOUT a pair join — the k-row centroid
+    relation is collected (k·dim ints) and embedded in one vectorized
+    |a|²−2a·C+|C|² int64 kernel, so the corpus crosses Arrow once per
+    round instead of k times as duplicated pair rows (an interpreted
+    HOF fold over pair rows ran >18 min at sf10) — then one
+    partial-combined groupBy: the corpus shuffles ONCE per iteration
+    on cell id with ``dim`` BIGINT sums as the payload. Grid
+    quantization perturbs each coordinate by < 1/scale, the same
     approximation the x9p/x50 family already accepts for portability.
-
-    ``impl="arrow"`` (default) assigns WITHOUT the pair join: the
-    k-row centroid relation is collected (k·dim ints) and embedded in
-    one vectorized |a|²−2a·C+|C|² int64 kernel, so the corpus crosses
-    Arrow once per round instead of k times as duplicated pair rows —
-    the interpreted HOF fold over pair rows made the expr impl
-    pathological at 100× data (>18 min at sf10 vs seconds; the x50
-    lesson squared by the join). Bit-identical results (exact int64,
-    first-minimum argmin == lowest-cell tie-break; equivalence
-    test-pinned). ``impl="expr"`` keeps the pure Column form — zero
-    Python, zero driver traffic — for oracle-shaped plans and modest
-    inputs.
 
     Returns (cell, n_members, inertia, centroid ARRAY<BIGINT> on the
     grid) — divide by ``scale`` for real-space centroids.
     """
+    if dim < 1 or k < 1 or n_iter < 1 or scale < 1:
+        raise ValueError(
+            f"kmeans_quantized: dim, k, n_iter and scale must be >= 1, "
+            f"got dim={dim}, k={k}, n_iter={n_iter}, scale={scale}"
+        )
     from rehiver_spark.functions.hashing import md5_hash60
 
     v = as_double(vec_col)
     # NULL / wrong-dim / element-null-or-NaN vectors are excluded up
     # front (visible via the member counts, never an error): unguarded
-    # they crash the arrow kernel's np.vstack (or garble the int64
-    # cast via NaN), poison the expr struct-min with NULL distances,
-    # and can even be chosen as seed centroids
+    # they crash the kernel's np.vstack (or garble the int64 cast via
+    # NaN), and can even be chosen as seed centroids
     clean = ~F.exists(v, lambda x: x.isNull() | F.isnan(x))
     q = df.filter(v.isNotNull() & (F.size(v) == dim) & clean).select(
         F.col(id_col).alias("_id"),
@@ -1883,23 +1814,20 @@ def kmeans_quantized(
             [(i, list(r["q"])) for i, r in enumerate(seeds)],
             "cell bigint, c array<bigint>",
         )
-        if impl not in ("arrow", "expr"):
-            raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
 
-        def _arrow_assign(cent_rows):
-            """Assignment WITHOUT the pair join: centroids (k·dim ints,
-            the bounded CC-scalar driver class) are embedded in one
-            vectorized kernel; the corpus crosses Arrow ONCE per round
-            (its q column in, two scalars out) instead of k times as
-            duplicated pair rows. np.argmin returns the FIRST minimum
-            → the same lowest-cell tie-break as the struct-min."""
+        def _assign_col(cent_rows):
+            """Nearest-centroid (d, cell) struct column: centroids (k·dim
+            ints) are embedded in one vectorized kernel; the corpus
+            crosses Arrow ONCE per round (its q column in, two scalars
+            out). np.argmin returns the FIRST minimum → lowest-cell
+            tie-break."""
             import numpy as np
             import pandas as pd
             from pyspark.sql.functions import pandas_udf
 
-            # sort by cell: np.argmin's first-minimum rule then equals
-            # the struct-min's lowest-cell tie-break (collect order of
-            # a checkpointed aggregate is arbitrary)
+            # sort by cell: np.argmin's first-minimum rule is then the
+            # lowest-cell tie-break (collect order of a checkpointed
+            # aggregate is arbitrary)
             cent_rows = sorted(cent_rows, key=lambda r: r["cell"])
             cells = np.array([r["cell"] for r in cent_rows], dtype=np.int64)
             C = np.vstack([list(r["c"]) for r in cent_rows]).astype(np.int64)
@@ -1922,26 +1850,11 @@ def kmeans_quantized(
             _assign.__annotations__ = {"qs": pd.Series, "return": pd.DataFrame}
             return pandas_udf(_assign, "d bigint, cell bigint")(F.col("q"))
 
-        dist = F.aggregate(
-            F.zip_with(F.col("q"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        assigned = None
         for _ in range(n_iter):
-            if impl == "arrow":
-                assigned = (
-                    q.withColumn("dc", _arrow_assign(cents.collect()))
-                    .select("_id", "q", F.col("dc.d").alias("d"), F.col("dc.cell").alias("cell"))
-                )
-            else:
-                assigned = (
-                    q.crossJoin(F.broadcast(cents))
-                    .select("_id", "q", F.struct(dist.alias("d"), F.col("cell")).alias("dc"))
-                    .groupBy("_id")
-                    .agg(F.min("dc").alias("dc"), F.first("q").alias("q"))
-                    .select("_id", "q", F.col("dc.d").alias("d"), F.col("dc.cell").alias("cell"))
-                )
+            assigned = (
+                q.withColumn("dc", _assign_col(cents.collect()))
+                .select("_id", "q", F.col("dc.d").alias("d"), F.col("dc.cell").alias("cell"))
+            )
             cents = assigned.groupBy("cell").agg(
                 F.array(
                     *[
@@ -1954,9 +1867,8 @@ def kmeans_quantized(
                 ).alias("c")
             )
             # materialize the k-row centroid relation NOW: without
-            # this, iteration i's broadcast (or collect) replays the
-            # whole chain of iterations 1..i-1 (O(n²) total chain
-            # work) — with it, each round is one linear pass (measured
+            # this, iteration i's collect replays the whole chain of
+            # iterations 1..i-1 (O(n²) total chain work) — with it, each round is one linear pass (measured
             # 6.1 → 4.5 s at sf0.1 with n_iter=3; the gap grows
             # quadratically with n_iter). Executor-side
             # materialization, not a collect.

@@ -1598,14 +1598,14 @@ def x51_kmeans(spark, sf_dir):
     for topic balancing/diversity sampling (vs IVF's sampled-centroid
     trainer). Vectors and CENTROIDS live on the same integer grid
     (round(x·1e4); updates round the mean back), so every distance is
-    an exact BIGINT, assignments are deterministic (struct-min with
-    cell tie-break), updates are order-insensitive integer sums, and
-    the 3-iteration recursion is reproduced EXACTLY by a mechanically
-    generated CTE chain in DuckDB. Per iteration: one broadcast join
-    against the k-row centroid relation + one partial-combined
-    groupBy; the ONLY driver traffic is the k-row centroid relation
-    (seeding TakeOrdered + per-round arrow embed — the bounded
-    CC-scalar class). Output: per-cell size, inertia, and the 64
+    an exact BIGINT, assignments are deterministic (lowest-cell
+    tie-break), updates are order-insensitive integer sums, and the
+    3-iteration recursion is reproduced EXACTLY by a mechanically
+    generated CTE chain in DuckDB. Per iteration: one vectorized
+    assignment against the k-row centroid relation + one
+    partial-combined groupBy; the ONLY driver traffic is the k-row
+    centroid relation (seeding TakeOrdered + per-round Arrow embed —
+    the bounded CC-scalar class). Output: per-cell size, inertia, and the 64
     centroid coordinates exploded."""
     from rehiver_spark.operators.vectorops import kmeans_quantized
 

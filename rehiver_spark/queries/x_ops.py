@@ -1493,9 +1493,8 @@ def x22b_semdedup_scaled(spark, sf_dir):
     cap is disabled here (max_cell_rows=None) so the SEMANTICS are
     exactly the SQL-expressible assignment + within-cell prior-max the
     oracle re-derives; since round 8 the Spark side computes both
-    stages as bit-equivalent Arrow kernels (map-only assignment, one
-    applyInPandas prior-max per cell — vectorops.py), with the
-    relational twin kept as impl='expr'. The cap is the operator's
+    stages as Arrow kernels (map-only assignment, one applyInPandas
+    prior-max per cell — vectorops.py). The cap is the operator's
     separate skew hardening, test-pinned in tests/test_vectorops.py."""
     corpus = _perturbed_embeddings(spark, sf_dir)
     out = semdedup(corpus, threshold=0.9, n_cells=None, max_cell_rows=None)
@@ -1699,13 +1698,12 @@ def x24_url_dedup(spark, sf_dir):
 )
 def x25_charlm_quality(spark, sf_dir):
     """X25 (CCNet quality filter): add-one-smoothed char-bigram LM
-    trained on the corpus, per-doc cross-entropy. Arrow impl (r7):
-    the charset²-bounded model (≤254 bigrams here) is trained from
+    trained on the corpus, per-doc cross-entropy. Since r7 the
+    charset²-bounded model (≤254 bigrams here) is trained from
     per-batch vectorized partial counts and collected behind a driver
     guard; scoring is ONE map-only Arrow pass — zero corpus-row
-    shuffles (sf10 48.8 → 4.5 s; BASELINE round-7 row). The join form
-    stays as the oracle-shaped twin, bit-equality test-pinned. High
-    scores = boilerplate/junk/wrong-language outliers."""
+    shuffles (sf10 48.8 → 4.5 s; BASELINE round-7 row). High scores =
+    boilerplate/junk/wrong-language outliers."""
     d = tables(spark, sf_dir, ["documents"])["documents"]
     return charlm_score(d.select("doc_id", "text"))
 

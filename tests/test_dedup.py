@@ -109,16 +109,18 @@ def test_minhash_est_gate_subset_and_equality(docs):
 
 
 def test_minhash_relational_matches_column_form(spark):
-    """The relational JVM signature form (r11 scale path: explode +
-    codegen md5 + min-aggs) must be bit-identical to the per-row
-    Column form in BOTH hash modes — the portable md5 sketch is
-    oracle-checked downstream, so even one differing component would
-    break x7p/x29/x34 hash parity."""
+    """The map-only Column signature must equal independent references
+    in BOTH hash modes — the portable md5 sketch is oracle-checked
+    downstream, so even one differing component would break
+    x7p/x29/x34 hash parity. md5: pure Python from ``md5_hash60_py``
+    and the affine constants; xxhash64: a relational explode +
+    ``min(xxhash64(seed, i, shingle))`` per hash function."""
     from pyspark.sql import functions as F
 
+    from rehiver_spark.functions.hashing import md5_hash60_py
     from rehiver_spark.operators.dedup import (
+        minhash_affine_consts,
         minhash_signature,
-        minhash_signatures_relational,
         shingles,
     )
 
@@ -132,22 +134,35 @@ def test_minhash_relational_matches_column_form(spark):
         "doc_id bigint, text string",
     )
     sh = df.select("doc_id", shingles("text", 3).alias("_sh"))
-    for hash_fn in ("md5", "xxhash64"):
-        col_form = {
+
+    def col_form(hash_fn):
+        return {
             r.doc_id: r.sig
             for r in sh.select(
                 "doc_id",
                 minhash_signature("_sh", 16, 42, hash_fn).alias("sig"),
             ).collect()
         }
-        rel_form = {
-            r.doc_id: r.sig
-            for r in minhash_signatures_relational(
-                sh, "doc_id", "_sh", 16, 42, hash_fn
-            ).collect()
-        }
-        assert rel_form == col_form, hash_fn
-        assert len(rel_form) == 4
+
+    p = 2147483647
+    a_co, c_co = minhash_affine_consts(16, 42)
+    md5_ref = {
+        r.doc_id: [
+            min((md5_hash60_py(f"42:{x}") % (1 << 30) * a + c) % p for x in r._sh)
+            for a, c in zip(a_co, c_co)
+        ]
+        for r in sh.collect()
+    }
+    assert col_form("md5") == md5_ref
+    xx_ref = {
+        r.doc_id: list(r[1:])
+        for r in sh.select("doc_id", F.explode("_sh").alias("s"))
+        .groupBy("doc_id")
+        .agg(*[F.min(F.xxhash64(F.lit(42), F.lit(i), "s")) for i in range(16)])
+        .collect()
+    }
+    assert col_form("xxhash64") == xx_ref
+    assert len(xx_ref) == 4
 
 
 def test_simhash_neardup_pairs(spark):

@@ -147,25 +147,6 @@ def test_x7p_minhash_no_cartesian(spark, queries):
     assert "CartesianProduct" not in p
 
 
-def test_minhash_relational_signature_partial_agg(spark):
-    """The r11 relational signature must stay JVM-side and map-side
-    combinable: no Python UDF anywhere (the 87 s sf10 class it
-    replaced), partial + final HashAggregate around the explode."""
-    from pyspark.sql import functions as F
-
-    from rehiver_spark.operators.dedup import (
-        minhash_signatures_relational,
-        shingles,
-    )
-
-    df = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", shingles(F.col("text"), 3).alias("_sh")
-    )
-    p = plan_of(minhash_signatures_relational(df, "doc_id", "_sh", 32, 42, "md5"))
-    assert "partial_min" in p and p.count("HashAggregate") >= 2
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
 def test_minhash_signatures_map_only(spark):
     """The r12 default signature path (map-only JVM Column form) must
     plan with ZERO Exchange — the whole point over the r11 relational
@@ -350,8 +331,8 @@ def test_x51_kmeans_no_unpartitioned_window(spark, queries):
     """The r5 verdict's one weak plan: seeding used a global row_number
     Window (every vector through ONE task). It is now a TakeOrdered
     collect of k rows; no Window — partitioned or not — may appear
-    anywhere in the final x51 plan, and the expr-impl pair join must
-    stay broadcast."""
+    anywhere in the final x51 plan, and nothing may be a cartesian
+    product."""
     p = plan_of(queries["x51_kmeans"](spark, SF))
     assert "Window" not in p
     assert "CartesianProduct" not in p
@@ -428,7 +409,7 @@ def test_x16_arrow_stats_pass_is_map_only(spark):
     from rehiver_spark.operators.textops import repetition_stats
 
     d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    p = plan_of(repetition_stats(d, impl="arrow"))
+    p = plan_of(repetition_stats(d))
     for node in ("HashAggregate", "SortMergeJoin", "Window", "CartesianProduct"):
         assert node not in p
 
@@ -441,7 +422,7 @@ def test_x25_arrow_scoring_pass_is_map_only(spark):
     from rehiver_spark.operators.textops import charlm_score
 
     d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    p = plan_of(charlm_score(d, impl="arrow"))
+    p = plan_of(charlm_score(d))
     for node in ("HashAggregate", "SortMergeJoin", "Window", "CartesianProduct"):
         assert node not in p, f"{node} leaked into the arrow scoring pass"
     assert "ArrowEvalPython" in p or "MapInPandas" in p

@@ -295,9 +295,12 @@ HARD_TEXTS = st.lists(
 @given(HARD_TEXTS)
 def test_repetition_arrow_equals_expr_property(spark, texts):
     """The round-8 Arrow repetition kernel must be bit-identical to the
-    expression form on ADVERSARIAL text: mixed ASCII whitespace runs
-    (Java \\s), NBSP (which Java counts as \\S), astral code points,
-    combining marks, case folding, and heavy token repetition."""
+    pure-Python reference over the JVM ``tokens()`` array on
+    ADVERSARIAL text: mixed ASCII whitespace runs (Java \\s), NBSP
+    (which Java counts as \\S), astral code points, combining marks,
+    case folding, and heavy token repetition."""
+    from test_textops import _ref_repetition_stats
+
     from rehiver_spark.operators.textops import repetition_stats
 
     df = spark.createDataFrame(
@@ -308,9 +311,8 @@ def test_repetition_arrow_equals_expr_property(spark, texts):
         "top_token_frac", "top_bigram_frac",
     ]
     key = lambda r: tuple(r[c] for c in cols)  # noqa: E731
-    a = sorted(map(key, repetition_stats(df, impl="arrow").collect()))
-    e = sorted(map(key, repetition_stats(df, impl="expr").collect()))
-    assert a == e
+    a = sorted(map(key, repetition_stats(df).collect()))
+    assert a == _ref_repetition_stats(df)
 
 
 @settings(max_examples=10, deadline=None)

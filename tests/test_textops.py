@@ -745,14 +745,39 @@ def test_repetition_stats_whitespace_only_docs_emit_no_row(spark):
     assert rows[0]["n_tokens"] == 4
 
 
+def _ref_repetition_stats(df):
+    """Pure-Python repetition_stats over the JVM ``tokens()`` array:
+    sorted (doc_id, n, distinct/n, top token count/n, top bigram
+    count/bigram count), where a 1-token doc is its own single gram;
+    docs with no tokens emit nothing."""
+    from collections import Counter
+
+    from rehiver_spark.operators.textops import tokens
+
+    out = []
+    for r in df.select("doc_id", tokens("text").alias("tk")).collect():
+        tk = r["tk"] or []
+        n = len(tk)
+        if n == 0:
+            continue
+        grams = list(zip(tk, tk[1:])) or [tuple(tk)]
+        out.append((
+            r["doc_id"], n, len(set(tk)) / n,
+            max(Counter(tk).values()) / n,
+            max(Counter(grams).values()) / len(grams),
+        ))
+    return sorted(out)
+
+
 def test_repetition_stats_arrow_equals_expr(spark):
     """The round-8 Arrow repetition kernel (JVM-normalized text →
-    split/factorize/np.unique stats) must reproduce the expression
-    form bit-for-bit on the real corpus plus the edge rows: empty /
-    null / ASCII-whitespace-only docs emit nothing (the rlike gate),
-    1-token docs take top_bigram_frac 1.0 (word_ngrams' short-text
-    rule), repeated multi-space/tab runs collapse identically, and
-    astral chars ride through the JVM normalization untouched."""
+    split/factorize/np.unique stats) must reproduce the pure-Python
+    reference over the JVM ``tokens()`` array bit-for-bit on the real
+    corpus plus the edge rows: empty / null / ASCII-whitespace-only
+    docs emit nothing (the rlike gate), 1-token docs take
+    top_bigram_frac 1.0 (word_ngrams' short-text rule), repeated
+    multi-space/tab runs collapse identically, and astral chars ride
+    through the JVM normalization untouched."""
     from rehiver_spark.operators.textops import repetition_stats
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
@@ -778,25 +803,29 @@ def test_repetition_stats_arrow_equals_expr(spark):
         "top_token_frac", "top_bigram_frac",
     ]
     key = lambda r: tuple(r[c] for c in cols)  # noqa: E731
-    a = sorted(map(key, repetition_stats(src, impl="arrow").collect()))
-    e = sorted(map(key, repetition_stats(src, impl="expr").collect()))
-    assert a == e
+    a = sorted(map(key, repetition_stats(src).collect()))
+    assert a == _ref_repetition_stats(src)
     got = {r[0]: r for r in a}
     assert not {900002, 900003, 900004} & set(got)
     assert got[900001] == (900001, 1, 1.0, 1.0, 1.0)
     assert got[900005] == (900005, 4, 0.5, 0.75, 2 / 3)
     assert got[900009][1] == 1
-    with pytest.raises(ValueError, match="impl"):
-        repetition_stats(src, impl="bogus")
+
+
+def _is_join_form(df):
+    """True when a charlm_score result is the relational join fallback
+    (the Arrow form's scoring pass is a MapInPandas)."""
+    return "MapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_charlm_score_arrow_equals_join(spark):
     """The round-7 Arrow charlm path (vectorized code-point kernel +
     driver-collected charset²-bounded model, zero corpus-row shuffles)
-    must reproduce the join form exactly on the real corpus — including
-    the HALF_UP 6-decimal rounding (np.round's banker's rounding would
-    silently diverge) — plus the edge rows: <2-char docs emit nothing,
-    astral chars count as single code points."""
+    must reproduce the join fallback (forced by ``max_model_rows=0``)
+    exactly on the real corpus — including the HALF_UP 6-decimal
+    rounding (np.round's banker's rounding would silently diverge) —
+    plus the edge rows: <2-char docs emit nothing, astral chars count
+    as single code points."""
     from rehiver_spark.operators.textops import charlm_score
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
@@ -813,23 +842,25 @@ def test_charlm_score_arrow_equals_join(spark):
     )
     src = d.unionByName(edge)
     key = lambda r: (r["doc_id"], r["n_bigrams"], r["cross_entropy"])  # noqa: E731
-    a = sorted(map(key, charlm_score(src, impl="arrow").collect()))
-    j = sorted(map(key, charlm_score(src, impl="join").collect()))
-    assert a == j
+    arrow, join = charlm_score(src), charlm_score(src, max_model_rows=0)
+    assert not _is_join_form(arrow) and _is_join_form(join)
+    a = sorted(map(key, arrow.collect()))
+    assert a == sorted(map(key, join.collect()))
     ids = {r[0] for r in a}
     assert 900004 in ids and not {900001, 900002, 900003} & ids
 
 
 def test_charlm_score_arrow_model_guard_falls_back(spark):
-    """max_model_rows=1 forces the fallback: the arrow impl must
-    return the join form's result rather than collecting an unbounded
-    model to the driver."""
+    """max_model_rows=1 forces the fallback: charlm_score must return
+    the join form's result rather than collecting an unbounded model
+    to the driver."""
     from rehiver_spark.operators.textops import charlm_score
 
     df = spark.createDataFrame(
         [(1, "abcab"), (2, "xyz")], "doc_id long, text string"
     )
     key = lambda r: (r["doc_id"], r["n_bigrams"], r["cross_entropy"])  # noqa: E731
-    got = sorted(map(key, charlm_score(df, impl="arrow", max_model_rows=1).collect()))
-    want = sorted(map(key, charlm_score(df, impl="join").collect()))
-    assert got == want
+    fallback = charlm_score(df, max_model_rows=1)
+    assert _is_join_form(fallback)
+    got = sorted(map(key, fallback.collect()))
+    assert got == sorted(map(key, charlm_score(df).collect()))

@@ -298,13 +298,75 @@ def test_semdedup_auto_cap_respects_external_centroids(spark):
     assert sorted(pops.values()) == [50, 50, 50, 50]
 
 
+def _assign_both(emb, cents):
+    """{id: cell_id} from the Arrow assignment kernel and from the
+    broadcast-join + window helper (``_assign_to_cells``, ivf_topk's
+    form) on the same l2-normalized rows and centroid table."""
+    from rehiver_spark.operators.vectorops import (
+        _assign_cells_arrow,
+        _assign_to_cells,
+        l2_normalize,
+    )
+
+    normed = emb.select(
+        F.col("vec_id").alias("_id"), l2_normalize("embedding").alias("_v")
+    )
+    return tuple(
+        {r["_id"]: r["cell_id"] for r in fn(normed, cents).collect()}
+        for fn in (_assign_cells_arrow, _assign_to_cells)
+    )
+
+
+def _id_seeded_cents(emb, n_cells):
+    """semdedup's default centroids: the ``n_cells`` smallest ids."""
+    from rehiver_spark.operators.vectorops import l2_normalize
+
+    return (
+        emb.orderBy("vec_id")
+        .limit(n_cells)
+        .select(F.col("vec_id").alias("cell_id"), l2_normalize("embedding").alias("_centv"))
+    )
+
+
+def _check_prior_max(emb, out):
+    """Pure-Python reference for semdedup's within-cell prior-max over
+    the cells ``out`` assigned: per id, the max left-to-right-folded
+    cosine to a lower-id member of its cell, counting a pair only when
+    both normalized vectors are non-NULL, NULL-element-free and of
+    equal length; NaN is the greatest value; −1.0 when nothing
+    qualifies. ``keep`` must be ``max_prior_cosine < threshold``."""
+    import math
+
+    from rehiver_spark.operators.vectorops import l2_normalize
+
+    vec = {
+        r[0]: r[1]
+        for r in emb.select("vec_id", l2_normalize("embedding")).collect()
+    }
+    cell = {r["vec_id"]: r["cell_id"] for r in out}
+    ok = {i: v is not None and None not in v for i, v in vec.items()}
+    for r in out:
+        i, v = r["vec_id"], vec[r["vec_id"]]
+        cos = []
+        for j, w in vec.items():
+            if j < i and cell[j] == cell[i] and ok[i] and ok[j] and len(v) == len(w):
+                acc = 0.0
+                for x, y in zip(v, w):
+                    acc += x * y
+                cos.append(acc)
+        want = -1.0 if not cos else max(cos, key=lambda c: (math.isnan(c), c))
+        got = r["max_prior_cosine"]
+        assert got == want or (math.isnan(got) and math.isnan(want)), (i, got, want)
+
+
 def test_semdedup_arrow_assignment_equals_expr(spark):
     """The round-8 Arrow assignment (collected clamp-bounded centroids,
     sequential per-dimension accumulation, argmax-first tiebreak) must
-    reproduce the broadcast-join + window form bit-for-bit — including
-    the edges: exact-duplicate vectors (score ties → smallest cell_id),
-    a zero vector (l2_normalize yields NULL → smallest cell id), and a
-    NULL centroid (NULLS-LAST: never chosen)."""
+    reproduce the broadcast-join + window helper bit-for-bit — including
+    the edges: exact-duplicate vectors (score ties → smallest cell_id)
+    and a zero vector (l2_normalize yields NULL → smallest cell id) —
+    and semdedup's prior-max must match the pure-Python reference over
+    the cells it assigned."""
     from rehiver_spark.operators.vectorops import semdedup
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -321,18 +383,19 @@ def test_semdedup_arrow_assignment_equals_expr(spark):
         "vec_id long, embedding array<double>",
     )
     corpus = e.select("vec_id", "embedding").unionByName(pert).unionByName(edge)
-    key = lambda r: (  # noqa: E731
-        r["vec_id"], r["cell_id"], r["max_prior_cosine"], r["keep"]
-    )
-    kw = dict(n_cells=None, max_cell_rows=None)
-    a = sorted(map(key, semdedup(corpus, impl="arrow", **kw).collect()))
-    x = sorted(map(key, semdedup(corpus, impl="expr", **kw).collect()))
+    out = semdedup(corpus, n_cells=None, max_cell_rows=None).collect()
+    # the default k: floor(sqrt(N)) + 1 clamped to [16, 65536]
+    k = max(16, min(65536, int(corpus.count() ** 0.5) + 1))
+    a, x = _assign_both(corpus, _id_seeded_cents(corpus, k))
     assert a == x
-    # the zero vector lands in the smallest cell in both impls
-    zero_cell = dict((r[0], r[1]) for r in a)[990001]
-    assert zero_cell == min(r[1] for r in a)
-    with pytest.raises(ValueError, match="impl"):
-        semdedup(corpus, impl="bogus")
+    assert {r["vec_id"]: r["cell_id"] for r in out} == a
+    _check_prior_max(corpus, out)
+    assert all(r["keep"] == (r["max_prior_cosine"] < 0.9) for r in out)
+    # the zero vector lands in the smallest cell
+    assert a[990001] == min(a.values())
+    # the exact duplicate shares its twin's cell and is dropped
+    assert a[990002] == a[990003]
+    assert not {r["vec_id"]: r["keep"] for r in out}[990003]
 
 
 def test_semdedup_arrow_keeps_nan_cosines_nan(spark):
@@ -340,7 +403,7 @@ def test_semdedup_arrow_keeps_nan_cosines_nan(spark):
     position, so its pair cosines are NaN — Spark's max sorts NaN
     greatest and coalesce passes NaN through (keep=false). The kernel
     must keep NaN as NaN (no-prior is positional, never inferred from
-    the value) and agree with the expr twin bit-for-bit."""
+    the value) and match the pure-Python prior-max reference."""
     import math
 
     from rehiver_spark.operators.vectorops import semdedup
@@ -353,16 +416,9 @@ def test_semdedup_arrow_keeps_nan_cosines_nan(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    key = lambda r: tuple(r)  # noqa: E731
-    kw = dict(threshold=0.9, n_cells=1, max_cell_rows=None)
-    a = sorted(map(key, semdedup(corpus, impl="arrow", **kw).collect()))
-    x = sorted(map(key, semdedup(corpus, impl="expr", **kw).collect()))
-    assert [
-        (r[0], r[1], "nan" if math.isnan(r[2]) else r[2], r[3]) for r in a
-    ] == [
-        (r[0], r[1], "nan" if math.isnan(r[2]) else r[2], r[3]) for r in x
-    ]
-    by = {r[0]: r for r in a}
+    out = semdedup(corpus, threshold=0.9, n_cells=1, max_cell_rows=None).collect()
+    _check_prior_max(corpus, out)
+    by = {r[0]: tuple(r) for r in out}
     # id 3's best prior is the NaN cosine vs id 2 per Spark max
     # semantics (NaN sorts greatest) → keep must be False
     assert math.isnan(by[3][2]) and by[3][3] is False
@@ -371,8 +427,8 @@ def test_semdedup_arrow_keeps_nan_cosines_nan(spark):
 
 def test_semdedup_arrow_ignores_null_centroid(spark):
     """An externally-fitted centroid table containing a NULL vector
-    must never capture a row (expr: NULL score sorts last) — the arrow
-    kernel models it as a −inf column."""
+    must never capture a row (a NULL score sorts last in the
+    broadcast-join helper) — the arrow kernel skips it."""
     from rehiver_spark.operators.vectorops import semdedup
 
     corpus = spark.createDataFrame(
@@ -383,24 +439,21 @@ def test_semdedup_arrow_ignores_null_centroid(spark):
         [(0, [1.0, 0.0, 0.0]), (1, None), (2, [0.0, 1.0, 1.0])],
         "cell_id bigint, _centv array<double>",
     )
-    key = lambda r: tuple(r)  # noqa: E731
-    a = sorted(
-        map(key, semdedup(corpus, centroids=cents, impl="arrow").collect())
-    )
-    x = sorted(
-        map(key, semdedup(corpus, centroids=cents, impl="expr").collect())
-    )
+    a, x = _assign_both(corpus, cents)
     assert a == x
-    assert not any(r[1] == 1 for r in a)  # the NULL centroid owns nothing
+    assert 1 not in a.values()  # the NULL centroid owns nothing
+    out = semdedup(corpus, centroids=cents).collect()
+    assert {r["vec_id"]: r["cell_id"] for r in out} == a
+    _check_prior_max(corpus, out)
 
 
 def test_semdedup_arrow_mixed_dims_equals_expr(spark):
     """Round-9 advisor fix: one malformed-length embedding used to
     raise PythonException in _prior_max_arrow (np.vstack on a ragged
-    list) while the expr twin degraded gracefully (zip_with pads →
-    NULL cosine). Both kernels must now follow the expr semantics for
-    mixed dimensions: a pair / (row, centroid) scores non-NULL only
-    when both sides are valid AND equal length."""
+    list). Both kernels follow ``zip_with``'s NULL-padding semantics
+    for mixed dimensions: a pair / (row, centroid) scores non-NULL only
+    when both sides are valid AND equal length — checked against the
+    broadcast-join assignment helper and the pure-Python prior-max."""
     from rehiver_spark.operators.vectorops import semdedup
 
     rows = [
@@ -414,15 +467,17 @@ def test_semdedup_arrow_mixed_dims_equals_expr(spark):
         (8, [1.0, 0.0]),
     ]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    key = lambda r: tuple(r)  # noqa: E731
-    for n_cells in (1, 2):
-        kw = dict(threshold=0.9, n_cells=n_cells, max_cell_rows=None)
-        a = sorted(map(key, semdedup(corpus, impl="arrow", **kw).collect()))
-        x = sorted(map(key, semdedup(corpus, impl="expr", **kw).collect()))
+    for n_cells in (2, 1):
+        out = semdedup(
+            corpus, threshold=0.9, n_cells=n_cells, max_cell_rows=None
+        ).collect()
+        a, x = _assign_both(corpus, _id_seeded_cents(corpus, n_cells))
         assert a == x, f"n_cells={n_cells}"
+        assert {r["vec_id"]: r["cell_id"] for r in out} == a
+        _check_prior_max(corpus, out)
     # n_cells=1: every row shares one cell, so the prior-max must run
     # per LENGTH GROUP: dim-2 rows only see lower-id dim-2 members
-    by = {r[0]: r for r in a}
+    by = {r[0]: tuple(r) for r in out}
     assert by[2][2] == -1.0       # dim-2 group's min id: no prior
     assert by[5][2] == -1.0 and by[6][2] == -1.0  # invalid: no prior
 
@@ -431,8 +486,9 @@ def test_semdedup_arrow_mixed_dim_centroids_equals_expr(spark):
     """Round-9 advisor fix for _assign_cells_arrow: the old kernel set
     d = max centroid dim, so one oversized centroid in an external
     table collapsed every normal-dim row into the smallest cell. The
-    expr twin scores rows against matching-dim centroids only — the
-    kernel now groups centroids by dimension and matches it."""
+    broadcast-join helper scores rows against matching-dim centroids
+    only — the kernel now groups centroids by dimension and matches
+    it."""
     from rehiver_spark.operators.vectorops import semdedup
 
     corpus = spark.createDataFrame(
@@ -449,21 +505,17 @@ def test_semdedup_arrow_mixed_dim_centroids_equals_expr(spark):
         ],
         "cell_id bigint, _centv array<double>",
     )
-    key = lambda r: tuple(r)  # noqa: E731
-    a = sorted(
-        map(key, semdedup(corpus, centroids=cents, impl="arrow").collect())
-    )
-    x = sorted(
-        map(key, semdedup(corpus, centroids=cents, impl="expr").collect())
-    )
+    a, x = _assign_both(corpus, cents)
     assert a == x
-    by = {r[0]: r for r in a}
     # dim-2 rows score only against the dim-2 centroid — NOT the
     # smallest-cell fallback the max-d kernel produced
-    assert by[100][1] == 2 and by[101][1] == 2
+    assert a[100] == 2 and a[101] == 2
     # dim-3 rows keep their proper dim-3 assignment (the oversized
     # centroid must not have flipped d for the whole corpus)
-    assert all(by[i][1] in (0, 1) for i in range(24))
+    assert all(a[i] in (0, 1) for i in range(24))
+    out = semdedup(corpus, centroids=cents).collect()
+    assert {r["vec_id"]: r["cell_id"] for r in out} == a
+    _check_prior_max(corpus, out)
 
 
 def test_split_hot_cells_exhausted_warning_names_true_worst(spark):
@@ -876,29 +928,13 @@ def test_jl_project_is_map_only_and_portable(spark):
     assert sp == dd
 
 
-def test_jl_arrow_and_expr_paths_are_bit_identical(spark):
-    """The Arrow matmul fast path must equal the pure Column-expression
-    form on the real embeddings table, row for row."""
-    from rehiver_spark.operators.vectorops import jl_project
-
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = sorted(
-        (r["vec_id"], tuple(r["proj"]))
-        for r in jl_project(df, 64, 16, impl="arrow").collect()
-    )
-    b = sorted(
-        (r["vec_id"], tuple(r["proj"]))
-        for r in jl_project(df, 64, 16, impl="expr").collect()
-    )
-    assert a == b
-
-
 # ---------------------------------------------------------------------------
 # X51 — distributed quantized k-means
 # ---------------------------------------------------------------------------
 
 
-def test_kmeans_quantized_matches_pure_python_reference_exactly(spark):
+@pytest.mark.parametrize("k", [6, 8])
+def test_kmeans_quantized_matches_pure_python_reference_exactly(spark, k):
     """The distributed 3-iteration Lloyd's loop must equal a
     pure-Python implementation with identical integer semantics
     (grid quantization, away-from-zero mean rounding, cell-id
@@ -921,7 +957,7 @@ def test_kmeans_quantized_matches_pure_python_reference_exactly(spark):
 
     Q = {i: [rnd(x * 10000) for x in v] for i, v in rows}
     order = sorted(Q, key=lambda i: (md5_hash60_py(f"km:{i}"), i))
-    cents = {c: Q[order[c]] for c in range(8)}
+    cents = {c: Q[order[c]] for c in range(k)}
     assign = {}
     for _ in range(3):
         for i, q in Q.items():
@@ -945,52 +981,27 @@ def test_kmeans_quantized_matches_pure_python_reference_exactly(spark):
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     got = {
         r["cell"]: (r["n_members"], r["inertia"], list(r["c"]))
-        for r in kmeans_quantized(df, dim=64, k=8, n_iter=3).collect()
+        for r in kmeans_quantized(df, dim=64, k=k, n_iter=3).collect()
     }
     assert got == ref
 
 
 def test_kmeans_centroids_never_collected(spark):
-    """No driver-materialized relation in either impl — the loop is
-    DataFrame-only end to end. (``Scan ExistingRDD`` is expected: it
-    is the executor-side localCheckpoint of the k-row centroid
-    relation, not a collect; a collect-and-recreate would surface as
-    LocalTableScan.) The expr impl additionally runs with zero Python
-    evaluation; the arrow impl's only Python is the vectorized
-    distance kernel."""
+    """No driver-materialized relation — the loop is DataFrame-only
+    end to end. (``Scan ExistingRDD`` is expected: it is the
+    executor-side localCheckpoint of the k-row centroid relation, not a
+    collect; a collect-and-recreate would surface as LocalTableScan.)
+    The only Python is the vectorized distance kernel."""
     from rehiver_spark.operators.vectorops import kmeans_quantized
 
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    pe = (
-        kmeans_quantized(df, dim=64, k=4, n_iter=2, impl="expr")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "LocalTableScan" not in pe
-    assert "ArrowEvalPython" not in pe and "BatchEvalPython" not in pe
     pa = (
-        kmeans_quantized(df, dim=64, k=4, n_iter=2, impl="arrow")
+        kmeans_quantized(df, dim=64, k=4, n_iter=2)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "LocalTableScan" not in pa and "BatchEvalPython" not in pa
-
-
-def test_kmeans_arrow_and_expr_impls_are_bit_identical(spark):
-    from rehiver_spark.operators.vectorops import kmeans_quantized
-
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = sorted(
-        (r["cell"], r["n_members"], r["inertia"], tuple(r["c"]))
-        for r in kmeans_quantized(df, dim=64, k=6, n_iter=3, impl="arrow").collect()
-    )
-    b = sorted(
-        (r["cell"], r["n_members"], r["inertia"], tuple(r["c"]))
-        for r in kmeans_quantized(df, dim=64, k=6, n_iter=3, impl="expr").collect()
-    )
-    assert a == b
 
 
 def test_ivf_with_full_probe_equals_brute_force(spark):
@@ -1031,8 +1042,8 @@ def test_ann_recall_query_reports_honest_partial_probe_recall(spark):
 
 def test_jl_and_kmeans_tolerate_null_vectors(spark):
     """Regression: a NULL (or wrong-dim) embedding must not crash the
-    Arrow kernels — JL projects it to NULL in BOTH impls, k-means
-    excludes it from clustering (visible via member counts)."""
+    Arrow kernels — JL projects it to NULL, k-means excludes it from
+    clustering (visible via member counts)."""
     from rehiver_spark.operators.vectorops import jl_project, kmeans_quantized
 
     good = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(30)
@@ -1041,19 +1052,17 @@ def test_jl_and_kmeans_tolerate_null_vectors(spark):
         "vec_id long, embedding array<double>",
     )
     df = good.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding")).unionByName(bad)
-    for impl in ("arrow", "expr"):
-        rows = {r["vec_id"]: r["proj"] for r in jl_project(df, 64, 8, impl=impl).collect()}
-        assert rows[9001] is None and rows[9002] is None, impl
-        assert all(v is not None for k, v in rows.items() if k < 9000), impl
+    rows = {r["vec_id"]: r["proj"] for r in jl_project(df, 64, 8).collect()}
+    assert rows[9001] is None and rows[9002] is None
+    assert all(v is not None for k, v in rows.items() if k < 9000)
     km = kmeans_quantized(df, dim=64, k=4, n_iter=2)
     assert sum(r["n_members"] for r in km.collect()) == 30
 
 
 def test_jl_and_kmeans_tolerate_element_nulls(spark):
     """Regression (round-5 review): a vector with a NULL ELEMENT must
-    project to NULL in BOTH JL impls (Arrow delivers element nulls as
-    NaN, which turned the int64 cast into garbage in the arrow kernel
-    while expr returned nulls — silently divergent), and k-means must
+    project to NULL (Arrow delivers element nulls as NaN, which turned
+    the int64 cast into garbage in the kernel), and k-means must
     exclude it."""
     from rehiver_spark.operators.vectorops import jl_project, kmeans_quantized
 
@@ -1065,11 +1074,25 @@ def test_jl_and_kmeans_tolerate_element_nulls(spark):
     df = good.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     ).unionByName(holed)
-    for impl in ("arrow", "expr"):
-        rows = {r["vec_id"]: r["proj"] for r in jl_project(df, 64, 8, impl=impl).collect()}
-        assert rows[9005] is None, impl
+    rows = {r["vec_id"]: r["proj"] for r in jl_project(df, 64, 8).collect()}
+    assert rows[9005] is None
     km = kmeans_quantized(df, dim=64, k=4, n_iter=2)
     assert sum(r["n_members"] for r in km.collect()) == 20
+
+
+def test_jl_and_kmeans_reject_bad_sizes(spark):
+    """Non-positive sizes fail up front with a ValueError instead of an
+    all-NULL projection (out_dim=0), a ``np.vstack`` error (k=0) or an
+    ``AttributeError`` on the never-assigned loop result (n_iter=0)."""
+    from rehiver_spark.operators.vectorops import jl_project, kmeans_quantized
+
+    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    for kw in ({"out_dim": 0}, {"dim": 0}, {"scale": 0}):
+        with pytest.raises(ValueError, match="jl_project"):
+            jl_project(df, **{"dim": 64, **kw})
+    for kw in ({"k": 0}, {"n_iter": 0}, {"dim": -1}, {"scale": 0}):
+        with pytest.raises(ValueError, match="kmeans_quantized"):
+            kmeans_quantized(df, **{"dim": 64, **kw})
 
 
 def test_plane_buckets_int64_blas_path_bit_equal(spark):
