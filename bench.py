@@ -257,15 +257,23 @@ def _loadavg1() -> float:
         return -1.0
 
 
-def _scoped_artifact(sf: float, cpus: int) -> str:
+def _scoped_artifact(sf: float, cpus: int, suffix: str = "") -> str:
     """Fallback artifact name for a run whose (sf, cpus) does not match
     the committed BENCH_FULL.json — the r13 driver's 8-core sweep
     overwrote the 32-core envelope, slackening the 1.3x adjudication
-    gate for every later run (r13 VERDICT task 6)."""
+    gate for every later run (r13 VERDICT task 6). ``suffix="_loaded"``
+    names the sibling for a same-(sf, cpus) run that fails the
+    anchor-validity load gates."""
     return os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_FULL_sf{sf}_c{cpus}.json",
+        f"BENCH_FULL_sf{sf}_c{cpus}{suffix}.json",
     )
+
+
+# anchor-validity gates: a run stamped above either load is not quiet
+# enough to replace the committed same-(sf, cpus) anchor
+_ANCHOR_MAX_LOAD_PRE = 1.0
+_ANCHOR_MAX_LOAD_FLOOR = 2.0
 
 
 def _load_envelope(sf: float, cpus: int | None = None) -> dict[str, float]:
@@ -390,6 +398,19 @@ def emit_artifacts(
                     f"# bench: BENCH_FULL.json holds sf={rec.get('sf')} "
                     f"cpus={rec_cpus}; this run (sf={sf} cpus={cpus}) "
                     f"written to {os.path.basename(target)}",
+                    file=sys.stderr,
+                )
+            elif (
+                full.get("load_pre", 0) > _ANCHOR_MAX_LOAD_PRE
+                or full.get("load_floor", 0) > _ANCHOR_MAX_LOAD_FLOOR
+            ):
+                # same config but a loaded host (r14 VERDICT
+                # What's-wrong #1): never replace the quiet anchor
+                target = _scoped_artifact(sf, cpus, "_loaded")
+                print(
+                    f"# bench: load_pre={full.get('load_pre')} "
+                    f"load_floor={full.get('load_floor')} fail the anchor "
+                    f"gates; written to {os.path.basename(target)}",
                     file=sys.stderr,
                 )
         except (OSError, ValueError):

@@ -37,6 +37,7 @@ data being deduped.
 
 from __future__ import annotations
 
+import logging
 import math
 import os
 
@@ -61,10 +62,8 @@ from rehiver_spark.session import ensure_parallelism, track_persist
 # — which comes from parquet scan sizes and tracks scale faithfully,
 # unlike the derived subtree's. Threshold: measured estimates are 0.5 MiB
 # (sf0.1) / 6 MiB (sf1) / 65 MiB (sf10); 32 MiB puts only sf10-class
-# corpora on the merge path. Env-overridable for other deployments.
-_SELFJOIN_MERGE_MIN_EST_BYTES = int(
-    os.environ.get("REHIVER_SELFJOIN_MERGE_MIN_EST_BYTES", str(32 << 20))
-)
+# corpora on the merge path.
+_SELFJOIN_MERGE_MIN_EST_BYTES = 32 << 20
 
 
 def _big_corpus(df: DataFrame) -> bool:
@@ -715,13 +714,33 @@ def _cc_driver(spark, raw: DataFrame, id_type, max_iter: int) -> DataFrame:
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
+# directed-edge budget of the driver solve is 2× this (both directions
+# of every pair): 16 B/row int64 edges stay ≤ 128 MiB on the driver
+_CC_DRIVER_EDGE_CAP = 4_000_000
+
+
+def _cc_driver_cap(raw: DataFrame, id_dt: T.DataType) -> int:
+    """Most directed edges of ``raw`` the driver solve of
+    :func:`connected_components` admits."""
+    cap = 2 * _CC_DRIVER_EDGE_CAP
+    if not isinstance(id_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        # byte-aware cap (advisor r10): string/binary rows cost
+        # ~2·avg_len utf8 bytes + Arrow offset overhead, so scale the
+        # row cap down by the probed width ratio (one cheap agg over
+        # the already-checkpointed edge list).
+        avg_w = (
+            raw.agg(F.avg(F.length(F.col("a").cast("string")))).collect()[0][0]
+            or 8.0
+        )
+        cap = max(1, int(cap * 16.0 / (2.0 * avg_w + 16.0)))
+    return cap
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    impl: str = "auto",
-    driver_edge_cap: int = 4_000_000,
 ) -> DataFrame:
     """Duplicate-cluster resolution: assign every node appearing in the
     pair list its component's minimum id as ``cluster_id``.
@@ -734,25 +753,24 @@ def connected_components(
     rounds (bounded by ``max_iter``; raises if not converged so an
     incomplete clustering can never be silently returned).
 
-    ``impl="auto"`` (default, round 10) dispatches on the MEASURED
-    edge count — the same probe the distributed loop already needs for
-    its topology sizing, so the dial costs nothing extra:
+    The path is chosen from the MEASURED edge count — the same probe
+    the distributed loop already needs for its topology sizing, so the
+    dial costs nothing extra — and logged at INFO:
 
-    - ``"driver"`` when the symmetrized edge list holds at most
-      ``2 * driver_edge_cap`` rows: the pair graph of a dedup run is
+    - driver when the symmetrized edge list holds at most
+      ``2 * _CC_DRIVER_EDGE_CAP`` rows: the pair graph of a dedup run is
       corpus-TINY (only docs with a near-dup appear), while each
       distributed round pays whole-cluster latency (a shuffle join +
       an aggregation job); at sf10 the x17 pair graph is ~5×10⁵
       directed edges (BASELINE.md: 512,792) yet the round loop alone
       ran ~40 s. The driver solve Arrow-collects the (a, b) columns —
-      two int64 numpy arrays, 16 B/row, ≤128 MiB at the default cap
-      (string doc ids are bigger per row — the cap scales itself down
-      by the probed average id width, see below) — and runs the SAME
-      pointer-jumped
-      min-label iteration vectorized (``np.minimum.at`` + one
-      ``lab[lab]`` jump per round), so the fixpoint is identical by
-      construction (test-pinned against the distributed branch).
-    - ``"distributed"`` above the cap: node/edge data never leaves
+      two int64 numpy arrays, 16 B/row, ≤128 MiB at the cap (string
+      doc ids are bigger per row — the cap scales itself down by the
+      probed average id width, see :func:`_cc_driver_cap`) — and runs
+      the SAME pointer-jumped min-label iteration vectorized
+      (``np.minimum.at`` + one ``lab[lab]`` jump per round), so the
+      fixpoint is identical by construction (test-pinned against the distributed branch).
+    - distributed above the cap: node/edge data never leaves
       executors (the only driver-side value is a scalar convergence
       aggregate). A 100 TB near-dup graph with billions of edges takes
       this path; the cap bounds driver memory the way the Σpop² probe
@@ -768,19 +786,17 @@ def connected_components(
     job, swap in reliable ``checkpoint()`` with a checkpoint dir; the
     algorithm is unchanged.
     """
-    if impl not in ("auto", "driver", "distributed"):
-        raise ValueError(f"impl must be auto|driver|distributed, got {impl!r}")
     # e is referenced TWICE below (forward + swapped); without a cache
     # the union's branches EACH replay the whole upstream pair
     # pipeline (banding join + verification — measured 2× the x29
     # pairs cost at sf10, 106 s vs 45 s for the CC stage). The lazy
     # checkpoint is materialized once by the union job and the swap
     # side reads the cache.
-    # NULL ids are dropped up front so both impls see the same graph:
+    # NULL ids are dropped up front so both branches see the same graph:
     # the driver branch's np.unique cannot sort None among strings
     # (opaque TypeError), and the distributed branch would silently
     # treat NULL as a node that joins to nothing — neither is a useful
-    # semantics for bad input, and diverging across the auto dispatch
+    # semantics for bad input, and diverging across the dispatch
     # boundary by graph size would be worse.
     e = (
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
@@ -797,34 +813,15 @@ def connected_components(
     # appear), and per-round latency is dominated by task count
     n_edges = raw.count()
     spark = pairs.sparkSession
-    if impl == "auto":
-        cap = 2 * driver_edge_cap
-        id_dt = pairs.schema[id_a].dataType
-        if not isinstance(
-            id_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        ):
-            # byte-aware cap (advisor r10): the 16 B/row ≤128 MiB
-            # rationale assumes int64 ids. String/binary rows cost
-            # ~2·avg_len utf8 bytes + Arrow offset overhead, so scale
-            # the row cap down by the probed width ratio (one cheap
-            # agg over the already-checkpointed edge list, only on the
-            # non-integral-id path).
-            avg_w = (
-                raw.agg(
-                    F.avg(F.length(F.col("a").cast("string")))
-                ).collect()[0][0]
-                or 8.0
-            )
-            cap = max(1, int(cap * 16.0 / (2.0 * avg_w + 16.0)))
-        impl = "driver" if n_edges <= cap else "distributed"
-        import logging
-
-        logging.getLogger(__name__).info(
-            "connected_components auto: %d directed edges (cap %d) -> %s",
-            n_edges, cap, impl,
-        )
-    if impl == "driver":
-        return _cc_driver(spark, raw, pairs.schema[id_a].dataType, max_iter)
+    id_dt = pairs.schema[id_a].dataType
+    cap = _cc_driver_cap(raw, id_dt)
+    on_driver = n_edges <= cap
+    logging.getLogger(__name__).info(
+        "connected_components: %d directed edges (cap %d) -> %s",
+        n_edges, cap, "driver" if on_driver else "distributed",
+    )
+    if on_driver:
+        return _cc_driver(spark, raw, id_dt, max_iter)
     parts = max(1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1))
     edges = raw.repartition(parts, "a").localCheckpoint()
     # initial labels already fold in one propagation round: each node
@@ -843,7 +840,7 @@ def connected_components(
     # as the stop signal — one extra join per round over the labels
     # relation, which the round's edge join already dwarfs.
     numeric_ids = isinstance(
-        pairs.schema[id_a].dataType,
+        id_dt,
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType),
     )
     dec = F.sum(F.col("label").cast("decimal(38,0)"))

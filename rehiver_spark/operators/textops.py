@@ -1033,11 +1033,14 @@ def url_dedup(
     )
 
 
+# charlm_score collects its model to the driver only up to this many bigrams
+_CHARLM_MAX_MODEL_ROWS = 1 << 18
+
+
 def charlm_score(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_model_rows: int = 1 << 18,
 ) -> DataFrame:
     """CCNet-style LM quality signal (Wenzek et al. 2020 use a 5-gram
     KenLM; this is the dependency-free relational form): train an
@@ -1050,18 +1053,18 @@ def charlm_score(
     size), so it is trained by per-batch vectorized partial counts
     (numpy utf-32 code-point arrays → uint64 bigram codes; the shuffle
     carries ~charset² rows PER BATCH, not per char) and collected to
-    the driver behind a ``max_model_rows`` guard; scoring is then one
-    map-only Arrow pass — per-doc gram codes, vectorized log-prob
-    lookup, ordered in-doc sum. No per-char rows ever cross the wire
-    (the only corpus-row movement left is ensure_parallelism's
+    the driver behind a ``_CHARLM_MAX_MODEL_ROWS`` guard; scoring is
+    then one map-only Arrow pass — per-doc gram codes, vectorized
+    log-prob lookup, ordered in-doc sum. No per-char rows ever cross
+    the wire (the only corpus-row movement left is ensure_parallelism's
     round-robin repartition on few-file inputs, input-row-sized;
     absent when the source is already parallel — sf10 receipts:
     9.9 MB → 0.2 MB shuffle write, BASELINE.md round 7).
-    If the model exceeds ``max_model_rows`` it falls back to the
-    relational join form, which explodes one row per corpus character
-    and re-groups it per doc (sf10, 500k docs: 14.4 s for one
-    explode+HOF gram pass and 9.5 s for the per-char regroup) but
-    never collects the model to the driver. A corpus whose charset²
+    Past the guard it falls back to the relational join form, which
+    explodes one row per corpus character and re-groups it per doc
+    (sf10, 500k docs: 14.4 s for one explode+HOF gram pass and 9.5 s
+    for the per-char regroup) but never collects the model to the
+    driver. A corpus whose charset²
     outgrows the driver is not a char-bigram use case.
 
     Determinism contract (Arrow form): training and scoring are two
@@ -1081,7 +1084,7 @@ def charlm_score(
     chars have no bigrams and emit no row (both forms).
     """
     df = ensure_parallelism(df)
-    out = _charlm_score_arrow(df, id_col, text_col, max_model_rows)
+    out = _charlm_score_arrow(df, id_col, text_col)
     if out is not None:
         return out
     # model over the guard: fall through to the join form
@@ -1160,12 +1163,10 @@ def _batch_gram_codes(texts):
     return pair[valid], doc_of_pos[:-1][valid], np.maximum(lens - 1, 0), arr
 
 
-def _charlm_score_arrow(
-    df: DataFrame, id_col: str, text_col: str, max_model_rows: int
-) -> DataFrame | None:
+def _charlm_score_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame | None:
     """Arrow path of :func:`charlm_score` — see its docstring. Returns
-    None when the trained model exceeds ``max_model_rows`` (caller
-    falls back to the join form)."""
+    None when the trained model exceeds ``_CHARLM_MAX_MODEL_ROWS``
+    (caller falls back to the join form)."""
     import logging
     import math
 
@@ -1220,12 +1221,13 @@ def _charlm_score_arrow(
     # guard BEFORE collecting: a bounded fetch decides whether the
     # model fits the driver — collecting first and counting after
     # would be the exact OOM the guard exists to prevent
-    probe = model_df.limit(max_model_rows + 1).collect()
-    if len(probe) > max_model_rows:
+    cap = _CHARLM_MAX_MODEL_ROWS
+    probe = model_df.limit(cap + 1).collect()
+    if len(probe) > cap:
         logging.getLogger(__name__).warning(
-            "charlm_score: distinct bigrams exceed max_model_rows=%d; "
+            "charlm_score: distinct bigrams exceed %d; "
             "falling back to the relational join form",
-            max_model_rows,
+            cap,
         )
         parts.unpersist()
         return None

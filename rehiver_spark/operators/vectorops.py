@@ -21,6 +21,7 @@ Scale design:
 
 from __future__ import annotations
 
+import logging
 import math
 
 from pyspark.sql import Column, DataFrame, Window
@@ -319,22 +320,20 @@ def _lsh_verify_arrow(
     bucketed: DataFrame,
     threshold: float,
     id_type,
-    split_cap: int | None = None,
-    coalesce_groups: int | None = None,
-    hist: DataFrame | None = None,
+    hist: DataFrame,
 ) -> DataFrame:
     """Within-bucket exact-cosine verification as ONE ``applyInPandas``
     pass — the round-9 scale fix for the LSH near-dup family (same
     shape as semdedup's prior-max kernel), re-grouped in round 10 for
     the adaptive-plane posture:
 
-    - SMALL buckets coalesce into ≤ ``coalesce_groups`` hash groups
-      per table and the kernel loops buckets inside each group —
-      constant-population bucketing means ~N/64 buckets, and per-group
-      applyInPandas overhead (~0.6 ms measured r9) would otherwise
-      dominate;
-    - a bucket whose population exceeds ``split_cap`` is SPLIT into
-      block-pair subtasks: rows get a deterministic block id
+    - SMALL buckets coalesce into ≤ ``_LSH_VERIFY_COALESCE_GROUPS``
+      hash groups per table and the kernel loops buckets inside each
+      group — constant-population bucketing means ~N/64 buckets, and
+      per-group applyInPandas overhead (~0.6 ms measured r9) would
+      otherwise dominate;
+    - a bucket whose population exceeds ``_LSH_BUCKET_SPLIT_CAP`` is
+      SPLIT into block-pair subtasks: rows get a deterministic block id
       (xxhash64(_id) mod ceil(pop/cap)) and are replicated once per
       block, keyed (bi, bj) = (min, max) of (own block, partner
       block); subtask (i, i) verifies within-block pairs, (i, j)
@@ -343,7 +342,8 @@ def _lsh_verify_arrow(
       the bucket is (the r9 verdict's x9 `weak`: one task owning a
       pop² cosine block grows quadratically with corpus size).
 
-    ``bucketed`` = (t, bkt, _id, _v). The relational verify
+    ``bucketed`` = (t, bkt, _id, _v); ``hist`` = (t, bkt, _pop), the
+    dispatch's persisted Σpop² histogram. The relational verify
     materialized pop² candidate rows × two dim-sized vectors through a
     join; this kernel ships each bucket's vectors ONCE (Σpop × dim
     doubles per table, × ceil(pop/cap) for the few split buckets —
@@ -386,8 +386,6 @@ def _lsh_verify_arrow(
         StructType,
     )
 
-    cap = int(split_cap or _LSH_BUCKET_SPLIT_CAP)
-    ngroups = int(coalesce_groups or _LSH_VERIFY_COALESCE_GROUPS)
     out_schema = StructType(
         [
             StructField("id_a", id_type, True),
@@ -397,14 +395,9 @@ def _lsh_verify_arrow(
     )
 
     # --- grouping prep: coalesce cold buckets, split hot ones ---
-    # the auto dispatch already aggregated the bucket histogram for
-    # its Σpop² dial and passes it in persisted; recompute only when
-    # the kernel is forced directly (impl="arrow")
-    if hist is None:
-        hist = bucketed.groupBy("t", "bkt").agg(F.count(F.lit(1)).alias("_pop"))
-    hot = hist.filter(F.col("_pop") > cap)
+    hot = hist.filter(F.col("_pop") > _LSH_BUCKET_SPLIT_CAP)
     tagged = bucketed.join(F.broadcast(hot), ["t", "bkt"], "left")
-    g = F.pmod(F.xxhash64("bkt"), F.lit(ngroups)).cast("int")
+    g = F.pmod(F.xxhash64("bkt"), F.lit(_LSH_VERIFY_COALESCE_GROUPS)).cast("int")
     cold = tagged.filter(F.col("_pop").isNull()).select(
         "t",
         g.alias("_g"),
@@ -415,7 +408,7 @@ def _lsh_verify_arrow(
         "_id",
         "_v",
     )
-    nb = F.ceil(F.col("_pop") / F.lit(cap)).cast("int")
+    nb = F.ceil(F.col("_pop") / F.lit(_LSH_BUCKET_SPLIT_CAP)).cast("int")
     hot_rows = (
         tagged.filter(F.col("_pop").isNotNull())
         .withColumn("_blk", F.pmod(F.xxhash64("_id"), nb).cast("int"))
@@ -614,16 +607,15 @@ def lsh_cosine_neardup_portable(
     n_tables: int = 4,
     seed: int = 42,
     scale: int = 10000,
-    impl: str = "auto",
 ) -> DataFrame:
     """``lsh_cosine_neardup`` with quantized Rademacher bucketing — the
     oracle-checkable form. Candidates = per-table bucket collisions;
-    verification = exact cosine, dispatched by the measured Σpop²
-    probe since round 9 (``impl="auto"`` — see
-    :func:`_lsh_neardup_from_base`; ``"expr"`` is the oracle-shaped
-    relational join, ``"arrow"`` the within-bucket kernel, bit-equal
-    and test-pinned). All tables' buckets are computed in ONE
-    projection.
+    verification = exact cosine, on the path the measured Σpop² probe
+    picks (see :func:`_lsh_neardup_from_base`: the oracle-shaped
+    relational join or the within-bucket kernel, bit-equal and
+    test-pinned). All tables' buckets are computed in ONE projection.
+    ValueError unless ``dim``, ``n_tables`` ≥ 1 and an explicit
+    ``n_planes`` is 1..64 (one bit per plane in an int64 bucket).
 
     ``n_planes=None`` (the default since round 10) picks
     :func:`adaptive_plane_count` from a count probe — expected bucket
@@ -635,6 +627,7 @@ def lsh_cosine_neardup_portable(
     ``rademacher_planes`` is per-(seed, plane, dim) md5, so the
     adaptive table is a PREFIX of the max table and an oracle can
     embed ``hi``-plane literals and mask on the computed count."""
+    _check_lsh_sizes("lsh_cosine_neardup_portable", dim, n_planes, n_tables)
     # quantization stays a Spark expression (F.round == oracle round,
     # proven parity); only the plane dots move to the batched matmul
     quant = F.transform(
@@ -652,15 +645,26 @@ def lsh_cosine_neardup_portable(
         # would crash np.vstack for the whole job — drop it here. The
         # size guard enforces the `dim` contract the same way
         # jl_project/ivf do: a ragged row would crash the batched
-        # matmul on the arrow path yet silently zero-bucket on the
-        # expr twin (zip_with NULL-pads), so neither path may see one
+        # bucket matmul, and the join verify's zip_with would NULL-pad
+        # it, so neither verify path may see one
         .filter(F.col("_v").isNotNull() & (F.size("_v") == dim))
     )  # read by the bucketing pass plus the verify stage
     if n_planes is None:
         n_planes = adaptive_plane_count(base.count())
     planes = [rademacher_planes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
     bkts = _plane_buckets_udf(planes, input_dtype="int64")
-    return _lsh_neardup_from_base(base, bkts("_q"), threshold, impl, dim)
+    return _lsh_neardup_from_base(base, bkts("_q"), threshold, dim)
+
+
+def _check_lsh_sizes(fn: str, dim: int, n_planes: int | None, n_tables: int) -> None:
+    # zero tables or planes leave nothing to unpack; from plane 64 on
+    # ``1 << p`` is 0 in int64, so planes would silently stop counting
+    bad_planes = n_planes is not None and not 1 <= n_planes <= 64
+    if dim < 1 or n_tables < 1 or bad_planes:
+        raise ValueError(
+            f"{fn}: dim and n_tables must be >= 1 and n_planes in 1..64, "
+            f"got dim={dim}, n_tables={n_tables}, n_planes={n_planes}"
+        )
 
 
 # expr verify materializes ~ Σpop² candidate rows × two dim-sized
@@ -673,57 +677,52 @@ _LSH_EXPR_VERIFY_MAX_BYTES = 1 << 30
 
 
 def _lsh_neardup_from_base(
-    base: DataFrame, bkts_col: Column, threshold: float, impl: str, dim: int
+    base: DataFrame, bkts_col: Column, threshold: float, dim: int
 ) -> DataFrame:
     """Shared candidate/verify tail of both LSH near-dup forms.
     ``base`` = (_id, _v, ...), ``bkts_col`` = array<bigint> of one
     packed bucket per table.
 
-    ``impl="auto"`` (the operator default) dispatches on a measured
-    Σpop² probe: one scalar aggregation over the bucket histogram (the
-    ONE eager job this operator runs — base is persisted, so the probe
-    costs the bucket UDF once plus a tiny shuffle) estimates the expr
-    verify's join bytes (Σpop² × 2·dim doubles) and picks the
-    relational join below ``_LSH_EXPR_VERIFY_MAX_BYTES``, the
-    within-bucket kernel above it. Deterministic given the data; both
-    branches are bit-equal (test-pinned), so the dial is a cost
-    decision, not a semantics change."""
-    if impl not in ("auto", "arrow", "expr"):
-        raise ValueError(f"impl must be auto|arrow|expr, got {impl!r}")
-    hist = None
-    if impl == "auto":
-        # ONE histogram aggregation feeds both the Σpop² dial and (if
-        # the kernel wins) the verify stage's hot-bucket detection —
-        # before round 10 each was its own shuffle over the exploded
-        # bucket relation
-        hist = track_persist(
-            base.select(F.posexplode(bkts_col))
-            .withColumnsRenamed({"pos": "t", "col": "bkt"})
-            .groupBy("t", "bkt")
-            .agg(F.count(F.lit(1)).alias("_pop"))
-        )
-        sum_pop2 = (
-            hist.agg(F.sum(F.col("_pop") * F.col("_pop")).alias("_s")).first()["_s"]
-        ) or 0
-        est_bytes = sum_pop2 * (2 * dim * 8 + 48)
-        impl = "expr" if est_bytes <= _LSH_EXPR_VERIFY_MAX_BYTES else "arrow"
-        if impl == "expr":
-            # the histogram's only other consumer is the arrow kernel's
-            # hot-bucket detection; on the expr path it is dead after
-            # the Σpop² read, so free its executor storage now instead
-            # of waiting for high-water eviction / release_persisted
-            hist.unpersist()
-            hist = None
-    if impl == "arrow":
+    The verify path comes from a measured Σpop² probe: one scalar
+    aggregation over the bucket histogram (the ONE eager job this
+    operator runs — base is persisted, so the probe costs the bucket
+    UDF once plus a tiny shuffle) estimates the relational verify's
+    join bytes (Σpop² × 2·dim doubles) and picks that join ("expr") up
+    to ``_LSH_EXPR_VERIFY_MAX_BYTES``, the within-bucket kernel
+    ("arrow") above it, logged at INFO. Both branches are bit-equal
+    (test-pinned), so the dial is a cost decision, not a semantics
+    change."""
+    # ONE histogram aggregation feeds both the Σpop² dial and (if the
+    # kernel wins) its hot-bucket detection
+    hist = track_persist(
+        base.select(F.posexplode(bkts_col))
+        .withColumnsRenamed({"pos": "t", "col": "bkt"})
+        .groupBy("t", "bkt")
+        .agg(F.count(F.lit(1)).alias("_pop"))
+    )
+    sum_pop2 = (
+        hist.agg(F.sum(F.col("_pop") * F.col("_pop")).alias("_s")).first()["_s"]
+    ) or 0
+    est_bytes = sum_pop2 * (2 * dim * 8 + 48)
+    use_kernel = est_bytes > _LSH_EXPR_VERIFY_MAX_BYTES
+    logging.getLogger(__name__).info(
+        "lsh verify: sum pop^2 %d, est %d bytes (cap %d) -> %s",
+        sum_pop2, est_bytes, _LSH_EXPR_VERIFY_MAX_BYTES,
+        "arrow" if use_kernel else "expr",
+    )
+    if use_kernel:
         bucketed = base.select(
             "_id", "_v", F.posexplode(bkts_col)
         ).withColumnsRenamed({"pos": "t", "col": "bkt"})
         pairs = _lsh_verify_arrow(
-            bucketed, threshold, base.schema["_id"].dataType, hist=hist
+            bucketed, threshold, base.schema["_id"].dataType, hist
         )
         # a pair colliding in several tables is verified in each with
         # an identical fold → identical doubles → distinct collapses
         return pairs.distinct()
+    # on the join path the histogram is dead after the Σpop² read:
+    # free its executor storage now, not at high-water eviction
+    hist.unpersist()
     bucketed = base.select("_id", F.posexplode(bkts_col)).withColumnsRenamed(
         {"pos": "t", "col": "bkt"}
     )
@@ -762,19 +761,17 @@ def lsh_cosine_neardup(
     n_planes: int | None = None,
     n_tables: int = 4,
     seed: int = 42,
-    impl: str = "auto",
 ) -> DataFrame:
     """ANN near-dup: per-table sign-LSH bucket collisions → exact
     cosine verification → distinct survivors. Approximate (recall < 1
     possible); returned pairs ⊆ exact answer. All tables' buckets come
     from ONE projection; verification dispatches on the measured
-    Σpop² probe since round 9 (``impl="auto"``, see
-    :func:`_lsh_neardup_from_base`): small bucket histograms keep the
-    relational join (``"expr"``), while skewed ones take the
-    within-bucket Arrow kernel (``"arrow"``,
-    :func:`_lsh_verify_arrow`) — the join materialized pop² candidate
-    rows × two dim-sized vectors, which ran the executor out of
-    allocation headroom at sf10 where Σpop² ≈ 2.3e8 per table.
+    Σpop² probe (see :func:`_lsh_neardup_from_base`): small bucket
+    histograms keep the relational join, while skewed ones take the
+    within-bucket Arrow kernel (:func:`_lsh_verify_arrow`) — the join
+    materialized pop² candidate rows × two dim-sized vectors, which ran
+    the executor out of allocation headroom at sf10 where Σpop² ≈ 2.3e8
+    per table. Sizes are validated as in the portable form.
 
     ``n_planes=None`` (default since round 10) = adaptive: the plane
     count comes from a count probe via :func:`adaptive_plane_count`,
@@ -782,6 +779,7 @@ def lsh_cosine_neardup(
     LINEARLY with corpus size (a fixed plane count grows it
     quadratically — the r9 `weak` grade). ``_hyperplanes`` is
     prefix-stable, so growing the corpus only APPENDS planes."""
+    _check_lsh_sizes("lsh_cosine_neardup", dim, n_planes, n_tables)
     base = track_persist(
         ensure_parallelism(df)
         .select(F.col(id_col).alias("_id"), l2_normalize(vec_col).alias("_v"))
@@ -794,7 +792,7 @@ def lsh_cosine_neardup(
         n_planes = adaptive_plane_count(base.count())
     planes = [_hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
     bkts = _plane_buckets_udf(planes, input_dtype="float64")
-    return _lsh_neardup_from_base(base, bkts("_v"), threshold, impl, dim)
+    return _lsh_neardup_from_base(base, bkts("_v"), threshold, dim)
 
 
 def kmeans_sample_centroids(

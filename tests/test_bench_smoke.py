@@ -176,6 +176,34 @@ def test_bench_envelope_scoped_by_sf_and_cpus(monkeypatch, tmp_path, capsys):
     assert bench._load_envelope(0.1, 8) == {"q": 2.0}
 
 
+def test_bench_loaded_run_never_replaces_anchor(monkeypatch, tmp_path, capsys):
+    """r14 VERDICT What's-wrong #1: a complete same-(sf, cpus) run that
+    fails an anchor-validity load gate (load_pre > 1.0 or load_floor >
+    2.0) must leave BENCH_FULL.json byte-identical and land in the
+    ``_loaded`` sibling; a quiet run still replaces the anchor."""
+    import bench
+
+    monkeypatch.setattr(bench.os.path, "dirname", lambda _p: str(tmp_path))
+    bench.emit_artifacts({"q": 1.0}, [], 0.1, load_pre=0.03, cpus=4)
+    main = tmp_path / "BENCH_FULL.json"
+    anchor = main.read_bytes()
+    loaded = tmp_path / "BENCH_FULL_sf0.1_c4_loaded.json"
+    for kw in (
+        {"load_pre": 7.54},
+        {"load_pre": 0.5, "loadavg": {"q": 2.5}},  # load_floor 2.5
+    ):
+        bench.emit_artifacts({"q": 9.0}, [], 0.1, cpus=4, **kw)
+        assert main.read_bytes() == anchor
+        assert json.loads(loaded.read_text())["queries"] == {"q": 9.0}
+        loaded.unlink()
+    # exactly at both gates is still anchor-valid
+    bench.emit_artifacts(
+        {"q": 2.0}, [], 0.1, cpus=4, load_pre=1.0, loadavg={"q": 2.0}
+    )
+    assert json.loads(main.read_text())["queries"] == {"q": 2.0}
+    assert not loaded.exists()
+
+
 def test_bench_final_line_fits_driver_capture_window(capsys, monkeypatch, tmp_path):
     """The driver records only the last 2000 chars of bench stdout and
     parses the final JSON line. For the REAL registry size (every

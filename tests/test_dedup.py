@@ -347,14 +347,40 @@ def test_connected_components_long_chain_converges(spark):
     assert {r.cluster_id for r in got} == {0}
 
 
+def cc_rows(branch, pairs):
+    """Run connected_components with its driver cap patched so
+    ``branch`` ("driver" | "distributed") runs — -1 admits not even an
+    empty graph — and return the (doc_id, cluster_id) set. The
+    operator's own INFO line and a spy on the driver solve prove the
+    branch. Hypothesis-safe (no function-scoped fixture)."""
+    import logging
+    from unittest import mock
+
+    from rehiver_spark.operators import dedup
+
+    cap = 1 << 62 if branch == "driver" else -1
+    log = logging.getLogger(dedup.__name__)
+    with mock.patch.object(
+        dedup, "_cc_driver_cap", lambda raw, id_dt: cap
+    ), mock.patch.object(log, "info") as info, mock.patch.object(
+        dedup, "_cc_driver", wraps=dedup._cc_driver
+    ) as solve:
+        rows = [
+            (r.doc_id, r.cluster_id)
+            for r in dedup.connected_components(pairs).collect()
+        ]
+    assert info.call_args.args[-1] == branch, info.call_args
+    assert solve.called == (branch == "driver"), branch
+    assert len(rows) == len(set(rows)), branch  # one row per node
+    return set(rows)
+
+
 def test_connected_components_driver_matches_distributed(spark):
     """The round-10 driver branch (vectorized min-label over Arrow-
     collected edges) reaches the identical fixpoint as the distributed
     loop on a random multi-component graph — the dispatch is a cost
     dial, never a semantics change."""
     import random
-
-    from rehiver_spark.operators.dedup import connected_components
 
     rng = random.Random(1031)
     edges = []
@@ -364,97 +390,86 @@ def test_connected_components_driver_matches_distributed(spark):
             edges.append((rng.choice(nodes), rng.choice(nodes)))
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    drv = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, impl="driver").collect()
-    }
-    dist = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, impl="distributed").collect()
-    }
-    assert drv == dist and drv
+    drv = cc_rows("driver", pairs)
+    assert drv == cc_rows("distributed", pairs) and drv
 
 
 def test_connected_components_driver_string_ids(spark):
     """String ids: numpy unicode sort order matches Spark's min() on
     binary-collated strings, so the driver branch labels identically."""
-    from rehiver_spark.operators.dedup import connected_components
-
     pairs = spark.createDataFrame(
         [("doc-b", "doc-a"), ("doc-b", "doc-c"), ("zz", "yy")],
         "id_a string, id_b string",
     )
-    got = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, impl="driver").collect()
-    }
+    got = cc_rows("driver", pairs)
     assert got == {
         ("doc-a", "doc-a"), ("doc-b", "doc-a"), ("doc-c", "doc-a"),
         ("yy", "yy"), ("zz", "yy"),
     }
 
 
-def test_connected_components_auto_cap_dispatch(spark):
-    """auto: at or below the edge cap the driver branch runs; above it
-    the distributed loop does. Both answers are equal either way."""
-    from rehiver_spark.operators.dedup import connected_components
+def test_connected_components_auto_cap_dispatch(spark, monkeypatch, caplog):
+    """At or below the edge cap the driver branch runs; above it the
+    distributed loop does. Both answers are equal either way."""
+    import logging
+
+    from rehiver_spark.operators import dedup
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
     )
-    # 3 undirected pairs symmetrize to 6 directed edges; cap=1 -> 2 < 6
-    big = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, driver_edge_cap=1).collect()
-    }
-    small = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, driver_edge_cap=10).collect()
-    }
-    assert big == small == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    want = {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    # 3 undirected pairs symmetrize to 6 directed edges; cap 3 -> 6 ≤ 6,
+    # cap 2 -> 4 < 6
+    for edge_cap, branch in ((3, "driver"), (2, "distributed")):
+        monkeypatch.setattr(dedup, "_CC_DRIVER_EDGE_CAP", edge_cap)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=dedup.__name__):
+            got = {
+                (r.doc_id, r.cluster_id)
+                for r in dedup.connected_components(pairs).collect()
+            }
+        assert got == want, branch
+        line = f"6 directed edges (cap {2 * edge_cap}) -> {branch}"
+        assert any(m.endswith(line) for m in caplog.messages), caplog.messages
 
 
 def test_connected_components_null_ids_dropped_both_branches(spark):
     """A NULL id in the pair list is dropped up front (r10 advice):
     before the fix the driver branch crashed in np.unique while the
     distributed branch silently ignored the edge — behavior diverged
-    across the auto dispatch boundary by graph size."""
-    from rehiver_spark.operators.dedup import connected_components
-
+    across the dispatch boundary by graph size."""
     pairs = spark.createDataFrame(
         [("b", "a"), (None, "c"), ("d", None), ("e", "f")],
         "id_a string, id_b string",
     )
     want = {("a", "a"), ("b", "a"), ("e", "e"), ("f", "e")}
-    for impl in ("driver", "distributed"):
-        got = {
-            (r.doc_id, r.cluster_id)
-            for r in connected_components(pairs, impl=impl).collect()
-        }
-        assert got == want, impl
+    for branch in ("driver", "distributed"):
+        assert cc_rows(branch, pairs) == want, branch
 
 
-def test_connected_components_byte_aware_cap(spark, caplog):
-    """auto + string ids scales the row cap down by probed id width:
+def test_connected_components_byte_aware_cap(spark, monkeypatch, caplog):
+    """String ids scale the row cap down by probed id width:
     wide string ids must push a graph that row-counts under the cap
     onto the distributed branch (the 16 B/row driver-memory rationale
     assumes int64 ids — r10 advice)."""
     import logging
 
-    from rehiver_spark.operators.dedup import connected_components
+    from rehiver_spark.operators import dedup
 
     wide = "x" * 200  # 2*200+16 bytes/row vs int64's 16 -> cap/27
     pairs = spark.createDataFrame(
         [(wide + "1", wide + "2"), (wide + "2", wide + "3")],
         "id_a string, id_b string",
     )
-    # 2 undirected pairs -> 4 directed edges. driver_edge_cap=2 would
+    # 2 undirected pairs -> 4 directed edges. An edge cap of 2 would
     # admit 4 rows for int64 ids, but the width probe shrinks it below
     # 4, so this must take (and succeed on) the distributed branch.
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGE_CAP", 2)
     with caplog.at_level(logging.INFO, logger="rehiver_spark.operators.dedup"):
         got = {
             (r.doc_id, r.cluster_id)
-            for r in connected_components(pairs, driver_edge_cap=2).collect()
+            for r in dedup.connected_components(pairs).collect()
         }
     assert any("-> distributed" in m for m in caplog.messages)
     assert got == {
@@ -462,6 +477,33 @@ def test_connected_components_byte_aware_cap(spark, caplog):
         (wide + "2", wide + "1"),
         (wide + "3", wide + "1"),
     }
+
+
+def test_lsh_verify_branch_is_logged(spark, monkeypatch, caplog):
+    """Callers cannot pick the LSH verify branch, so the dispatch logs
+    it in the shape of the connected_components line: Σpop², the
+    estimated join bytes (Σpop² × (2·dim·8 + 48)), the cap and the
+    branch — on both sides of the cap, with the same rows."""
+    import logging
+    import re
+
+    import rehiver_spark.operators.vectorops as vo
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.001, 0.0]), (3, [0.0, 1.0, 0.0])],
+        "vec_id bigint, embedding array<double>",
+    )
+    for cap, branch in ((1 << 62, "expr"), (-1, "arrow")):
+        monkeypatch.setattr(vo, "_LSH_EXPR_VERIFY_MAX_BYTES", cap)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=vo.__name__):
+            got = vo.lsh_cosine_neardup(df, dim=3, threshold=0.9).collect()
+        assert {(r.id_a, r.id_b) for r in got} == {(1, 2)}, branch
+        pat = rf"lsh verify: sum pop\^2 (\d+), est (\d+) bytes \(cap {cap}\) -> {branch}"
+        hits = [m for m in map(re.compile(pat).fullmatch, caplog.messages) if m]
+        assert len(hits) == 1, caplog.messages
+        sum_pop2, est = map(int, hits[0].groups())
+        assert sum_pop2 >= 3 * 4 and est == sum_pop2 * (2 * 3 * 8 + 48)
 
 
 def test_jaccard_blocking_leaves_no_persisted_rdds(spark):

@@ -575,8 +575,10 @@ def test_adaptive_match_blocks_properties(n, h, sig_bits):
 def test_connected_components_impls_agree_property(spark, edges, as_str):
     """Driver and distributed CC are the same fixpoint on arbitrary
     small graphs — int and string ids both (string exercises the r11
-    join-based convergence path)."""
-    from rehiver_spark.operators.dedup import connected_components
+    join-based convergence path). ``cc_rows`` forces each branch with
+    ``unittest.mock.patch.object``: monkeypatch is function-scoped and
+    trips hypothesis's health check."""
+    from test_dedup import cc_rows
 
     if as_str:
         rows = [(f"n{a:02d}", f"n{b:02d}") for a, b in edges]
@@ -587,13 +589,7 @@ def test_connected_components_impls_agree_property(spark, edges, as_str):
     df = spark.createDataFrame(rows, schema) if rows else spark.createDataFrame(
         [], schema
     )
-    got = {}
-    for impl in ("driver", "distributed"):
-        got[impl] = sorted(
-            (r.doc_id, r.cluster_id)
-            for r in connected_components(df, impl=impl).collect()
-        )
-    assert got["driver"] == got["distributed"]
+    assert cc_rows("driver", df) == cc_rows("distributed", df)
 
 
 @settings(max_examples=8, deadline=None)

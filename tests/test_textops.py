@@ -818,15 +818,15 @@ def _is_join_form(df):
     return "MapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_charlm_score_arrow_equals_join(spark):
+def test_charlm_score_arrow_equals_join(spark, monkeypatch):
     """The round-7 Arrow charlm path (vectorized code-point kernel +
     driver-collected charset²-bounded model, zero corpus-row shuffles)
-    must reproduce the join fallback (forced by ``max_model_rows=0``)
-    exactly on the real corpus — including the HALF_UP 6-decimal
-    rounding (np.round's banker's rounding would silently diverge) —
-    plus the edge rows: <2-char docs emit nothing, astral chars count
-    as single code points."""
-    from rehiver_spark.operators.textops import charlm_score
+    must reproduce the join fallback (forced by a zero
+    ``_CHARLM_MAX_MODEL_ROWS``) exactly on the real corpus — including
+    the HALF_UP 6-decimal rounding (np.round's banker's rounding would
+    silently diverge) — plus the edge rows: <2-char docs emit nothing,
+    astral chars count as single code points."""
+    from rehiver_spark.operators import textops
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
@@ -842,7 +842,9 @@ def test_charlm_score_arrow_equals_join(spark):
     )
     src = d.unionByName(edge)
     key = lambda r: (r["doc_id"], r["n_bigrams"], r["cross_entropy"])  # noqa: E731
-    arrow, join = charlm_score(src), charlm_score(src, max_model_rows=0)
+    arrow = textops.charlm_score(src)
+    monkeypatch.setattr(textops, "_CHARLM_MAX_MODEL_ROWS", 0)
+    join = textops.charlm_score(src)
     assert not _is_join_form(arrow) and _is_join_form(join)
     a = sorted(map(key, arrow.collect()))
     assert a == sorted(map(key, join.collect()))
@@ -850,17 +852,20 @@ def test_charlm_score_arrow_equals_join(spark):
     assert 900004 in ids and not {900001, 900002, 900003} & ids
 
 
-def test_charlm_score_arrow_model_guard_falls_back(spark):
-    """max_model_rows=1 forces the fallback: charlm_score must return
-    the join form's result rather than collecting an unbounded model
-    to the driver."""
-    from rehiver_spark.operators.textops import charlm_score
+def test_charlm_score_arrow_model_guard_falls_back(spark, monkeypatch):
+    """A model over ``_CHARLM_MAX_MODEL_ROWS`` (5 bigrams vs 1) forces
+    the fallback: charlm_score must return the join form's result
+    rather than collecting an unbounded model to the driver."""
+    from rehiver_spark.operators import textops
 
     df = spark.createDataFrame(
         [(1, "abcab"), (2, "xyz")], "doc_id long, text string"
     )
     key = lambda r: (r["doc_id"], r["n_bigrams"], r["cross_entropy"])  # noqa: E731
-    fallback = charlm_score(df, max_model_rows=1)
+    arrow = textops.charlm_score(df)
+    assert not _is_join_form(arrow)
+    monkeypatch.setattr(textops, "_CHARLM_MAX_MODEL_ROWS", 1)
+    fallback = textops.charlm_score(df)
     assert _is_join_form(fallback)
     got = sorted(map(key, fallback.collect()))
-    assert got == sorted(map(key, charlm_score(df).collect()))
+    assert got == sorted(map(key, arrow.collect()))

@@ -617,12 +617,30 @@ def test_lsh_paths_tolerate_null_and_zero_vectors(spark):
     assert gotp == {(1, 2)}
 
 
+def lsh_rows(branch, fn, *args, **kwargs):
+    """Collect an LSH near-dup operator with its verify forced onto
+    ``branch`` ("arrow" = the within-bucket kernel, "expr" = the
+    relational join) by patching the Σpop² byte cap; a kernel spy
+    asserts the branch really ran."""
+    from unittest import mock
+
+    import rehiver_spark.operators.vectorops as vo
+
+    cap = -1 if branch == "arrow" else 1 << 62
+    with mock.patch.object(vo, "_LSH_EXPR_VERIFY_MAX_BYTES", cap), mock.patch.object(
+        vo, "_lsh_verify_arrow", wraps=vo._lsh_verify_arrow
+    ) as kernel:
+        rows = fn(*args, **kwargs).collect()
+    assert kernel.called == (branch == "arrow"), branch
+    return rows
+
+
 def test_lsh_paths_exclude_ragged_dim_vectors(spark):
     """A vector violating the `dim` contract is excluded up front on
-    BOTH impls: before round 10 a ragged row crashed the batched plane
-    matmul on the arrow path but silently zero-bucketed on the expr
-    twin (zip_with NULL-pads) — divergent behavior for the same bad
-    input."""
+    BOTH verify branches: before round 10 a ragged row crashed the
+    batched plane matmul on the arrow path but silently zero-bucketed
+    on the expr twin (zip_with NULL-pads) — divergent behavior for the
+    same bad input."""
     from rehiver_spark.operators.vectorops import (
         lsh_cosine_neardup,
         lsh_cosine_neardup_portable,
@@ -636,19 +654,20 @@ def test_lsh_paths_exclude_ragged_dim_vectors(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     for fn in (lsh_cosine_neardup, lsh_cosine_neardup_portable):
-        for impl in ("arrow", "expr"):
+        for branch in ("arrow", "expr"):
             got = {
                 (r["id_a"], r["id_b"])
-                for r in fn(df, dim=3, threshold=0.9, impl=impl).collect()
+                for r in lsh_rows(branch, fn, df, dim=3, threshold=0.9)
             }
-            assert got == {(1, 2)}, (fn.__name__, impl)
+            assert got == {(1, 2)}, (fn.__name__, branch)
 
 
 def test_lsh_verify_arrow_equals_expr(spark, sf_dir):
-    """Round-9 scale fix: the within-bucket Arrow verification (the
-    default — the relational verify materialized pop² candidate rows
-    × two dim-sized vectors and died on sf10's hot bucket) must equal
-    the expr twin bit for bit on the real corpus, for both LSH forms."""
+    """Round-9 scale fix: the within-bucket Arrow verification (taken
+    above the Σpop² byte cap — the relational verify materialized pop²
+    candidate rows × two dim-sized vectors and died on sf10's hot
+    bucket) must equal the relational join bit for bit on the real
+    corpus, for both LSH forms."""
     import math
 
     from rehiver_spark.operators.vectorops import (
@@ -666,15 +685,15 @@ def test_lsh_verify_arrow_equals_expr(spark, sf_dir):
         )
 
     for fn in (lsh_cosine_neardup, lsh_cosine_neardup_portable):
-        a = canon(fn(emb, dim=64, threshold=0.4, impl="arrow").collect())
-        x = canon(fn(emb, dim=64, threshold=0.4, impl="expr").collect())
+        a = canon(lsh_rows("arrow", fn, emb, dim=64, threshold=0.4))
+        x = canon(lsh_rows("expr", fn, emb, dim=64, threshold=0.4))
         assert a == x and len(a) > 0, fn.__name__
 
 
 def test_lsh_auto_dispatch_probes_sum_pop2(spark, sf_dir, monkeypatch):
-    """impl='auto' (the default) must take the cheap relational join on
-    a small bucket histogram and the within-bucket kernel above the
-    byte threshold — and both branches must return identical rows."""
+    """The dispatch must take the cheap relational join on a small
+    bucket histogram and the within-bucket kernel above the byte
+    threshold — and both branches must return identical rows."""
     import rehiver_spark.operators.vectorops as vo
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -692,10 +711,55 @@ def test_lsh_auto_dispatch_probes_sum_pop2(spark, sf_dir, monkeypatch):
     # small histogram → expr branch, kernel never invoked
     auto = key(vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4).collect())
     assert not calls
-    # forced-low threshold → auto must dispatch to the kernel, same rows
+    # forced-low threshold → the dispatch must pick the kernel, same rows
     monkeypatch.setattr(vo, "_LSH_EXPR_VERIFY_MAX_BYTES", 0)
     auto_arrow = key(vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4).collect())
     assert calls and auto_arrow == auto and len(auto) > 0
+
+
+def test_lsh_rejects_bad_sizes():
+    """dim/n_tables < 1 and an explicit n_planes outside 1..64 raise
+    ValueError up front on both LSH forms: zero tables or planes used to
+    die deep in the bucketing ("not enough values to unpack"), and from
+    plane 64 on ``1 << p`` is 0 in int64, so extra planes silently
+    stopped counting. Validation runs before any Spark work."""
+    import rehiver_spark.operators.vectorops as vo
+
+    bad = [
+        {"dim": 0},
+        {"dim": 3, "n_tables": 0},
+        {"dim": 3, "n_planes": 0},
+        {"dim": 3, "n_planes": 65},
+    ]
+    for fn in (vo.lsh_cosine_neardup, vo.lsh_cosine_neardup_portable):
+        for kw in bad:
+            with pytest.raises(ValueError, match="n_planes in 1..64"):
+                fn(None, **kw)
+    # the edges themselves are valid sizes
+    vo._check_lsh_sizes("lsh", 1, 64, 1)
+    vo._check_lsh_sizes("lsh", 1, 1, 1)
+    vo._check_lsh_sizes("lsh", 1, None, 1)
+
+
+@pytest.mark.parametrize(
+    "module, fn, kwarg",
+    [
+        ("vectorops", "lsh_cosine_neardup", "impl"),
+        ("vectorops", "lsh_cosine_neardup_portable", "impl"),
+        ("dedup", "connected_components", "impl"),
+        ("dedup", "connected_components", "driver_edge_cap"),
+        ("textops", "charlm_score", "max_model_rows"),
+    ],
+)
+def test_removed_path_selectors_raise_type_error(module, fn, kwarg):
+    """The caller-set path selectors are gone: each operator picks its
+    branch from the measured input only, and passing a removed keyword
+    fails at the call instead of being silently honoured."""
+    import importlib
+
+    op = getattr(importlib.import_module(f"rehiver_spark.operators.{module}"), fn)
+    with pytest.raises(TypeError, match=kwarg):
+        op(None, **{kwarg: 1})
 
 
 def test_lsh_verify_arrow_nan_cosine_survives_like_expr(spark):
@@ -722,9 +786,9 @@ def test_lsh_verify_arrow_nan_cosine_survives_like_expr(spark):
         return round(c, 9)
 
     out = {}
-    for impl in ("arrow", "expr"):
-        got = lsh_cosine_neardup(df, dim=3, threshold=0.9, impl=impl).collect()
-        out[impl] = sorted((r["id_a"], r["id_b"], tag(r["cosine"])) for r in got)
+    for branch in ("arrow", "expr"):
+        got = lsh_rows(branch, lsh_cosine_neardup, df, dim=3, threshold=0.9)
+        out[branch] = sorted((r["id_a"], r["id_b"], tag(r["cosine"])) for r in got)
     assert out["arrow"] == out["expr"]
     # the near-dup pair survives, and NaN rows (if the buckets collide)
     # are NaN on both paths — never NULL
@@ -820,20 +884,17 @@ def test_lsh_bucket_split_and_coalesce_equal_unsplit(spark, sf_dir, monkeypatch)
     def canon(rows):
         return sorted((r["id_a"], r["id_b"], repr(r["cosine"])) for r in rows)
 
-    base = canon(
-        vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4, impl="arrow").collect()
-    )
+    def kernel_rows():
+        return canon(
+            lsh_rows("arrow", vo.lsh_cosine_neardup, emb, dim=64, threshold=0.4)
+        )
+
+    base = kernel_rows()
     assert len(base) > 0
     monkeypatch.setattr(vo, "_LSH_BUCKET_SPLIT_CAP", 7)
-    split = canon(
-        vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4, impl="arrow").collect()
-    )
-    assert split == base
+    assert kernel_rows() == base
     monkeypatch.setattr(vo, "_LSH_VERIFY_COALESCE_GROUPS", 3)
-    coalesced = canon(
-        vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4, impl="arrow").collect()
-    )
-    assert coalesced == base
+    assert kernel_rows() == base
 
 
 def test_lsh_verify_arrow_duplicate_ids_drop_self_pairs_like_expr(spark):
@@ -856,9 +917,9 @@ def test_lsh_verify_arrow_duplicate_ids_drop_self_pairs_like_expr(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     out = {}
-    for impl in ("arrow", "expr"):
-        got = lsh_cosine_neardup(df, dim=3, threshold=0.9, impl=impl).collect()
-        out[impl] = {(r["id_a"], r["id_b"], repr(r["cosine"])) for r in got}
+    for branch in ("arrow", "expr"):
+        got = lsh_rows(branch, lsh_cosine_neardup, df, dim=3, threshold=0.9)
+        out[branch] = {(r["id_a"], r["id_b"], repr(r["cosine"])) for r in got}
     assert out["arrow"] == out["expr"]
     assert all(p[0] != p[1] for p in out["arrow"])
     assert any(p[:2] == (1, 2) for p in out["arrow"])
