@@ -27,6 +27,12 @@ def md5_hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
+def md5_hash60_spark_sql(expr: str) -> str:
+    """Spark SQL text of ``md5_hash60`` over a Spark SQL expression, for
+    builders that render a whole expression as one SQL string."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def md5_hash60_sql(expr: str) -> str:
     """DuckDB twin of ``md5_hash60`` over an SQL string expression."""
     return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"

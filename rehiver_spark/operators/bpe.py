@@ -104,16 +104,6 @@ def merge_once(col: Column, left: str, right: str) -> Column:
     return F.replace(merged, F.lit("  "), F.lit(" "))
 
 
-def merge_once_sql(expr: str, left: str, right: str) -> str:
-    """DuckDB twin of :func:`merge_once`."""
-    pat, rep = f" {left}  {right} ", f" {left}{right} "
-    pq, rq = pat.replace("'", "''"), rep.replace("'", "''")
-    return (
-        f"replace(replace(replace({expr}, ' ', '  '), "
-        f"'{pq}', '{rq}'), '  ', ' ')"
-    )
-
-
 def _symbols(spaced_col: Column) -> Column:
     return F.filter(F.split(spaced_col, " "), lambda s: s != F.lit(""))
 

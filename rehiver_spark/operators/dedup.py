@@ -41,11 +41,11 @@ import logging
 import math
 import os
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from rehiver_spark.functions.hashing import md5_hash60, md5_hash60_py
+from rehiver_spark.functions.hashing import md5_hash60, md5_hash60_py, md5_hash60_spark_sql
 from rehiver_spark.operators.textops import normalize_text, tokens, word_ngrams
 from rehiver_spark.session import ensure_parallelism, track_persist
 
@@ -397,73 +397,77 @@ def minhash_affine_consts(num_hashes: int, seed: int) -> tuple[list[int], list[i
     return a, c
 
 
+def _sql_name(name: str) -> str:
+    """Backquoted Spark SQL identifier of the top-level column ``name``.
+
+    The sketch builders below render their whole expression as ONE Spark
+    SQL string and make a single ``F.expr`` call: built node by node
+    through the Column API, the same expressions cost ~1.9k of the
+    ~2.9k py4j round trips of a ``minhash_neardup_pairs`` plan (32
+    ``transform`` lambdas, 8 band structs of 4 ``element_at``, the
+    estimate's two lambdas), a fixed 0.2–0.5 s of driver time per call at
+    any corpus size. They therefore take column NAMES; a Column cannot
+    be spliced into SQL text."""
+    if not isinstance(name, str):
+        raise TypeError(f"expected a column name (str), got {type(name).__name__}")
+    return "`" + name.replace("`", "``") + "`"
+
+
 def minhash_signature(
-    shingle_col: Column | str,
+    shingle_col: str,
     num_hashes: int = 32,
     seed: int = 42,
     hash_fn: str = "xxhash64",
 ) -> Column:
-    """ARRAY<BIGINT> MinHash signature: per hash function i, the minimum
-    h_i(shingle) over the shingle set.
+    """ARRAY<BIGINT> MinHash signature of the shingle array in column
+    ``shingle_col`` (a name; a Column raises ``TypeError``): per hash
+    function i, the minimum h_i(shingle) over the shingle set.
 
     ``hash_fn="xxhash64"`` (default, JVM-side) hashes each shingle
-    num_hashes times — xxhash64 is cheap enough that this stays fast.
+    num_hashes times — ``array_min(transform(sh, x -> xxhash64(seed, i,
+    x)))`` per i, with INT literals — cheap enough that this stays fast.
 
     ``hash_fn="md5"`` is the portable, oracle-checkable form
     (Broder-style): ONE md5 base hash per shingle reduced to 2^30,
     then num_hashes affine universal hashes (a_i·h + c_i) mod (2^31-1)
     in exact int64 arithmetic — any SQL engine reproduces the sketch
     bit-for-bit, and the md5 count drops num_hashes-fold vs hashing
-    per (i, shingle). Since r12 this path is ALL JVM expression work
-    inside one map-only projection: ``transform`` computes the base
-    hash once per shingle (functions/hashing.md5_hash60), then a single
-    ``aggregate`` folds the shingle axis with a ``zip_with``/``least``
-    step against a literal (a_i, c_i) array — no pandas UDF (the
-    pre-r12 hashlib form measured 87 s standalone at sf10 where the
-    JVM forms take ~4.5 s), no explode, and NO shuffle: the row never
-    leaves its partition, so at small scale there is no stage floor to
-    amortize (the r11 x34 envelope breach) and at large scale the
-    hash-aggregate Exchange of an explode + min-aggregate form
-    disappears entirely. Requires non-empty shingle arrays (shingles()
-    guarantees [""] minimum).
-    """
-    sh = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
+    per (i, shingle). ``transform`` computes the base hash once per
+    shingle (functions/hashing.md5_hash60_spark_sql), then a single ``aggregate``
+    folds the shingle axis with a ``zip_with``/``least`` step against a
+    literal (a_i, c_i) array.
 
+    Either mode is ONE Spark SQL expression, built with a single
+    ``F.expr`` call (see :func:`_sql_name`), and runs inside one
+    map-only projection: no pandas UDF (the pre-r12 hashlib form
+    measured 87 s standalone at sf10 where the JVM forms take ~4.5 s),
+    no explode, and NO shuffle: the row never leaves its partition, so
+    at small scale there is no stage floor to amortize (the r11 x34
+    envelope breach) and at large scale the hash-aggregate Exchange of
+    an explode + min-aggregate form disappears entirely. Requires
+    non-empty shingle arrays (shingles() guarantees [""] minimum).
+    """
+    sh = _sql_name(shingle_col)
     if hash_fn == "md5":
         a_co, c_co = minhash_affine_consts(num_hashes, seed)
         # literal (a_i, c_i) pairs, zipped elementwise against the
         # running minima so the md5 base hash binds ONCE per shingle
-        ac = F.array(
-            *[
-                F.struct(
-                    F.lit(a_co[i]).cast("bigint").alias("a"),
-                    F.lit(c_co[i]).cast("bigint").alias("c"),
-                )
-                for i in range(num_hashes)
-            ]
+        ac = ", ".join(
+            f"struct(CAST({a} AS BIGINT) AS a, CAST({c} AS BIGINT) AS c)"
+            for a, c in zip(a_co, c_co)
         )
-        base = F.transform(
-            sh,
-            lambda x: md5_hash60(F.concat(F.lit(f"{seed}:"), x)) % F.lit(_MH_DOMAIN),
+        base_hash = md5_hash60_spark_sql(f"concat('{seed}:', x)")
+        init = ", ".join([f"CAST({_MH_P} AS BIGINT)"] * num_hashes)
+        return F.expr(
+            f"aggregate(transform({sh}, x -> {base_hash} % {_MH_DOMAIN}), "
+            f"array({init}), (acc, h) -> zip_with(acc, array({ac}), "
+            f"(m, p) -> least(m, (h * p.a + p.c) % {_MH_P})))"
         )
-        init = F.array(*[F.lit(_MH_P).cast("bigint")] * num_hashes)
-        return F.aggregate(
-            base,
-            init,
-            lambda acc, h: F.zip_with(
-                acc,
-                ac,
-                lambda m, p: F.least(m, (h * p["a"] + p["c"]) % F.lit(_MH_P)),
-            ),
-        )
-
-    # single-parameter lambda per hash fn: pyspark binds a lambda var per
-    # Python parameter, so `lambda s, i=i` would bind i to the index var
-    def hash_i(i: int):
-        return lambda s: F.xxhash64(F.lit(seed), F.lit(i), s)
-
-    mins = [F.array_min(F.transform(sh, hash_i(i))) for i in range(num_hashes)]
-    return F.array(*mins)
+    mins = ", ".join(
+        f"array_min(transform({sh}, x -> xxhash64({seed}, {i}, x)))"
+        for i in range(num_hashes)
+    )
+    return F.expr(f"array({mins})")
 
 
 def minhash_signatures(
@@ -487,32 +491,28 @@ def minhash_signatures(
     """
     return df.select(
         F.col(id_col),
-        minhash_signature(
-            F.col(shingle_col), num_hashes, seed, hash_fn
-        ).alias("sig"),
+        minhash_signature(shingle_col, num_hashes, seed, hash_fn).alias("sig"),
     )
 
 
-def _band_keys(sig: Column, num_hashes: int, bands: int) -> Column:
+def _band_keys(sig_col: str, num_hashes: int, bands: int) -> Column:
     """ARRAY<STRUCT<band INT, bh BIGINT>> of LSH band bucket keys over
-    a minhash signature — the ONE definition of banding, shared by the
-    batch self-join (:func:`lsh_candidates`) and the incremental index
-    join (:func:`incremental_minhash_neardup`) so the two paths can
-    never diverge on how a band hashes. The bucket key is xxhash64 of
-    the band's signature values in either hash mode: it is an internal
-    join key, so only tuple equality matters."""
+    the minhash signature in column ``sig_col`` — the ONE definition of
+    banding, shared by the batch self-join (:func:`lsh_candidates`) and
+    the incremental index join (:func:`incremental_minhash_neardup`) so
+    the two paths can never diverge on how a band hashes. The bucket
+    key is xxhash64 of the band's signature values in either hash mode:
+    it is an internal join key, so only tuple equality matters. One
+    SQL expression, one gateway call (see :func:`_sql_name`)."""
+    sig = _sql_name(sig_col)
     r = num_hashes // bands
-    return F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(
-                    *[F.element_at(sig, bi * r + j + 1) for j in range(r)]
-                ).alias("bh"),
-            )
-            for bi in range(bands)
-        ]
+    structs = ", ".join(
+        f"struct({bi} AS band, xxhash64("
+        + ", ".join(f"element_at({sig}, {bi * r + j + 1})" for j in range(r))
+        + ") AS bh)"
+        for bi in range(bands)
     )
+    return F.expr(f"array({structs})")
 
 
 def lsh_candidates(
@@ -553,7 +553,7 @@ def _lsh_band_candidates(
     for banding AND the estimate pre-filter (r12)."""
     banded = sigs.select(
         F.col(id_col).alias("_id"),
-        F.explode(_band_keys(F.col("sig"), num_hashes, bands)).alias("b"),
+        F.explode(_band_keys("sig", num_hashes, bands)).alias("b"),
     ).select("_id", "b.band", "b.bh")
     a = banded.withColumnRenamed("_id", "id_a")
     b = banded.withColumnRenamed("_id", "id_b")
@@ -564,20 +564,23 @@ def _lsh_band_candidates(
         b = b.hint("merge")
     return (
         a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        .filter("id_a < id_b")
         .select("id_a", "id_b")
         .distinct()
     )
 
 
-def sig_est_jaccard(sig_a: Column | str, sig_b: Column | str, num_hashes: int) -> Column:
-    """The standard MinHash Jaccard estimator: matching signature
-    components / num_hashes — ONE definition shared by the batch
-    pre-filter (:func:`minhash_neardup_pairs`) and the incremental
-    index probe (:func:`incremental_minhash_neardup`)."""
-    return F.size(
-        F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda m: m)
-    ) / F.lit(float(num_hashes))
+def sig_est_jaccard(sig_a: str, sig_b: str, num_hashes: int) -> Column:
+    """The standard MinHash Jaccard estimator over the signature columns
+    named ``sig_a`` and ``sig_b``: matching signature components /
+    num_hashes — ONE definition shared by the batch pre-filter
+    (:func:`minhash_neardup_pairs`) and the incremental index probe
+    (:func:`incremental_minhash_neardup`). One SQL expression, one
+    gateway call (see :func:`_sql_name`)."""
+    return F.expr(
+        f"size(filter(zip_with({_sql_name(sig_a)}, {_sql_name(sig_b)}, "
+        f"(x, y) -> x = y), m -> m)) / {float(num_hashes)!r}D"
+    )
 
 
 def minhash_neardup_pairs(
@@ -639,8 +642,8 @@ def minhash_neardup_pairs(
     big = _big_corpus(df)
     cand = _lsh_band_candidates(sigs, "_id", num_hashes, bands, prefer_merge=big)
     if est_gate_margin is not None:
-        sa = sigs.select(F.col("_id").alias("id_a"), F.col("sig").alias("_siga"))
-        sb = sigs.select(F.col("_id").alias("id_b"), F.col("sig").alias("_sigb"))
+        sa = sigs.withColumnsRenamed({"_id": "id_a", "sig": "_siga"})
+        sb = sigs.withColumnsRenamed({"_id": "id_b", "sig": "_sigb"})
         if big:
             # r13: the sig relation's 32-long arrays build a 288 MiB
             # broadcast map (×2) at sf10 under the misestimate; SMJ
@@ -658,33 +661,37 @@ def minhash_neardup_pairs(
         )
     a = sh.withColumnsRenamed({"_id": "id_a", "_sh": "_sha"})
     b = sh.withColumnsRenamed({"_id": "id_b", "_sh": "_shb"})
+    # SQL text, like the sketch builders: a handful of gateway calls
+    # where a withColumn chain makes ~150 (see _sql_name)
     verified = (
         cand.join(a, "id_a")
         .join(b, "id_b")
-        .withColumn("n_common", F.size(F.array_intersect("_sha", "_shb")))
-        .withColumn("n_a", F.size("_sha"))
-        .withColumn("n_b", F.size("_shb"))
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+        .selectExpr(
+            "id_b", "id_a", "size(array_intersect(_sha, _shb)) AS n_common",
+            "size(_sha) AS n_a", "size(_shb) AS n_b",
         )
+        .selectExpr("*", "n_common / (n_a + n_b - n_common) AS jaccard")
     )
-    return verified.filter(F.col("jaccard") >= threshold).select(
+    return verified.filter(f"jaccard >= {float(threshold)!r}D").select(
         "id_a", "id_b", "n_common", "n_a", "n_b", "jaccard"
     )
 
 
-def _cc_driver(spark, raw: DataFrame, id_type, max_iter: int) -> DataFrame:
+def _cc_driver(spark, e: DataFrame, id_type, max_iter: int) -> DataFrame:
     """Driver-side branch of :func:`connected_components`: the SAME
     pointer-jumped min-label fixpoint, vectorized over numpy arrays.
 
-    ``raw`` is the symmetrized distinct edge list (both directions
-    present), already materialized by the caller's localCheckpoint, so
-    the Arrow collect is a cache read. Labels are INDICES into the
-    sorted node-id array — the minimum index IS the minimum id, so the
-    final ``ids[lab]`` is exactly the distributed branch's per-component
-    min id (string ids included: numpy's sort order on unicode matches
-    Spark's binary-collation ``min``).
+    ``e`` is the one-direction, null-free pair list, already
+    materialized by the caller's eager localCheckpoint, so the Arrow
+    collect is a cache read. The solve symmetrizes it itself by
+    concatenating both directions: duplicate and reversed pairs and
+    self-loops repeat an edge or add a node's own label, neither of
+    which changes ``np.minimum.at``, so no ``distinct`` is needed.
+    Labels are INDICES into the sorted node-id array — the minimum
+    index IS the minimum id, so the final ``ids[lab]`` is exactly the
+    distributed branch's per-component min id (string ids included:
+    numpy's sort order on unicode matches Spark's binary-collation
+    ``min``).
     """
     import numpy as np
     import pandas as pd
@@ -693,12 +700,14 @@ def _cc_driver(spark, raw: DataFrame, id_type, max_iter: int) -> DataFrame:
     schema = StructType(
         [StructField("doc_id", id_type), StructField("cluster_id", id_type)]
     )
-    tbl = raw.toArrow()
-    a = np.asarray(tbl.column("a").to_pandas())
-    b = np.asarray(tbl.column("b").to_pandas())
-    if len(a) == 0:
+    tbl = e.toArrow()
+    if tbl.num_rows == 0:
         return spark.createDataFrame([], schema=schema)
-    # both directions are present in raw, so every node occurs in `a`
+    fwd = np.asarray(tbl.column("a").to_pandas())
+    rev = np.asarray(tbl.column("b").to_pandas())
+    a = np.concatenate([fwd, rev])
+    b = np.concatenate([rev, fwd])
+    # both directions are present now, so every node occurs in `a`
     ids = np.unique(a)
     ia = np.searchsorted(ids, a)
     ib = np.searchsorted(ids, b)
@@ -719,20 +728,19 @@ def _cc_driver(spark, raw: DataFrame, id_type, max_iter: int) -> DataFrame:
 _CC_DRIVER_EDGE_CAP = 4_000_000
 
 
-def _cc_driver_cap(raw: DataFrame, id_dt: T.DataType) -> int:
-    """Most directed edges of ``raw`` the driver solve of
-    :func:`connected_components` admits."""
+_INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _cc_driver_cap(avg_id_chars: float | None) -> int:
+    """Most directed edges the driver solve of :func:`connected_components`
+    admits. ``avg_id_chars`` is the average id length of string/binary
+    ids, ``None`` for integral ids."""
     cap = 2 * _CC_DRIVER_EDGE_CAP
-    if not isinstance(id_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+    if avg_id_chars is not None:
         # byte-aware cap (advisor r10): string/binary rows cost
         # ~2·avg_len utf8 bytes + Arrow offset overhead, so scale the
-        # row cap down by the probed width ratio (one cheap agg over
-        # the already-checkpointed edge list).
-        avg_w = (
-            raw.agg(F.avg(F.length(F.col("a").cast("string")))).collect()[0][0]
-            or 8.0
-        )
-        cap = max(1, int(cap * 16.0 / (2.0 * avg_w + 16.0)))
+        # row cap down by the probed width ratio
+        cap = max(1, int(cap * 16.0 / (2.0 * avg_id_chars + 16.0)))
     return cap
 
 
@@ -753,23 +761,27 @@ def connected_components(
     rounds (bounded by ``max_iter``; raises if not converged so an
     incomplete clustering can never be silently returned).
 
-    The path is chosen from the MEASURED edge count — the same probe
-    the distributed loop already needs for its topology sizing, so the
-    dial costs nothing extra — and logged at INFO:
+    The path is chosen from the MEASURED pair count, read with
+    ``DataFrame.observe`` off the one eager checkpoint of the pair list
+    (together with the average id width for string/binary ids), so the
+    dial runs no job of its own — and logged at INFO:
 
-    - driver when the symmetrized edge list holds at most
-      ``2 * _CC_DRIVER_EDGE_CAP`` rows: the pair graph of a dedup run is
+    - driver when twice the pair count — an upper bound on the distinct
+      directed edges, so the branch admits no more than when it counted
+      the symmetrized distinct edge list — is at most
+      ``2 * _CC_DRIVER_EDGE_CAP``: the pair graph of a dedup run is
       corpus-TINY (only docs with a near-dup appear), while each
       distributed round pays whole-cluster latency (a shuffle join +
       an aggregation job); at sf10 the x17 pair graph is ~5×10⁵
       directed edges (BASELINE.md: 512,792) yet the round loop alone
-      ran ~40 s. The driver solve Arrow-collects the (a, b) columns —
-      two int64 numpy arrays, 16 B/row, ≤128 MiB at the cap (string
-      doc ids are bigger per row — the cap scales itself down by the
-      probed average id width, see :func:`_cc_driver_cap`) — and runs
-      the SAME pointer-jumped min-label iteration vectorized
-      (``np.minimum.at`` + one ``lab[lab]`` jump per round), so the
-      fixpoint is identical by construction (test-pinned against the distributed branch).
+      ran ~40 s. The driver solve Arrow-collects the (a, b) columns,
+      symmetrizes them in numpy — two int64 arrays, 16 B per directed
+      edge, ≤128 MiB at the cap (string doc ids are bigger per row —
+      the cap scales itself down by the observed average id width, see
+      :func:`_cc_driver_cap`) — and runs the SAME pointer-jumped
+      min-label iteration vectorized (``np.minimum.at`` + one
+      ``lab[lab]`` jump per round), so the fixpoint is identical by
+      construction (test-pinned against the distributed branch).
     - distributed above the cap: node/edge data never leaves
       executors (the only driver-side value is a scalar convergence
       aggregate). A 100 TB near-dup graph with billions of edges takes
@@ -786,23 +798,46 @@ def connected_components(
     job, swap in reliable ``checkpoint()`` with a checkpoint dir; the
     algorithm is unchanged.
     """
-    # e is referenced TWICE below (forward + swapped); without a cache
-    # the union's branches EACH replay the whole upstream pair
-    # pipeline (banding join + verification — measured 2× the x29
-    # pairs cost at sf10, 106 s vs 45 s for the CC stage). The lazy
-    # checkpoint is materialized once by the union job and the swap
-    # side reads the cache.
     # NULL ids are dropped up front so both branches see the same graph:
     # the driver branch's np.unique cannot sort None among strings
     # (opaque TypeError), and the distributed branch would silently
     # treat NULL as a node that joins to nothing — neither is a useful
     # semantics for bad input, and diverging across the dispatch
     # boundary by graph size would be worse.
+    # The eager checkpoint is the ONE action before the dispatch: it
+    # runs the upstream pair pipeline once, and the observed metrics
+    # size the graph from that same job. Both branches then read the
+    # cache — the driver solve once, the distributed symmetrization
+    # twice (forward + swapped; without the cache each union branch
+    # replays the whole pair pipeline — measured 2× the x29 pairs cost
+    # at sf10, 106 s vs 45 s for the CC stage).
+    spark = pairs.sparkSession
+    id_dt = pairs.schema[id_a].dataType
+    probe = [F.count(F.lit(1)).alias("n")]
+    if not isinstance(id_dt, _INTEGRAL_TYPES):
+        probe.append(
+            F.avg(
+                (F.length(F.col("a").cast("string")) + F.length(F.col("b").cast("string")))
+                / 2
+            ).alias("w")
+        )
+    obs = Observation()
     e = (
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .localCheckpoint(eager=False)
+        .observe(obs, *probe)
+        .localCheckpoint()
     )
+    stats = obs.get
+    n_pairs = stats["n"]
+    cap = _cc_driver_cap((stats["w"] or 8.0) if "w" in stats else None)
+    on_driver = 2 * n_pairs <= cap
+    logging.getLogger(__name__).info(
+        "connected_components: %d pairs, at most %d directed edges (cap %d) -> %s",
+        n_pairs, 2 * n_pairs, cap, "driver" if on_driver else "distributed",
+    )
+    if on_driver:
+        return _cc_driver(spark, e, id_dt, max_iter)
     raw = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
@@ -812,16 +847,6 @@ def connected_components(
     # graphs are tiny relative to the corpus (only docs with a near-dup
     # appear), and per-round latency is dominated by task count
     n_edges = raw.count()
-    spark = pairs.sparkSession
-    id_dt = pairs.schema[id_a].dataType
-    cap = _cc_driver_cap(raw, id_dt)
-    on_driver = n_edges <= cap
-    logging.getLogger(__name__).info(
-        "connected_components: %d directed edges (cap %d) -> %s",
-        n_edges, cap, "driver" if on_driver else "distributed",
-    )
-    if on_driver:
-        return _cc_driver(spark, raw, id_dt, max_iter)
     parts = max(1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1))
     edges = raw.repartition(parts, "a").localCheckpoint()
     # initial labels already fold in one propagation round: each node
@@ -839,10 +864,7 @@ def connected_components(
     # compare rounds directly: an anti-equality join on node, isEmpty
     # as the stop signal — one extra join per round over the labels
     # relation, which the round's edge join already dwarfs.
-    numeric_ids = isinstance(
-        id_dt,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType),
-    )
+    numeric_ids = isinstance(id_dt, (*_INTEGRAL_TYPES, T.DecimalType))
     dec = F.sum(F.col("label").cast("decimal(38,0)"))
     prev_sum = labels.agg(dec).collect()[0][0] if numeric_ids else None
     for _ in range(max_iter):
@@ -1520,7 +1542,7 @@ def incremental_minhash_neardup(
         cols = [F.col(id_col).alias(id_alias)]
         if with_sig:
             cols.append(F.col("sig").alias(f"_sig_{id_alias}"))
-        cols.append(F.explode(_band_keys(F.col("sig"), num_hashes, bands)).alias("b"))
+        cols.append(F.explode(_band_keys("sig", num_hashes, bands)).alias("b"))
         out_cols = [id_alias] + ([f"_sig_{id_alias}"] if with_sig else [])
         return sigs.select(*cols).select(*out_cols, "b.band", "b.bh")
 

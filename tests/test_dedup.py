@@ -108,21 +108,57 @@ def test_minhash_est_gate_subset_and_equality(docs):
         assert len(gated) > 0, hash_fn
 
 
-def test_minhash_relational_matches_column_form(spark):
-    """The map-only Column signature must equal independent references
-    in BOTH hash modes — the portable md5 sketch is oracle-checked
-    downstream, so even one differing component would break
-    x7p/x29/x34 hash parity. md5: pure Python from ``md5_hash60_py``
-    and the affine constants; xxhash64: a relational explode +
-    ``min(xxhash64(seed, i, shingle))`` per hash function."""
-    from pyspark.sql import functions as F
-
+def md5_minhash_reference(sh, num_hashes, seed):
+    """Pure-Python md5 affine mins per ``doc_id`` of ``sh`` (doc_id,
+    _sh): the portable sketch from ``md5_hash60_py`` and the affine
+    constants. A NULL shingle array has no signature (None)."""
     from rehiver_spark.functions.hashing import md5_hash60_py
-    from rehiver_spark.operators.dedup import (
-        minhash_affine_consts,
-        minhash_signature,
-        shingles,
-    )
+    from rehiver_spark.operators.dedup import minhash_affine_consts
+
+    p = 2147483647
+    a_co, c_co = minhash_affine_consts(num_hashes, seed)
+    return {
+        r.doc_id: None if r._sh is None else [
+            min((md5_hash60_py(f"{seed}:{x}") % (1 << 30) * a + c) % p for x in r._sh)
+            for a, c in zip(a_co, c_co)
+        ]
+        for r in sh.collect()
+    }
+
+
+def xxhash_minhash_reference(sh, num_hashes, seed):
+    """The relational xxhash64 sketch per ``doc_id`` of ``sh``: explode
+    + ``min(xxhash64(seed, i, shingle))`` per hash function. A NULL
+    shingle array explodes to no rows, so its doc is absent."""
+    return {
+        r.doc_id: list(r[1:])
+        for r in sh.select("doc_id", F.explode("_sh").alias("s"))
+        .groupBy("doc_id")
+        .agg(*[F.min(F.xxhash64(F.lit(seed), F.lit(i), "s")) for i in range(num_hashes)])
+        .collect()
+    }
+
+
+def minhash_rows(sh, num_hashes, seed, hash_fn):
+    """``doc_id`` -> :func:`minhash_signature` of ``sh`` (doc_id, _sh)."""
+    from rehiver_spark.operators.dedup import minhash_signature
+
+    return {
+        r.doc_id: r.sig
+        for r in sh.select(
+            "doc_id", minhash_signature("_sh", num_hashes, seed, hash_fn).alias("sig")
+        ).collect()
+    }
+
+
+def test_minhash_relational_matches_column_form(spark):
+    """The map-only SQL-expression signature must equal independent
+    references in BOTH hash modes — the portable md5 sketch is
+    oracle-checked downstream, so even one differing component would
+    break x7p/x29/x34 hash parity. md5: pure Python from
+    ``md5_hash60_py`` and the affine constants; xxhash64: a relational
+    explode + ``min(xxhash64(seed, i, shingle))`` per hash function."""
+    from rehiver_spark.operators.dedup import shingles
 
     df = spark.createDataFrame(
         [
@@ -134,35 +170,62 @@ def test_minhash_relational_matches_column_form(spark):
         "doc_id bigint, text string",
     )
     sh = df.select("doc_id", shingles("text", 3).alias("_sh"))
-
-    def col_form(hash_fn):
-        return {
-            r.doc_id: r.sig
-            for r in sh.select(
-                "doc_id",
-                minhash_signature("_sh", 16, 42, hash_fn).alias("sig"),
-            ).collect()
-        }
-
-    p = 2147483647
-    a_co, c_co = minhash_affine_consts(16, 42)
-    md5_ref = {
-        r.doc_id: [
-            min((md5_hash60_py(f"42:{x}") % (1 << 30) * a + c) % p for x in r._sh)
-            for a, c in zip(a_co, c_co)
-        ]
-        for r in sh.collect()
-    }
-    assert col_form("md5") == md5_ref
-    xx_ref = {
-        r.doc_id: list(r[1:])
-        for r in sh.select("doc_id", F.explode("_sh").alias("s"))
-        .groupBy("doc_id")
-        .agg(*[F.min(F.xxhash64(F.lit(42), F.lit(i), "s")) for i in range(16)])
-        .collect()
-    }
-    assert col_form("xxhash64") == xx_ref
+    assert minhash_rows(sh, 16, 42, "md5") == md5_minhash_reference(sh, 16, 42)
+    xx_ref = xxhash_minhash_reference(sh, 16, 42)
+    assert minhash_rows(sh, 16, 42, "xxhash64") == xx_ref
     assert len(xx_ref) == 4
+
+
+def test_sketch_builders_take_column_names_only(spark):
+    """The sketch builders render one SQL string each, so a Column
+    argument (accepted before they did) raises TypeError instead of
+    being spliced into SQL text."""
+    from rehiver_spark.operators.dedup import (
+        _band_keys,
+        minhash_signature,
+        sig_est_jaccard,
+    )
+
+    for build in (
+        lambda: minhash_signature(F.col("_sh")),
+        lambda: minhash_signature(F.col("_sh"), hash_fn="md5"),
+        lambda: _band_keys(F.col("sig"), 32, 8),
+        lambda: sig_est_jaccard(F.col("a"), "b", 32),
+        lambda: sig_est_jaccard("a", F.col("b"), 32),
+    ):
+        with pytest.raises(TypeError, match="column name"):
+            build()
+    # names are backquoted: odd characters and backticks resolve
+    df = spark.createDataFrame([([1, 2, 3, 4], [1, 2, 0, 4])], "`s g` array<bigint>, `b``q` array<bigint>")
+    assert df.select(sig_est_jaccard("s g", "b`q", 4)).first()[0] == 0.75
+
+
+def test_minhash_neardup_plan_build_gateway_budget(spark):
+    """Building (not running) the near-dup plan costs a bounded number
+    of py4j round trips: the sketch expressions are one SQL string each.
+    Built node by node over the Column API the same plan made ~2,880.
+    Object-release commands are not counted — py4j's finalizer thread
+    sends them later, in batches that vary run to run."""
+    from unittest import mock
+
+    from rehiver_spark.operators.dedup import minhash_neardup_pairs
+
+    df = spark.createDataFrame(
+        [(i, f"doc {i} shared words for the sketch") for i in range(20)],
+        "doc_id bigint, text string",
+    )
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    with mock.patch.object(client, "send_command", counting):
+        minhash_neardup_pairs(df, threshold=0.8)
+    assert 0 < len(sent) <= 800, len(sent)
 
 
 def test_simhash_neardup_pairs(spark):
@@ -361,7 +424,7 @@ def cc_rows(branch, pairs):
     cap = 1 << 62 if branch == "driver" else -1
     log = logging.getLogger(dedup.__name__)
     with mock.patch.object(
-        dedup, "_cc_driver_cap", lambda raw, id_dt: cap
+        dedup, "_cc_driver_cap", lambda avg_id_chars: cap
     ), mock.patch.object(log, "info") as info, mock.patch.object(
         dedup, "_cc_driver", wraps=dedup._cc_driver
     ) as solve:
@@ -419,8 +482,8 @@ def test_connected_components_auto_cap_dispatch(spark, monkeypatch, caplog):
         [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
     )
     want = {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
-    # 3 undirected pairs symmetrize to 6 directed edges; cap 3 -> 6 ≤ 6,
-    # cap 2 -> 4 < 6
+    # 3 pairs bound the symmetrized graph at 6 directed edges; cap 3 ->
+    # 6 ≤ 6, cap 2 -> 4 < 6
     for edge_cap, branch in ((3, "driver"), (2, "distributed")):
         monkeypatch.setattr(dedup, "_CC_DRIVER_EDGE_CAP", edge_cap)
         caplog.clear()
@@ -430,7 +493,7 @@ def test_connected_components_auto_cap_dispatch(spark, monkeypatch, caplog):
                 for r in dedup.connected_components(pairs).collect()
             }
         assert got == want, branch
-        line = f"6 directed edges (cap {2 * edge_cap}) -> {branch}"
+        line = f"3 pairs, at most 6 directed edges (cap {2 * edge_cap}) -> {branch}"
         assert any(m.endswith(line) for m in caplog.messages), caplog.messages
 
 
@@ -448,6 +511,24 @@ def test_connected_components_null_ids_dropped_both_branches(spark):
         assert cc_rows(branch, pairs) == want, branch
 
 
+def test_connected_components_duplicate_reversed_selfloop_pairs(spark):
+    """The driver branch symmetrizes the raw pair list in numpy, with
+    no distinct: duplicate pairs, both orientations of one pair and
+    self-loops must label exactly as the distributed branch's
+    union + distinct graph does, for int and string ids."""
+    rows = [
+        (1, 2), (1, 2), (2, 1),  # duplicate + reversed
+        (3, 3),  # self-loop: a component of one
+        (4, 5), (5, 4), (5, 5), (6, 5),
+    ]
+    want = {(1, 1), (2, 1), (3, 3), (4, 4), (5, 4), (6, 4)}
+    for schema, key in (("id_a long, id_b long", int), ("id_a string, id_b string", str)):
+        pairs = spark.createDataFrame([(key(a), key(b)) for a, b in rows], schema)
+        drv = cc_rows("driver", pairs)
+        assert drv == cc_rows("distributed", pairs), schema
+        assert drv == {(key(a), key(b)) for a, b in want}, schema
+
+
 def test_connected_components_byte_aware_cap(spark, monkeypatch, caplog):
     """String ids scale the row cap down by probed id width:
     wide string ids must push a graph that row-counts under the cap
@@ -462,9 +543,9 @@ def test_connected_components_byte_aware_cap(spark, monkeypatch, caplog):
         [(wide + "1", wide + "2"), (wide + "2", wide + "3")],
         "id_a string, id_b string",
     )
-    # 2 undirected pairs -> 4 directed edges. An edge cap of 2 would
-    # admit 4 rows for int64 ids, but the width probe shrinks it below
-    # 4, so this must take (and succeed on) the distributed branch.
+    # 2 pairs -> at most 4 directed edges. An edge cap of 2 would
+    # admit 4 rows for int64 ids, but the observed id width shrinks it
+    # below 4, so this must take (and succeed on) the distributed branch.
     monkeypatch.setattr(dedup, "_CC_DRIVER_EDGE_CAP", 2)
     with caplog.at_level(logging.INFO, logger="rehiver_spark.operators.dedup"):
         got = {
