@@ -3,11 +3,11 @@
 Charter extension set (SURVEY §2 X1/X2) — dedup over document tables is
 the workhorse of LLM training-data pipelines. Design rules for 100 TB:
 
-- NEVER all-pairs. Exact Jaccard pairs come from a *blocking join* on
-  shared shingles (a pair with J > 0 shares ≥1 shingle, so blocking on
-  the shingle is lossless); |intersection| falls out of the join's
-  group-by count, so the pair list is produced by ONE shuffle on
-  shingle + ONE aggregation on (id_a, id_b).
+- NEVER all-pairs. Exact Jaccard pairs come from a *prefix-filtered
+  join* on shared shingles (PPJoin: a pair with J ≥ t must share a
+  shingle within each side's rarest-first prefix, so joining on prefix
+  shingles is lossless); candidates are then exact-verified with
+  ``array_intersect``.
 - The approximate scale path (MinHash-LSH banding) only reduces the
   candidate set; candidates are always exact-verified, so returned
   pairs are a subset of the exact answer with tunable recall.
@@ -142,90 +142,28 @@ def jaccard_pairs(
     shingle_col: str = "shingles",
     threshold: float = 0.8,
     max_shingle_freq: int | None = None,
-    method: str = "prefix",
 ) -> DataFrame:
     """EXACT above-threshold Jaccard pairs, never a cartesian product.
 
     PRECONDITION: ``shingle_col`` holds SET-valued arrays (no duplicate
     elements), as produced by :func:`shingles`. Jaccard is a set
-    measure; on arrays with duplicates the two methods count
-    overlaps differently and neither is meaningful.
+    measure; on arrays with duplicates the overlap count is not
+    meaningful.
 
-    ``method='prefix'`` (default, the 100 TB plan): PPJoin-style prefix
-    filtering. Each doc's shingles are ordered by ascending global
-    frequency; if J(A,B) ≥ t then |A∩B| ≥ t·|A|, so A and B must share
-    an element within their first ``n - ceil(t·n) + 1`` shingles — the
-    candidate join touches ONLY those prefixes (rare shingles first, so
-    hot-shingle skew is excluded from the join by construction), then
-    candidates are exact-verified with array_intersect. Lossless.
-
-    ``method='blocking'``: plain explode/self-join on every shingle
-    with per-pair COUNT(*) — simpler plan, quadratic on hot shingles;
-    kept as the equivalence baseline (tests assert both agree).
+    PPJoin-style prefix filtering. Each doc's shingles are ordered by
+    ascending global frequency; if J(A,B) ≥ t then |A∩B| ≥ t·|A|, so A
+    and B must share an element within their first ``n - ceil(t·n) + 1``
+    shingles — the candidate join touches ONLY those prefixes (rare
+    shingles first, so hot-shingle skew is excluded from the join by
+    construction), then candidates are exact-verified with
+    array_intersect. Lossless.
 
     ``max_shingle_freq`` drops shingles shared by more than N docs
     before pairing — the documented approximation for stop-shingles
-    (default off so the oracle-checked form stays exact).
+    (default off so the oracle-checked form stays exact). Jaccard and
+    the set sizes are then taken over the filtered sets.
 
     Output: id_a, id_b, n_common, n_a, n_b, jaccard — ordered by caller.
-    """
-    df = ensure_parallelism(df)
-    if method == "prefix":
-        return _jaccard_pairs_prefix(df, id_col, shingle_col, threshold, max_shingle_freq)
-    # The exploded relation is read by the counts agg AND both join
-    # sides.  Deliberately NOT persisted: the returned DataFrame is
-    # lazy, so an in-function persist can never be paired with an
-    # unpersist and would leak executor storage for the session
-    # lifetime on every call.  Recomputing the explode is a cheap
-    # re-scan, acceptable for the non-default equivalence baseline.
-    sized = df.select(
-        F.col(id_col).alias("_id"), F.col(shingle_col).alias("_sh")
-    )
-    ex = sized.select("_id", F.explode("_sh").alias("_s"))
-    if max_shingle_freq is not None:
-        hot = (
-            ex.groupBy("_s").agg(F.count("*").alias("_f"))
-            .filter(F.col("_f") > max_shingle_freq)
-            .select("_s")
-        )
-        ex = ex.join(F.broadcast(hot), "_s", "left_anti")
-    # set sizes AFTER the hot filter — the prefix method defines the
-    # metric over the filtered sets, and computing n_a/n_b from the
-    # unfiltered arrays made the two methods return DIFFERENT pair sets
-    # whenever max_shingle_freq was set (equivalence-baseline violation)
-    counts = ex.groupBy("_id").agg(F.count("*").alias("_n"))
-    a = ex.select(F.col("_id").alias("id_a"), F.col("_s"))
-    b = ex.select(F.col("_id").alias("id_b"), F.col("_s"))
-    inter = (
-        a.join(b, "_s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    # no broadcast hint on the per-doc counts relation: it is
-    # corpus-sized, and forcing the hint past the autoBroadcast
-    # threshold would OOM at scale — AQE broadcasts it when it fits
-    out = (
-        inter.join(counts.withColumnsRenamed({"_id": "id_a", "_n": "n_a"}), "id_a")
-        .join(counts.withColumnsRenamed({"_id": "id_b", "_n": "n_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-    )
-    return out.filter(F.col("jaccard") >= F.lit(threshold)).select(
-        "id_a", "id_b", "n_common", "n_a", "n_b", "jaccard"
-    )
-
-
-def _jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    shingle_col: str,
-    threshold: float,
-    max_shingle_freq: int | None,
-) -> DataFrame:
-    """Prefix-filtered exact Jaccard (see jaccard_pairs docstring).
 
     Plan: explode → hash each shingle to BIGINT (xxhash64, join-key and
     ordering domain) → global hash frequency (map-side-combinable agg)
@@ -239,6 +177,7 @@ def _jaccard_pairs_prefix(
     no dictionary pass (the assigned-id design cost 2 extra shuffles +
     a vocab-wide sort + a collect_list regroup).
     """
+    df = ensure_parallelism(df)
     sized = track_persist(
         df.select(F.col(id_col).alias("_id"), F.col(shingle_col).alias("_sh"))
         .withColumn("_n", F.size("_sh"))
@@ -599,8 +538,8 @@ def minhash_neardup_pairs(
     MinHash banding, then compute TRUE Jaccard on candidates only and
     filter by threshold. Returned pairs ⊆ exact answer; recall governed
     by (num_hashes, bands) vs threshold. This is the 100 TB plan — the
-    shingle-blocking join in ``jaccard_pairs`` touches every co-shingle
-    pair, LSH touches only banding collisions.
+    prefix join in ``jaccard_pairs`` touches every pair that shares a
+    prefix shingle, LSH touches only banding collisions.
 
     ``est_gate_margin`` (r12): before the exact verification join
     touches the wide shingle arrays, candidates are pre-filtered on the

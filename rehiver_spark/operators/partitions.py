@@ -29,7 +29,15 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_SEG_RE = re.compile(r"(?:^|/)([^/=]+)=([^/]*)")
+# what Spark's try_cast to int/bigint accepts: an optional sign and
+# ASCII digits, after trimming ASCII whitespace and control bytes
+# (0x00-0x20, 0x7f) from both ends; Python int() would also take
+# ``1_000`` and non-ASCII digits such as ``٣``
+_INT_RE = re.compile(r"[\x00-\x20\x7f]*([+-]?[0-9]+)[\x00-\x20\x7f]*")
+# a value is URL-decoded only if every ``%`` starts a valid escape
+# (both rails: Java's url_decode throws on the rest, and decoding the
+# valid escapes of a partly malformed value made the rails disagree)
+_DECODABLE = r"(?:[^%]|%[0-9A-Fa-f]{2})*"
 
 
 def _naive_utc(v):
@@ -75,8 +83,10 @@ class PartitionField:
     values: list[str] | None = None  # enum constraint
     # regex constraint (anchored). Evaluated by Python `re` on the driver
     # and Java regex on executors — restrict to the shared dialect subset:
-    # literals, classes, quantifiers, alternation, \d/\w/\s. No inline
-    # flags (?i), \p{} properties, or lookbehind.
+    # literals, classes, quantifiers, alternation, \d/\w/\s (ASCII-only
+    # on both rails, as in Java). No inline flags (?i), \p{} properties,
+    # or lookbehind. Java's ``$`` also matches before a final line
+    # terminator, so the Column rail anchors the end with ``\z``.
     pattern: str | None = None
     required: bool = True  # optional fields may be absent
     nullable: bool = False  # literal "null" → NULL (tests/index.test.ts:997-1000)
@@ -136,9 +146,10 @@ class PartitionField:
         if self.nullable and raw == "null":
             return None
         if self.dtype in ("int", "long"):
-            try:
-                v = int(raw)
-            except ValueError:
+            m = _INT_RE.fullmatch(raw)
+            v = int(m.group(1)) if m else None
+            bound = 1 << (31 if self.dtype == "int" else 63)
+            if v is None or not -bound <= v < bound:
                 raise PartitionParseError(f"{self.name}: expected {self.dtype}, got {raw!r}")
         elif self.dtype == "double":
             try:
@@ -178,7 +189,7 @@ class PartitionField:
             raise PartitionParseError(f"{self.name}: {v} > max {self.max}")
         if self.values is not None and raw not in self.values:
             raise PartitionParseError(f"{self.name}: {raw!r} not in {self.values}")
-        if self.pattern is not None and not re.fullmatch(self.pattern, raw):
+        if self.pattern is not None and not re.fullmatch(self.pattern, raw, re.ASCII):
             raise PartitionParseError(f"{self.name}: {raw!r} !~ /{self.pattern}/")
         if self.nonempty and raw == "":
             raise PartitionParseError(f"{self.name}: empty")
@@ -192,22 +203,24 @@ class PartitionField:
         into a space (x-www-form-urlencoded), both of which diverge from
         the driver-side ``urllib.parse.unquote``. We pre-escape ``+`` to
         ``%2B`` and only decode values whose ``%`` sequences are all
-        valid; a malformed value is returned undecoded (driver parity:
-        ``unquote`` leaves invalid sequences in place) rather than
-        aborting the job.
+        valid; a malformed value is returned undecoded, on the driver
+        rail too (``split_path``), rather than aborting the job.
         """
-        # (?:.*/|^) — the GREEDY prefix makes a duplicated key resolve
-        # to its LAST occurrence, matching split_path's dict overwrite
-        # (driver parity); the first-occurrence form let the two parity
-        # surfaces disagree on pathological paths
-        raw = F.regexp_extract(key, rf"(?:.*/|^){re.escape(self.name)}=([^/]*)", 1)
-        # regexp_extract returns '' on no-match; disambiguate via contains
-        present = key.rlike(rf"(?:^|/){re.escape(self.name)}=")
-        decodable = raw.rlike(r"^(?:[^%]|%[0-9A-Fa-f]{2})*$")
-        decoded = F.when(
-            decodable, F.url_decode(F.replace(raw, F.lit("+"), F.lit("%2B")))
+        # every occurrence in ONE scan; the LAST wins, matching
+        # split_path's dict overwrite (driver parity), and an absent key
+        # leaves an empty array, so NULL, not '' (no second presence scan)
+        raw = F.try_element_at(
+            F.regexp_extract_all(
+                key, F.lit(rf"(?:^|/){re.escape(self.name)}=([^/]*)"), F.lit(1)
+            ),
+            F.lit(-1),
+        )
+        # top level, so codegen evaluates ``raw`` once for the condition
+        # and both branches
+        return F.when(
+            raw.rlike(rf"^{_DECODABLE}$"),
+            F.url_decode(F.replace(raw, F.lit("+"), F.lit("%2B"))),
         ).otherwise(raw)
-        return F.when(present, decoded)
 
     def typed_from_raw(self, raw: Column) -> Column:
         """Typed value from an already-extracted raw string column."""
@@ -217,9 +230,6 @@ class PartitionField:
         # cast THROW on malformed input; validity detection relies on
         # cast-to-null semantics
         return raw.try_cast(_SPARK_TYPE[self.dtype])
-
-    def typed_col(self, key: Column) -> Column:
-        return self.typed_from_raw(self.extract_col(key))
 
     def valid_from_raw(self, raw: Column, typed: Column) -> Column:
         """Validity from already-extracted raw + typed columns."""
@@ -233,16 +243,10 @@ class PartitionField:
         if self.values is not None:
             ok = ok & (raw.isNull() | raw.isin(self.values))
         if self.pattern is not None:
-            ok = ok & (raw.isNull() | raw.rlike(f"^(?:{self.pattern})$"))
+            ok = ok & (raw.isNull() | raw.rlike(f"^(?:{self.pattern})\\z"))
         if self.nonempty:
             ok = ok & (raw.isNull() | (raw != ""))
         return ok
-
-    def valid_col(self, key: Column) -> Column:
-        """True iff this field is present (or optional) and satisfies
-        every constraint. Cast-to-null detects type violations."""
-        raw = self.extract_col(key)
-        return self.valid_from_raw(raw, self.typed_from_raw(raw))
 
 
 @dataclass
@@ -266,12 +270,13 @@ class PartitionSchema:
     @staticmethod
     def split_path(path: str) -> dict[str, str]:
         """key=value segments of a path (non-partition segments skipped),
-        URL-decoded, full value kept even if it contains ``=``."""
+        URL-decoded unless a ``%`` is malformed, full value kept even if
+        it contains ``=``."""
         out: dict[str, str] = {}
         for seg in path.split("/"):
             if "=" in seg and not seg.startswith("="):
                 k, v = seg.split("=", 1)
-                out[k] = urllib.parse.unquote(v)
+                out[k] = urllib.parse.unquote(v) if re.fullmatch(_DECODABLE, v) else v
         return out
 
     def parse(self, path: str) -> dict:
@@ -360,18 +365,6 @@ class PartitionSchema:
         return re.match(segment_glob_to_regex(pattern), path) is not None
 
     # ---------------- Column-side (scale path) ------------------------
-    def parse_cols(self, key: Column | str) -> dict[str, Column]:
-        """Typed Column per key — use with ``df.withColumns``."""
-        c = F.col(key) if isinstance(key, str) else key
-        return {f_.name: f_.typed_col(c) for f_ in self.fields}
-
-    def valid_col(self, key: Column | str) -> Column:
-        c = F.col(key) if isinstance(key, str) else key
-        ok = F.lit(True)
-        for f_ in self.fields:
-            ok = ok & f_.valid_col(c)
-        return ok
-
     def missing_keys_col(self, key: Column | str) -> Column:
         """ARRAY<STRING> of schema keys absent from the path —
         ``array_except(schema_keys, found_keys)`` (SURVEY §2 R7)."""
@@ -404,29 +397,37 @@ class PartitionSchema:
             cond = cond & (F.col(k) == F.lit(v))
         return cond
 
-    def apply(self, df: DataFrame, key: str = "key", validate: bool = True) -> DataFrame:
+    def apply(self, df: DataFrame, key: str = "key") -> DataFrame:
         """Attach typed partition columns (+ ``_valid``) to a keys DF.
 
-        Staged so each field's regex extraction happens ONCE: raw
-        strings land in a first projection, typed/valid derive from the
-        raw columns in later ones. Catalyst's CollapseProject keeps the
-        stages apart (it refuses to inline non-cheap expressions used
-        more than once), so the plan evaluates ~2 regex ops per field
-        instead of ~5 — measured ~3× on a 100k-key parse."""
-        kc = F.col(key)
+        Invariant: each field's extraction appears once in the plan,
+        whether the caller projects the result or filters on ``_valid``.
+        The raw strings land in a first projection (``_raw_*``), which
+        CollapseProject keeps apart because each is read more than once.
+        A pushed ``filter("_valid")`` would still substitute that stage
+        into every read (for ``date_schema``, 63 regex extractions in
+        the Filter against 9 in the projection), so ``_valid`` is folded
+        through a LAMBDA binding over one struct of the ``_raw_*``
+        columns, the ``textops.winnow_fingerprints`` device: a
+        substitution lands once, in the struct, and the fold reads only
+        the lambda variable, which the optimizer cannot inline. The
+        typed columns stay plain projections, so a filter on one of
+        them (``prune_filter``) extracts only the fields it names."""
         raw_names = {f_.name: f"_raw_{f_.name}" for f_ in self.fields}
         staged = df.withColumns(
-            {raw_names[f_.name]: f_.extract_col(kc) for f_ in self.fields}
+            {raw_names[f_.name]: f_.extract_col(F.col(key)) for f_ in self.fields}
         )
-        staged = staged.withColumns(
-            {f_.name: f_.typed_from_raw(F.col(raw_names[f_.name])) for f_ in self.fields}
-        )
-        if validate:
+
+        def fold(s: Column) -> Column:
             ok = F.lit(True)
             for f_ in self.fields:
-                ok = ok & f_.valid_from_raw(F.col(raw_names[f_.name]), F.col(f_.name))
-            staged = staged.withColumn("_valid", ok)
-        return staged.drop(*raw_names.values())
+                raw = s[raw_names[f_.name]]
+                ok = ok & f_.valid_from_raw(raw, f_.typed_from_raw(raw))
+            return ok
+
+        typed = {f_.name: f_.typed_from_raw(F.col(raw_names[f_.name])) for f_ in self.fields}
+        valid = F.get(F.transform(F.array(F.struct(*raw_names.values())), fold), 0)
+        return staged.withColumns({**typed, "_valid": valid}).drop(*raw_names.values())
 
 
 # Reference example schemas (tests/index.test.ts:732-736, 957-963, 992-1001)

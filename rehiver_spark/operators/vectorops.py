@@ -224,36 +224,11 @@ def adaptive_plane_count(
     return hi
 
 
-def sign_lsh_bucket_quantized(
-    vec: Column | str,
-    dim: int,
-    n_planes: int = 12,
-    seed: int = 42,
-    scale: int = 10000,
-) -> Column:
-    """PORTABLE sign-LSH bucket: quantize coordinates to integers
-    (round(x·scale)) and dot them with deterministic Rademacher ±1
-    planes (functions/hashing.py) in exact integer arithmetic. Signs —
-    and therefore buckets — are bit-identical in any engine, which makes
-    the whole ANN pipeline oracle-checkable (sign is scale-invariant, so
-    quantization only perturbs vectors near a plane by < 1/scale).
-    """
-    v = as_double(vec)
-    q = F.transform(v, lambda x: F.round(x * scale, 0).cast("bigint"))
-    planes = rademacher_planes(dim, n_planes, seed)
-    out = F.lit(0).cast("bigint")
-    for i, p in enumerate(planes):
-        d = F.aggregate(  # F.lit(list) = ONE array literal, not dim py4j calls
-            F.zip_with(q, F.lit(p), lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        out = out.bitwiseXOR(  # disjoint bits: XOR == sum
-            F.when(d > 0, F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    return out
+def _quantize_grid(v: Column, scale: int) -> Column:
+    """``round(x·scale)`` per coordinate as BIGINT: the integer grid of
+    the portable sign-LSH and of ``kmeans_quantized``. Spark's round is
+    HALF_UP, as the SQL oracles' is, so the grid reproduces exactly."""
+    return F.transform(v, lambda x: F.round(x * scale, 0).cast("bigint"))
 
 
 def _plane_buckets_udf(planes, input_dtype: str):
@@ -630,9 +605,7 @@ def lsh_cosine_neardup_portable(
     _check_lsh_sizes("lsh_cosine_neardup_portable", dim, n_planes, n_tables)
     # quantization stays a Spark expression (F.round == oracle round,
     # proven parity); only the plane dots move to the batched matmul
-    quant = F.transform(
-        as_double(vec_col), lambda x: F.round(x * scale, 0).cast("bigint")
-    )
+    quant = _quantize_grid(as_double(vec_col), scale)
     base = track_persist(
         ensure_parallelism(df)
         .select(
@@ -1785,7 +1758,7 @@ def kmeans_quantized(
     clean = ~F.exists(v, lambda x: x.isNull() | F.isnan(x))
     q = df.filter(v.isNotNull() & (F.size(v) == dim) & clean).select(
         F.col(id_col).alias("_id"),
-        F.transform(v, lambda x: F.round(x * scale, 0).cast("bigint")).alias("q"),
+        _quantize_grid(v, scale).alias("q"),
     )
     q = q.persist()
     try:

@@ -361,7 +361,7 @@ def r6_partition_prune(spark, sf_dir):
     On a hive-layout scan this same predicate becomes Catalyst
     PartitionFilters (asserted in tests/test_timeparts.py)."""
     sch = date_schema()
-    df = sch.apply(_ev_keys(spark, sf_dir), "key", validate=False)
+    df = sch.apply(_ev_keys(spark, sf_dir), "key")
     return (
         df.filter(sch.prune_filter({"year": 2024, "day": 15}))
         .groupBy("event_type")

@@ -27,6 +27,34 @@ def test_shingles_short_and_normal(spark):
     assert got[1] == ["a b"]  # shorter than k → whole text
 
 
+def _py_jaccard_pairs(rows, threshold, max_shingle_freq=None):
+    """All-pairs exact Jaccard over shingle sets in pure Python:
+    {(id_a, id_b): (n_common, n_a, n_b, jaccard)}. A hot filter drops
+    shingles held by more than ``max_shingle_freq`` docs BEFORE the
+    sets are sized, as ``jaccard_pairs`` defines it."""
+    from collections import Counter
+    from itertools import combinations
+
+    sets = {i: set(sh) for i, sh in rows}
+    if max_shingle_freq is not None:
+        freq = Counter(s for sh in sets.values() for s in sh)
+        sets = {i: {s for s in sh if freq[s] <= max_shingle_freq} for i, sh in sets.items()}
+    out = {}
+    for a, b in combinations(sorted(sets), 2):
+        n = len(sets[a] & sets[b])
+        na, nb = len(sets[a]), len(sets[b])
+        if n and n / (na + nb - n) >= threshold:
+            out[(a, b)] = (n, na, nb, round(n / (na + nb - n), 9))
+    return out
+
+
+def _pair_rows(pairs_df):
+    return {
+        (r["id_a"], r["id_b"]): (r["n_common"], r["n_a"], r["n_b"], round(r["jaccard"], 9))
+        for r in pairs_df.collect()
+    }
+
+
 def _exact_pairs_duckdb(sf_dir, threshold):
     import duckdb
 
@@ -346,9 +374,7 @@ def test_simhash_signatures_tie_bits_match_column_form(spark):
     assert rel[3] == rel[1]  # doubling the multiset doubles ones and n
 
 
-def test_jaccard_prefix_equals_blocking(spark):
-    from pyspark.sql import functions as F
-
+def test_jaccard_pairs_equal_python_all_pairs(spark):
     from rehiver_spark.operators.dedup import jaccard_pairs, shingles
 
     texts = [
@@ -361,16 +387,11 @@ def test_jaccard_prefix_equals_blocking(spark):
     ]
     df = spark.createDataFrame(texts, "doc_id bigint, text string")
     sh = df.select("doc_id", shingles("text", 3).alias("shingles"))
+    rows = [(r["doc_id"], r["shingles"]) for r in sh.collect()]
     for t in (0.5, 0.8):
-        p = {
-            (r["id_a"], r["id_b"], r["n_common"])
-            for r in jaccard_pairs(sh, threshold=t, method="prefix").collect()
-        }
-        b = {
-            (r["id_a"], r["id_b"], r["n_common"])
-            for r in jaccard_pairs(sh, threshold=t, method="blocking").collect()
-        }
-        assert p == b and p, f"threshold {t}: prefix={p} blocking={b}"
+        got = _pair_rows(jaccard_pairs(sh, threshold=t))
+        want = _py_jaccard_pairs(rows, t)
+        assert got == want and got, f"threshold {t}: got={got} want={want}"
 
 
 def test_connected_components_transitive_chain(spark):
@@ -587,29 +608,6 @@ def test_lsh_verify_branch_is_logged(spark, monkeypatch, caplog):
         assert sum_pop2 >= 3 * 4 and est == sum_pop2 * (2 * 3 * 8 + 48)
 
 
-def test_jaccard_blocking_leaves_no_persisted_rdds(spark):
-    """The non-default blocking baseline must not leak executor storage:
-    its returned plan is lazy, so an in-function persist could never be
-    unpersisted (round-3 advice item, operators/dedup.py)."""
-    from rehiver_spark.operators.dedup import jaccard_pairs, shingles
-
-    def persisted_ids():
-        # py4j JavaMap supports dict-style iteration over RDD ids
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-    before = persisted_ids()
-    df = spark.createDataFrame(
-        [(1, "a b c d e f"), (2, "a b c d e x"), (3, "p q r s t u")],
-        "doc_id bigint, text string",
-    )
-    sh = df.select("doc_id", shingles("text", 3).alias("shingles"))
-    jaccard_pairs(sh, threshold=0.5, method="blocking").collect()
-    # other tests' caches may be GC-cleaned concurrently (ids can
-    # DISAPPEAR); the invariant is that this call ADDS none
-    new = persisted_ids() - before
-    assert not new, f"blocking jaccard persisted RDDs: {new}"
-
-
 def test_incremental_exact_dedup_statuses(spark):
     from rehiver_spark.operators.dedup import (
         dedup_index,
@@ -792,10 +790,10 @@ def test_incremental_banding_agrees_with_batch_lsh(spark):
     assert got == straddling and straddling
 
 
-def test_jaccard_methods_agree_with_hot_filter(spark):
-    """With max_shingle_freq set, BOTH methods must define Jaccard over
-    the filtered sets — sizes from the unfiltered arrays made blocking
-    return a different pair set than prefix."""
+def test_jaccard_hot_filter_equals_python_all_pairs(spark):
+    """With max_shingle_freq set, Jaccard and the set sizes are taken
+    over the FILTERED sets: the pure-Python reference drops the hot
+    shingles before sizing, and the pair rows must match it."""
     from pyspark.sql import functions as F
 
     from rehiver_spark.operators.dedup import jaccard_pairs, shingles
@@ -807,12 +805,12 @@ def test_jaccard_methods_agree_with_hot_filter(spark):
     df = spark.createDataFrame(rows, "doc_id bigint, text string").select(
         "doc_id", shingles(F.col("text"), 2).alias("shingles")
     )
-    kw = dict(threshold=0.4, max_shingle_freq=3)
-    p = {(r["id_a"], r["id_b"], round(r["jaccard"], 9))
-         for r in jaccard_pairs(df, method="prefix", **kw).collect()}
-    b = {(r["id_a"], r["id_b"], round(r["jaccard"], 9))
-         for r in jaccard_pairs(df, method="blocking", **kw).collect()}
-    assert p == b
+    sets = [(r["doc_id"], r["shingles"]) for r in df.collect()]
+    # at 0.3 only the filtered sizes keep (0, 10): 2 / (4 + 4 - 2)
+    for t in (0.3, 0.4):
+        got = _pair_rows(jaccard_pairs(df, threshold=t, max_shingle_freq=3))
+        assert got == _py_jaccard_pairs(sets, t, max_shingle_freq=3), t
+    assert _py_jaccard_pairs(sets, 0.3, max_shingle_freq=3).keys() == {(0, 10)}
 
 
 def test_simhash_max_hamming_zero(spark):
@@ -1042,14 +1040,9 @@ def test_jaccard_prefix_length_filter_keeps_boundary_pairs(spark):
         for r in jaccard_pairs(df, "doc_id", "shingles", threshold=0.8).collect()
     }
     assert got == {(1, 2): 0.8}
-    # and the filter agrees with the blocking baseline on the same input
-    base = {
-        (r["id_a"], r["id_b"]): round(r["jaccard"], 6)
-        for r in jaccard_pairs(
-            df, "doc_id", "shingles", threshold=0.8, method="blocking"
-        ).collect()
-    }
-    assert got == base
+    # and the filter agrees with pure-Python all-pairs on the same input
+    want = _py_jaccard_pairs([(r["doc_id"], r["shingles"]) for r in df.collect()], 0.8)
+    assert got == {k: round(v[3], 6) for k, v in want.items()}
 
 
 def test_selfjoin_merge_gate_equivalence_and_plan(docs, monkeypatch):

@@ -166,7 +166,7 @@ def test_extract_col_malformed_percent_and_plus(spark):
     # literal (urllib.parse.unquote parity), valid %hh decodes
     from pyspark.sql import functions as F
 
-    from rehiver_spark.operators.partitions import PartitionField
+    from rehiver_spark.operators.partitions import PartitionField, PartitionSchema
 
     f = PartitionField("app")
     df = spark.createDataFrame(
@@ -174,9 +174,11 @@ def test_extract_col_malformed_percent_and_plus(spark):
     )
     got = [r[0] for r in df.select(f.extract_col(F.col("key"))).collect()]
     assert got == ["50%off", "a+b", "sp ace"]
-    # and valid_col classifies rather than throws
-    ok = [r[0] for r in df.select(f.valid_col(F.col("key"))).collect()]
-    assert ok == [True, True, True]
+    # and apply classifies rather than throws
+    out = PartitionSchema([f]).apply(df).collect()
+    assert [(r["app"], r["_valid"]) for r in out] == [
+        ("50%off", True), ("a+b", True), ("sp ace", True)
+    ]
 
 
 def test_typed_col_ansi_safe_invalid_int(spark):
@@ -192,29 +194,65 @@ def test_typed_col_ansi_safe_invalid_int(spark):
     assert rows["year=oops/month=1/day=1"] == (False, None)
 
 
+def test_driver_and_column_rails_agree_at_the_boundary(spark):
+    """``is_valid`` and ``apply(df)._valid`` agree on the keys where the
+    driver rail used to be laxer or stricter: int values take only a
+    sign and ASCII digits within 32/64 bits (Python ``int()`` also takes
+    ``1_000`` and ``٣``), whitespace around them is trimmed as Spark's
+    try_cast trims it; a pattern's ``\\d`` is ASCII-only and its end
+    anchor does not skip a trailing newline; a value with a malformed
+    ``%`` is kept undecoded."""
+    from rehiver_spark.operators.partitions import PartitionField, PartitionSchema
+
+    ints = PartitionSchema(
+        [PartitionField("i", "int"), PartitionField("l", "long", required=False)]
+    )
+    dates = PartitionSchema([PartitionField("d", pattern=r"\d{4}-\d{2}-\d{2}")])
+    text = PartitionSchema([PartitionField("s")])
+    cases = [
+        (ints, "i=1_000", False),
+        (ints, "i=٣", False),
+        (ints, "i=５", False),
+        (ints, "i=1.5", False),
+        (ints, "i=2147483648", False),
+        (ints, "i=-2147483648", True),
+        (ints, "i=%20%2B7%09", True),
+        (ints, "i=1/l=9223372036854775807", True),
+        (ints, "i=1/l=9223372036854775808", False),
+        (dates, "d=2024-03-05", True),
+        (dates, "d=٢٠٢٤-٠٣-٠٥", False),
+        (dates, "d=2024-03-05%0A", False),
+        (text, "s=%33%", True),
+    ]
+    for sch in (ints, dates, text):
+        keys = {key: want for s_, key, want in cases if s_ is sch}
+        df = spark.createDataFrame([(k,) for k in keys], "key string")
+        for row in sch.apply(df).collect():
+            key, want = row["key"], keys[row["key"]]
+            assert (sch.is_valid(key), row["_valid"]) == (want, want), key
+            if want:
+                assert {k: row[k] for k in sch.keys} == {
+                    k: sch.parse(key).get(k) for k in sch.keys
+                }, key
+    assert text.parse("s=%33%") == {"s": "%33%"}
+
+
 def test_duplicate_key_driver_column_agree_on_last(spark):
     """'year=2023/backup/year=2024': both parity surfaces must resolve
     the duplicated key the same way (LAST occurrence, dict semantics)."""
-    from pyspark.sql import functions as F
-
     from rehiver_spark.operators.partitions import PartitionField, PartitionSchema
 
     sch = PartitionSchema([PartitionField("year", "int")])
     path = "year=2023/backup/year=2024"
     assert sch.parse(path) == {"year": 2024}
-    got = (
-        spark.createDataFrame([(path,)], "key string")
-        .select(sch.fields[0].typed_col(F.col("key")).alias("y"))
-        .first()["y"]
-    )
-    assert got == 2024
+    got = sch.apply(spark.createDataFrame([(path,)], "key string")).first()
+    assert (got["year"], got["_valid"]) == (2024, True)
 
 
 def test_date_field_driver_column_validity_agree(spark):
     """Malformed date values must be invalid on BOTH rails — the driver
     used to pass them through as strings while try_cast nulled them."""
     import pytest
-    from pyspark.sql import functions as F
 
     from rehiver_spark.operators.partitions import (
         PartitionField,
@@ -229,10 +267,11 @@ def test_date_field_driver_column_validity_agree(spark):
     with pytest.raises(PartitionParseError):
         sch.parse("d=not-a-date")
     assert not sch.is_valid("d=not-a-date")
-    f = sch.fields[0]
     df = spark.createDataFrame([("d=2024-03-05",), ("d=not-a-date",)], "key string")
-    vals = [r["v"] for r in df.select(f.typed_col(F.col("key")).alias("v")).collect()]
-    assert vals[0] is not None and vals[1] is None
+    rows = sch.apply(df).orderBy("key").collect()
+    assert [(r["d"], r["_valid"]) for r in rows] == [
+        (date(2024, 3, 5), True), (None, False)
+    ]
 
 
 def test_date_bounds_enforced_both_rails(spark):
@@ -269,6 +308,22 @@ def test_date_bounds_enforced_both_rails(spark):
         for r in df.select(f.valid_from_raw(raw, typed).alias("ok")).collect()
     ]
     assert ok == [True, False]
+
+
+def test_apply_is_the_only_column_parse():
+    """The Column-level wrappers that rebuilt what ``apply`` stages are
+    gone, and the removed ``validate=`` switch fails at the call."""
+    from rehiver_spark.operators.partitions import PartitionField, PartitionSchema
+
+    for cls, name in [
+        (PartitionSchema, "parse_cols"),
+        (PartitionSchema, "valid_col"),
+        (PartitionField, "typed_col"),
+        (PartitionField, "valid_col"),
+    ]:
+        assert not hasattr(cls, name), name
+    with pytest.raises(TypeError, match="validate"):
+        DS.apply(None, "key", validate=False)
 
 
 def test_string_bounds_are_config_error():

@@ -79,6 +79,42 @@ def test_r6_prune_reaches_scan_on_hive_layout(spark):
     assert df.count() > 0
 
 
+def _regex_calls(df, node=None) -> tuple[int, int]:
+    """(regexp_extract[_all], RLIKE) calls held by the optimized plan's
+    nodes named ``node`` (every node when None), each node's own
+    expressions only."""
+    import re as _re
+
+    counts = [0, 0]
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        p = stack.pop()
+        if node is None or p.nodeName() == node:
+            s = p.simpleString(1 << 20)
+            counts[0] += s.count("regexp_extract")  # and regexp_extract_all
+            counts[1] += len(_re.findall(r"RLIKE\(", s))
+        kids = p.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return tuple(counts)
+
+
+@pytest.mark.parametrize("schema", ["date_schema", "analytics_schema", "log_schema"])
+def test_partition_valid_filter_extracts_each_field_once(spark, schema):
+    """A pushed ``filter("_valid")`` must not re-inline the staged
+    extractions of ``apply``: its Filter node holds no more regex
+    extractions and RLIKEs than the whole projection (for date_schema
+    the Filter held 63/42 against the projection's 9/6 before
+    ``_valid`` was bound through a lambda)."""
+    from rehiver_spark.operators import partitions
+
+    sch = getattr(partitions, schema)()
+    df = spark.createDataFrame([("year=2024/month=1/day=1",)], "key string")
+    proj = _regex_calls(sch.apply(df, "key"))
+    filt = _regex_calls(sch.apply(df, "key").filter("_valid"), "Filter")
+    assert filt[0] <= proj[0] and filt[1] <= proj[1], (filt, proj)
+    assert filt[0] >= len(sch.fields)  # the Filter did get the pushed predicate
+
+
 def test_flagship_prunes_partitions(spark):
     from datetime import datetime
 

@@ -215,18 +215,18 @@ def test_winnow_byte_gram_path_equals_char_path(spark):
 
 
 def test_quantized_sign_lsh_matches_driver_twin(spark):
+    """The bucketing ``lsh_cosine_neardup_portable`` runs (its integer
+    grid, then the batched plane matmul over ``rademacher_planes``)
+    equals the pure-Python sign computation."""
+    import rehiver_spark.operators.vectorops as vo
     from rehiver_spark.functions.hashing import rademacher_planes
-    from rehiver_spark.operators.vectorops import sign_lsh_bucket_quantized
 
     vecs = [(1, [0.5, -0.25, 0.125, 0.9]), (2, [-0.1, 0.2, -0.3, 0.4])]
     df = spark.createDataFrame(vecs, "vec_id bigint, embedding array<double>")
-    got = {
-        r["vec_id"]: r["b"]
-        for r in df.select(
-            "vec_id", sign_lsh_bucket_quantized("embedding", 4, 8, 42).alias("b")
-        ).collect()
-    }
     planes = rademacher_planes(4, 8, 42)
+    bkts = vo._plane_buckets_udf([planes], input_dtype="int64")
+    grid = vo._quantize_grid(vo.as_double("embedding"), 10000)
+    got = {r["vec_id"]: r["b"] for r in df.select("vec_id", bkts(grid)[0].alias("b")).collect()}
     for vid, v in vecs:
         q = [round(x * 10000) for x in v]
         exp = sum(

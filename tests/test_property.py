@@ -9,6 +9,7 @@ and each example runs ONE collect, keeping runtime sane.
 
 import string
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -727,3 +728,71 @@ def test_minhash_est_gate_subset_property(spark, texts, threshold, margin):
     assert set(gated) <= set(ungated)
     for k, v in gated.items():
         assert v == ungated[k] and v >= threshold
+
+
+# Values at the hive-partition rail boundary: signs, `_`, non-ASCII
+# digits, %-escapes (well-formed, lone and malformed), `+`, `=`, a raw
+# newline, the literal `null` and the empty string
+PART_ATOMS = [
+    "0", "1", "12", "13", "31", "32", "2024", "1999", "2147483648",
+    "-", "+", "_", "٣", "５", "%33", "%2B", "%2D", "%20", "%09", "%0A",
+    "%2F", "%D9%A3", "%D9", "%25", "%", "%zz", "=", "\n", "null", "",
+]
+
+
+def _good_values(f):
+    """Values that satisfy field ``f`` on both rails, so that the keys
+    drawn below are valid often enough to compare typed values."""
+    if f.values is not None:
+        return f.values
+    if f.pattern is not None:
+        return ["2024-03-05"]
+    if f.dtype == "int":
+        lo = -(1 << 31) if f.min is None else f.min
+        hi = (1 << 31) - 1 if f.max is None else f.max
+        return [v for v in ("1", "05", "12", "2024", "+7", " 9") if lo <= int(v) <= hi]
+    return ["web", "a+b", "x%20y"]
+
+
+@st.composite
+def _hive_keys(draw, fields):
+    names = [f.name for f in fields]
+    junk = st.lists(st.sampled_from(PART_ATOMS), max_size=3).map("".join)
+
+    def value(f):
+        kind = draw(st.integers(0, 3))  # good, good + junk suffix, or junk
+        good = draw(st.sampled_from(_good_values(f)))
+        return good if kind < 2 else good + draw(junk) if kind == 2 else draw(junk)
+
+    # ~1 in 8 fields missing; then duplicated and extra segments
+    segs = [(f.name, value(f)) for f in fields if draw(st.integers(0, 7))]
+    extra = st.tuples(st.sampled_from(names + ["x"]), junk)
+    for seg in draw(st.lists(extra, max_size=2)):
+        segs.insert(draw(st.integers(0, len(segs))), seg)
+    prefix = draw(st.sampled_from(["", "data/"]))
+    return prefix + "/".join(f"{n}={v}" for n, v in segs)
+
+
+@pytest.mark.parametrize("schema", ["date_schema", "analytics_schema", "log_schema"])
+@settings(max_examples=8, deadline=None)
+@given(data=st.data())
+def test_partition_apply_matches_safe_parse(spark, schema, data):
+    """The Column rail (``apply``) and the driver rail (``safe_parse``)
+    agree on every key: ``_valid`` equals the driver verdict, the typed
+    values equal the parsed dict on valid keys, and the pushed
+    ``filter("_valid")`` returns exactly the projected valid rows."""
+    from rehiver_spark.operators import partitions
+
+    sch = getattr(partitions, schema)()
+    keys = data.draw(st.lists(_hive_keys(sch.fields), min_size=1, max_size=25, unique=True))
+    df = spark.createDataFrame([(k,) for k in keys], "key string")
+    parsed = sch.apply(df, "key")
+    rows = {r["key"]: r for r in parsed.collect()}
+    for k in keys:
+        ok, want = sch.safe_parse(k)
+        r = rows[k]
+        assert r["_valid"] == ok, (k, want)
+        if ok:
+            assert {f: r[f] for f in sch.keys} == {f: want.get(f) for f in sch.keys}, k
+    filtered = sorted(map(tuple, parsed.filter("_valid").collect()))
+    assert filtered == sorted(tuple(r) for r in rows.values() if r["_valid"])

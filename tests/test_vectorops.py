@@ -748,6 +748,7 @@ def test_lsh_rejects_bad_sizes():
         ("vectorops", "lsh_cosine_neardup_portable", "impl"),
         ("dedup", "connected_components", "impl"),
         ("dedup", "connected_components", "driver_edge_cap"),
+        ("dedup", "jaccard_pairs", "method"),
         ("textops", "charlm_score", "max_model_rows"),
     ],
 )
