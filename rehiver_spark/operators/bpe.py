@@ -56,6 +56,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 END_OF_WORD = "</w>"
+# learn_bpe round shape: lineage is truncated every _CHECKPOINT_EVERY
+# accepted merges, and each round probes the top _PROBE_PAIRS pair
+# counts. Neither changes the merge table, only the job count
+_CHECKPOINT_EVERY = 6
+_PROBE_PAIRS = 256
 
 
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -241,8 +246,6 @@ def learn_bpe(
     num_merges: int,
     text_col: str = "text",
     min_freq: int = 2,
-    checkpoint_every: int = 6,
-    probe_pairs: int = 256,
 ) -> list[dict]:
     """Learn ``num_merges`` BPE merges from the corpus — EXACTLY the
     classical sequential algorithm's merge table, in fewer rounds.
@@ -251,17 +254,17 @@ def learn_bpe(
     ``{rank, left_sym, right_sym, merged, pair_freq}`` (rank 0 first).
     Stops early when the best remaining pair's frequency drops below
     ``min_freq``. The vocabulary relation stays distributed throughout
-    and its lineage is truncated every ``checkpoint_every`` accepted
+    and its lineage is truncated every ``_CHECKPOINT_EVERY`` accepted
     MERGES (crossing-based, so the un-checkpointed expression depth is
     bounded regardless of how many merges one round batches).
 
     Multi-merge rounds (round 9): each round collects the TOP
-    ``probe_pairs`` rows of the pair-count snapshot (still
+    ``_PROBE_PAIRS`` rows of the pair-count snapshot (still
     scalar-bounded driver traffic) and applies the longest prefix that
     provably equals the classical sequential order, cutting the
     dominant cost — sequential job rounds — without changing one byte
-    of the result. ``probe_pairs=1`` restores the strict one-merge
-    rounds. The acceptance argument, each clause test-pinned in
+    of the result (a probe of 1 is the strict one-merge rounds). The
+    acceptance argument, each clause test-pinned in
     tests/test_bpe.py:
 
     - the snapshot's first row IS the classical argmax (same data,
@@ -319,15 +322,14 @@ def learn_bpe(
     vocab = vocab.persist()
     merges: list[dict] = []
     multi_syms = {END_OF_WORD}
-    probe = max(1, probe_pairs)
     # lineage is truncated on accumulated MERGES, not rounds: one
     # multi-merge round chains one F.replace per accepted merge, so a
     # rounds-based counter would let the per-column expression tree
-    # grow to ~checkpoint_every * probe_pairs nested calls between
+    # grow to ~_CHECKPOINT_EVERY * _PROBE_PAIRS nested calls between
     # checkpoints (r10 advisor finding). Crossing-based accounting
-    # bounds the un-checkpointed depth at checkpoint_every plus one
-    # batch, independent of probe_pairs.
-    next_ckpt = max(1, checkpoint_every)
+    # bounds the un-checkpointed depth at _CHECKPOINT_EVERY plus one
+    # batch, independent of the probe size.
+    next_ckpt = _CHECKPOINT_EVERY
     prev: DataFrame | None = None
     try:
         while len(merges) < num_merges:
@@ -338,7 +340,7 @@ def learn_bpe(
                     F.col("left_sym"),
                     F.col("right_sym"),
                 )
-                .limit(probe)
+                .limit(_PROBE_PAIRS)
                 .collect()
             )
             # the collect has just MATERIALIZED vocab's cache, so the
@@ -350,7 +352,7 @@ def learn_bpe(
                 prev.unpersist()
                 prev = None
             batch = _accept_batch(
-                rows, len(merges), num_merges, min_freq, probe, multi_syms
+                rows, len(merges), num_merges, min_freq, _PROBE_PAIRS, multi_syms
             )
             if not batch:
                 break
@@ -372,7 +374,7 @@ def learn_bpe(
             if len(merges) >= next_ckpt:
                 nxt = nxt.localCheckpoint()
                 while next_ckpt <= len(merges):
-                    next_ckpt += max(1, checkpoint_every)
+                    next_ckpt += _CHECKPOINT_EVERY
             nxt = nxt.persist()
             prev = vocab
             vocab = nxt

@@ -532,7 +532,6 @@ def minhash_neardup_pairs(
     bands: int = 8,
     seed: int = 42,
     hash_fn: str = "xxhash64",
-    est_gate_margin: float | str | None = "auto",
 ) -> DataFrame:
     """LSH-blocked, exact-verified near-dup pairs: generate candidates by
     MinHash banding, then compute TRUE Jaccard on candidates only and
@@ -541,33 +540,27 @@ def minhash_neardup_pairs(
     prefix join in ``jaccard_pairs`` touches every pair that shares a
     prefix shingle, LSH touches only banding collisions.
 
-    ``est_gate_margin`` (r12): before the exact verification join
-    touches the wide shingle arrays, candidates are pre-filtered on the
-    SIGNATURE-estimated Jaccard at ``threshold - est_gate_margin`` —
-    the signatures are already computed for banding, so the gate costs
-    two narrow sig joins and saves the per-pair ``array_intersect``
-    for the banding false positives (bands=8/r=4 collides ~40% of
-    J=0.5 pairs that the exact filter then discards). The margin is a
-    RECALL dial layered on the existing (num_hashes, bands) one, and it
-    DEPENDS ON ``num_hashes``: the estimator's sd at the threshold is
-    ~sqrt(t(1-t)/num_hashes) (binomial on matching components), so a
-    fixed margin that is 3.5σ at 32 hashes is only ~2.5σ at 16. The
-    default ``"auto"`` therefore scales: margin =
-    3.5·sqrt(threshold·(1-threshold)/num_hashes) — 0.2475 at the
-    (t=0.8, n=32) defaults. Because the estimate is always a multiple
-    of 1/num_hashes, the auto gate at those defaults admits exactly the
-    same signature-match counts as the r12 fixed 0.25 (both cut between
+    Estimate gate (r12): before the exact verification join touches the
+    wide shingle arrays, candidates are pre-filtered on the
+    SIGNATURE-estimated Jaccard at ``threshold - margin`` — the
+    signatures are already computed for banding, so the gate costs two
+    narrow sig joins and saves the per-pair ``array_intersect`` for the
+    banding false positives (bands=8/r=4 collides ~40% of J=0.5 pairs
+    that the exact filter then discards). The margin scales with
+    ``num_hashes``: the estimator's sd at the threshold is
+    ~sqrt(t(1-t)/num_hashes) (binomial on matching components), so
+    margin = 3.5·sqrt(threshold·(1-threshold)/num_hashes) — 0.2475 at
+    the (t=0.8, n=32) defaults. Because the estimate is always a
+    multiple of 1/num_hashes, that gate admits exactly the same
+    signature-match counts as the r12 fixed 0.25 (both cut between
     17/32 and 18/32), so the committed oracles' literal ``>= 0.55``
     remains the bit-exact twin (pinned in tests/test_dedup.py). The
     gate is deterministic given the sketch, so a portable-md5 oracle
-    reproduces it exactly (x7p/x29 embed the same gate in SQL).
-    ``None`` disables the gate (bit-identical pair set whenever no true
-    pair estimates below the margin — pinned on the driver testdata).
+    reproduces it exactly (x7p/x29 embed the same gate in SQL). It only
+    ever removes candidates: the result is a subset of the exact pairs
+    with exact scores (pinned against a pure-Python all-pairs Jaccard).
     """
-    if est_gate_margin == "auto":
-        est_gate_margin = 3.5 * math.sqrt(threshold * (1.0 - threshold) / num_hashes)
-    elif isinstance(est_gate_margin, str):
-        raise ValueError(f"est_gate_margin must be a float, None or 'auto', got {est_gate_margin!r}")
+    margin = 3.5 * math.sqrt(threshold * (1.0 - threshold) / num_hashes)
     sh = track_persist(
         ensure_parallelism(df).select(
             F.col(id_col).alias("_id"), shingles(F.col(text_col), k).alias("_sh")
@@ -577,27 +570,25 @@ def minhash_neardup_pairs(
         raise ValueError("bands must divide num_hashes")
     sigs = track_persist(
         minhash_signatures(sh, "_id", "_sh", num_hashes, seed, hash_fn)
-    )  # read by banding and (gated) both estimate sides
+    )  # read by banding and both estimate sides
     big = _big_corpus(df)
     cand = _lsh_band_candidates(sigs, "_id", num_hashes, bands, prefer_merge=big)
-    if est_gate_margin is not None:
-        sa = sigs.withColumnsRenamed({"_id": "id_a", "sig": "_siga"})
-        sb = sigs.withColumnsRenamed({"_id": "id_b", "sig": "_sigb"})
-        if big:
-            # r13: the sig relation's 32-long arrays build a 288 MiB
-            # broadcast map (×2) at sf10 under the misestimate; SMJ
-            # measured 2.51 vs 3.17 s on warm candidates (see
-            # OPTIMIZATION_r13.md §12)
-            sa, sb = sa.hint("merge"), sb.hint("merge")
-        cand = (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .filter(
-                sig_est_jaccard("_siga", "_sigb", num_hashes)
-                >= F.lit(threshold - est_gate_margin)
-            )
-            .select("id_a", "id_b")
+    sa = sigs.withColumnsRenamed({"_id": "id_a", "sig": "_siga"})
+    sb = sigs.withColumnsRenamed({"_id": "id_b", "sig": "_sigb"})
+    if big:
+        # r13: the sig relation's 32-long arrays build a 288 MiB
+        # broadcast map (×2) at sf10 under the misestimate; SMJ
+        # measured 2.51 vs 3.17 s on warm candidates (see
+        # OPTIMIZATION_r13.md §12)
+        sa, sb = sa.hint("merge"), sb.hint("merge")
+    cand = (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .filter(
+            sig_est_jaccard("_siga", "_sigb", num_hashes) >= F.lit(threshold - margin)
         )
+        .select("id_a", "id_b")
+    )
     a = sh.withColumnsRenamed({"_id": "id_a", "_sh": "_sha"})
     b = sh.withColumnsRenamed({"_id": "id_b", "_sh": "_shb"})
     # SQL text, like the sketch builders: a handful of gateway calls
@@ -988,7 +979,6 @@ def simhash_neardup_pairs(
     max_hamming: int = 3,
     seed: int = 42,
     hash_fn: str = "xxhash64",
-    match_blocks: int | None = None,
 ) -> DataFrame:
     """Near-dup candidates with hamming(simhash) ≤ max_hamming.
 
@@ -1000,7 +990,7 @@ def simhash_neardup_pairs(
     therefore lossless and never all-pairs. Verification =
     bit_count(xor).
 
-    ``match_blocks`` (k) defaults to a count probe via
+    The number of matching blocks k comes from a count probe via
     :func:`adaptive_match_blocks`: k=1 is the plain one-chunk
     pigeonhole (4 tables of 16-bit keys at the default budget — right
     for small corpora, where more tables only add explode cost), and
@@ -1014,8 +1004,8 @@ def simhash_neardup_pairs(
     Because the blocking is LOSSLESS at any k, the result equals "all
     pairs with hamming ≤ budget" exactly — so with ``hash_fn="md5"``
     the output is fully oracle-checkable (the oracle may verify
-    all-pairs at sf scale), and k is a pure cost dial, never a
-    semantics change (test-pinned k=1 ≡ k=2).
+    all-pairs at sf scale), and k only moves the cost, never the
+    answer (test-pinned k=1 ≡ k=2 ≡ k=3).
     """
     if not 0 <= max_hamming <= 31:
         raise ValueError("max_hamming must be in [0, 31]")
@@ -1026,10 +1016,7 @@ def simhash_neardup_pairs(
             F.col(id_col).alias("_id"), F.col("sig").alias("_sig")
         )
     )  # block explode is read by both join sides (and the k probe)
-    if match_blocks is None:
-        match_blocks = adaptive_match_blocks(sigs.count(), max_hamming, sig_bits)
-    if match_blocks < 1:
-        raise ValueError(f"match_blocks must be >= 1, got {match_blocks}")
+    match_blocks = adaptive_match_blocks(sigs.count(), max_hamming, sig_bits)
     n_blocks = max_hamming + match_blocks
     base, rem = divmod(sig_bits, n_blocks)
     block_specs = []  # (offset, width)
@@ -1189,7 +1176,6 @@ def fuzzy_dedup(
     seed: int = 42,
     hash_fn: str = "xxhash64",
     keep: str = "min_id",
-    est_gate_margin: float | str | None = "auto",
 ) -> DataFrame:
     """One-call fuzzy-dedup pipeline over a corpus — the composition a
     training-data run actually executes (NeMo-Curator-style):
@@ -1220,8 +1206,7 @@ def fuzzy_dedup(
     if keep not in ("min_id", "longest"):
         raise ValueError(f"keep must be 'min_id' or 'longest', got {keep!r}")
     pairs = minhash_neardup_pairs(
-        df, id_col, text_col, k, threshold, num_hashes, bands, seed, hash_fn,
-        est_gate_margin,
+        df, id_col, text_col, k, threshold, num_hashes, bands, seed, hash_fn
     )
     comp = connected_components(pairs).withColumnsRenamed({"doc_id": id_col})
     sizes = comp.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
@@ -1447,7 +1432,6 @@ def incremental_minhash_neardup(
     seed: int = 42,
     hash_fn: str = "xxhash64",
     est_threshold: float = 0.7,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Near-dup pairs between a NEW batch and an already-ingested
     corpus, using only the corpus's persisted signature index — no
@@ -1466,11 +1450,12 @@ def incremental_minhash_neardup(
     signatures are small → candidates = index-bands ⋉ broadcast(batch
     bands), so the index is only STREAMED map-side (its signature rides
     along to the estimator — wide rows, but never shuffled); nothing
-    index-sized crosses the wire.  ``broadcast_batch=True`` (default)
-    FORCES that shape and assumes an ingest-sized batch; for a
-    one-off batch comparable to the corpus (initial load), pass
-    ``False`` so the planner falls back to a shuffle join instead of
-    broadcasting something executor-memory-sized.
+    index-sized crosses the wire.  That shape is FORCED for an
+    ingest-sized batch; a batch whose size estimate passes the
+    :func:`_big_corpus` gate (a one-off batch comparable to the
+    corpus, such as an initial load) gets no hint, so the planner
+    falls back to a shuffle join instead of broadcasting something
+    executor-memory-sized.
 
     Output: (batch ``id_col``, ``corpus_id``, ``est_jaccard``).
     """
@@ -1497,16 +1482,14 @@ def incremental_minhash_neardup(
     # the pair set and estimates are bit-identical.
     bb = banded(bsig, "batch_id", with_sig=False)
     ib = banded(index.select(F.col(id_col), "sig"), "corpus_id", with_sig=True)
-    bb_side = F.broadcast(bb) if broadcast_batch else bb
+    small = not _big_corpus(batch)
     cand = (
-        ib.join(bb_side, ["band", "bh"])
+        ib.join(F.broadcast(bb) if small else bb, ["band", "bh"])
         .select("batch_id", "corpus_id", "_sig_corpus_id")
         .distinct()
     )
     bsig_b = bsig.select(F.col(id_col).alias("batch_id"), F.col("sig").alias("_sig_batch_id"))
-    cand = cand.join(
-        F.broadcast(bsig_b) if broadcast_batch else bsig_b, "batch_id"
-    )
+    cand = cand.join(F.broadcast(bsig_b) if small else bsig_b, "batch_id")
     est = sig_est_jaccard("_sig_batch_id", "_sig_corpus_id", num_hashes)
     out = cand.withColumn("est_jaccard", est).filter(
         F.col("est_jaccard") >= F.lit(est_threshold)

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rehiver_spark.functions.hashing import md5_hash60, md5_hash60_sql
+from rehiver_spark.session import track_persist
 
 
 def _grams(text_col: Column) -> Column:
@@ -115,7 +116,6 @@ def dsir_scores(
     scale: int = 1_000_000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist_features: bool = True,
 ) -> DataFrame:
     """Per-document importance scores: (id, score) with
     ``score = Σ_grams [ln p_target(bucket) - ln p_raw(bucket)]`` in
@@ -131,17 +131,10 @@ def dsir_scores(
     here the recompute side pays normalize+tokenize+bigram+md5 per
     gram while the cached relation is two BIGINTs per gram — measured
     at sf10 (500k docs, min of 3): recompute 19.3 s vs persisted
-    8.9 s, so the default PERSISTS the (id, bucket) relation
-    (BASELINE.md round-6 row; the r5 verdict asked for this
-    measurement). ``persist_features=False`` keeps the recompute form
-    for deployments where executor storage, not CPU, is the
-    constraint.
+    8.9 s, so the (id, bucket) relation is always PERSISTED (BASELINE.md
+    round-6 row), through ``session.track_persist``.
     """
-    raw_feats = feature_buckets(raw, buckets, text_col, id_col)
-    if persist_features:
-        from rehiver_spark.session import track_persist
-
-        raw_feats = track_persist(raw_feats)
+    raw_feats = track_persist(feature_buckets(raw, buckets, text_col, id_col))
     tgt_feats = feature_buckets(target, buckets, text_col, id_col)
     lt = _log_table(tgt_feats, buckets, scale, "t")
     lr = _log_table(raw_feats, buckets, scale, "r")

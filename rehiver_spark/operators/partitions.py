@@ -25,6 +25,7 @@ from __future__ import annotations
 import re
 import urllib.parse
 from dataclasses import dataclass, field
+from datetime import date, datetime, timezone
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,6 +35,28 @@ from pyspark.sql import functions as F
 # (0x00-0x20, 0x7f) from both ends; Python int() would also take
 # ``1_000`` and non-ASCII digits such as ``٣``
 _INT_RE = re.compile(r"[\x00-\x20\x7f]*([+-]?[0-9]+)[\x00-\x20\x7f]*")
+# the spellings of a double/date/timestamp BOTH rails accept, used by
+# both: the driver fullmatches before parsing the captured value, the
+# Column rail guards try_cast with ``rlike``. Outside them the parsers
+# disagree: Java takes ``1.5d`` and ``0x1p3``, Spark's date cast takes
+# ``2024``, ``2024-3-5`` and ``2024-03-05T00:00``, Python's fromisoformat
+# takes ``20240305``, ``2024-W10-2`` and ``20240305T010203``; only Spark
+# takes year 0000, only Python offsets beyond ±18:00.
+_WS = r"[\t-\r ]*"
+_YMD = r"(?!0000)[0-9]{4}-[0-9]{2}-[0-9]{2}"
+_HMS = (
+    r"[T ][0-9]{2}(?::[0-9]{2}(?::[0-9]{2}(?:\.[0-9]{1,6})?"
+    r"(?:Z|[+-](?:0[0-9]|1[0-7]):[0-5][0-9]|[+-]18:00)?)?)?"
+)
+_FLOAT = r"[+-]?(?:(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?|(?i:inf|infinity))|(?i:nan)"
+_LEXICAL = {  # dtype -> (spelling, driver parse of its captured value)
+    "double": (re.compile(rf"{_WS}({_FLOAT}){_WS}"), float),
+    "date": (re.compile(rf"{_WS}({_YMD}){_WS}"), date.fromisoformat),
+    "timestamp": (
+        re.compile(rf"{_WS}({_YMD}(?:{_HMS})?){_WS}"),
+        lambda v: _naive_utc(datetime.fromisoformat(v)),
+    ),
+}
 # a value is URL-decoded only if every ``%`` starts a valid escape
 # (both rails: Java's url_decode throws on the rest, and decoding the
 # valid escapes of a partly malformed value made the rails disagree)
@@ -47,8 +70,6 @@ def _naive_utc(v):
     raised TypeError out of ``_check``, escaping the
     PartitionParseError contract."""
     if v is not None and getattr(v, "tzinfo", None) is not None:
-        from datetime import timezone
-
         return v.astimezone(timezone.utc).replace(tzinfo=None)
     return v
 
@@ -151,28 +172,16 @@ class PartitionField:
             bound = 1 << (31 if self.dtype == "int" else 63)
             if v is None or not -bound <= v < bound:
                 raise PartitionParseError(f"{self.name}: expected {self.dtype}, got {raw!r}")
-        elif self.dtype == "double":
+        elif self.dtype in _LEXICAL:
+            spelling, parse = _LEXICAL[self.dtype]
+            m = spelling.fullmatch(raw)
             try:
-                v = float(raw)
+                v = parse(m.group(1)) if m else None
             except ValueError:
-                raise PartitionParseError(f"{self.name}: expected double, got {raw!r}")
-        elif self.dtype == "date":
-            # parity with the Column path's try_cast-to-null: malformed
-            # date values must FAIL driver parse, not pass as strings
-            from datetime import date
-
-            try:
-                v = date.fromisoformat(raw.strip())
-            except ValueError:
-                raise PartitionParseError(f"{self.name}: expected date, got {raw!r}")
-        elif self.dtype == "timestamp":
-            from datetime import datetime as _dt
-
-            try:
-                v = _naive_utc(_dt.fromisoformat(raw.strip().replace(" ", "T", 1)))
-            except ValueError:
+                v = None
+            if v is None:
                 raise PartitionParseError(
-                    f"{self.name}: expected timestamp, got {raw!r}"
+                    f"{self.name}: expected {self.dtype}, got {raw!r}"
                 )
         else:
             v = raw
@@ -185,7 +194,8 @@ class PartitionField:
         # comparison is always well-typed here
         if self.min is not None and v < self.min:
             raise PartitionParseError(f"{self.name}: {v} < min {self.min}")
-        if self.max is not None and v > self.max:
+        # Spark orders NaN above every double, so NaN fails any max
+        if self.max is not None and (v > self.max or v != v):
             raise PartitionParseError(f"{self.name}: {v} > max {self.max}")
         if self.values is not None and raw not in self.values:
             raise PartitionParseError(f"{self.name}: {raw!r} not in {self.values}")
@@ -226,6 +236,9 @@ class PartitionField:
         """Typed value from an already-extracted raw string column."""
         if self.nullable:
             raw = F.when(raw != F.lit("null"), raw)
+        if self.dtype in _LEXICAL:
+            spelling = _LEXICAL[self.dtype][0].pattern
+            raw = F.when(raw.rlike(rf"^(?:{spelling})\z"), raw)
         # try_cast, not cast: ANSI mode (Spark 4 default) makes plain
         # cast THROW on malformed input; validity detection relies on
         # cast-to-null semantics
@@ -234,18 +247,22 @@ class PartitionField:
     def valid_from_raw(self, raw: Column, typed: Column) -> Column:
         """Validity from already-extracted raw + typed columns."""
         ok = raw.isNotNull() | F.lit(not self.required)
-        cast_ok = typed.isNotNull() | raw.isNull() | (F.lit(self.nullable) & (raw == "null"))
-        ok = ok & cast_ok
+        # an absent value, or a nullable field's literal ``null``, skips
+        # every constraint (as ``coerce`` returns None before ``_check``)
+        skip = raw.isNull()
+        if self.nullable:
+            skip = skip | (raw == "null")
+        ok = ok & (typed.isNotNull() | skip)
         if self.min is not None:
             ok = ok & (typed.isNull() | (typed >= F.lit(self.min)))
         if self.max is not None:
             ok = ok & (typed.isNull() | (typed <= F.lit(self.max)))
         if self.values is not None:
-            ok = ok & (raw.isNull() | raw.isin(self.values))
+            ok = ok & (skip | raw.isin(self.values))
         if self.pattern is not None:
-            ok = ok & (raw.isNull() | raw.rlike(f"^(?:{self.pattern})\\z"))
+            ok = ok & (skip | raw.rlike(f"^(?:{self.pattern})\\z"))
         if self.nonempty:
-            ok = ok & (raw.isNull() | (raw != ""))
+            ok = ok & (skip | (raw != ""))
         return ok
 
 

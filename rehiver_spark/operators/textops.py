@@ -433,7 +433,6 @@ def token_drift(
     ref_source: str,
     text_col: str = "text",
     source_col: str = "source",
-    broadcast_ref: bool = True,
 ) -> DataFrame:
     """Corpus drift monitor: exact total-variation distance between
     each source's token distribution and a reference source's — the
@@ -463,16 +462,20 @@ def token_drift(
     Reference counts and totals then ride broadcast joins; the corpus
     itself shuffles once, into the count aggregation.
 
-    ``broadcast_ref``: a web-scale reference vocabulary (long tail of
-    URLs/typos) can reach GBs — pass False to let Catalyst/AQE choose
-    the join strategy instead of forcing the broadcast; the counts are
-    already co-keyed on token, so the fallback is one extra vocab-sized
-    shuffle, never a corpus reshuffle.
+    A web-scale reference vocabulary (long tail of URLs/typos) can
+    reach GBs, so the reference-count broadcast is forced only while
+    the corpus's size estimate stays under the dedup operators'
+    ``_big_corpus`` gate (it runs no job); past it Catalyst/AQE choose
+    the join strategy. The counts are already co-keyed on token, so
+    that fallback is one extra vocab-sized shuffle, never a corpus
+    reshuffle.
 
     Output: (source, n_tokens, tv_distance) for every source except
     the reference, tv ∈ [0, 1].
     """
     from pyspark import StorageLevel
+
+    from rehiver_spark.operators.dedup import _big_corpus
 
     dec = "decimal(38,0)"
     counts = track_persist(
@@ -493,7 +496,7 @@ def token_drift(
     )
     cur = counts.filter(F.col("source") != ref_source)
     joined = (
-        cur.join(F.broadcast(ref) if broadcast_ref else ref, "token", "left")
+        cur.join(ref if _big_corpus(df) else F.broadcast(ref), "token", "left")
         .join(F.broadcast(totals), "source")
         .crossJoin(F.broadcast(ref_total))
     )

@@ -11,9 +11,7 @@ group module:
 - ``r_ops``  — reference-surface operators R1–R17
 - ``c_ops``  — relational core C1–C18
 
-Registry ORDER (which decides the driver's 50-query correctness
-window) is set explicitly by :func:`load_all` after all imports —
-see the ``_DRIVER_WINDOW`` note.
+``tools/check_oracle.py`` runs every registered query against its twin.
 
 Conventions (FIXTURES.md determinism rules):
 - every aggregate/computed column is aliased IDENTICALLY in Spark and
@@ -48,50 +46,13 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-# The driver's correctness harness records only the FIRST 50 entries
-# of the registry. Rule for this window: a query touched by a change
-# (operator code or query body changed) enters it; the names with the
-# oldest driver evidence fill the rest. Every query outside it is
-# re-verified locally by tools/check_oracle.py (the identical gate).
-_DRIVER_WINDOW = (
-    "c17d2_stream_join_linear", "x22b_semdedup_scaled",
-    "x32_corpus_report", "x33_quality_select", "x36_vocab_topk",
-    "x37_chunk_reassembly", "x38_corpus_drift", "x39_hybrid_search",
-    "x41_count_min", "x42_hll_distinct", "x43_bloom_dedup",
-    "x44_stream_hll", "x45_bpe_pairs", "x47_hdr_quantiles",
-    "x48_weighted_sample", "x49_dsir_scores", "x50_jl_project",
-    "x51_kmeans", "x52_stream_cm", "x53_ann_recall",
-    "x54_pipeline_yield", "x55_sketch_filter", "x56_stream_hdr",
-    "x57_substring_dedup", "x6c_portable_sample", "x8_simhash_pairs",
-    "x8p_simhash",
-    "x9_lsh_cosine_neardup", "x9p_lsh_cosine",
-    "x14_winnow_fingerprints", "x21_winnow_contamination",
-    "x21f_winnow_fast", "r10_detect_changes", "r11_changes_filter",
-    "r12_snapshot_commit", "x28_incremental_dedup", "x22_semdedup",
-    "c18b_python_udtf", "x34_incremental_neardup",
-    "c17c_streaming_exec", "c17d_stream_join", "c17f_stream_dedup",
-    "mm_decode", "mm_features", "mm_frame_plan", "mm_resize",
-    "c17_tumbling_window", "c17_session_window",
-    "c17e_stream_static_join", "c17g_sliding_window",
-)
-
-
 def load_all() -> None:
-    """Import all group modules (idempotent), then order the registry:
-    the 50 ``_DRIVER_WINDOW`` names first, everything else after in
-    import order (tests/test_engine.py pins the window)."""
+    """Import all group modules (idempotent); the registry keeps their
+    import order."""
     from rehiver_spark.queries import x_ops  # noqa: F401  (isort: skip)
     from rehiver_spark.queries import e_ops  # noqa: F401  (X28-X57 + c18b + c17g)
     from rehiver_spark.queries import r_ops  # noqa: F401
     from rehiver_spark.queries import c_ops  # noqa: F401
-
-    missing = [n for n in _DRIVER_WINDOW if n not in QUERIES]
-    if missing:  # fail loudly: a silent miss shrinks the driver window
-        raise RuntimeError(f"driver window names not registered: {missing}")
-    rest = [n for n in QUERIES if n not in set(_DRIVER_WINDOW)]
-    reordered = {n: QUERIES[n] for n in [*_DRIVER_WINDOW, *rest]}
-    QUERIES.clear()
-    QUERIES.update(reordered)
 
 
 def scratch_dir(name: str, sf_dir: str) -> str:

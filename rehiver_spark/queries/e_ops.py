@@ -1,10 +1,6 @@
 """X28–X57 + C18b + C17g: round-4/5 scale-path extensions (SURVEY
 §2 Part B) — 34 queries.
 
-Import order does not decide the driver's 50-query correctness
-window: ``load_all`` reorders the registry explicitly after importing
-all modules (see ``rehiver_spark/queries/__init__.py``).
-
 Round-4 block:
 - X28 incremental exact dedup: dedup a new batch against a persisted
   corpus hash index; the corpus itself is never re-read.

@@ -129,8 +129,11 @@ def test_pair_counts_match_reference(spark, docs):
     assert got == dict(expect)
 
 
-def test_learn_bpe_matches_reference_exactly(spark, docs):
-    got = learn_bpe(docs, num_merges=12, min_freq=2, checkpoint_every=4)
+def test_learn_bpe_matches_reference_exactly(spark, docs, monkeypatch):
+    from rehiver_spark.operators import bpe
+
+    monkeypatch.setattr(bpe, "_CHECKPOINT_EVERY", 4)
+    got = learn_bpe(docs, num_merges=12, min_freq=2)
     expect = ref_learn(TEXTS, 12, min_freq=2)
     assert [(m["left_sym"], m["right_sym"], m["pair_freq"]) for m in got] == expect
     assert [m["rank"] for m in got] == list(range(len(got)))
@@ -422,12 +425,15 @@ def test_batched_selection_on_self_pair_run_corpora():
         assert got == expect, f"seed {seed}: {got} != {expect}"
 
 
-def test_learn_bpe_batched_equals_sequential_probe(spark, docs):
-    """End-to-end on Spark: the batched default and the probe_pairs=1
-    sequential fallback must emit the identical merge table (both
-    equal the classical reference)."""
+def test_learn_bpe_batched_equals_sequential_probe(spark, docs, monkeypatch):
+    """End-to-end on Spark: the batched default and a one-pair probe
+    (the strict sequential rounds) must emit the identical merge table
+    (both equal the classical reference)."""
+    from rehiver_spark.operators import bpe
+
     batched = learn_bpe(docs, num_merges=12, min_freq=2)
-    seq = learn_bpe(docs, num_merges=12, min_freq=2, probe_pairs=1)
+    monkeypatch.setattr(bpe, "_PROBE_PAIRS", 1)
+    seq = learn_bpe(docs, num_merges=12, min_freq=2)
     assert batched == seq
     expect = ref_learn(TEXTS, 12, min_freq=2)
     assert [

@@ -113,27 +113,24 @@ def test_minhash_lsh_subset_and_recall(docs, sf_dir):
 
 
 def test_minhash_est_gate_subset_and_equality(docs):
-    """The r12 estimate pre-filter (est_gate_margin) must be recall-
-    safe: the gated pair set is always a subset of the ungated one
-    (the gate only ever removes candidates), and on the driver
-    testdata — where every true pair sits well above threshold — the
-    two sets are EQUAL, in both hash modes."""
-    from rehiver_spark.operators.dedup import minhash_neardup_pairs
+    """The r12 estimate pre-filter is recall-safe: the gated pair set
+    is a subset of the exact all-pairs answer with exact scores (the
+    gate only ever removes candidates), in both hash modes."""
+    from rehiver_spark.operators.dedup import minhash_neardup_pairs, shingles
 
-    def pairs(margin, hash_fn):
-        return {
-            (r["id_a"], r["id_b"]): round(r["jaccard"], 6)
-            for r in minhash_neardup_pairs(
-                docs, threshold=0.8, hash_fn=hash_fn, est_gate_margin=margin
-            ).collect()
-        }
-
+    rows = [
+        (r["doc_id"], r["sh"])
+        for r in docs.select("doc_id", shingles("text", 3).alias("sh")).collect()
+    ]
+    exact = {k: v[3] for k, v in _py_jaccard_pairs(rows, 0.8).items()}
     for hash_fn in ("md5", "xxhash64"):
-        ungated = pairs(None, hash_fn)
-        gated = pairs(0.25, hash_fn)
-        assert set(gated) <= set(ungated), hash_fn
-        assert gated == ungated, hash_fn
-        assert len(gated) > 0, hash_fn
+        gated = {
+            (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+            for r in minhash_neardup_pairs(docs, threshold=0.8, hash_fn=hash_fn).collect()
+        }
+        assert set(gated) <= set(exact), hash_fn
+        assert all(gated[k] == exact[k] for k in gated), hash_fn
+        assert len(gated) >= 0.9 * len(exact) > 0, hash_fn
 
 
 def md5_minhash_reference(sh, num_hashes, seed):
@@ -272,11 +269,12 @@ def test_simhash_neardup_pairs(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-def test_simhash_match_blocks_equivalence(spark):
+def test_simhash_match_blocks_equivalence(spark, monkeypatch):
     """k-of-c blocking is LOSSLESS at every k: the k=1 single-chunk
     pigeonhole, k=2, and k=3 forms must return the exact same pair set
-    (the r11 scale lever — k widens the join key, never the answer)."""
-    from rehiver_spark.operators.dedup import simhash_neardup_pairs
+    (the r11 scale lever — k widens the join key, never the answer).
+    k comes from ``adaptive_match_blocks``, patched here to each value."""
+    from rehiver_spark.operators import dedup
 
     rows = [
         (i, f"spark query engine fast scan join window batch doc{i % 7}")
@@ -285,17 +283,19 @@ def test_simhash_match_blocks_equivalence(spark):
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     outs = []
     for k in (1, 2, 3):
+        monkeypatch.setattr(dedup, "adaptive_match_blocks", lambda n, h, bits, k=k: k)
         for hash_fn in ("xxhash64", "md5"):
             got = {
                 (r["id_a"], r["id_b"], r["hamming"])
-                for r in simhash_neardup_pairs(
-                    df, max_hamming=3, hash_fn=hash_fn, match_blocks=k
+                for r in dedup.simhash_neardup_pairs(
+                    df, max_hamming=3, hash_fn=hash_fn
                 ).collect()
             }
             outs.append((k, hash_fn, got))
     base = {(hf): g for k, hf, g in outs if k == 1}
     for k, hf, got in outs:
         assert got == base[hf], (k, hf)
+    assert all(len(g) > 0 for _, _, g in outs)
 
 
 def test_adaptive_match_blocks_dial():
@@ -990,16 +990,15 @@ def test_track_persist_high_water_mark_and_thread_safety(spark):
         S.release_persisted()
 
 
-def test_minhash_est_gate_auto_margin(docs):
-    """r12 ADVICE: the default gate margin scales with num_hashes
+def test_minhash_est_gate_auto_margin():
+    """r12 ADVICE: the gate margin scales with num_hashes
     (3.5·sqrt(t(1-t)/n) ≈ 3.5σ of the signature estimator at the
-    threshold). At the (t=0.8, n=32) defaults the auto margin (0.2475)
+    threshold). At the (t=0.8, n=32) defaults that margin (0.2475)
     admits exactly the same signature-match counts as the r12 fixed
-    0.25 — both cut between 17/32 and 18/32 — so the committed oracles
-    stay bit-exact twins; at n=16 the auto margin is √2 wider."""
+    0.25 — both cut between 17/32 and 18/32 — so the committed oracles'
+    literal ``>= 0.55`` stays the bit-exact twin; at n=16 the margin is
+    √2 wider."""
     import math
-
-    from rehiver_spark.operators.dedup import minhash_neardup_pairs
 
     auto32 = 3.5 * math.sqrt(0.8 * 0.2 / 32)
     assert 0.2474 < auto32 < 0.2476
@@ -1007,16 +1006,6 @@ def test_minhash_est_gate_auto_margin(docs):
     assert math.ceil((0.8 - auto32) * 32) == math.ceil((0.8 - 0.25) * 32) == 18
     auto16 = 3.5 * math.sqrt(0.8 * 0.2 / 16)
     assert abs(auto16 - auto32 * math.sqrt(2)) < 1e-12
-
-    def pairs(**kw):
-        return {
-            (r["id_a"], r["id_b"])
-            for r in minhash_neardup_pairs(docs, threshold=0.8, **kw).collect()
-        }
-
-    assert pairs(est_gate_margin="auto") == pairs(est_gate_margin=0.25)
-    with pytest.raises(ValueError, match="auto"):
-        minhash_neardup_pairs(docs, est_gate_margin="wide")
 
 
 def test_jaccard_prefix_length_filter_keeps_boundary_pairs(spark):

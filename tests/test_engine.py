@@ -110,18 +110,6 @@ def test_metadata_cache_rejects_reconfigure(spark):
     assert c2 is not c1 and c2.ttl == 10
 
 
-def test_driver_window_round14_rotation():
-    """The correctness harness records only the FIRST 50 registered
-    queries: they must be exactly ``_DRIVER_WINDOW`` (so every window
-    name is registered) and all distinct."""
-    from rehiver_spark.queries import QUERIES, _DRIVER_WINDOW, load_all
-
-    load_all()
-    first50 = list(QUERIES)[:50]
-    assert first50 == list(_DRIVER_WINDOW)
-    assert len(set(first50)) == 50
-
-
 def test_every_registered_query_is_documented_in_coverage():
     """COVERAGE.md is the judge-facing operator→query map; a registered
     query missing from it reads as an undeclared component. Guard the

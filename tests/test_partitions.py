@@ -201,7 +201,10 @@ def test_driver_and_column_rails_agree_at_the_boundary(spark):
     ``1_000`` and ``٣``), whitespace around them is trimmed as Spark's
     try_cast trims it; a pattern's ``\\d`` is ASCII-only and its end
     anchor does not skip a trailing newline; a value with a malformed
-    ``%`` is kept undecoded."""
+    ``%`` is kept undecoded; a nullable field's literal ``null`` skips
+    its ``values`` check; double, date and timestamp values take only
+    the spellings Python and Spark's try_cast both parse, and a NaN
+    fails a double's ``max`` (Spark orders NaN above every double)."""
     from rehiver_spark.operators.partitions import PartitionField, PartitionSchema
 
     ints = PartitionSchema(
@@ -209,6 +212,13 @@ def test_driver_and_column_rails_agree_at_the_boundary(spark):
     )
     dates = PartitionSchema([PartitionField("d", pattern=r"\d{4}-\d{2}-\d{2}")])
     text = PartitionSchema([PartitionField("s")])
+    levels = PartitionSchema(
+        [PartitionField("lvl", values=["INFO", "WARN"], nullable=True)]
+    )
+    dbl = PartitionSchema([PartitionField("x", "double")])
+    capped = PartitionSchema([PartitionField("x", "double", max=10.0)])
+    day = PartitionSchema([PartitionField("dt", "date")])
+    ts = PartitionSchema([PartitionField("ts", "timestamp")])
     cases = [
         (ints, "i=1_000", False),
         (ints, "i=٣", False),
@@ -223,8 +233,26 @@ def test_driver_and_column_rails_agree_at_the_boundary(spark):
         (dates, "d=٢٠٢٤-٠٣-٠٥", False),
         (dates, "d=2024-03-05%0A", False),
         (text, "s=%33%", True),
+        (levels, "lvl=null", True),
+        (levels, "lvl=WARN", True),
+        (levels, "lvl=DEBUG", False),
+        (dbl, "x=1.5", True),
+        (dbl, "x=-Infinity", True),
+        (dbl, "x=1.5d", False),
+        (dbl, "x=0x1p3", False),
+        (capped, "x=NaN", False),
+        (day, "dt=2024-03-05", True),
+        (day, "dt=2024-3-5", False),
+        (day, "dt=2024", False),
+        (day, "dt=2024-03-05T00:00", False),
+        (day, "dt=20240305", False),
+        (day, "dt=2024-W10-2", False),
+        (ts, "ts=2024-03-05T01:02:03%2B01:00", True),
+        (ts, "ts=2024-03-05", True),
+        (ts, "ts=20240305T010203", False),
+        (ts, "ts=2024-03-05T01:02:03%2B19:00", False),
     ]
-    for sch in (ints, dates, text):
+    for sch in (ints, dates, text, levels, dbl, capped, day, ts):
         keys = {key: want for s_, key, want in cases if s_ is sch}
         df = spark.createDataFrame([(k,) for k in keys], "key string")
         for row in sch.apply(df).collect():

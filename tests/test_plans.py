@@ -327,6 +327,40 @@ def test_x38_drift_broadcasts_reference_side(spark, queries):
     assert p.count("InMemoryTableScan") >= 4
 
 
+def broadcast_children(df) -> list[str]:
+    """First line under each broadcast hint of the analyzed plan."""
+    lines = df._jdf.queryExecution().analyzed().toString().splitlines()
+    return [b.strip() for a, b in zip(lines, lines[1:]) if "strategy=broadcast" in a]
+
+
+@pytest.mark.parametrize("big", [False, True])
+def test_x34_batch_broadcast_follows_size_gate(spark, queries, monkeypatch, big):
+    """The batch side of the incremental near-dup joins is broadcast
+    unless the batch's size estimate passes the ``_big_corpus`` gate;
+    past it the planner picks the join with no hint."""
+    from rehiver_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_SELFJOIN_MERGE_MIN_EST_BYTES", 0 if big else 1 << 62)
+    hinted = broadcast_children(queries["x34_incremental_neardup"](spark, SF))
+    if big:
+        assert hinted == []
+    else:
+        assert len(hinted) == 2 and all("batch_id" in h for h in hinted), hinted
+
+
+@pytest.mark.parametrize("big", [False, True])
+def test_x38_ref_broadcast_follows_size_gate(spark, queries, monkeypatch, big):
+    """The reference counts are broadcast unless the corpus's size
+    estimate passes the ``_big_corpus`` gate; the per-source totals and
+    the scalar reference total stay broadcast either way."""
+    from rehiver_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_SELFJOIN_MERGE_MIN_EST_BYTES", 0 if big else 1 << 62)
+    hinted = broadcast_children(queries["x38_corpus_drift"](spark, SF))
+    assert len(hinted) == (2 if big else 3), hinted
+    assert any("cnt_r" in h for h in hinted) != big, hinted
+
+
 def test_x39_hybrid_search_embeddings_never_shuffle(spark, queries):
     p = plan_of(queries["x39_hybrid_search"](spark, SF))
     assert "CartesianProduct" not in p

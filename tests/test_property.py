@@ -700,34 +700,33 @@ def test_winnow_cascade_matches_python_reference(spark, texts, window):
         max_size=24,
     ),
     st.sampled_from([0.5, 0.7, 0.8]),
-    st.sampled_from([0.15, 0.25]),
 )
-def test_minhash_est_gate_subset_property(spark, texts, threshold, margin):
-    """The r12 estimate pre-filter is a SUBSET dial on arbitrary
-    corpora, thresholds and margins: gated pairs ⊆ ungated pairs, and
-    every surviving pair is a true above-threshold pair (both already
-    ⊆ exact by the verify stage — this pins the gate can only ever
+def test_minhash_est_gate_subset_property(spark, texts, threshold):
+    """The r12 estimate pre-filter is a SUBSET filter on arbitrary
+    corpora and thresholds: every returned pair is an exact
+    above-threshold pair with its exact score, against a pure-Python
+    all-pairs Jaccard over the same shingles (the gate can only ever
     REMOVE candidates, never corrupt scores, on adversarial tiny/dup/
     empty-text inputs hypothesis loves)."""
-    from rehiver_spark.operators.dedup import minhash_neardup_pairs
+    from test_dedup import _py_jaccard_pairs
+
+    from rehiver_spark.operators.dedup import minhash_neardup_pairs, shingles
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
     )
-
-    def pairs(m):
-        return {
-            (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-            for r in minhash_neardup_pairs(
-                df, threshold=threshold, hash_fn="md5", est_gate_margin=m
-            ).collect()
-        }
-
-    ungated = pairs(None)
-    gated = pairs(margin)
-    assert set(gated) <= set(ungated)
+    rows = [
+        (r["doc_id"], r["sh"])
+        for r in df.select("doc_id", shingles("text", 3).alias("sh")).collect()
+    ]
+    exact = _py_jaccard_pairs(rows, threshold)
+    gated = {
+        (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+        for r in minhash_neardup_pairs(df, threshold=threshold, hash_fn="md5").collect()
+    }
+    assert set(gated) <= set(exact)
     for k, v in gated.items():
-        assert v == ungated[k] and v >= threshold
+        assert v == exact[k][3] and v >= threshold
 
 
 # Values at the hive-partition rail boundary: signs, `_`, non-ASCII

@@ -750,12 +750,21 @@ def test_lsh_rejects_bad_sizes():
         ("dedup", "connected_components", "driver_edge_cap"),
         ("dedup", "jaccard_pairs", "method"),
         ("textops", "charlm_score", "max_model_rows"),
+        ("dedup", "minhash_neardup_pairs", "est_gate_margin"),
+        ("dedup", "fuzzy_dedup", "est_gate_margin"),
+        ("dedup", "simhash_neardup_pairs", "match_blocks"),
+        ("dedup", "incremental_minhash_neardup", "broadcast_batch"),
+        ("textops", "token_drift", "broadcast_ref"),
+        ("importance", "dsir_scores", "persist_features"),
+        ("bpe", "learn_bpe", "checkpoint_every"),
+        ("bpe", "learn_bpe", "probe_pairs"),
     ],
 )
 def test_removed_path_selectors_raise_type_error(module, fn, kwarg):
-    """The caller-set path selectors are gone: each operator picks its
-    branch from the measured input only, and passing a removed keyword
-    fails at the call instead of being silently honoured."""
+    """The caller-set path selectors and plan dials are gone: each
+    operator picks its branch and cost settings from the measured input
+    only, and passing a removed keyword fails at the call instead of
+    being silently honoured."""
     import importlib
 
     op = getattr(importlib.import_module(f"rehiver_spark.operators.{module}"), fn)
