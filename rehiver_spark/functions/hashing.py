@@ -1,12 +1,13 @@
 """Portable deterministic hashing shared by Spark and SQL oracles.
 
-The approximate dedup/similarity operators default to ``xxhash64``
-(JVM-side, fastest) but accept ``hash_fn="md5"``: a 60-bit integer from
-the leading 15 hex chars of md5. md5 is computable bit-identically by
-any engine (DuckDB, Trino, Postgres), which turns MinHash/SimHash/LSH
-from "rows-only" approximate ops into fully oracle-checkable pipelines —
-the sketch itself becomes deterministic cross-engine, not just the
-exact verification step.
+The portable hash is a 60-bit integer from the leading 15 hex chars
+of md5. md5 is computable bit-identically by any engine (DuckDB, Trino,
+Postgres), which turns approximate sketches into fully oracle-checkable
+pipelines — the sketch itself becomes deterministic cross-engine, not
+just the exact verification step. It is the only hash of the MinHash
+sketch; SimHash, winnowing and sign-LSH default to the JVM's
+``xxhash64`` and take ``hash_fn="md5"`` (or a portable twin) for this
+form.
 
 Spark:   conv(substring(md5(s), 1, 15), 16, 10)::bigint
 DuckDB:  ('0x' || substr(md5(s), 1, 15))::BIGINT

@@ -14,11 +14,12 @@ the workhorse of LLM training-data pipelines. Design rules for 100 TB:
 - Deterministic keeps: row_number over an explicit total order, never
   dropDuplicates (C16 rule).
 
-Hashing inside the approximate operators (MinHash/SimHash) defaults to
-Spark's xxhash64 (JVM-side, fastest) and accepts ``hash_fn="md5"`` —
-the portable 60-bit hash (functions/hashing.py) any SQL engine computes
-bit-identically, which makes even the sketches oracle-checkable.
-Exact paths never hash at all (dictionary-encoded ids, sha256 keys).
+The MinHash sketch has one form: the portable 60-bit md5 hash
+(functions/hashing.py), which any SQL engine computes bit-identically,
+so the sketch itself is oracle-checkable. SimHash defaults to Spark's
+xxhash64 (JVM-side; measured faster there) and accepts ``hash_fn="md5"``
+for the same portability. Exact paths never hash at all
+(dictionary-encoded ids, sha256 keys).
 
 CACHING CONTRACT: the prefix-Jaccard, MinHash and SimHash pair
 operators persist their shingle/signature projection because the
@@ -356,57 +357,46 @@ def minhash_signature(
     shingle_col: str,
     num_hashes: int = 32,
     seed: int = 42,
-    hash_fn: str = "xxhash64",
 ) -> Column:
     """ARRAY<BIGINT> MinHash signature of the shingle array in column
     ``shingle_col`` (a name; a Column raises ``TypeError``): per hash
     function i, the minimum h_i(shingle) over the shingle set.
 
-    ``hash_fn="xxhash64"`` (default, JVM-side) hashes each shingle
-    num_hashes times — ``array_min(transform(sh, x -> xxhash64(seed, i,
-    x)))`` per i, with INT literals — cheap enough that this stays fast.
+    The portable, oracle-checkable sketch (Broder-style): ONE md5 base
+    hash per shingle reduced to 2^30, then num_hashes affine universal
+    hashes (a_i·h + c_i) mod (2^31-1) in exact int64 arithmetic — any
+    SQL engine reproduces the sketch bit-for-bit, and the md5 count
+    drops num_hashes-fold vs hashing per (i, shingle). ``transform``
+    computes the base-hash array once per row
+    (functions/hashing.md5_hash60_spark_sql), and a one-element
+    ``transform`` binds it to a lambda variable, so each of the
+    num_hashes ``array_min(transform(...))`` minima reads the bound
+    array instead of re-hashing. An ``aggregate``/``zip_with`` fold over
+    literal (a_i, c_i) structs gives the same values but measured slower
+    (signature projection 1.37 vs 1.26 s, x7p corpus at sf0.1, 4 cores).
 
-    ``hash_fn="md5"`` is the portable, oracle-checkable form
-    (Broder-style): ONE md5 base hash per shingle reduced to 2^30,
-    then num_hashes affine universal hashes (a_i·h + c_i) mod (2^31-1)
-    in exact int64 arithmetic — any SQL engine reproduces the sketch
-    bit-for-bit, and the md5 count drops num_hashes-fold vs hashing
-    per (i, shingle). ``transform`` computes the base hash once per
-    shingle (functions/hashing.md5_hash60_spark_sql), then a single ``aggregate``
-    folds the shingle axis with a ``zip_with``/``least`` step against a
-    literal (a_i, c_i) array.
-
-    Either mode is ONE Spark SQL expression, built with a single
-    ``F.expr`` call (see :func:`_sql_name`), and runs inside one
-    map-only projection: no pandas UDF (the pre-r12 hashlib form
-    measured 87 s standalone at sf10 where the JVM forms take ~4.5 s),
-    no explode, and NO shuffle: the row never leaves its partition, so
-    at small scale there is no stage floor to amortize (the r11 x34
-    envelope breach) and at large scale the hash-aggregate Exchange of
-    an explode + min-aggregate form disappears entirely. Requires
-    non-empty shingle arrays (shingles() guarantees [""] minimum).
+    ONE Spark SQL expression, built with a single ``F.expr`` call (see
+    :func:`_sql_name`), and runs inside one map-only projection: no
+    pandas UDF (the pre-r12 hashlib form measured 87 s standalone at
+    sf10 where the JVM form takes ~4.5 s), no explode, and NO shuffle:
+    the row never leaves its partition, so at small scale there is no
+    stage floor to amortize (the r11 x34 envelope breach) and at large
+    scale the hash-aggregate Exchange of an explode + min-aggregate form
+    disappears entirely. A NULL array has a NULL signature; an empty one
+    (shingles() never makes one: it guarantees [""]) has 2^31-1 in every
+    component.
     """
-    sh = _sql_name(shingle_col)
-    if hash_fn == "md5":
-        a_co, c_co = minhash_affine_consts(num_hashes, seed)
-        # literal (a_i, c_i) pairs, zipped elementwise against the
-        # running minima so the md5 base hash binds ONCE per shingle
-        ac = ", ".join(
-            f"struct(CAST({a} AS BIGINT) AS a, CAST({c} AS BIGINT) AS c)"
-            for a, c in zip(a_co, c_co)
-        )
-        base_hash = md5_hash60_spark_sql(f"concat('{seed}:', x)")
-        init = ", ".join([f"CAST({_MH_P} AS BIGINT)"] * num_hashes)
-        return F.expr(
-            f"aggregate(transform({sh}, x -> {base_hash} % {_MH_DOMAIN}), "
-            f"array({init}), (acc, h) -> zip_with(acc, array({ac}), "
-            f"(m, p) -> least(m, (h * p.a + p.c) % {_MH_P})))"
-        )
+    a_co, c_co = minhash_affine_consts(num_hashes, seed)
+    base_hash = md5_hash60_spark_sql(f"concat('{seed}:', x)")
     mins = ", ".join(
-        f"array_min(transform({sh}, x -> xxhash64({seed}, {i}, x)))"
-        for i in range(num_hashes)
+        f"coalesce(array_min(transform(hs, h -> (h * {a} + {c}) % {_MH_P})), {_MH_P})"
+        for a, c in zip(a_co, c_co)
     )
-    return F.expr(f"array({mins})")
+    return F.expr(
+        f"transform(array(transform({_sql_name(shingle_col)}, "
+        f"x -> {base_hash} % {_MH_DOMAIN})), "
+        f"hs -> if(hs IS NULL, NULL, array({mins})))[0]"
+    )
 
 
 def minhash_signatures(
@@ -415,7 +405,6 @@ def minhash_signatures(
     shingle_col: str,
     num_hashes: int = 32,
     seed: int = 42,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """``(id, sig array<bigint>)`` — the DataFrame-level signature
     entrypoint, a map-only projection of the :func:`minhash_signature`
@@ -425,12 +414,11 @@ def minhash_signatures(
     form runs entirely JVM-side with NO shuffle (the r11 explode +
     min-agg shape paid a hash-aggregate Exchange whose stage floor
     broke the x34 sf0.1 envelope), and measured faster at BOTH ends —
-    sf0.1 corpus 2.37→0.83 s (md5) / 1.88→0.62 s (xxhash64), sf10 450k
-    docs 10.96→8.28 s / 10.85→7.29 s.
+    sf0.1 corpus 2.37→0.83 s, sf10 450k docs 10.96→8.28 s.
     """
     return df.select(
         F.col(id_col),
-        minhash_signature(shingle_col, num_hashes, seed, hash_fn).alias("sig"),
+        minhash_signature(shingle_col, num_hashes, seed).alias("sig"),
     )
 
 
@@ -440,9 +428,9 @@ def _band_keys(sig_col: str, num_hashes: int, bands: int) -> Column:
     banding, shared by the batch self-join (:func:`lsh_candidates`) and
     the incremental index join (:func:`incremental_minhash_neardup`) so
     the two paths can never diverge on how a band hashes. The bucket
-    key is xxhash64 of the band's signature values in either hash mode:
-    it is an internal join key, so only tuple equality matters. One
-    SQL expression, one gateway call (see :func:`_sql_name`)."""
+    key is xxhash64 of the band's signature values: it is an internal
+    join key, so only tuple equality matters. One SQL expression, one
+    gateway call (see :func:`_sql_name`)."""
     sig = _sql_name(sig_col)
     r = num_hashes // bands
     structs = ", ".join(
@@ -461,7 +449,6 @@ def lsh_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Candidate pairs whose MinHash signatures collide in ≥1 LSH band.
 
@@ -469,14 +456,14 @@ def lsh_candidates(
     Plan: explode to (band, band_hash) keys → self-join on the band
     bucket → distinct pairs. One shuffle on the bucket key; hot buckets
     are bounded by band width (r rows hashed together). The band bucket
-    key is xxhash64 of the band's signature values in either hash mode —
-    it is an internal join key, so only tuple equality matters.
+    key is xxhash64 of the band's signature values — it is an internal
+    join key, so only tuple equality matters.
     """
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     # map-only JVM Column signatures (r12): no signature-stage shuffle
     # at all — the only Exchange left is the band-bucket self-join's
-    sigs = minhash_signatures(df, id_col, shingle_col, num_hashes, seed, hash_fn)
+    sigs = minhash_signatures(df, id_col, shingle_col, num_hashes, seed)
     return _lsh_band_candidates(
         sigs, id_col, num_hashes, bands, prefer_merge=_big_corpus(df)
     )
@@ -531,7 +518,6 @@ def minhash_neardup_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """LSH-blocked, exact-verified near-dup pairs: generate candidates by
     MinHash banding, then compute TRUE Jaccard on candidates only and
@@ -569,7 +555,7 @@ def minhash_neardup_pairs(
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     sigs = track_persist(
-        minhash_signatures(sh, "_id", "_sh", num_hashes, seed, hash_fn)
+        minhash_signatures(sh, "_id", "_sh", num_hashes, seed)
     )  # read by banding and both estimate sides
     big = _big_corpus(df)
     cand = _lsh_band_candidates(sigs, "_id", num_hashes, bands, prefer_merge=big)
@@ -1174,7 +1160,6 @@ def fuzzy_dedup(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    hash_fn: str = "xxhash64",
     keep: str = "min_id",
 ) -> DataFrame:
     """One-call fuzzy-dedup pipeline over a corpus — the composition a
@@ -1206,7 +1191,7 @@ def fuzzy_dedup(
     if keep not in ("min_id", "longest"):
         raise ValueError(f"keep must be 'min_id' or 'longest', got {keep!r}")
     pairs = minhash_neardup_pairs(
-        df, id_col, text_col, k, threshold, num_hashes, bands, seed, hash_fn
+        df, id_col, text_col, k, threshold, num_hashes, bands, seed
     )
     comp = connected_components(pairs).withColumnsRenamed({"doc_id": id_col})
     sizes = comp.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
@@ -1399,7 +1384,6 @@ def minhash_index(
     k: int = 3,
     num_hashes: int = 32,
     seed: int = 42,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """MinHash signature index of a corpus: ``(id, sig array<bigint>)``
     — the persistent state for INCREMENTAL near-dup detection, the
@@ -1418,7 +1402,7 @@ def minhash_index(
     sh = ensure_parallelism(corpus).select(
         F.col(id_col), shingles(F.col(text_col), k).alias("_sh")
     )
-    return minhash_signatures(sh, id_col, "_sh", num_hashes, seed, hash_fn)
+    return minhash_signatures(sh, id_col, "_sh", num_hashes, seed)
 
 
 def incremental_minhash_neardup(
@@ -1430,7 +1414,6 @@ def incremental_minhash_neardup(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    hash_fn: str = "xxhash64",
     est_threshold: float = 0.7,
 ) -> DataFrame:
     """Near-dup pairs between a NEW batch and an already-ingested
@@ -1443,8 +1426,8 @@ def incremental_minhash_neardup(
     SIGNATURE-ESTIMATED Jaccard (matching components / num_hashes) —
     the standard estimator, since exact verification would require
     corpus shingles. Precision/recall are tuned by (num_hashes, bands,
-    est_threshold); with the portable ``hash_fn='md5'`` sketch the
-    whole pipeline is reproducible in SQL.
+    est_threshold); the sketch is the portable md5 one, so the whole
+    pipeline is reproducible in SQL.
 
     Scale shape mirrors the re-planned X28: the batch's band keys and
     signatures are small → candidates = index-bands ⋉ broadcast(batch
@@ -1471,7 +1454,7 @@ def incremental_minhash_neardup(
         return sigs.select(*cols).select(*out_cols, "b.band", "b.bh")
 
     bsig = track_persist(
-        minhash_index(batch, id_col, text_col, k, num_hashes, seed, hash_fn)
+        minhash_index(batch, id_col, text_col, k, num_hashes, seed)
     )  # read by the band-key broadcast AND the post-distinct re-attach
     # r13: broadcast the batch's band keys WITHOUT its signature — the
     # 32-long sig array dominated the broadcast (sf10 fixture: 733k

@@ -218,19 +218,20 @@ class PartitionField:
         """
         # every occurrence in ONE scan; the LAST wins, matching
         # split_path's dict overwrite (driver parity), and an absent key
-        # leaves an empty array, so NULL, not '' (no second presence scan)
-        raw = F.try_element_at(
-            F.regexp_extract_all(
-                key, F.lit(rf"(?:^|/){re.escape(self.name)}=([^/]*)"), F.lit(1)
-            ),
-            F.lit(-1),
+        # leaves an empty array, so NULL, not '' (no second presence
+        # scan). Each occurrence is decoded through a lambda variable,
+        # so the decode test and the chosen branch read the scan once
+        # even where this runs interpreted, as in the ``_valid`` fold of
+        # ``PartitionSchema.apply`` (no subexpression elimination there).
+        # A value without ``%`` decodes to itself, so it skips the test.
+        found = F.regexp_extract_all(
+            key, F.lit(rf"(?:^|/){re.escape(self.name)}=([^/]*)"), F.lit(1)
         )
-        # top level, so codegen evaluates ``raw`` once for the condition
-        # and both branches
-        return F.when(
-            raw.rlike(rf"^{_DECODABLE}$"),
-            F.url_decode(F.replace(raw, F.lit("+"), F.lit("%2B"))),
-        ).otherwise(raw)
+        decoded = F.transform(found, lambda v: F.when(~v.contains("%"), v).when(
+            v.rlike(rf"^{_DECODABLE}$"),
+            F.url_decode(F.replace(v, F.lit("+"), F.lit("%2B"))),
+        ).otherwise(v))
+        return F.try_element_at(decoded, F.lit(-1))
 
     def typed_from_raw(self, raw: Column) -> Column:
         """Typed value from an already-extracted raw string column."""

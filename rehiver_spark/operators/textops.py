@@ -696,13 +696,14 @@ def winnow_fingerprints(
     fingerprint overlap is a containment detector that exact-dedup
     hashes (whole-document) cannot provide.
 
-    Gram hashing follows the module-wide convention (see
-    operators/dedup.py): ``hash_fn="xxhash64"`` (default) is the
-    JVM-side production path; ``hash_fn="md5"`` is the portable 60-bit
-    hash that makes the selection — mins included — bit-identical in a
-    SQL oracle (what the oracle-checked queries pass). Measured at
-    sf10 the hash choice is only ~6% — once the formulation below
-    removed the shuffle, hashing stopped being the bottleneck.
+    Gram hashing: ``hash_fn="xxhash64"`` (default) is the JVM-side
+    path; ``hash_fn="md5"`` is the portable 60-bit hash
+    (functions/hashing.py) that makes the selection — mins included —
+    bit-identical in a SQL oracle (what the oracle-checked queries
+    pass). SimHash takes the same switch; the MinHash sketch is md5
+    only. Measured at sf10 the hash choice is only ~6% — once the
+    formulation below removed the shuffle, hashing stopped being the
+    bottleneck.
 
     ZERO-SHUFFLE formulation (round 5): hash the grams ONCE into a
     per-doc array behind an explicit projection barrier, take the

@@ -217,13 +217,11 @@ def x29_fuzzy_dedup(spark, sf_dir):
     executes — MinHash sketches → LSH banding → exact verification →
     connected components → min-id keeper per cluster. The md5-portable
     sketch means the oracle recomputes candidates, clusters AND keeper
-    flags bit-identically; production swaps ``hash_fn='xxhash64'`` with
-    the same plan shape (every stage is the audited scale path:
-    banding join, pointer-jumped components, one corpus-vs-map join)."""
+    flags bit-identically, and every stage is the audited scale path:
+    banding join, pointer-jumped components, one corpus-vs-map join."""
     corpus = _neardup_corpus(spark, sf_dir)
     out = fuzzy_dedup(
-        corpus, "doc_id", "text", k=3, threshold=0.8, num_hashes=32, bands=8,
-        hash_fn="md5",
+        corpus, "doc_id", "text", k=3, threshold=0.8, num_hashes=32, bands=8
     )
     return out.select(
         "doc_id",
@@ -499,9 +497,8 @@ def x34_incremental_neardup(spark, sf_dir):
     estimated Jaccard. Fixture: batch = held-out 10% of documents plus
     token-tail-mutated re-submissions of every 12th document (J≈0.95
     vs their corpus originals). The md5-portable sketch reproduces
-    candidates AND estimates bit-identically in SQL; production uses
-    hash_fn='xxhash64' with the same plan (index streamed map-side,
-    batch side broadcast — the X28 shape)."""
+    candidates AND estimates bit-identically in SQL; the plan streams
+    the index map-side and broadcasts the batch side (the X28 shape)."""
     d = tables(spark, sf_dir, ["documents"])["documents"].select("doc_id", "text")
     corpus = d.filter(F.col("doc_id") % 10 != 0)
     batch = d.filter(F.col("doc_id") % 10 == 0).unionByName(
@@ -510,10 +507,8 @@ def x34_incremental_neardup(spark, sf_dir):
             F.concat("text", F.lit(" zz yy xx")).alias("text"),
         )
     )
-    idx = minhash_index(corpus, hash_fn="md5")
-    out = incremental_minhash_neardup(
-        batch, idx, est_threshold=0.5, hash_fn="md5"
-    )
+    idx = minhash_index(corpus)
+    out = incremental_minhash_neardup(batch, idx, est_threshold=0.5)
     return out.select(
         "doc_id",
         "corpus_id",
@@ -1094,7 +1089,7 @@ def x43_bloom_dedup(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # X21f — winnow contamination, production hash path (rows-only twin of
-#        x21, same convention as x7 vs x7p)
+#        x21, as x8 is of x8p)
 # ---------------------------------------------------------------------------
 
 
@@ -1106,7 +1101,7 @@ def x21f_winnow_fast(spark, sf_dir):
     old window-frame form shuffled a row per corpus character, and on
     a multi-node cluster the removed shuffle is the real win).
     Fingerprint VALUES differ from the oracle-checkable md5 form, so
-    this registers rows-only (x7/x7p convention); the winnowing
+    this registers rows-only (the x8/x8p convention); the winnowing
     guarantee and plan shape are identical and test-pinned. Body is
     the SHARED x21 pipeline (one copy — the two used to drift)."""
     from rehiver_spark.queries.x_ops import winnow_contamination_pipeline

@@ -1,11 +1,11 @@
 """X1–X6 + multimodal: LLM-pipeline extension queries (SURVEY §2).
 
-Exact operators carry full DuckDB oracles. Approximate operators come
-in two forms: the xxhash64 fast path registers rows-only per the X6
+Exact operators carry full DuckDB oracles. MinHash has one sketch,
+the portable md5 one (functions/hashing.py), so x7p is its only query
+and is oracle-verified end to end. SimHash and sign-LSH come in two
+forms: the xxhash64 fast path (x8/x9) registers rows-only per the X6
 rule (subset-of-exact asserted in tests), and a portable-md5 twin
-(x7p/x8p/x9p — functions/hashing.py) whose sketch reproduces
-bit-identically in DuckDB, so the full approximate pipeline is
-oracle-verified as well.
+(x8p/x9p) whose sketch reproduces bit-identically in DuckDB.
 
 Dedup corpora are synthesized in BOTH engines from ``documents``: the
 table has no natural duplicates, so noisy copies (case/whitespace
@@ -545,13 +545,6 @@ def x6b_sampling(spark, sf_dir):
     )
 
 
-@query("x7_minhash_pairs")  # LSH-blocked candidates, exact-verified subset
-def x7_minhash_pairs(spark, sf_dir):
-    corpus = _neardup_corpus(spark, sf_dir)
-    pairs = minhash_neardup_pairs(corpus, "doc_id", "text", k=3, threshold=0.8)
-    return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
 @query("x8_simhash_pairs")  # hamming-bucketed candidates
 def x8_simhash_pairs(spark, sf_dir):
     corpus = _noisy_corpus(spark, sf_dir)
@@ -605,8 +598,9 @@ def x9_lsh_cosine_neardup(spark, sf_dir):
 # Portable-hash approximate ops: the md5-based 60-bit hash
 # (functions/hashing.py) is bit-identical in Spark and DuckDB, so the
 # SKETCHES themselves — MinHash signatures, LSH bands, SimHash bits,
-# sign-LSH buckets — reproduce exactly in the oracle. These are the
-# oracle-verified twins of x7/x8/x9 (which keep xxhash64, the fast path).
+# sign-LSH buckets — reproduce exactly in the oracle. x8p/x9p are the
+# oracle-verified twins of x8/x9 (which keep xxhash64, the fast path);
+# x7p is the MinHash query, md5 being MinHash's only sketch.
 # ---------------------------------------------------------------------------
 
 _MH_BASE = md5_hash60_sql("'42:' || shingle")
@@ -657,7 +651,7 @@ def _mh_consts_sql() -> str:
     ),
     gated AS (
       -- r12 estimate pre-filter (threshold 0.8 - margin 0.25), the
-      -- exact twin of minhash_neardup_pairs' est_gate_margin
+      -- exact twin of minhash_neardup_pairs' estimate gate
       SELECT id_a, id_b FROM cand
       JOIN sigs ga ON ga.doc_id = id_a
       JOIN sigs gb ON gb.doc_id = id_b
@@ -684,8 +678,7 @@ def x7p_minhash_lsh(spark, sf_dir):
     not just the verified pairs — is cross-checked."""
     corpus = _neardup_corpus(spark, sf_dir)
     pairs = minhash_neardup_pairs(
-        corpus, "doc_id", "text", k=3, threshold=0.8, num_hashes=32, bands=8,
-        hash_fn="md5",
+        corpus, "doc_id", "text", k=3, threshold=0.8, num_hashes=32, bands=8
     )
     return pairs.select(
         "id_a",

@@ -57,7 +57,7 @@ def get_spark(
         # suite generates enough whole-stage-codegen classes to churn
         # it, after which even WARM queries re-pay Janino+JIT (measured
         # sf0.1: x17 7.5 s in-suite vs 2.7 s dedicated). 512 MB holds
-        # the full 117-query working set
+        # the full 115-query working set
         .config(
             "spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=512m"
         )

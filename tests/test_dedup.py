@@ -115,7 +115,7 @@ def test_minhash_lsh_subset_and_recall(docs, sf_dir):
 def test_minhash_est_gate_subset_and_equality(docs):
     """The r12 estimate pre-filter is recall-safe: the gated pair set
     is a subset of the exact all-pairs answer with exact scores (the
-    gate only ever removes candidates), in both hash modes."""
+    gate only ever removes candidates)."""
     from rehiver_spark.operators.dedup import minhash_neardup_pairs, shingles
 
     rows = [
@@ -123,14 +123,13 @@ def test_minhash_est_gate_subset_and_equality(docs):
         for r in docs.select("doc_id", shingles("text", 3).alias("sh")).collect()
     ]
     exact = {k: v[3] for k, v in _py_jaccard_pairs(rows, 0.8).items()}
-    for hash_fn in ("md5", "xxhash64"):
-        gated = {
-            (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-            for r in minhash_neardup_pairs(docs, threshold=0.8, hash_fn=hash_fn).collect()
-        }
-        assert set(gated) <= set(exact), hash_fn
-        assert all(gated[k] == exact[k] for k in gated), hash_fn
-        assert len(gated) >= 0.9 * len(exact) > 0, hash_fn
+    gated = {
+        (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+        for r in minhash_neardup_pairs(docs, threshold=0.8).collect()
+    }
+    assert set(gated) <= set(exact)
+    assert all(gated[k] == exact[k] for k in gated)
+    assert len(gated) >= 0.9 * len(exact) > 0
 
 
 def md5_minhash_reference(sh, num_hashes, seed):
@@ -151,38 +150,24 @@ def md5_minhash_reference(sh, num_hashes, seed):
     }
 
 
-def xxhash_minhash_reference(sh, num_hashes, seed):
-    """The relational xxhash64 sketch per ``doc_id`` of ``sh``: explode
-    + ``min(xxhash64(seed, i, shingle))`` per hash function. A NULL
-    shingle array explodes to no rows, so its doc is absent."""
-    return {
-        r.doc_id: list(r[1:])
-        for r in sh.select("doc_id", F.explode("_sh").alias("s"))
-        .groupBy("doc_id")
-        .agg(*[F.min(F.xxhash64(F.lit(seed), F.lit(i), "s")) for i in range(num_hashes)])
-        .collect()
-    }
-
-
-def minhash_rows(sh, num_hashes, seed, hash_fn):
+def minhash_rows(sh, num_hashes, seed):
     """``doc_id`` -> :func:`minhash_signature` of ``sh`` (doc_id, _sh)."""
     from rehiver_spark.operators.dedup import minhash_signature
 
     return {
         r.doc_id: r.sig
         for r in sh.select(
-            "doc_id", minhash_signature("_sh", num_hashes, seed, hash_fn).alias("sig")
+            "doc_id", minhash_signature("_sh", num_hashes, seed).alias("sig")
         ).collect()
     }
 
 
 def test_minhash_relational_matches_column_form(spark):
-    """The map-only SQL-expression signature must equal independent
-    references in BOTH hash modes — the portable md5 sketch is
-    oracle-checked downstream, so even one differing component would
-    break x7p/x29/x34 hash parity. md5: pure Python from
-    ``md5_hash60_py`` and the affine constants; xxhash64: a relational
-    explode + ``min(xxhash64(seed, i, shingle))`` per hash function."""
+    """The map-only SQL-expression signature must equal a pure-Python
+    reference built from ``md5_hash60_py`` and the affine constants —
+    the sketch is oracle-checked downstream, so even one differing
+    component would break x7p/x29/x34 hash parity. A NULL text has no
+    signature."""
     from rehiver_spark.operators.dedup import shingles
 
     df = spark.createDataFrame(
@@ -191,14 +176,15 @@ def test_minhash_relational_matches_column_form(spark):
             (2, "the quick brown fox jumps over the lazy cat"),
             (3, "completely different text with other words here"),
             (4, ""),  # shingles() guarantees [""] — must not vanish
+            (5, None),
+            (6, "naïve café über straße 東京 の テキスト"),
         ],
         "doc_id bigint, text string",
     )
     sh = df.select("doc_id", shingles("text", 3).alias("_sh"))
-    assert minhash_rows(sh, 16, 42, "md5") == md5_minhash_reference(sh, 16, 42)
-    xx_ref = xxhash_minhash_reference(sh, 16, 42)
-    assert minhash_rows(sh, 16, 42, "xxhash64") == xx_ref
-    assert len(xx_ref) == 4
+    got = minhash_rows(sh, 16, 42)
+    assert got == md5_minhash_reference(sh, 16, 42)
+    assert got[5] is None and all(len(got[i]) == 16 for i in (1, 2, 3, 4, 6))
 
 
 def test_sketch_builders_take_column_names_only(spark):
@@ -213,7 +199,6 @@ def test_sketch_builders_take_column_names_only(spark):
 
     for build in (
         lambda: minhash_signature(F.col("_sh")),
-        lambda: minhash_signature(F.col("_sh"), hash_fn="md5"),
         lambda: _band_keys(F.col("sig"), 32, 8),
         lambda: sig_est_jaccard(F.col("a"), "b", 32),
         lambda: sig_est_jaccard("a", F.col("b"), 32),

@@ -187,7 +187,7 @@ def test_minhash_signatures_map_only(spark):
     """The r12 default signature path (map-only JVM Column form) must
     plan with ZERO Exchange — the whole point over the r11 relational
     shape (whose hash-aggregate shuffle floor broke the x34 sf0.1
-    envelope) — and no Python UDF in either hash mode."""
+    envelope) — and no Python UDF."""
     from pyspark.sql import functions as F
 
     from rehiver_spark.operators.dedup import minhash_signatures, shingles
@@ -195,10 +195,9 @@ def test_minhash_signatures_map_only(spark):
     df = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", shingles(F.col("text"), 3).alias("_sh")
     )
-    for hash_fn in ("md5", "xxhash64"):
-        p = plan_of(minhash_signatures(df, "doc_id", "_sh", 32, 42, hash_fn))
-        assert "Exchange" not in p, hash_fn
-        assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, hash_fn
+    p = plan_of(minhash_signatures(df, "doc_id", "_sh", 32, 42))
+    assert "Exchange" not in p
+    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
 def test_x8p_simhash_kofc_no_cartesian_and_no_python(spark, queries):

@@ -41,7 +41,7 @@ def test_rademacher_planes_deterministic():
 
 
 def test_minhash_md5_pairs_subset_of_exact_with_recall(docs, sf_dir):
-    """md5-mode LSH pairs ⊆ exact Jaccard pairs; planted near-dups found."""
+    """md5-sketch LSH pairs ⊆ exact Jaccard pairs; planted near-dups found."""
     from rehiver_spark.operators.dedup import jaccard_pairs, minhash_neardup_pairs, shingles
 
     corpus = docs.select("doc_id", "text").unionByName(
@@ -52,9 +52,7 @@ def test_minhash_md5_pairs_subset_of_exact_with_recall(docs, sf_dir):
     )
     got = {
         (r["id_a"], r["id_b"])
-        for r in minhash_neardup_pairs(
-            corpus, threshold=0.8, hash_fn="md5"
-        ).collect()
+        for r in minhash_neardup_pairs(corpus, threshold=0.8).collect()
     }
     sh = corpus.select("doc_id", shingles("text", 3).alias("shingles"))
     exact = {

@@ -210,13 +210,11 @@ SKETCH_ROWS = st.lists(
 @settings(max_examples=8, deadline=None)
 @given(SKETCH_ROWS, st.sampled_from([4, 16]), st.integers(0, 1 << 40))
 def test_minhash_sketch_matches_references(spark, texts, num_hashes, seed):
-    """shingles → minhash_signature in both hash modes equals the
-    references of test_dedup.py (pure-Python md5 affine mins; explode +
-    min(xxhash64) for the default mode), and sig_est_jaccard equals a
-    Python count of matching components. A NULL text has NULL
-    shingles: its md5 sketch is NULL and its xxhash64 sketch all-NULL
-    components, so its estimate against anything is NULL or 0."""
-    from test_dedup import md5_minhash_reference, minhash_rows, xxhash_minhash_reference
+    """shingles → minhash_signature equals the pure-Python md5 affine
+    mins of test_dedup.py, and sig_est_jaccard equals a Python count of
+    matching components. A NULL text has NULL shingles, so its sketch
+    is NULL and its estimate against anything is NULL."""
+    from test_dedup import md5_minhash_reference, minhash_rows
 
     from rehiver_spark.operators.dedup import shingles, sig_est_jaccard
 
@@ -224,34 +222,23 @@ def test_minhash_sketch_matches_references(spark, texts, num_hashes, seed):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     sh = df.select("doc_id", shingles("text", 3).alias("_sh")).cache()
-    null_ids = {i for i, t in enumerate(texts) if t is None}
-    md5 = minhash_rows(sh, num_hashes, seed, "md5")
-    assert md5 == md5_minhash_reference(sh, num_hashes, seed)
-    xx = minhash_rows(sh, num_hashes, seed, "xxhash64")
-    assert {i: xx[i] for i in null_ids} == {i: [None] * num_hashes for i in null_ids}
-    assert {i: v for i, v in xx.items() if i not in null_ids} == xxhash_minhash_reference(
-        sh, num_hashes, seed
-    )
+    sigs = minhash_rows(sh, num_hashes, seed)
+    assert sigs == md5_minhash_reference(sh, num_hashes, seed)
 
     def py_est(a, b):
         if a is None or b is None:
             return None
-        return sum(x is not None and x == y for x, y in zip(a, b)) / num_hashes
+        return sum(x == y for x, y in zip(a, b)) / num_hashes
 
-    for hash_fn, sigs in (("md5", md5), ("xxhash64", xx)):
-        rows = spark.createDataFrame(
-            list(sigs.items()), "doc_id long, sig array<bigint>"
-        )
-        got = {
-            (r.i, r.j): r.e
-            for r in rows.withColumnsRenamed({"doc_id": "i", "sig": "sa"})
-            .crossJoin(rows.withColumnsRenamed({"doc_id": "j", "sig": "sb"}))
-            .select("i", "j", sig_est_jaccard("sa", "sb", num_hashes).alias("e"))
-            .collect()
-        }
-        assert got == {
-            (i, j): py_est(sigs[i], sigs[j]) for i in sigs for j in sigs
-        }, hash_fn
+    rows = spark.createDataFrame(list(sigs.items()), "doc_id long, sig array<bigint>")
+    got = {
+        (r.i, r.j): r.e
+        for r in rows.withColumnsRenamed({"doc_id": "i", "sig": "sa"})
+        .crossJoin(rows.withColumnsRenamed({"doc_id": "j", "sig": "sb"}))
+        .select("i", "j", sig_est_jaccard("sa", "sb", num_hashes).alias("e"))
+        .collect()
+    }
+    assert got == {(i, j): py_est(sigs[i], sigs[j]) for i in sigs for j in sigs}
     sh.unpersist()
 
 
@@ -722,7 +709,7 @@ def test_minhash_est_gate_subset_property(spark, texts, threshold):
     exact = _py_jaccard_pairs(rows, threshold)
     gated = {
         (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-        for r in minhash_neardup_pairs(df, threshold=threshold, hash_fn="md5").collect()
+        for r in minhash_neardup_pairs(df, threshold=threshold).collect()
     }
     assert set(gated) <= set(exact)
     for k, v in gated.items():

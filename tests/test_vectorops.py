@@ -758,6 +758,13 @@ def test_lsh_rejects_bad_sizes():
         ("importance", "dsir_scores", "persist_features"),
         ("bpe", "learn_bpe", "checkpoint_every"),
         ("bpe", "learn_bpe", "probe_pairs"),
+        ("dedup", "minhash_signature", "hash_fn"),
+        ("dedup", "minhash_signatures", "hash_fn"),
+        ("dedup", "lsh_candidates", "hash_fn"),
+        ("dedup", "minhash_neardup_pairs", "hash_fn"),
+        ("dedup", "fuzzy_dedup", "hash_fn"),
+        ("dedup", "minhash_index", "hash_fn"),
+        ("dedup", "incremental_minhash_neardup", "hash_fn"),
     ],
 )
 def test_removed_path_selectors_raise_type_error(module, fn, kwarg):
