@@ -72,7 +72,7 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from rehiver_spark.operators.textops import tokens
 
     return (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("word"))
+        docs.select(F.explode(tokens(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -422,7 +422,7 @@ def apply_merges(
         return _symbols(s)
 
     return docs.withColumn(
-        out_col, F.flatten(F.transform(tokens(F.col(text_col)), seg_word))
+        out_col, F.flatten(F.transform(tokens(text_col), seg_word))
     )
 
 

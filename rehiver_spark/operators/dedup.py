@@ -47,7 +47,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rehiver_spark.functions.hashing import md5_hash60, md5_hash60_py, md5_hash60_spark_sql
-from rehiver_spark.operators.textops import normalize_text, tokens, word_ngrams
+from rehiver_spark.operators.textops import (
+    ngrams_sql, normalize_text, on_tokens, sql_name, tokens,
+)
 from rehiver_spark.session import ensure_parallelism, track_persist
 
 # Scale gate for the pair operators' bucket self-joins (r13, guide §3.1):
@@ -123,18 +125,27 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # ---------------------------------------------------------------------------
 
 
+def _shingles_sql(t: str, k: int) -> str:
+    """Spark SQL text of :func:`shingles` over the bound token array ``t``."""
+    return f"if(size({t}) = 0, array(''), array_distinct({ngrams_sql(t, k)}))"
+
+
 def shingles(col: Column | str, k: int = 3) -> Column:
     """Distinct word k-shingles of the normalized text.
 
     Documents shorter than k tokens contribute their whole token
     sequence as a single shingle (so no document is unshingled; an
-    empty document yields the single empty shingle [""]).
+    empty document yields the single empty shingle [""]); a NULL text
+    has NULL shingles.
 
     The distinct-set form of textops.word_ngrams (which documents the
-    zip_with construction — ~5x cheaper than per-position slices).
+    zip_with construction — ~5x cheaper than per-position slices). The
+    token array is computed once per row and the shingle expression is
+    one SQL string (textops.on_tokens): the inline Column form ran the
+    regexp/split/filter chain ~6 times per row (20k docs, noop write,
+    median of 6: 4.18 → 2.15 s on 4 cores).
     """
-    full = F.array_distinct(word_ngrams(col, k))
-    return F.when(F.size(tokens(col)) == 0, F.array(F.lit(""))).otherwise(full)
+    return on_tokens(col, _shingles_sql("t", k))
 
 
 def jaccard_pairs(
@@ -292,10 +303,10 @@ def containment_pairs(
     """
     dgx = docs.select(
         F.col(doc_id).alias("id_doc"),
-        F.explode(shingles(F.col(text_col), k)).alias("_g"),
+        F.explode(shingles(text_col, k)).alias("_g"),
     )
     bg = bench.select(
-        F.col(bench_id).alias("id_bench"), shingles(F.col(text_col), k).alias("_bg")
+        F.col(bench_id).alias("id_bench"), shingles(text_col, k).alias("_bg")
     )
     sizes = bg.select("id_bench", F.size("_bg").alias("n_bench"))
     bgx = bg.select("id_bench", F.explode("_bg").alias("_g"))
@@ -337,20 +348,30 @@ def minhash_affine_consts(num_hashes: int, seed: int) -> tuple[list[int], list[i
     return a, c
 
 
-def _sql_name(name: str) -> str:
-    """Backquoted Spark SQL identifier of the top-level column ``name``.
+def _shingle_ids_sql(sh: str, seed: int) -> str:
+    """Spark SQL text of the ARRAY<BIGINT> shingle ids of the shingle
+    array expression ``sh``: md5_hash60('<seed>:' || shingle), the
+    60-bit portable hash (functions/hashing.md5_hash60_spark_sql) that
+    is the sketch's base hash — one id per shingle, in array order."""
+    base = md5_hash60_spark_sql(f"concat('{seed}:', x)")
+    return f"transform({sh}, x -> {base})"
 
-    The sketch builders below render their whole expression as ONE Spark
-    SQL string and make a single ``F.expr`` call: built node by node
-    through the Column API, the same expressions cost ~1.9k of the
-    ~2.9k py4j round trips of a ``minhash_neardup_pairs`` plan (32
-    ``transform`` lambdas, 8 band structs of 4 ``element_at``, the
-    estimate's two lambdas), a fixed 0.2–0.5 s of driver time per call at
-    any corpus size. They therefore take column NAMES; a Column cannot
-    be spliced into SQL text."""
-    if not isinstance(name, str):
-        raise TypeError(f"expected a column name (str), got {type(name).__name__}")
-    return "`" + name.replace("`", "``") + "`"
+
+def _sketch_sql(ids: str, num_hashes: int, seed: int) -> str:
+    """Spark SQL text of the MinHash signature of the shingle-id array
+    expression ``ids`` (:func:`_shingle_ids_sql`) — the ONE sketch
+    builder, shared by :func:`minhash_signature` (ids hashed from a
+    shingle column) and :func:`minhash_neardup_pairs` (ids cached once
+    and also verified on), so both give bit-identical signatures."""
+    a_co, c_co = minhash_affine_consts(num_hashes, seed)
+    mins = ", ".join(
+        f"coalesce(array_min(transform(hs, h -> (h * {a} + {c}) % {_MH_P})), {_MH_P})"
+        for a, c in zip(a_co, c_co)
+    )
+    return (
+        f"transform(array(transform({ids}, x -> x % {_MH_DOMAIN})), "
+        f"hs -> if(hs IS NULL, NULL, array({mins})))[0]"
+    )
 
 
 def minhash_signature(
@@ -363,20 +384,22 @@ def minhash_signature(
     function i, the minimum h_i(shingle) over the shingle set.
 
     The portable, oracle-checkable sketch (Broder-style): ONE md5 base
-    hash per shingle reduced to 2^30, then num_hashes affine universal
-    hashes (a_i·h + c_i) mod (2^31-1) in exact int64 arithmetic — any
-    SQL engine reproduces the sketch bit-for-bit, and the md5 count
-    drops num_hashes-fold vs hashing per (i, shingle). ``transform``
-    computes the base-hash array once per row
-    (functions/hashing.md5_hash60_spark_sql), and a one-element
-    ``transform`` binds it to a lambda variable, so each of the
-    num_hashes ``array_min(transform(...))`` minima reads the bound
-    array instead of re-hashing. An ``aggregate``/``zip_with`` fold over
-    literal (a_i, c_i) structs gives the same values but measured slower
-    (signature projection 1.37 vs 1.26 s, x7p corpus at sf0.1, 4 cores).
+    hash per shingle — its 60-bit id (:func:`_shingle_ids_sql`) —
+    reduced to 2^30, then num_hashes affine universal hashes
+    (a_i·h + c_i) mod (2^31-1) in exact int64 arithmetic — any SQL
+    engine reproduces the sketch bit-for-bit, and the md5 count drops
+    num_hashes-fold vs hashing per (i, shingle). ``transform`` computes
+    the base-hash array once per row, and a one-element ``transform``
+    binds it to a lambda variable, so each of the num_hashes
+    ``array_min(transform(...))`` minima reads the bound array instead
+    of re-hashing (:func:`_sketch_sql`, the builder
+    :func:`minhash_neardup_pairs` shares). An ``aggregate``/``zip_with``
+    fold over literal (a_i, c_i) structs gives the same values but
+    measured slower (signature projection 1.37 vs 1.26 s, x7p corpus at
+    sf0.1, 4 cores).
 
     ONE Spark SQL expression, built with a single ``F.expr`` call (see
-    :func:`_sql_name`), and runs inside one map-only projection: no
+    ``textops.sql_name``), and runs inside one map-only projection: no
     pandas UDF (the pre-r12 hashlib form measured 87 s standalone at
     sf10 where the JVM form takes ~4.5 s), no explode, and NO shuffle:
     the row never leaves its partition, so at small scale there is no
@@ -386,17 +409,8 @@ def minhash_signature(
     (shingles() never makes one: it guarantees [""]) has 2^31-1 in every
     component.
     """
-    a_co, c_co = minhash_affine_consts(num_hashes, seed)
-    base_hash = md5_hash60_spark_sql(f"concat('{seed}:', x)")
-    mins = ", ".join(
-        f"coalesce(array_min(transform(hs, h -> (h * {a} + {c}) % {_MH_P})), {_MH_P})"
-        for a, c in zip(a_co, c_co)
-    )
-    return F.expr(
-        f"transform(array(transform({_sql_name(shingle_col)}, "
-        f"x -> {base_hash} % {_MH_DOMAIN})), "
-        f"hs -> if(hs IS NULL, NULL, array({mins})))[0]"
-    )
+    ids = _shingle_ids_sql(sql_name(shingle_col), seed)
+    return F.expr(_sketch_sql(ids, num_hashes, seed))
 
 
 def minhash_signatures(
@@ -430,8 +444,8 @@ def _band_keys(sig_col: str, num_hashes: int, bands: int) -> Column:
     the two paths can never diverge on how a band hashes. The bucket
     key is xxhash64 of the band's signature values: it is an internal
     join key, so only tuple equality matters. One SQL expression, one
-    gateway call (see :func:`_sql_name`)."""
-    sig = _sql_name(sig_col)
+    gateway call (see ``textops.sql_name``)."""
+    sig = sql_name(sig_col)
     r = num_hashes // bands
     structs = ", ".join(
         f"struct({bi} AS band, xxhash64("
@@ -502,9 +516,9 @@ def sig_est_jaccard(sig_a: str, sig_b: str, num_hashes: int) -> Column:
     num_hashes — ONE definition shared by the batch pre-filter
     (:func:`minhash_neardup_pairs`) and the incremental index probe
     (:func:`incremental_minhash_neardup`). One SQL expression, one
-    gateway call (see :func:`_sql_name`)."""
+    gateway call (see ``textops.sql_name``)."""
     return F.expr(
-        f"size(filter(zip_with({_sql_name(sig_a)}, {_sql_name(sig_b)}, "
+        f"size(filter(zip_with({sql_name(sig_a)}, {sql_name(sig_b)}, "
         f"(x, y) -> x = y), m -> m)) / {float(num_hashes)!r}D"
     )
 
@@ -545,17 +559,28 @@ def minhash_neardup_pairs(
     reproduces it exactly (x7p/x29 embed the same gate in SQL). It only
     ever removes candidates: the result is a subset of the exact pairs
     with exact scores (pinned against a pure-Python all-pairs Jaccard).
+
+    Integer verify: each row's shingles are cached as their 60-bit md5
+    ids (:func:`_shingle_ids_sql`, the sketch's own base hash), so the
+    signatures come from the same cached arrays through the one sketch
+    builder (:func:`_sketch_sql`; bit-identical to
+    :func:`minhash_signature` over the string shingles), and the verify
+    join ships and intersects ``array<bigint>`` instead of string arrays
+    (each of the two verify broadcasts of the perfbench seed-1 corpus
+    shrank 32.0 → 4.0 MiB, built in 24–80 instead of 137–153 ms). Scores are exact unless two distinct shingles of one pair
+    share a 60-bit id: for a union of u shingles that chance is about
+    u²/2⁶¹ (~10⁻¹³ at u = 500), and a collision can only raise
+    ``n_common`` by merging two shingles.
     """
     margin = 3.5 * math.sqrt(threshold * (1.0 - threshold) / num_hashes)
-    sh = track_persist(
-        ensure_parallelism(df).select(
-            F.col(id_col).alias("_id"), shingles(F.col(text_col), k).alias("_sh")
-        )
-    )  # read by banding AND both verify sides
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
+    ids = on_tokens(text_col, _shingle_ids_sql(_shingles_sql("t", k), seed))
+    sh = track_persist(
+        ensure_parallelism(df).select(F.col(id_col).alias("_id"), ids.alias("_sh"))
+    )  # read by the signatures AND both verify sides
     sigs = track_persist(
-        minhash_signatures(sh, "_id", "_sh", num_hashes, seed)
+        sh.select("_id", F.expr(_sketch_sql("_sh", num_hashes, seed)).alias("sig"))
     )  # read by banding and both estimate sides
     big = _big_corpus(df)
     cand = _lsh_band_candidates(sigs, "_id", num_hashes, bands, prefer_merge=big)
@@ -578,7 +603,7 @@ def minhash_neardup_pairs(
     a = sh.withColumnsRenamed({"_id": "id_a", "_sh": "_sha"})
     b = sh.withColumnsRenamed({"_id": "id_b", "_sh": "_shb"})
     # SQL text, like the sketch builders: a handful of gateway calls
-    # where a withColumn chain makes ~150 (see _sql_name)
+    # where a withColumn chain makes ~150 (see textops.sql_name)
     verified = (
         cand.join(a, "id_a")
         .join(b, "id_b")
@@ -607,14 +632,20 @@ def _cc_driver(spark, e: DataFrame, id_type, max_iter: int) -> DataFrame:
     index IS the minimum id, so the final ``ids[lab]`` is exactly the
     distributed branch's per-component min id (string ids included:
     numpy's sort order on unicode matches Spark's binary-collation
-    ``min``).
+    ``min``). The returned local frame also carries ``cluster_size``,
+    counted from the converged labels with ``np.bincount``, so
+    :func:`fuzzy_dedup` labels its corpus with one join against it.
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import LongType, StructField, StructType
 
     schema = StructType(
-        [StructField("doc_id", id_type), StructField("cluster_id", id_type)]
+        [
+            StructField("doc_id", id_type),
+            StructField("cluster_id", id_type),
+            StructField("cluster_size", LongType()),
+        ]
     )
     tbl = e.toArrow()
     if tbl.num_rows == 0:
@@ -633,7 +664,8 @@ def _cc_driver(spark, e: DataFrame, id_type, max_iter: int) -> DataFrame:
         np.minimum.at(new, ia, lab[ib])  # neighbor propagation
         new = np.minimum(new, new[new])  # pointer jump (chains halve)
         if np.array_equal(new, lab):
-            out = pd.DataFrame({"doc_id": ids, "cluster_id": ids[lab]})
+            size = np.bincount(lab, minlength=len(ids))[lab]
+            out = pd.DataFrame({"doc_id": ids, "cluster_id": ids[lab], "cluster_size": size})
             return spark.createDataFrame(out, schema=schema)
         lab = new
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
@@ -667,7 +699,11 @@ def connected_components(
     max_iter: int = 25,
 ) -> DataFrame:
     """Duplicate-cluster resolution: assign every node appearing in the
-    pair list its component's minimum id as ``cluster_id``.
+    pair list its component's minimum id as ``cluster_id``. Output:
+    ``(doc_id, cluster_id)`` on both branches (:func:`_components`, the
+    body shared with :func:`fuzzy_dedup`, also returns the driver
+    solve's ``cluster_size``; projecting it away is free on that local
+    frame).
 
     Near-dup detection yields PAIRS; dedup policy needs CLUSTERS (keep
     one representative per transitive group — A~B, B~C must retire two
@@ -714,6 +750,20 @@ def connected_components(
     job, swap in reliable ``checkpoint()`` with a checkpoint dir; the
     algorithm is unchanged.
     """
+    return _components(pairs, id_a, id_b, max_iter).select("doc_id", "cluster_id")
+
+
+def _components(
+    pairs: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    max_iter: int = 25,
+) -> DataFrame:
+    """:func:`connected_components`' body, shared with
+    :func:`fuzzy_dedup`: ``(doc_id, cluster_id, cluster_size)`` from
+    the driver solve (``np.bincount`` of its labels, so the caller sizes
+    clusters with no ``groupBy``), ``(doc_id, cluster_id)`` from the
+    distributed branch."""
     # NULL ids are dropped up front so both branches see the same graph:
     # the driver branch's np.unique cannot sort None among strings
     # (opaque TypeError), and the distributed branch would silently
@@ -891,7 +941,7 @@ def simhash_signatures(
     signature is effectively 60-bit but bit-identical in any SQL engine.
     """
     ex = ensure_parallelism(df).select(
-        F.col(id_col), F.explode_outer(tokens(F.col(text_col))).alias("_tok")
+        F.col(id_col), F.explode_outer(tokens(text_col)).alias("_tok")
     )
     if hash_fn == "md5":
         # concat(NULL) → NULL → md5 NULL: empty-doc rows drop out of
@@ -1181,23 +1231,29 @@ def fuzzy_dedup(
     majority never enters that shuffle.
 
     Scale shape: every stage is the already-audited scale path —
-    banding/bucket join for candidates (never all-pairs), pair-graph
+    banding/bucket join for candidates (never all-pairs) verified on
+    int64 shingle ids (:func:`minhash_neardup_pairs`), pair-graph
     components via pointer-jumped min-label propagation (graph is tiny
     vs corpus: only docs WITH a near-dup appear), and the final
     labeling is one join of the corpus against the (small) component
-    map, broadcast when it fits.  Cluster sizes are computed on the
-    component map, not the corpus, so no extra corpus shuffle.
+    map, broadcast when it fits. Cluster sizes are computed on the
+    component map, not the corpus, so no extra corpus shuffle: on the
+    driver branch of :func:`_components` (every dedup graph under its
+    cap) they come with the local solve's result, so labeling is that
+    one join and nothing else; on the distributed branch a ``groupBy``
+    over the component map adds them.
     """
     if keep not in ("min_id", "longest"):
         raise ValueError(f"keep must be 'min_id' or 'longest', got {keep!r}")
     pairs = minhash_neardup_pairs(
         df, id_col, text_col, k, threshold, num_hashes, bands, seed
     )
-    comp = connected_components(pairs).withColumnsRenamed({"doc_id": id_col})
-    sizes = comp.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    lab = comp.join(sizes, "cluster_id")
+    comp = _components(pairs).withColumnsRenamed({"doc_id": id_col})
+    if "cluster_size" not in comp.columns:  # distributed branch
+        sizes = comp.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
+        comp = comp.join(sizes, "cluster_id")
     out = (
-        df.join(lab, id_col, "left")
+        df.join(comp, id_col, "left")
         .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col(id_col)))
         .withColumn("cluster_size", F.coalesce(F.col("cluster_size"), F.lit(1)))
     )
@@ -1400,7 +1456,7 @@ def minhash_index(
     could not amortize (the x34 sf0.1 envelope breach) — see
     :func:`minhash_signatures`."""
     sh = ensure_parallelism(corpus).select(
-        F.col(id_col), shingles(F.col(text_col), k).alias("_sh")
+        F.col(id_col), shingles(text_col, k).alias("_sh")
     )
     return minhash_signatures(sh, id_col, "_sh", num_hashes, seed)
 

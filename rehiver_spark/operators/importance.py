@@ -36,7 +36,7 @@ from rehiver_spark.functions.hashing import md5_hash60, md5_hash60_sql
 from rehiver_spark.session import track_persist
 
 
-def _grams(text_col: Column) -> Column:
+def _grams(text_col: Column | str) -> Column:
     """Unigrams + adjacent bigrams of the normalized token stream."""
     from rehiver_spark.operators.textops import tokens
 
@@ -73,7 +73,7 @@ def feature_buckets(
     """(id, bucket) — one row per gram occurrence, map-side only."""
     return docs.select(
         F.col(id_col),
-        F.explode(_grams(F.col(text_col))).alias("_g"),
+        F.explode(_grams(text_col)).alias("_g"),
     ).select(
         id_col, F.pmod(md5_hash60(F.col("_g")), F.lit(buckets)).alias("bucket")
     )

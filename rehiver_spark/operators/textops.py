@@ -16,6 +16,8 @@ A BPE-ish regex tokenizer is provided for realistic token counting.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -62,11 +64,74 @@ def normalize_text(col: Column | str) -> Column:
     return F.lower(F.regexp_replace(F.trim(_c(col)), r"\s+", " "))
 
 
+def sql_name(name: str) -> str:
+    """Backquoted Spark SQL identifier of the top-level column ``name``.
+
+    The text and sketch builders render their whole expression as ONE
+    Spark SQL string and make a single ``F.expr`` call: built node by
+    node through the Column API, each function application costs ~10-25
+    py4j round trips (``tokens`` alone made 77), and the sketch
+    expressions cost ~1.9k of the ~2.9k round trips of a
+    ``minhash_neardup_pairs`` plan — a fixed 0.2–0.5 s of driver time
+    per call at any corpus size. A Column cannot be spliced into SQL
+    text, hence names."""
+    if not isinstance(name, str):
+        raise TypeError(f"expected a column name (str), got {type(name).__name__}")
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_on(col: Column | str, body: Callable[[str], str]) -> Column:
+    """The Spark SQL expression ``body(s)`` over the value of ``col``.
+
+    A column NAME is spliced in as ``s`` and the whole expression is one
+    ``F.expr`` call (see :func:`sql_name`). Any other Column is bound to
+    the lambda variable ``s`` by a one-element ``transform``, so the SQL
+    text is the same either way. Use it for expressions that already
+    run interpreted (higher-order functions): the binding would take a
+    code-generated expression off whole-stage codegen."""
+    if isinstance(col, str):
+        return F.expr(body(sql_name(col)))
+    return F.call_function("transform", F.array(col), F.expr(f"s -> {body('s')}"))[0]
+
+
+def _tokens_sql(s: str) -> str:
+    """Spark SQL text of :func:`tokens` over the string expression ``s``
+    (its normalization is :func:`normalize_text`'s)."""
+    return f"filter(split(lower(regexp_replace(trim({s}), '\\\\s+', ' ')), ' '), w -> w != '')"
+
+
 def tokens(col: Column | str) -> Column:
     """ARRAY<STRING> of whitespace tokens of the normalized text.
-    Empty text → empty array (never a [''] singleton)."""
-    t = normalize_text(col)
-    return F.filter(F.split(t, " "), lambda x: x != F.lit(""))
+    Empty text → empty array (never a [''] singleton); NULL → NULL."""
+    return sql_on(col, _tokens_sql)
+
+
+def on_tokens(col: Column | str, body: str) -> Column:
+    """The Spark SQL expression ``body``, over the lambda variable ``t``,
+    evaluated on the :func:`tokens` array of ``col``.
+
+    The token array is computed ONCE per row: a one-element
+    ``transform`` binds it to ``t``, so every ``size(t)``/``slice(t, …)``
+    in ``body`` reads the bound array. Written out inline, the n-gram
+    construction evaluated the regexp/split/filter chain ~6 times per
+    row (Spark does not eliminate common subexpressions across
+    higher-order-function arguments). One SQL string (:func:`sql_on`)."""
+    return sql_on(col, lambda s: f"transform(array({_tokens_sql(s)}), t -> {body})[0]")
+
+
+def ngrams_sql(t: str, k: int) -> str:
+    """Spark SQL text of the word k-grams of the token-array expression
+    ``t`` (see :func:`word_ngrams`): k-1 ``zip_with`` passes over
+    shifted copies of ``t`` (each O(n), the NULL tail skipped by
+    ``concat_ws``) — no per-position slice calls. ``t`` is read k times,
+    so pass a bound variable (:func:`on_tokens`), not an expression."""
+    out = t
+    for i in range(1, k):
+        out = (
+            f"zip_with({out}, slice({t}, {i + 1}, greatest(size({t}) - {i}, 0)), "
+            "(a, b) -> concat_ws(' ', a, b))"
+        )
+    return f"slice({out}, 1, greatest(size({t}) - {k - 1}, 1))"
 
 
 def word_ngrams(col: Column | str, k: int = 3) -> Column:
@@ -74,17 +139,10 @@ def word_ngrams(col: Column | str, k: int = 3) -> Column:
     WITH duplicates (dedup.shingles is the distinct-set form).
 
     Texts shorter than k tokens contribute their whole token sequence
-    as one gram; empty text → empty array. Built from k-1 zip_with
-    passes over shifted copies of the token array (each O(n), null tail
-    skipped by concat_ws) — no per-position slice calls.
+    as one gram; empty text → empty array; NULL text → NULL. The token
+    array is computed once per row (:func:`on_tokens`, :func:`ngrams_sql`).
     """
-    toks = tokens(col)
-    n = F.size(toks)
-    out = toks
-    for i in range(1, k):
-        shifted = F.slice(toks, i + 1, F.greatest(n - F.lit(i), F.lit(0)))
-        out = F.zip_with(out, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    return F.slice(out, 1, F.greatest(n - F.lit(k - 1), F.lit(1)))
+    return on_tokens(col, ngrams_sql("t", k))
 
 
 def bpe_ish_tokens(col: Column | str) -> Column:
@@ -408,7 +466,7 @@ def chunk_documents(
     # into size/sequence/slice makes Catalyst evaluate the regex
     # normalize+split 3× per row (CollapseProject keeps multiply-
     # referenced non-cheap aliases separate only across projections)
-    base = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_tk"))
+    base = df.select(F.col(id_col), tokens(text_col).alias("_tk"))
     n = F.size("_tk")
     # number of chunks: ceil(max(n - overlap, 1) / stride)
     n_chunks = F.ceil(F.greatest(n - F.lit(overlap), F.lit(1)) / F.lit(stride)).cast("int")
@@ -480,7 +538,7 @@ def token_drift(
     dec = "decimal(38,0)"
     counts = track_persist(
         df.select(F.col(source_col).alias("source"),
-                  F.explode(tokens(F.col(text_col))).alias("token"))
+                  F.explode(tokens(text_col)).alias("token"))
         .groupBy("source", "token")
         .agg(F.count("*").alias("cnt")),
         StorageLevel.MEMORY_AND_DISK,
@@ -552,7 +610,7 @@ def source_overlap_matrix(
     per_gram = track_persist(
         df.select(
             F.col(source_col).alias("source"),
-            F.explode(F.array_distinct(word_ngrams(F.col(text_col), k))).alias("g"),
+            F.explode(F.array_distinct(word_ngrams(text_col, k))).alias("g"),
         )
         .groupBy("g")
         # array_sort so pair generation yields a < b by construction
@@ -825,7 +883,7 @@ def tf_idf(
     base = df.select(
         doc_id_col,
         *( [group_col] if group_col else [] ),
-        tokens(F.col(text_col)).alias("_tk"),
+        tokens(text_col).alias("_tk"),
     )
     base = track_persist(base)  # tokenization is expensive; read twice
     group_keys = ([group_col] if group_col else []) + ["token"]
@@ -874,7 +932,7 @@ def dedup_spans(
     Output: (id, cleaned_text, n_spans, n_removed).
     """
     df = ensure_parallelism(df)
-    toks = tokens(F.col(text_col))
+    toks = tokens(text_col)
     n_chunks = F.ceil(F.greatest(F.size(toks), F.lit(1)) / F.lit(span_tokens)).cast("int")
     spans = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -1499,7 +1557,7 @@ def vocab_top_k(
     """
     t = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(tokens(F.col(text_col))).alias("token"),
+        F.explode(tokens(text_col)).alias("token"),
     )
     per_doc = t.groupBy("token", "_id").agg(F.count("*").alias("tf"))
     agg = per_doc.groupBy("token").agg(
@@ -1622,7 +1680,7 @@ def dedup_substrings(
 
     df = ensure_parallelism(df)
     L = window_tokens
-    toks = tokens(F.col(text_col))
+    toks = tokens(text_col)
     # base feeds the window pass, the token rows, AND the totals —
     # DELIBERATELY recomputed, not persisted: materializing the
     # token-array projection measured SLOWER than the two extra

@@ -938,11 +938,11 @@ def x41_count_min(spark, sf_dir):
     from rehiver_spark.operators.textops import tokens
 
     d = tables(spark, sf_dir, ["documents"])["documents"]
-    toks = d.select(F.explode(tokens(F.col("text"))).alias("item"))
+    toks = d.select(F.explode(tokens("text")).alias("item"))
     sk = cm_sketch(toks, depth=_CM_D, width=_CM_W)
     qs = (
         d.filter(F.col("doc_id") < 5)
-        .select(F.explode(F.array_distinct(tokens(F.col("text")))).alias("item"))
+        .select(F.explode(F.array_distinct(tokens("text"))).alias("item"))
         .distinct()
     )
     return cm_estimate(sk, qs, depth=_CM_D, width=_CM_W)
@@ -1003,7 +1003,7 @@ def x42_hll_distinct(spark, sf_dir):
     from rehiver_spark.operators.textops import tokens
 
     d = tables(spark, sf_dir, ["documents"])["documents"]
-    toks = d.select("source", F.explode(tokens(F.col("text"))).alias("item"))
+    toks = d.select("source", F.explode(tokens("text")).alias("item"))
     regs = hll_registers(toks, p=_HLL_P, group_cols=["source"])
     return hll_estimate(regs, p=_HLL_P, group_cols=["source"])
 

@@ -935,7 +935,7 @@ def x15_contamination(spark, sf_dir):
     containment 1.0. Corpus side never shuffles (benchmark broadcast).
     Bench slice pinned to doc_id < 500: scale-invariant benchmark."""
     d = tables(spark, sf_dir, ["documents"])["documents"]
-    toks = tokens(F.col("text"))
+    toks = tokens("text")
     bench = d.filter(
         (F.col("doc_id") % 7 == 0) & (F.col("doc_id") < 500) & (F.size(toks) >= 22)
     ).select(
@@ -1551,7 +1551,7 @@ def x23_span_dedup(spark, sf_dir):
     prefix = d.filter(F.col("doc_id") % 3 == 0).select(
         (F.col("doc_id") + 200000).alias("doc_id"),
         F.concat(
-            F.array_join(F.slice(tokens(F.col("text")), 1, 20), " "),
+            F.array_join(F.slice(tokens("text"), 1, 20), " "),
             F.lit(" freshtail "),
             F.col("doc_id").cast("string"),
         ).alias("text"),
@@ -1818,7 +1818,7 @@ def x27_line_dedup(spark, sf_dir):
     from rehiver_spark.operators.textops import remove_boilerplate_lines
 
     d = tables(spark, sf_dir, ["documents"])["documents"].select("doc_id", "text")
-    tk = tokens(F.col("text"))
+    tk = tokens("text")
     nl = F.ceil(F.greatest(F.size(tk), F.lit(1)) / F.lit(8)).cast("int")
     body = F.array_join(
         F.transform(

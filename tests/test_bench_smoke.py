@@ -8,16 +8,18 @@ import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _run_bench(env_extra, args):
     env = {**os.environ, **env_extra}
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py", *args],
+        [sys.executable, os.path.join(ROOT, "bench.py"), *args],
         capture_output=True,
         text=True,
         env=env,
         timeout=300,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     line = out.stdout.strip().splitlines()[-1]

@@ -235,7 +235,45 @@ def test_minhash_neardup_plan_build_gateway_budget(spark):
 
     with mock.patch.object(client, "send_command", counting):
         minhash_neardup_pairs(df, threshold=0.8)
-    assert 0 < len(sent) <= 800, len(sent)
+    # shingles, tokens and the shingle ids are one SQL string each too;
+    # built through the Column API the tokenizer alone made 77 calls
+    assert 0 < len(sent) <= 400, len(sent)
+
+
+def test_minhash_neardup_int_id_counts_equal_string_sets(spark):
+    """The verify join intersects cached int64 shingle ids, yet
+    ``n_common``/``n_a``/``n_b`` and ``jaccard`` equal the counts over
+    the STRING shingle sets (pure Python over :func:`shingles`), on a
+    corpus with tab/newline-separated, multibyte and short rows."""
+    from rehiver_spark.operators.dedup import minhash_neardup_pairs, shingles
+
+    base = "the quick brown fox jumps over the lazy dog and runs far away now"
+    mb = "naïve café über straße 東京 の テキスト with 𝄞 and more words here"
+    df = spark.createDataFrame(
+        [
+            (1, base),
+            (2, base.replace(" ", "\t", 3) + " too"),
+            (3, base.replace("lazy", "idle")),
+            (4, mb),
+            (5, mb.replace(" ", "\n", 2)),
+            (6, mb + " extra"),
+            (7, "two words"),
+            (8, "Two  Words"),
+            (9, ""),
+            (10, None),
+            (11, "something else entirely about spark plans and joins today"),
+        ],
+        "doc_id bigint, text string",
+    )
+    rows = [
+        (r.doc_id, r.sh)
+        for r in df.select("doc_id", shingles("text", 3).alias("sh")).collect()
+        if r.sh is not None
+    ]
+    exact = _py_jaccard_pairs(rows, 0.5)
+    got = _pair_rows(minhash_neardup_pairs(df, threshold=0.5))
+    assert got and set(got) <= set(exact)
+    assert all(got[k] == exact[k] for k in got), (got, exact)
 
 
 def test_simhash_neardup_pairs(spark):
@@ -416,12 +454,12 @@ def test_connected_components_long_chain_converges(spark):
     assert {r.cluster_id for r in got} == {0}
 
 
-def cc_rows(branch, pairs):
-    """Run connected_components with its driver cap patched so
-    ``branch`` ("driver" | "distributed") runs — -1 admits not even an
-    empty graph — and return the (doc_id, cluster_id) set. The
-    operator's own INFO line and a spy on the driver solve prove the
-    branch. Hypothesis-safe (no function-scoped fixture)."""
+def on_cc_branch(branch, run):
+    """Return ``run()`` with connected components' driver cap patched
+    so ``branch`` ("driver" | "distributed") runs — -1 admits not even
+    an empty graph. The operator's own INFO line and a spy on the
+    driver solve prove the branch. Hypothesis-safe (no function-scoped
+    fixture)."""
     import logging
     from unittest import mock
 
@@ -434,12 +472,20 @@ def cc_rows(branch, pairs):
     ), mock.patch.object(log, "info") as info, mock.patch.object(
         dedup, "_cc_driver", wraps=dedup._cc_driver
     ) as solve:
-        rows = [
-            (r.doc_id, r.cluster_id)
-            for r in dedup.connected_components(pairs).collect()
-        ]
+        out = run()
     assert info.call_args.args[-1] == branch, info.call_args
     assert solve.called == (branch == "driver"), branch
+    return out
+
+
+def cc_rows(branch, pairs):
+    """The (doc_id, cluster_id) set of connected_components on
+    ``branch`` (see :func:`on_cc_branch`)."""
+    from rehiver_spark.operators.dedup import connected_components
+
+    rows = on_cc_branch(branch, lambda: [
+        (r.doc_id, r.cluster_id) for r in connected_components(pairs).collect()
+    ])
     assert len(rows) == len(set(rows)), branch  # one row per node
     return set(rows)
 
@@ -674,6 +720,81 @@ def test_fuzzy_dedup_keep_longest(spark):
 
     with pytest.raises(ValueError):
         fuzzy_dedup(df, keep="newest")
+
+
+def fuzzy_rows(branch, df):
+    """``fuzzy_dedup`` rows by id on connected-components ``branch``
+    (see :func:`on_cc_branch`)."""
+    from rehiver_spark.operators.dedup import fuzzy_dedup
+
+    return on_cc_branch(branch, lambda: {
+        r["doc_id"]: r for r in fuzzy_dedup(df, threshold=0.5).collect()
+    })
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_fuzzy_dedup_cluster_size_is_group_count_on_both_branches(spark, id_type):
+    """The driver solve hands ``cluster_size`` back with its labels; on
+    either branch it equals a groupBy count of ``cluster_id`` over the
+    output, and both branches label identically — string ids and a
+    corpus with no near-dup pair included."""
+    from collections import Counter
+
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    other = "a completely different document about spark plans and joins"
+    texts = [base, base + " ok", other, base, "unrelated words here", other + " yes", None]
+    cast = str if id_type == "string" else int
+    schema = f"doc_id {id_type}, text string"
+    df = spark.createDataFrame([(cast(i), t) for i, t in enumerate(texts)], schema)
+    lonely = spark.createDataFrame(
+        [(cast(i), t) for i, t in enumerate(["one doc", "another text", "third one here"])],
+        schema,
+    )
+    for corpus in (df, lonely):
+        both = [fuzzy_rows(branch, corpus) for branch in ("driver", "distributed")]
+        assert {k: tuple(v) for k, v in both[0].items()} == {k: tuple(v) for k, v in both[1].items()}
+        rows = both[0]
+        sizes = Counter(r["cluster_id"] for r in rows.values())
+        assert all(r["cluster_size"] == sizes[r["cluster_id"]] for r in rows.values())
+        assert sum(r["is_keeper"] for r in rows.values()) == len(sizes)
+    assert sizes == Counter({cast(i): 1 for i in range(3)})  # no pairs: all singletons
+    assert fuzzy_rows("driver", df)[cast(0)]["cluster_size"] == 3
+
+
+def test_fuzzy_dedup_warm_call_job_budget(spark):
+    """A warm ``fuzzy_dedup`` call, collect included, runs at most 10
+    Spark jobs (12 when the labeling still sized clusters with a groupBy
+    + join over the component map), counted through a job group."""
+    import random
+
+    from rehiver_spark.operators.dedup import fuzzy_dedup
+
+    rng = random.Random(7)
+    words = [f"w{i}" for i in range(300)]
+    rows = []
+    for i in range(120):
+        doc = [rng.choice(words) for _ in range(30)]
+        rows.append((2 * i, " ".join(doc)))
+        if i % 3 == 0:
+            doc[rng.randrange(30)] = "zz"
+            rows.append((2 * i + 1, " ".join(doc)))
+    df = spark.createDataFrame(rows, "doc_id bigint, text string").persist()
+    df.count()
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for call in range(2):  # the first call warms the operator caches
+            group = f"fuzzy-dedup-job-budget-{call}"
+            sc.setJobGroup(group, "fuzzy_dedup")
+            try:
+                out = fuzzy_dedup(df).select("doc_id", "cluster_id", "is_keeper").collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            assert sum(r.is_keeper for r in out) == 120
+    finally:
+        df.unpersist()
+    assert 0 < jobs[1] <= 10, jobs
 
 
 def test_incremental_minhash_neardup(spark):

@@ -1,6 +1,9 @@
+import os
 import tempfile
 
 from pyspark.sql import functions as F
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_engine_facade_roundtrip(spark):
@@ -117,7 +120,7 @@ def test_every_registered_query_is_documented_in_coverage():
     from rehiver_spark.queries import QUERIES, load_all
 
     load_all()
-    doc = open("/root/repo/COVERAGE.md").read()
+    doc = open(os.path.join(ROOT, "COVERAGE.md")).read()
     missing = [n for n in QUERIES if n not in doc]
     assert not missing, f"COVERAGE.md does not mention: {missing}"
 

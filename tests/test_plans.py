@@ -2,6 +2,8 @@
 plans must be the ones a 100 TB run needs (pushdown, broadcast, no
 cartesian product, partial aggregation, pruned reads)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,7 +18,7 @@ def plan_of(df) -> str:
 def queries():
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from rehiver_spark.queries import QUERIES, load_all
 
     load_all()

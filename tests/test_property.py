@@ -183,21 +183,6 @@ def test_word_ngrams_matches_python_reference(spark, texts, k):
         assert got[i] == _py_ngrams(t, k), (t, k)
 
 
-@settings(max_examples=15, deadline=None)
-@given(st.lists(TEXT, min_size=1, max_size=40))
-def test_shingles_are_distinct_ngrams_with_empty_fallback(spark, texts):
-    from rehiver_spark.operators.dedup import shingles
-
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
-    got = {
-        r.i: list(r.g) for r in df.select("i", shingles("t", 3).alias("g")).collect()
-    }
-    for i, t in enumerate(texts):
-        ng = _py_ngrams(t, 3)
-        expected = list(dict.fromkeys(ng)) if ng else [""]
-        assert got[i] == expected, t
-
-
 # multibyte text: 2-, 3- and 4-byte UTF-8 (the last a UTF-16 surrogate
 # pair on the JVM), plus whitespace the normalizer collapses
 MB_TEXT = st.text(alphabet=list("aé日本ü✓𝄞 \t"), min_size=0, max_size=30)
@@ -205,6 +190,39 @@ MB_TEXT = st.text(alphabet=list("aé日本ü✓𝄞 \t"), min_size=0, max_size=3
 SKETCH_ROWS = st.lists(
     st.one_of(st.none(), TEXT, MB_TEXT), min_size=1, max_size=8
 ).flatmap(lambda base: st.lists(st.sampled_from(base), min_size=1, max_size=24))
+
+
+# tabs, newlines, upper case and multibyte letters, short and empty
+# rows; no Unicode-only whitespace (Java's \s and Python's split differ
+# there by design)
+SHINGLE_TEXT = st.text(alphabet=list("abAÉé日本ü✓𝄞 \t\n."), min_size=0, max_size=40)
+
+
+@settings(max_examples=15, deadline=None)
+@given(
+    st.lists(st.one_of(st.none(), SHINGLE_TEXT, TEXT), min_size=1, max_size=30),
+    st.integers(min_value=1, max_value=4),
+)
+def test_shingles_are_distinct_ngrams_with_empty_fallback(spark, texts, k):
+    """The one-binding ``shingles`` (tokens computed once per row, one
+    SQL string) equals a pure-Python reference — distinct k-grams in
+    order, the whole token sequence for rows shorter than k, [""] for a
+    tokenless row, NULL for NULL — and reading the text through a
+    Column (bound by one more ``transform``) gives the same arrays."""
+    from rehiver_spark.operators.dedup import shingles
+
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
+    got = df.select(
+        "i", shingles("t", k).alias("g"), shingles(F.col("t"), k).alias("c")
+    ).collect()
+    for r in got:
+        t = texts[r.i]
+        if t is None:
+            assert r.g is None and r.c is None
+            continue
+        ng = _py_ngrams(t, k)
+        expected = list(dict.fromkeys(ng)) if ng else [""]
+        assert list(r.g) == expected == list(r.c), (t, k)
 
 
 @settings(max_examples=8, deadline=None)

@@ -635,6 +635,44 @@ def lsh_rows(branch, fn, *args, **kwargs):
     return rows
 
 
+@pytest.mark.parametrize("branch", ["expr", "arrow"])
+def test_lsh_bucket_udf_runs_once_per_join_path_call(spark, monkeypatch, branch):
+    """The plane-bucket UDF sees each valid row ONCE per call on the
+    join path: the persisted (_id, t, bkt) keys feed the Σpop² histogram
+    and both candidate-join sides (before, it ran three times: the
+    probe plus one ArrowEvalPython per join side). The kernel path
+    buckets again beside the vectors it ships: twice. Counted with an
+    accumulator inside a wrapped UDF, for both LSH forms; pairs are
+    unchanged by the wrapper."""
+    from pyspark.sql.functions import pandas_udf
+
+    import rehiver_spark.operators.vectorops as vo
+
+    acc = spark.sparkContext.accumulator(0)
+    real = vo._plane_buckets_udf
+
+    def counting(planes, input_dtype):
+        buckets = real(planes, input_dtype).func
+
+        @pandas_udf("array<bigint>")
+        def counted(s):
+            acc.add(len(s))
+            return buckets(s)
+
+        return counted
+
+    rows = [(i, [float(i % 7), 1.0, float(i % 3)]) for i in range(60)] + [(99, None)]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    for fn in (vo.lsh_cosine_neardup, vo.lsh_cosine_neardup_portable):
+        want = {(r.id_a, r.id_b) for r in lsh_rows(branch, fn, df, dim=3, threshold=0.9)}
+        with monkeypatch.context() as m:
+            m.setattr(vo, "_plane_buckets_udf", counting)
+            acc.value = 0
+            got = {(r.id_a, r.id_b) for r in lsh_rows(branch, fn, df, dim=3, threshold=0.9)}
+        assert got == want and got, fn.__name__
+        assert acc.value == 60 * (1 if branch == "expr" else 2), (fn.__name__, acc.value)
+
+
 def test_lsh_paths_exclude_ragged_dim_vectors(spark):
     """A vector violating the `dim` contract is excluded up front on
     BOTH verify branches: before round 10 a ragged row crashed the

@@ -10,12 +10,14 @@ timestamps ISO-formatted). Usage::
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from datetime import date, datetime
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 

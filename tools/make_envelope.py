@@ -10,11 +10,13 @@ adjudicated against. Ad-hoc evidence generator — not shipped.
 Usage: python tools/make_envelope.py [anchor.json [sf1.json [sf10.json]]]
 """
 import json
+import os
 import sys
 
-anchor_path = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/BENCH_FULL.json"
-sf1_path = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/BENCH_sf1.json"
-sf10_path = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/BENCH_sf10.json"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+anchor_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "BENCH_FULL.json")
+sf1_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "BENCH_sf1.json")
+sf10_path = sys.argv[3] if len(sys.argv) > 3 else os.path.join(ROOT, "BENCH_sf10.json")
 
 
 def load(path):

@@ -4,7 +4,9 @@ Builds the seeded corpus with ``perfbench/gen.py`` (imported, never
 modified), keeps the exact-dedup survivors the way the
 ``dedup_pipeline`` text pass does, runs one warm-up call and then
 ``--calls`` warm calls, and prints one JSON line with a list per metric,
-one entry per call:
+one entry per call. With ``--cold``, ``release_persisted()`` runs after
+every call, so each call recomputes the operator caches (shingle ids,
+signatures) that a warm call reads from the call before it:
 
 - ``plan_gateway_calls``: py4j round trips made while building (not
   running) the ``minhash_neardup_pairs`` plan that ``fuzzy_dedup``
@@ -14,7 +16,7 @@ one entry per call:
   the caller's collect, read from ``statusTracker().getJobIdsForGroup``;
 - ``wall_s``: seconds for that call, collect included.
 
-Usage: ``python tools/profile_fuzzy.py [--seed 1] [--docs 2000] [--calls 3]``
+Usage: ``python tools/profile_fuzzy.py [--seed 1] [--docs 2000] [--calls 3] [--cold]``
 """
 
 from __future__ import annotations
@@ -61,11 +63,14 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--docs", type=int, default=2000)
     ap.add_argument("--calls", type=int, default=3)
+    ap.add_argument("--cold", action="store_true",
+                    help="release operator caches between calls")
     args = ap.parse_args()
 
     from gen import Corpus
 
     from rehiver_spark import get_spark
+    from rehiver_spark.session import release_persisted
     from rehiver_spark.operators.dedup import (
         exact_dedup, fuzzy_dedup, minhash_neardup_pairs,
     )
@@ -73,7 +78,7 @@ def main() -> None:
     spark = get_spark(app_name="profile-fuzzy")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
-    out = {"seed": args.seed, "docs": args.docs, "plan_gateway_calls": [],
+    out = {"seed": args.seed, "docs": args.docs, "cold": args.cold, "plan_gateway_calls": [],
            "plan_build_s": [], "jobs_per_call": [], "wall_s": []}
     with tempfile.TemporaryDirectory(prefix="profile-fuzzy-") as tmp:
         path = os.path.join(tmp, "corpus")
@@ -94,6 +99,8 @@ def main() -> None:
             wall_s = time.perf_counter() - t0
             sc.setLocalProperty("spark.jobGroup.id", None)
             kept.unpersist()
+            if args.cold:
+                release_persisted()
             if call == 0:
                 continue  # warm-up
             out["plan_gateway_calls"].append(n[0])

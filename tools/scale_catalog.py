@@ -4,8 +4,8 @@ Replicates the sf0.1 lineitem-derived snapshots 10x (unique keys per
 replica) and times detect_changes / dedup_catalog / snapshot commit at
 both scales. Ad-hoc evidence generator for BASELINE.md — not shipped.
 """
-import sys, time, tempfile
-sys.path.insert(0, "/root/repo")
+import os, sys, time, tempfile
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 from rehiver_spark.session import get_spark
 from rehiver_spark.queries.r_ops import _snapshots, _objects

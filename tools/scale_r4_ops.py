@@ -13,8 +13,8 @@ each operator's 100 TB failure mode:
 - X30 z-order write: grow rows 10x — one range shuffle + sort, should
   track input near-linearly; skip fraction must hold at scale.
 """
-import sys, time, tempfile
-sys.path.insert(0, "/root/repo")
+import os, sys, time, tempfile
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 from rehiver_spark.session import get_spark
 from rehiver_spark.operators.dedup import (
