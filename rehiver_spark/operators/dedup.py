@@ -25,6 +25,11 @@ CACHING CONTRACT: the prefix-Jaccard, MinHash and SimHash pair
 operators persist their shingle/signature projection because the
 plan reads it 2-4 times (candidate generation plus both verify sides);
 dropping the cache measures 8-24% slower (x2 +20%, x8 +24% at sf0.1).
+Each persists ONE relation per call: for ``minhash_neardup_pairs``
+that is ``(_id, shingle ids, sig)`` from one projection, read by the
+band self-join and by both sides of its two verify joins; its
+candidates need no ``distinct`` (each pair leaves the band join once,
+at its first colliding band), so nothing else is cached or shuffled.
 The returned DataFrames are lazy, so these handles cannot be
 unpersisted in-function; every one is registered through
 ``session.track_persist``, so a long-lived session releases exactly
@@ -148,6 +153,26 @@ def shingles(col: Column | str, k: int = 3) -> Column:
     return on_tokens(col, _shingles_sql("t", k))
 
 
+def _verify_sql(sha: str, shb: str, n_a: str, n_b: str, threshold: float) -> str:
+    """Spark SQL generator of the exact Jaccard verify over a candidate
+    row: ``inline`` of a zero- or one-element array of
+    ``struct(n_common, n_a, n_b)`` that keeps the row iff
+    ``n_common / (n_a + n_b - n_common) >= threshold``, with ``n_common
+    = size(array_intersect(sha, shb))``.
+
+    Written as a Filter + projection, the intersection is computed three
+    times per candidate: the optimizer pushes the threshold filter into
+    the verify join's condition (two copies: numerator and denominator)
+    and the projection computes it again. A generator is a barrier the
+    optimizer does not push through, so the struct is built once and
+    filtered inside the one ``Generate`` node."""
+    return (
+        f"inline(filter(array(named_struct('n_common', size(array_intersect({sha}, {shb})), "
+        f"'n_a', {n_a}, 'n_b', {n_b})), "
+        f"s -> s.n_common / (s.n_a + s.n_b - s.n_common) >= {float(threshold)!r}D))"
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -263,17 +288,11 @@ def jaccard_pairs(
     )
     a = sized.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"), F.col("_n").alias("n_a"))
     b = sized.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"), F.col("_n").alias("n_b"))
-    verified = (
+    return (
         cand.join(a, "id_a")
         .join(b, "id_b")
-        .withColumn("n_common", F.size(F.array_intersect("_sha", "_shb")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-    )
-    return verified.filter(F.col("jaccard") >= F.lit(threshold)).select(
-        "id_a", "id_b", "n_common", "n_a", "n_b", "jaccard"
+        .selectExpr("id_a", "id_b", _verify_sql("_sha", "_shb", "n_a", "n_b", threshold))
+        .selectExpr("*", "n_common / (n_a + n_b - n_common) AS jaccard")
     )
 
 
@@ -436,24 +455,79 @@ def minhash_signatures(
     )
 
 
-def _band_keys(sig_col: str, num_hashes: int, bands: int) -> Column:
-    """ARRAY<STRUCT<band INT, bh BIGINT>> of LSH band bucket keys over
-    the minhash signature in column ``sig_col`` — the ONE definition of
-    banding, shared by the batch self-join (:func:`lsh_candidates`) and
-    the incremental index join (:func:`incremental_minhash_neardup`) so
-    the two paths can never diverge on how a band hashes. The bucket
-    key is xxhash64 of the band's signature values: it is an internal
-    join key, so only tuple equality matters. One SQL expression, one
-    gateway call (see ``textops.sql_name``)."""
+def _band_keys_sql(sig_col: str, num_hashes: int, bands: int) -> str:
+    """Spark SQL text of the ARRAY<BIGINT> of LSH band bucket keys over
+    the minhash signature in column ``sig_col``, one key per band: key
+    j is ``xxhash64(j, v_1..v_r)`` over band j's r signature values. The
+    ONE definition of banding, shared by the batch self-join
+    (:func:`_lsh_band_candidates`) and the incremental index join
+    (:func:`incremental_minhash_neardup`), so the two paths can never
+    diverge on how a band hashes. Folding the band number into the hash
+    makes the bucket join a single-BIGINT-key join (a long-keyed hashed
+    relation, where the ``(band INT, bh BIGINT)`` two-key form built a
+    generic one: 64.5 MiB for the 15,680 band rows of the perfbench
+    corpus). Keys are internal join keys, so only equality matters; a
+    cross-band hash collision is harmless (:func:`_first_band_sql`).
+
+    A NULL signature (NULL text) has a NULL key array, so it has no
+    band: ``xxhash64`` skips NULL inputs, so its keys would otherwise be
+    the same constant per band and every NULL row would collide with
+    every other in every band (2,000 NULL rows made 1,999,000 candidate
+    pairs). This is an expression, not a ``sig IS NOT NULL`` filter,
+    because the optimizer pushes such a filter below an uncached
+    signature projection (``minhash_index``), which then computes every
+    signature twice."""
     sig = sql_name(sig_col)
     r = num_hashes // bands
-    structs = ", ".join(
-        f"struct({bi} AS band, xxhash64("
+    keys = ", ".join(
+        f"xxhash64({bi}, "
         + ", ".join(f"element_at({sig}, {bi * r + j + 1})" for j in range(r))
-        + ") AS bh)"
+        + ")"
         for bi in range(bands)
     )
-    return F.expr(f"array({structs})")
+    return f"if({sig} IS NULL, NULL, array({keys}))"
+
+
+def _first_band_sql(bks_probe: str, bks_build: str, band: str) -> str:
+    """Spark SQL predicate of the first-colliding-band rule over a band
+    bucket join row: the probe row exploded band ``band`` (0-based) of
+    its key array ``bks_probe``, the build row carries its whole key
+    array ``bks_build``, and the row survives only when ``band`` is the
+    FIRST band where the two key arrays agree.
+
+    Each candidate pair therefore comes out of the join exactly once,
+    with no ``distinct`` and no shuffle, provided the build side is
+    exploded over ``array_distinct`` of its keys (one build row per
+    distinct key and id — :func:`_banded`) and the ids are unique. The
+    predicate also excludes cross-band hash collisions: it requires
+    ``bks_build[band] = bks_probe[band]``, the probe's own join key."""
+    return (
+        f"array_position(zip_with({bks_probe}, {bks_build}, (x, y) -> x = y), true) "
+        f"= {band} + 1"
+    )
+
+
+def _banded(sigs: DataFrame, id_col: str, num_hashes: int, bands: int, id_as: str,
+            bks_as: str, *, probe: bool, keep: tuple[str, ...] = ()) -> DataFrame:
+    """Band bucket rows of the ``(id_col, sig)`` relation ``sigs``:
+    ``(id_as, *keep, bks_as, bk)``, plus ``_band`` on the probe side;
+    ``keep`` are SQL select items. A probe row per band
+    (``posexplode``); a build row per DISTINCT key, the form
+    :func:`_first_band_sql` needs for exactly-once output. A NULL
+    signature has a NULL key array (:func:`_band_keys_sql`): no build
+    row, and one probe row with a NULL ``bk`` that joins nothing. SQL
+    text throughout, one gateway call per step (see
+    ``textops.sql_name``)."""
+    keyed = sigs.selectExpr(
+        f"{sql_name(id_col)} AS {id_as}", *keep,
+        f"{_band_keys_sql('sig', num_hashes, bands)} AS {bks_as}",
+    )
+    if probe:
+        # _outer keeps the optimizer from inferring a size() > 0 filter
+        # that it would push below the projection, computing the band
+        # keys twice
+        return keyed.selectExpr("*", f"posexplode_outer({bks_as}) AS (_band, bk)")
+    return keyed.selectExpr("*", f"explode(array_distinct({bks_as})) AS bk")
 
 
 def lsh_candidates(
@@ -464,14 +538,20 @@ def lsh_candidates(
     bands: int = 8,
     seed: int = 42,
 ) -> DataFrame:
-    """Candidate pairs whose MinHash signatures collide in ≥1 LSH band.
+    """Candidate pairs whose MinHash signatures collide in ≥1 LSH band,
+    each pair once, as ``(id_a, id_b)`` with ``id_a < id_b``.
+
+    PRECONDITION: ``id_col`` is unique. Pairs are emitted once per pair
+    of ROWS, so a repeated id repeats its pairs.
 
     bands=b over r=num_hashes/b rows → collision prob ≈ 1-(1-J^r)^b.
-    Plan: explode to (band, band_hash) keys → self-join on the band
-    bucket → distinct pairs. One shuffle on the bucket key; hot buckets
-    are bounded by band width (r rows hashed together). The band bucket
-    key is xxhash64 of the band's signature values — it is an internal
-    join key, so only tuple equality matters.
+    A row with a NULL signature (NULL shingles) has no band and is in no
+    pair. Plan: one single-BIGINT-key self-join on the band bucket
+    (:func:`_band_keys_sql`), each joined row kept only at the pair's first
+    colliding band (:func:`_first_band_sql`) — no ``distinct``, so
+    candidate generation is shuffle-free at small scale (broadcast) and
+    one sort-merge exchange at large scale. Hot buckets are bounded by
+    band width (r rows hashed together).
     """
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
@@ -487,26 +567,25 @@ def _lsh_band_candidates(
     sigs: DataFrame, id_col: str, num_hashes: int, bands: int,
     prefer_merge: bool = False,
 ) -> DataFrame:
-    """Distinct candidate pairs from a precomputed ``(id, sig)``
+    """Candidate pairs ``(id_a, id_b)`` from a precomputed ``(id, sig)``
     relation — the banding half of :func:`lsh_candidates`, split out so
-    :func:`minhash_neardup_pairs` can reuse ONE signature computation
-    for banding AND the estimate pre-filter (r12)."""
-    banded = sigs.select(
-        F.col(id_col).alias("_id"),
-        F.explode(_band_keys("sig", num_hashes, bands)).alias("b"),
-    ).select("_id", "b.band", "b.bh")
-    a = banded.withColumnRenamed("_id", "id_a")
-    b = banded.withColumnRenamed("_id", "id_b")
+    :func:`minhash_neardup_pairs` bands its one cached relation.
+
+    PRECONDITION: the ids are unique. Each pair comes out exactly once,
+    at its first colliding band (:func:`_first_band_sql`), so there is
+    no ``distinct``: at sf10 that aggregate shuffled every band
+    collision. NULL signatures have no band (:func:`_banded`)."""
+    a = _banded(sigs, id_col, num_hashes, bands, "id_a", "_bka", probe=True)
+    b = _banded(sigs, id_col, num_hashes, bands, "id_b", "_bkb", probe=False)
     # prefer_merge (r13): the banded relation is corpus-sized × bands
     # (sf10: 5M rows, 472 MiB actually built) — see the _big_corpus
     # module comment for why big corpora must force sort-merge here.
     if prefer_merge:
         b = b.hint("merge")
     return (
-        a.join(b, ["band", "bh"])
-        .filter("id_a < id_b")
+        a.join(b, "bk")
+        .filter(f"id_a < id_b AND {_first_band_sql('_bka', '_bkb', '_band')}")
         .select("id_a", "id_b")
-        .distinct()
     )
 
 
@@ -540,13 +619,25 @@ def minhash_neardup_pairs(
     prefix join in ``jaccard_pairs`` touches every pair that shares a
     prefix shingle, LSH touches only banding collisions.
 
-    Estimate gate (r12): before the exact verification join touches the
+    PRECONDITION: ``id_col`` is unique (see :func:`lsh_candidates`).
+
+    Plan: ONE persisted relation ``(_id, _sh, sig)`` — the shingle ids
+    and the signature from one projection — feeds the band self-join
+    (:func:`_lsh_band_candidates`: one BIGINT key, each candidate once
+    at its first colliding band, no ``distinct``) and both sides of the
+    verify, ``cand ⋈ side_a ⋈ side_b``: two joins, where two cached
+    relations took four. On the 2k-doc perfbench corpus a warm
+    ``fuzzy_dedup`` call ran 10 → 7 jobs and broadcast 75.5 → 19.5 MiB.
+
+    Estimate gate (r12): before the exact verification touches the
     wide shingle arrays, candidates are pre-filtered on the
     SIGNATURE-estimated Jaccard at ``threshold - margin`` — the
-    signatures are already computed for banding, so the gate costs two
-    narrow sig joins and saves the per-pair ``array_intersect`` for the
-    banding false positives (bands=8/r=4 collides ~40% of J=0.5 pairs
-    that the exact filter then discards). The margin scales with
+    signatures are already computed for banding, and the gate runs in
+    the verify join's condition, so it saves the per-pair
+    ``array_intersect`` (computed once per gated candidate,
+    :func:`_verify_sql`) for the banding false positives (bands=8/r=4
+    collides ~40% of J=0.5 pairs that the exact filter then discards).
+    The margin scales with
     ``num_hashes``: the estimator's sd at the threshold is
     ~sqrt(t(1-t)/num_hashes) (binomial on matching components), so
     margin = 3.5·sqrt(threshold·(1-threshold)/num_hashes) — 0.2475 at
@@ -566,8 +657,9 @@ def minhash_neardup_pairs(
     builder (:func:`_sketch_sql`; bit-identical to
     :func:`minhash_signature` over the string shingles), and the verify
     join ships and intersects ``array<bigint>`` instead of string arrays
-    (each of the two verify broadcasts of the perfbench seed-1 corpus
-    shrank 32.0 → 4.0 MiB, built in 24–80 instead of 137–153 ms). Scores are exact unless two distinct shingles of one pair
+    (each verify broadcast of the shingle arrays of the perfbench seed-1
+    corpus shrank 32.0 → 4.0 MiB, built in 24–80 instead of 137–153
+    ms). Scores are exact unless two distinct shingles of one pair
     share a 60-bit id: for a union of u shingles that chance is about
     u²/2⁶¹ (~10⁻¹³ at u = 500), and a collision can only raise
     ``n_common`` by merging two shingles.
@@ -576,46 +668,34 @@ def minhash_neardup_pairs(
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     ids = on_tokens(text_col, _shingle_ids_sql(_shingles_sql("t", k), seed))
-    sh = track_persist(
-        ensure_parallelism(df).select(F.col(id_col).alias("_id"), ids.alias("_sh"))
-    )  # read by the signatures AND both verify sides
-    sigs = track_persist(
-        sh.select("_id", F.expr(_sketch_sql("_sh", num_hashes, seed)).alias("sig"))
-    )  # read by banding and both estimate sides
+    # ONE cached relation (_id, _sh, sig): the sketch reads _sh, and
+    # CollapseProject keeps the two projections apart because _sh is read
+    # twice, so the ids are hashed once per row
+    rel = track_persist(
+        ensure_parallelism(df)
+        .select(F.col(id_col).alias("_id"), ids.alias("_sh"))
+        .selectExpr("_id", "_sh", f"{_sketch_sql('_sh', num_hashes, seed)} AS sig")
+    )  # read by banding and both verify sides
     big = _big_corpus(df)
-    cand = _lsh_band_candidates(sigs, "_id", num_hashes, bands, prefer_merge=big)
-    sa = sigs.withColumnsRenamed({"_id": "id_a", "sig": "_siga"})
-    sb = sigs.withColumnsRenamed({"_id": "id_b", "sig": "_sigb"})
+    cand = _lsh_band_candidates(rel, "_id", num_hashes, bands, prefer_merge=big)
+    sa = rel.selectExpr("_id AS id_a", "_sh AS _sha", "sig AS _siga")
+    sb = rel.selectExpr("_id AS id_b", "_sh AS _shb", "sig AS _sigb")
     if big:
         # r13: the sig relation's 32-long arrays build a 288 MiB
         # broadcast map (×2) at sf10 under the misestimate; SMJ
         # measured 2.51 vs 3.17 s on warm candidates (see
         # OPTIMIZATION_r13.md §12)
         sa, sb = sa.hint("merge"), sb.hint("merge")
-    cand = (
+    gated = (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .filter(
-            sig_est_jaccard("_siga", "_sigb", num_hashes) >= F.lit(threshold - margin)
-        )
-        .select("id_a", "id_b")
+        .filter(sig_est_jaccard("_siga", "_sigb", num_hashes) >= F.lit(threshold - margin))
     )
-    a = sh.withColumnsRenamed({"_id": "id_a", "_sh": "_sha"})
-    b = sh.withColumnsRenamed({"_id": "id_b", "_sh": "_shb"})
     # SQL text, like the sketch builders: a handful of gateway calls
     # where a withColumn chain makes ~150 (see textops.sql_name)
-    verified = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .selectExpr(
-            "id_b", "id_a", "size(array_intersect(_sha, _shb)) AS n_common",
-            "size(_sha) AS n_a", "size(_shb) AS n_b",
-        )
-        .selectExpr("*", "n_common / (n_a + n_b - n_common) AS jaccard")
-    )
-    return verified.filter(f"jaccard >= {float(threshold)!r}D").select(
-        "id_a", "id_b", "n_common", "n_a", "n_b", "jaccard"
-    )
+    return gated.selectExpr(
+        "id_a", "id_b", _verify_sql("_sha", "_shb", "size(_sha)", "size(_shb)", threshold)
+    ).selectExpr("*", "n_common / (n_a + n_b - n_common) AS jaccard")
 
 
 def _cc_driver(spark, e: DataFrame, id_type, max_iter: int) -> DataFrame:
@@ -1496,36 +1576,35 @@ def incremental_minhash_neardup(
     falls back to a shuffle join instead of broadcasting something
     executor-memory-sized.
 
+    PRECONDITION: ``id_col`` is unique in the batch and in the index;
+    each (batch, corpus) pair is emitted once per pair of rows. Rows
+    with a NULL signature (NULL text) have no band and match nothing.
+
     Output: (batch ``id_col``, ``corpus_id``, ``est_jaccard``).
     """
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
 
-    def banded(sigs: DataFrame, id_alias: str, with_sig: bool) -> DataFrame:
-        cols = [F.col(id_col).alias(id_alias)]
-        if with_sig:
-            cols.append(F.col("sig").alias(f"_sig_{id_alias}"))
-        cols.append(F.explode(_band_keys("sig", num_hashes, bands)).alias("b"))
-        out_cols = [id_alias] + ([f"_sig_{id_alias}"] if with_sig else [])
-        return sigs.select(*cols).select(*out_cols, "b.band", "b.bh")
-
     bsig = track_persist(
         minhash_index(batch, id_col, text_col, k, num_hashes, seed)
-    )  # read by the band-key broadcast AND the post-distinct re-attach
+    )  # read by the band-key broadcast AND the sig re-attach
     # r13: broadcast the batch's band keys WITHOUT its signature — the
     # 32-long sig array dominated the broadcast (sf10 fixture: 733k
     # band rows built a 280 MiB map; the narrow keys are ~17 MiB) and
-    # rode through the band join AND the candidate distinct for every
-    # collision. The batch sig is re-attached to the (candidate-sized)
-    # distinct output instead; signatures are deterministic per id, so
-    # the pair set and estimates are bit-identical.
-    bb = banded(bsig, "batch_id", with_sig=False)
-    ib = banded(index.select(F.col(id_col), "sig"), "corpus_id", with_sig=True)
+    # rode through the band join for every collision. The batch sig is
+    # re-attached to the (candidate-sized) join output instead;
+    # signatures are deterministic per id, so the pair set and
+    # estimates are bit-identical. Each (batch, corpus) pair leaves the
+    # band join once, at its first colliding band (_first_band_sql), so
+    # there is no distinct.
+    bb = _banded(bsig, id_col, num_hashes, bands, "batch_id", "_bkb", probe=False)
+    ib = _banded(index, id_col, num_hashes, bands, "corpus_id", "_bki", probe=True,
+                 keep=("sig AS _sig_corpus_id",))
     small = not _big_corpus(batch)
     cand = (
-        ib.join(F.broadcast(bb) if small else bb, ["band", "bh"])
+        ib.join(F.broadcast(bb) if small else bb, "bk")
+        .filter(_first_band_sql("_bki", "_bkb", "_band"))
         .select("batch_id", "corpus_id", "_sig_corpus_id")
-        .distinct()
     )
     bsig_b = bsig.select(F.col(id_col).alias("batch_id"), F.col("sig").alias("_sig_batch_id"))
     cand = cand.join(F.broadcast(bsig_b) if small else bsig_b, "batch_id")

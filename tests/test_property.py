@@ -734,6 +734,74 @@ def test_minhash_est_gate_subset_property(spark, texts, threshold):
         assert v == exact[k][3] and v >= threshold
 
 
+
+def _py_band_collisions(sigs, bands):
+    """Pure-Python LSH reference: the DISTINCT id pairs (a < b) whose
+    signatures agree on every component of at least one band. A NULL
+    signature has no band."""
+    out = set()
+    items = [(i, s) for i, s in sigs.items() if s is not None]
+    for i, si in items:
+        r = len(si) // bands
+        for j, sj in items:
+            if i < j and any(si[b * r:(b + 1) * r] == sj[b * r:(b + 1) * r] for b in range(bands)):
+                out.add((i, j))
+    return out
+
+
+@st.composite
+def planted_signatures(draw):
+    """8-component signatures in 4 bands of 2, over a 6-value alphabet
+    (so unplanted band collisions happen too), with whole bands copied
+    from one row to another: several bands, all bands, band 0 only or
+    the last band only; plus a few NULL signatures. Ids are unique and
+    not in row order."""
+    n = draw(st.integers(2, 12))
+    sigs = [draw(st.lists(st.integers(0, 5), min_size=8, max_size=8)) for _ in range(n)]
+    for _ in range(draw(st.integers(0, 5))):
+        i, j = draw(st.integers(0, n - 1)), draw(st.integers(0, n - 1))
+        mode = draw(st.sampled_from(["several", "all", "first", "last"]))
+        planted = {
+            "several": draw(st.sets(st.integers(0, 3), min_size=2, max_size=3)),
+            "all": range(4), "first": [0], "last": [3],
+        }[mode]
+        for b in planted:
+            sigs[j][2 * b:2 * b + 2] = sigs[i][2 * b:2 * b + 2]
+    sigs += [None] * draw(st.integers(0, 2))
+    ids = draw(st.permutations(range(100, 100 + len(sigs))))
+    return dict(zip(ids, sigs))
+
+
+@settings(max_examples=20, deadline=None)
+@given(planted_signatures())
+def test_first_colliding_band_equals_distinct_band_collisions(spark, sigs):
+    """The first-colliding-band rule emits each candidate pair exactly
+    once (no duplicate rows, so no ``distinct`` is needed) and the set
+    equals the distinct set of all band collisions."""
+    from rehiver_spark.operators.dedup import _lsh_band_candidates
+
+    df = spark.createDataFrame(list(sigs.items()), "id long, sig array<bigint>")
+    rows = [tuple(r) for r in _lsh_band_candidates(df, "id", 8, 4).collect()]
+    assert len(rows) == len(set(rows)), rows
+    assert set(rows) == _py_band_collisions(sigs, 4)
+
+
+@settings(max_examples=8, deadline=None)
+@given(SKETCH_ROWS)
+def test_lsh_candidates_are_distinct_band_collisions(spark, texts):
+    """``lsh_candidates`` over texts with repeats (equal in every band),
+    NULLs and near-empty rows returns no duplicate rows, and exactly
+    the pairs whose signatures collide in some band."""
+    from rehiver_spark.operators.dedup import lsh_candidates, minhash_signatures, shingles
+
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    ).select("doc_id", shingles("text", 3).alias("shingles"))
+    sigs = {r[0]: r[1] for r in minhash_signatures(df, "doc_id", "shingles", 16).collect()}
+    rows = [tuple(r) for r in lsh_candidates(df, num_hashes=16, bands=8).collect()]
+    assert len(rows) == len(set(rows)), rows
+    assert set(rows) == _py_band_collisions(sigs, 8)
+
 # Values at the hive-partition rail boundary: signs, `_`, non-ASCII
 # digits, %-escapes (well-formed, lone and malformed), `+`, `=`, a raw
 # newline, the literal `null` and the empty string

@@ -14,7 +14,12 @@ signatures) that a warm call reads from the call before it:
 - ``plan_build_s``: seconds spent building that plan;
 - ``jobs_per_call``: Spark jobs of one ``fuzzy_dedup`` call including
   the caller's collect, read from ``statusTracker().getJobIdsForGroup``;
-- ``wall_s``: seconds for that call, collect included.
+- ``wall_s``: seconds for that call, collect included;
+- ``broadcast_bytes``: bytes broadcast by that call, the sum of the
+  ``data size`` SQL metric of every ``BroadcastExchange`` in the SQL
+  executions it started, read from the SQL status store (the metric is
+  stored formatted, e.g. ``64.5 MiB``, so the sum is good to 0.1 of the
+  unit each value is printed in).
 
 Usage: ``python tools/profile_fuzzy.py [--seed 1] [--docs 2000] [--calls 3] [--cold]``
 """
@@ -25,6 +30,7 @@ import argparse
 import contextlib
 import json
 import os
+import re
 import sys
 import tempfile
 import time
@@ -58,6 +64,42 @@ def count_gateway_calls(spark):
         del client.send_command
 
 
+_UNITS = {"B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30, "TiB": 1 << 40}
+
+
+def scala_items(seq):
+    """Python list of the elements of a Scala collection over py4j."""
+    it, out = seq.iterator(), []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def broadcast_bytes(spark, after: int) -> tuple[int, int]:
+    """``(bytes, last)``: the sum of the ``BroadcastExchange`` ``data
+    size`` SQL metric over the SQL executions with an id above
+    ``after``, and the highest execution id seen (pass it as ``after``
+    next time)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    total, last = 0, after
+    for ex in scala_items(store.executionsList()):
+        eid = ex.executionId()
+        if eid <= after:
+            continue
+        last = max(last, eid)
+        values = {kv._1(): kv._2() for kv in scala_items(store.executionMetrics(eid))}
+        for node in scala_items(store.planGraph(eid).allNodes()):
+            if node.name() != "BroadcastExchange":
+                continue
+            for m in scala_items(node.metrics()):
+                value = values.get(m.accumulatorId()) if m.name() == "data size" else None
+                hit = re.fullmatch(r"([\d.]+) (\w+)", value or "")
+                if hit:
+                    total += int(float(hit.group(1)) * _UNITS[hit.group(2)])
+    return total, last
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--seed", type=int, default=1)
@@ -79,7 +121,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     out = {"seed": args.seed, "docs": args.docs, "cold": args.cold, "plan_gateway_calls": [],
-           "plan_build_s": [], "jobs_per_call": [], "wall_s": []}
+           "plan_build_s": [], "jobs_per_call": [], "wall_s": [], "broadcast_bytes": []}
+    _, seen = broadcast_bytes(spark, -1)
     with tempfile.TemporaryDirectory(prefix="profile-fuzzy-") as tmp:
         path = os.path.join(tmp, "corpus")
         Corpus(args.seed, args.docs).write(path)
@@ -87,6 +130,7 @@ def main() -> None:
             df = spark.read.parquet(path)
             kept = exact_dedup(df).filter("is_keeper").select("doc_id", "text").persist()
             kept.count()
+            _, seen = broadcast_bytes(spark, seen)
             with count_gateway_calls(spark) as n:
                 t0 = time.perf_counter()
                 minhash_neardup_pairs(kept, threshold=JACCARD)
@@ -98,6 +142,7 @@ def main() -> None:
                 "doc_id", "cluster_id", "is_keeper").collect()
             wall_s = time.perf_counter() - t0
             sc.setLocalProperty("spark.jobGroup.id", None)
+            bcast, seen = broadcast_bytes(spark, seen)
             kept.unpersist()
             if args.cold:
                 release_persisted()
@@ -107,6 +152,7 @@ def main() -> None:
             out["plan_build_s"].append(round(build_s, 3))
             out["jobs_per_call"].append(len(sc.statusTracker().getJobIdsForGroup(group)))
             out["wall_s"].append(round(wall_s, 3))
+            out["broadcast_bytes"].append(bcast)
     spark.stop()
     print(json.dumps(out))
 
