@@ -26,12 +26,20 @@ operators persist their shingle/signature projection because the
 plan reads it 2-4 times (candidate generation plus both verify sides);
 dropping the cache measures 8-24% slower (x2 +20%, x8 +24% at sf0.1).
 Each persists ONE relation per call: for ``minhash_neardup_pairs``
-that is ``(_id, shingle ids, sig)`` from one projection, read by the
-band self-join and by both sides of its two verify joins; its
+that is ``(_id, shingle ids, sig)`` from one projection. Below the
+``_big_corpus`` gate and while the band collisions stay under
+``_NEARDUP_DRIVER_CAP``, its driver branch (and ``fuzzy_dedup``'s) reads
+that relation once, in ONE Arrow collect at call time, and finishes
+banding, the estimate gate, the exact verify and the components on the
+driver — eager, with driver memory bounded by the collected relation
+(what the Spark plan's verify broadcasts already ship to the driver)
+plus cap-bounded pair arrays. Otherwise the lazy Spark plan reads it in
+the band self-join and both sides of its two verify joins; its
 candidates need no ``distinct`` (each pair leaves the band join once,
 at its first colliding band), so nothing else is cached or shuffled.
-The returned DataFrames are lazy, so these handles cannot be
-unpersisted in-function; every one is registered through
+The returned DataFrames are lazy (or, on the driver branch, local), so
+these handles cannot be unpersisted in-function; every one is
+registered through
 ``session.track_persist``, so a long-lived session releases exactly
 the operator caches — leaving its own unrelated caches intact — with
 ``rehiver_spark.session.release_persisted()`` (tested in
@@ -46,6 +54,7 @@ from __future__ import annotations
 import logging
 import math
 import os
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -602,6 +611,236 @@ def sig_est_jaccard(sig_a: str, sig_b: str, num_hashes: int) -> Column:
     )
 
 
+# Band-collision budget of the driver branch of the MinHash pair
+# operators (_neardup_on_driver): Σ over bands of C(bucket size, 2), an
+# upper bound on the candidate pairs, read off the bucket sizes before
+# any pair is built. Sized on tools/profile_skew.py (4,000 perfbench docs
+# plus a hot cluster, t = 0.8, 4 cores): at 700 hot docs (1.59M band
+# collisions) a warm driver call and the Spark plan are at parity
+# (pairs 12.0 vs 10.9–12.3 s, fuzzy_dedup 10.7–11.7 vs 11.6–14.8 s;
+# Python VmHWM 217 vs 189 MiB), at 300 the driver wins (1.5–1.9 vs
+# 2.7–2.9 s), and an uncapped draft reached 1.5 GB on 2,000. The cap
+# also bounds a band's pair arrays and keeps the fuzzy_dedup solve
+# within _CC_DRIVER_EDGE_CAP.
+_NEARDUP_DRIVER_CAP = 2_000_000
+# candidate pairs per gate step (two int32 signature gathers each) and
+# shingle ids per exact-verify step (one int64 sort over them), so the
+# driver's working arrays stay a few tens of MiB at any corpus size
+_NEARDUP_GATE_CHUNK = 1 << 16
+_NEARDUP_VERIFY_CHUNK = 1 << 18
+
+
+def _ranges(starts, lens):
+    """The concatenation of ``arange(s, s + n)`` over the int arrays
+    ``starts`` and ``lens``, without a Python loop."""
+    import numpy as np
+
+    ends = np.cumsum(lens)
+    return np.arange(ends[-1] if len(ends) else 0) - np.repeat(ends - lens - starts, lens)
+
+
+def _bucket_pairs(order, starts, sizes):
+    """Row pairs ``(u, v)``, one per pair of rows in each band bucket:
+    bucket i holds rows ``order[starts[i]:starts[i] + sizes[i]]``."""
+    import numpy as np
+
+    pos = _ranges(starts, sizes)
+    after = np.repeat(starts + sizes, sizes) - pos - 1  # bucket mates after pos
+    left = np.repeat(pos, after)
+    return order[left], order[_ranges(pos + 1, after)]
+
+
+def _common_counts(offs, vals, ra, rb):
+    """``size(array_intersect(sh[ra[i]], sh[rb[i]]))`` for every i: the
+    DISTINCT ids common to two rows of the flattened id arrays ``vals``
+    (row r is ``vals[offs[r]:offs[r + 1]]``).
+
+    In steps of at most ``_NEARDUP_VERIFY_CHUNK`` ids, each pair's two
+    rows are laid out side by side, tagged ``2i`` and ``2i + 1``; one
+    argsort numbers the step's distinct ids, and one sort of ``(id
+    number, tag)`` int64 keys puts each id's tags in order, so a
+    distinct common id is exactly one adjacent ``(2i, 2i + 1)`` step,
+    however often it repeats on either side. (A stable argsort of the
+    ids does the same in one step, measured 3.4x slower on 2^20 ids;
+    numbering the ids of all paired rows at once, instead of per step,
+    sorts less on hot clusters but held 57 MiB more at sf1.)"""
+    import numpy as np
+
+    la, lb = offs[ra + 1] - offs[ra], offs[rb + 1] - offs[rb]
+    cuts = np.searchsorted(np.cumsum(la + lb), np.arange(
+        _NEARDUP_VERIFY_CHUNK, int(la.sum() + lb.sum()), _NEARDUP_VERIFY_CHUNK))
+    out = np.zeros(len(ra), np.int32)
+    for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(ra)]):
+        starts = np.column_stack([offs[ra[lo:hi]], offs[rb[lo:hi]]]).ravel()
+        lens = np.column_stack([la[lo:hi], lb[lo:hi]]).ravel()
+        ev = vals[_ranges(starts, lens)]
+        o = np.argsort(ev)
+        ev = ev[o]
+        bits = int(2 * (hi - lo)).bit_length()
+        key = np.cumsum(np.r_[0, ev[1:] != ev[:-1]]) << bits
+        key = np.sort(key | np.repeat(np.arange(2 * (hi - lo)), lens)[o])
+        tag = key & ((1 << bits) - 1)
+        hit = ((key[1:] >> bits) == (key[:-1] >> bits)) & (tag[1:] == tag[:-1] + 1) & (tag[:-1] % 2 == 0)
+        out[lo:hi] = np.bincount(tag[:-1][hit] // 2, minlength=hi - lo)
+    return out
+
+
+class _DriverPairs(NamedTuple):
+    """Verified pairs of :func:`_neardup_on_driver`: ``ids`` are the
+    pairable rows' ids, ``rank`` their places in id order, and ``a``,
+    ``b`` index into them with ``id[a] < id[b]``."""
+
+    ids: object  # pyarrow.Array
+    rank: object  # numpy int64 arrays from here on
+    a: object
+    b: object
+    n_common: object
+    n_a: object
+    n_b: object
+
+
+def _neardup_on_driver(rel, num_hashes, bands, threshold, min_est):
+    """The driver branch of :func:`minhash_neardup_pairs`: ``(pairs,
+    rows, collisions, unique)``, where ``pairs`` is a
+    :class:`_DriverPairs`, or ``None`` when the corpus must take the
+    Spark plan: more band collisions than ``_NEARDUP_DRIVER_CAP``, or a
+    repeated id (``unique`` false), whose per-row output the Spark plan
+    defines and this branch does not reproduce.
+
+    ONE Arrow collect of the cached ``(_id, _sh, sig)`` relation plus
+    its :func:`_band_keys_sql` keys, then numpy with no per-pair Python
+    loop, each step the Spark plan's own rule:
+
+    - candidates: a pair of rows whose keys agree in some band, once, at
+      its first colliding band (:func:`_first_band_sql`), oriented
+      ``id_a < id_b`` by each row's rank in Spark's id order (Arrow sorts
+      strings by UTF-8 bytes, Spark's binary collation). A NULL id or
+      signature pairs with nothing.
+    - the estimate gate: matching signature components / num_hashes
+      ``>= min_est``, the same double comparison as the Spark filter.
+    - the exact verify: ``n_common`` distinct common ids
+      (:func:`_common_counts`), ``n_a``/``n_b`` array sizes, kept iff
+      ``n_common / (n_a + n_b - n_common) >= threshold`` in doubles.
+    """
+    import numpy as np
+    import pyarrow.compute as pc
+
+    # signature components are < 2^31, so INT carries them exactly
+    tbl = rel.selectExpr(
+        "_id", "_sh", "transform(sig, x -> CAST(x AS INT)) AS sig",
+        f"{_band_keys_sql('sig', num_hashes, bands)} AS bks",
+    ).toArrow()
+    # rows with a signature have a band-key array; of those, a row with a
+    # NULL id pairs with nothing either. Row order is kept (no permuted
+    # copies); `rank` is each row's place in Spark's id order
+    rows = np.flatnonzero(tbl.column("bks").is_valid().to_numpy(zero_copy_only=False))
+    m = len(rows)
+    bk = pc.list_flatten(tbl.column("bks")).to_numpy().reshape(m, bands)
+    sig = pc.list_flatten(tbl.column("sig")).to_numpy().reshape(m, num_hashes)
+    ids = tbl.column("_id").take(rows).combine_chunks()
+    if ids.null_count:
+        ok = ids.is_valid()
+        keep = np.flatnonzero(ok.to_numpy(zero_copy_only=False))
+        rows, bk, sig, ids = rows[keep], bk[keep], sig[keep], ids.filter(ok)
+        m = len(rows)
+    sh = tbl.column("_sh").combine_chunks()
+    del tbl  # `sh` is the one copy of the shingle ids from here on
+    offs = np.asarray(sh.offsets, dtype=np.int64)  # `rows` index these
+    vals = np.asarray(sh.values)
+    rank = np.empty(m, np.int64)
+    rank[pc.sort_indices(ids).to_numpy()] = np.arange(m)
+
+    buckets, collisions = [], 0
+    for j in range(bands):
+        o = np.argsort(bk[:, j])
+        key = bk[o, j]
+        starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+        sizes = np.diff(np.r_[starts, m])
+        collisions += int((sizes * (sizes - 1) // 2).sum())
+        buckets.append((o, starts[sizes > 1], sizes[sizes > 1]))
+    unique = pc.count_distinct(ids).as_py() == m
+    if collisions > _NEARDUP_DRIVER_CAP or not unique:
+        return None, m, collisions, unique
+
+    ga, gb = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for j, (o, starts, sizes) in enumerate(buckets):
+        u, v = _bucket_pairs(o, starts, sizes)
+        for lo in range(0, len(u), _NEARDUP_GATE_CHUNK):
+            cu, cv = u[lo:lo + _NEARDUP_GATE_CHUNK], v[lo:lo + _NEARDUP_GATE_CHUNK]
+            if j:  # first colliding band only
+                first = ~(bk[cu, :j] == bk[cv, :j]).any(axis=1)
+                cu, cv = cu[first], cv[first]
+            gate = (sig[cu] == sig[cv]).sum(axis=1) / float(num_hashes) >= min_est
+            cu, cv = cu[gate], cv[gate]
+            swap = rank[cu] > rank[cv]  # orient id_a < id_b
+            ga.append(np.where(swap, cv, cu))
+            gb.append(np.where(swap, cu, cv))
+    a, b = np.concatenate(ga), np.concatenate(gb)
+    ra, rb = rows[a], rows[b]
+    nc = _common_counts(offs, vals, ra, rb)
+    n_a = (offs[ra + 1] - offs[ra]).astype(np.int32)
+    n_b = (offs[rb + 1] - offs[rb]).astype(np.int32)
+    keep = nc / (n_a + n_b - nc) >= float(threshold)
+    return (_DriverPairs(ids, rank, a[keep], b[keep], nc[keep], n_a[keep], n_b[keep]),
+            m, collisions, unique)
+
+
+def _neardup(df, id_col, text_col, k, threshold, num_hashes, bands, seed, caller):
+    """The shared body of :func:`minhash_neardup_pairs` and
+    :func:`fuzzy_dedup`: the verified pairs as a :class:`_DriverPairs`
+    from the driver branch, or as the Spark plan's lazy DataFrame. Logs
+    the dispatch at INFO, in the shape of the connected_components
+    line."""
+    margin = 3.5 * math.sqrt(threshold * (1.0 - threshold) / num_hashes)
+    if num_hashes % bands:
+        raise ValueError("bands must divide num_hashes")
+    ids = on_tokens(text_col, _shingle_ids_sql(_shingles_sql("t", k), seed))
+    # ONE cached relation (_id, _sh, sig): the sketch reads _sh, and
+    # CollapseProject keeps the two projections apart because _sh is read
+    # twice, so the ids are hashed once per row
+    rel = track_persist(
+        ensure_parallelism(df)
+        .select(F.col(id_col).alias("_id"), ids.alias("_sh"))
+        .selectExpr("_id", "_sh", f"{_sketch_sql('_sh', num_hashes, seed)} AS sig")
+    )  # read by the driver collect, or by banding and both verify sides
+    log = logging.getLogger(__name__)
+    big = _big_corpus(df)
+    id_type = df.schema[id_col].dataType
+    # Arrow and Spark order (and tell apart) integral and binary-collated
+    # string ids alike; for float, decimal or collated ids they may not
+    if big or not (isinstance(id_type, _INTEGRAL_TYPES) or id_type == T.StringType()):
+        log.info("%s: %s, rows and band collisions not counted (cap %d) -> %s", caller,
+                 "big corpus" if big else f"{id_type.simpleString()} ids",
+                 _NEARDUP_DRIVER_CAP, "spark")
+    else:
+        found, n_rows, collisions, unique = _neardup_on_driver(
+            rel, num_hashes, bands, threshold, threshold - margin)
+        log.info("%s: %d rows, %d band collisions (cap %d)%s -> %s", caller, n_rows,
+                 collisions, _NEARDUP_DRIVER_CAP, "" if unique else ", repeated ids",
+                 "spark" if found is None else "driver")
+        if found is not None:
+            return found
+    cand = _lsh_band_candidates(rel, "_id", num_hashes, bands, prefer_merge=big)
+    sa = rel.selectExpr("_id AS id_a", "_sh AS _sha", "sig AS _siga")
+    sb = rel.selectExpr("_id AS id_b", "_sh AS _shb", "sig AS _sigb")
+    if big:
+        # r13: the sig relation's 32-long arrays build a 288 MiB
+        # broadcast map (×2) at sf10 under the misestimate; SMJ
+        # measured 2.51 vs 3.17 s on warm candidates (see
+        # OPTIMIZATION_r13.md §12)
+        sa, sb = sa.hint("merge"), sb.hint("merge")
+    gated = (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .filter(sig_est_jaccard("_siga", "_sigb", num_hashes) >= F.lit(threshold - margin))
+    )
+    # SQL text, like the sketch builders: a handful of gateway calls
+    # where a withColumn chain makes ~150 (see textops.sql_name)
+    return gated.selectExpr(
+        "id_a", "id_b", _verify_sql("_sha", "_shb", "size(_sha)", "size(_shb)", threshold)
+    ).selectExpr("*", "n_common / (n_a + n_b - n_common) AS jaccard")
+
+
 def minhash_neardup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -621,13 +860,30 @@ def minhash_neardup_pairs(
 
     PRECONDITION: ``id_col`` is unique (see :func:`lsh_candidates`).
 
-    Plan: ONE persisted relation ``(_id, _sh, sig)`` — the shingle ids
-    and the signature from one projection — feeds the band self-join
-    (:func:`_lsh_band_candidates`: one BIGINT key, each candidate once
-    at its first colliding band, no ``distinct``) and both sides of the
-    verify, ``cand ⋈ side_a ⋈ side_b``: two joins, where two cached
-    relations took four. On the 2k-doc perfbench corpus a warm
-    ``fuzzy_dedup`` call ran 10 → 7 jobs and broadcast 75.5 → 19.5 MiB.
+    Two branches over ONE persisted relation ``(_id, _sh, sig)`` — the
+    shingle ids and the signature from one projection — with the same
+    rules and bit-identical rows; the choice is logged at INFO (rows,
+    band collisions, cap, branch):
+
+    - driver, when ``_big_corpus(df)`` is false and the band collisions
+      (Σ over bands of C(bucket size, 2), counted before any pair is
+      built) are at most ``_NEARDUP_DRIVER_CAP``
+      (:func:`_neardup_on_driver`): ONE Arrow collect of the relation
+      and its band keys, then banding, the estimate gate and the exact
+      verify in vectorized numpy. It is EAGER: the job runs at call
+      time and the returned DataFrame is a local frame of the pairs.
+      Driver memory is the collected relation — what the Spark plan's
+      two verify broadcasts each ship to the driver anyway — plus pair
+      arrays bounded by the cap and the chunk sizes. On the 2k-doc
+      perfbench corpus a warm ``fuzzy_dedup`` call ran 7 → 3 jobs.
+    - Spark, lazy, for big corpora, over-cap (hot) buckets, repeated
+      ids, and ids that are not integral or binary-collated strings: the
+      band self-join (:func:`_lsh_band_candidates`:
+      one BIGINT key, each candidate once at its first colliding band,
+      no ``distinct``) and both sides of the verify, ``cand ⋈ side_a ⋈
+      side_b``: two joins, where two cached relations took four. On the
+      2k-doc perfbench corpus a warm ``fuzzy_dedup`` call ran 10 → 7
+      jobs and broadcast 75.5 → 19.5 MiB.
 
     Estimate gate (r12): before the exact verification touches the
     wide shingle arrays, candidates are pre-filtered on the
@@ -664,91 +920,90 @@ def minhash_neardup_pairs(
     u²/2⁶¹ (~10⁻¹³ at u = 500), and a collision can only raise
     ``n_common`` by merging two shingles.
     """
-    margin = 3.5 * math.sqrt(threshold * (1.0 - threshold) / num_hashes)
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    ids = on_tokens(text_col, _shingle_ids_sql(_shingles_sql("t", k), seed))
-    # ONE cached relation (_id, _sh, sig): the sketch reads _sh, and
-    # CollapseProject keeps the two projections apart because _sh is read
-    # twice, so the ids are hashed once per row
-    rel = track_persist(
-        ensure_parallelism(df)
-        .select(F.col(id_col).alias("_id"), ids.alias("_sh"))
-        .selectExpr("_id", "_sh", f"{_sketch_sql('_sh', num_hashes, seed)} AS sig")
-    )  # read by banding and both verify sides
-    big = _big_corpus(df)
-    cand = _lsh_band_candidates(rel, "_id", num_hashes, bands, prefer_merge=big)
-    sa = rel.selectExpr("_id AS id_a", "_sh AS _sha", "sig AS _siga")
-    sb = rel.selectExpr("_id AS id_b", "_sh AS _shb", "sig AS _sigb")
-    if big:
-        # r13: the sig relation's 32-long arrays build a 288 MiB
-        # broadcast map (×2) at sf10 under the misestimate; SMJ
-        # measured 2.51 vs 3.17 s on warm candidates (see
-        # OPTIMIZATION_r13.md §12)
-        sa, sb = sa.hint("merge"), sb.hint("merge")
-    gated = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(sig_est_jaccard("_siga", "_sigb", num_hashes) >= F.lit(threshold - margin))
-    )
-    # SQL text, like the sketch builders: a handful of gateway calls
-    # where a withColumn chain makes ~150 (see textops.sql_name)
-    return gated.selectExpr(
-        "id_a", "id_b", _verify_sql("_sha", "_shb", "size(_sha)", "size(_shb)", threshold)
-    ).selectExpr("*", "n_common / (n_a + n_b - n_common) AS jaccard")
+    found = _neardup(df, id_col, text_col, k, threshold, num_hashes, bands, seed,
+                     "minhash_neardup_pairs")
+    if isinstance(found, DataFrame):
+        return found
+    import pyarrow as pa
+
+    nc, n_a, n_b = found.n_common, found.n_a, found.n_b
+    schema = T.StructType([
+        T.StructField("id_a", df.schema[id_col].dataType),
+        T.StructField("id_b", df.schema[id_col].dataType),
+        *(T.StructField(c, T.IntegerType()) for c in ("n_common", "n_a", "n_b")),
+        T.StructField("jaccard", T.DoubleType()),
+    ])
+    return df.sparkSession.createDataFrame(pa.table({
+        "id_a": found.ids.take(found.a), "id_b": found.ids.take(found.b),
+        "n_common": nc, "n_a": n_a, "n_b": n_b, "jaccard": nc / (n_a + n_b - nc),
+    }), schema=schema)
 
 
-def _cc_driver(spark, e: DataFrame, id_type, max_iter: int) -> DataFrame:
-    """Driver-side branch of :func:`connected_components`: the SAME
-    pointer-jumped min-label fixpoint, vectorized over numpy arrays.
+def _min_label(a, b, max_iter: int):
+    """The pointer-jumped min-label fixpoint over the pair list
+    ``(a[i], b[i])`` of two numpy arrays, vectorized — the ONE driver
+    solve, shared by :func:`_cc_driver` and :func:`fuzzy_dedup`'s driver
+    branch. Returns ``(nodes, roots, sizes)``: the sorted distinct nodes,
+    each node's component minimum, and that component's size.
 
-    ``e`` is the one-direction, null-free pair list, already
-    materialized by the caller's eager localCheckpoint, so the Arrow
-    collect is a cache read. The solve symmetrizes it itself by
-    concatenating both directions: duplicate and reversed pairs and
-    self-loops repeat an edge or add a node's own label, neither of
-    which changes ``np.minimum.at``, so no ``distinct`` is needed.
-    Labels are INDICES into the sorted node-id array — the minimum
-    index IS the minimum id, so the final ``ids[lab]`` is exactly the
-    distributed branch's per-component min id (string ids included:
-    numpy's sort order on unicode matches Spark's binary-collation
-    ``min``). The returned local frame also carries ``cluster_size``,
-    counted from the converged labels with ``np.bincount``, so
-    :func:`fuzzy_dedup` labels its corpus with one join against it.
-    """
+    The pairs are symmetrized by concatenating both directions:
+    duplicate and reversed pairs and self-loops repeat an edge or add a
+    node's own label, neither of which changes ``np.minimum.at``, so no
+    ``distinct`` is needed. Labels are INDICES into the sorted node
+    array, so the minimum index IS the minimum node; the sizes are an
+    ``np.bincount`` of the converged labels."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    schema = StructType(
-        [
-            StructField("doc_id", id_type),
-            StructField("cluster_id", id_type),
-            StructField("cluster_size", LongType()),
-        ]
-    )
-    tbl = e.toArrow()
-    if tbl.num_rows == 0:
-        return spark.createDataFrame([], schema=schema)
-    fwd = np.asarray(tbl.column("a").to_pandas())
-    rev = np.asarray(tbl.column("b").to_pandas())
-    a = np.concatenate([fwd, rev])
-    b = np.concatenate([rev, fwd])
+    a, b = np.concatenate([a, b]), np.concatenate([b, a])
     # both directions are present now, so every node occurs in `a`
-    ids = np.unique(a)
-    ia = np.searchsorted(ids, a)
-    ib = np.searchsorted(ids, b)
-    lab = np.arange(len(ids), dtype=np.int64)
+    nodes = np.unique(a)
+    ia = np.searchsorted(nodes, a)
+    ib = np.searchsorted(nodes, b)
+    lab = np.arange(len(nodes), dtype=np.int64)
     for _ in range(max_iter):
         new = lab.copy()
         np.minimum.at(new, ia, lab[ib])  # neighbor propagation
         new = np.minimum(new, new[new])  # pointer jump (chains halve)
         if np.array_equal(new, lab):
-            size = np.bincount(lab, minlength=len(ids))[lab]
-            out = pd.DataFrame({"doc_id": ids, "cluster_id": ids[lab], "cluster_size": size})
-            return spark.createDataFrame(out, schema=schema)
+            return nodes, nodes[lab], np.bincount(lab, minlength=len(nodes))[lab]
         lab = new
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+
+
+def _cc_frame(spark, id_type, nodes, roots, sizes) -> DataFrame:
+    """The local ``(doc_id, cluster_id, cluster_size)`` frame of a
+    :func:`_min_label` solve over ids of Spark type ``id_type``."""
+    import pandas as pd
+
+    schema = T.StructType([
+        T.StructField("doc_id", id_type),
+        T.StructField("cluster_id", id_type),
+        T.StructField("cluster_size", T.LongType()),
+    ])
+    if len(nodes) == 0:
+        return spark.createDataFrame([], schema=schema)
+    out = pd.DataFrame({"doc_id": nodes, "cluster_id": roots, "cluster_size": sizes})
+    return spark.createDataFrame(out, schema=schema)
+
+
+def _cc_driver(spark, e: DataFrame, id_type, max_iter: int) -> DataFrame:
+    """Driver-side branch of :func:`connected_components`: the SAME
+    pointer-jumped min-label fixpoint, vectorized (:func:`_min_label`).
+
+    ``e`` is the one-direction, null-free pair list, already
+    materialized by the caller's eager localCheckpoint, so the Arrow
+    collect is a cache read. The solve's minimum node is exactly the
+    distributed branch's per-component min id (string ids included:
+    numpy's sort order on unicode matches Spark's binary-collation
+    ``min``). The returned local frame also carries ``cluster_size``,
+    so :func:`fuzzy_dedup` labels its corpus with one join against it.
+    """
+    import numpy as np
+
+    tbl = e.toArrow()
+    fwd = np.asarray(tbl.column("a").to_pandas())
+    rev = np.asarray(tbl.column("b").to_pandas())
+    return _cc_frame(spark, id_type, *_min_label(fwd, rev, max_iter))
 
 
 # directed-edge budget of the driver solve is 2× this (both directions
@@ -1322,13 +1577,30 @@ def fuzzy_dedup(
     cap) they come with the local solve's result, so labeling is that
     one join and nothing else; on the distributed branch a ``groupBy``
     over the component map adds them.
+
+    On the driver branch of :func:`minhash_neardup_pairs` (same
+    dispatch rule, one INFO record naming ``fuzzy_dedup``) the verified
+    pairs are already numpy arrays on the driver, so the components are
+    the same :func:`_min_label` solve run straight on them, with no
+    checkpoint and no second collect. That part is EAGER: the collect
+    runs at call time. A warm call, collect included, runs 3 jobs where
+    the Spark branch runs 7 (perfbench seed-1 corpus, 2k docs).
     """
     if keep not in ("min_id", "longest"):
         raise ValueError(f"keep must be 'min_id' or 'longest', got {keep!r}")
-    pairs = minhash_neardup_pairs(
-        df, id_col, text_col, k, threshold, num_hashes, bands, seed
-    )
-    comp = _components(pairs).withColumnsRenamed({"doc_id": id_col})
+    found = _neardup(df, id_col, text_col, k, threshold, num_hashes, bands, seed,
+                     "fuzzy_dedup")
+    if isinstance(found, DataFrame):
+        comp = _components(found)
+    else:  # the pairs are on the driver already: solve them there
+        import numpy as np
+
+        # solved over id ranks, so the minimum node is the minimum id
+        nodes, roots, sizes = _min_label(found.rank[found.a], found.rank[found.b], 25)
+        by_rank = found.ids.take(np.argsort(found.rank))
+        comp = _cc_frame(df.sparkSession, df.schema[id_col].dataType,
+                         by_rank.take(nodes).to_pandas(), by_rank.take(roots).to_pandas(), sizes)
+    comp = comp.withColumnsRenamed({"doc_id": id_col})
     if "cluster_size" not in comp.columns:  # distributed branch
         sizes = comp.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
         comp = comp.join(sizes, "cluster_id")

@@ -211,8 +211,8 @@ def test_sketch_builders_take_column_names_only(spark):
 
 
 def test_minhash_neardup_plan_build_gateway_budget(spark):
-    """Building (not running) the near-dup plan costs a bounded number
-    of py4j round trips: the sketch expressions are one SQL string each.
+    """A near-dup call costs a bounded number of py4j round trips: the
+    sketch expressions are one SQL string each.
     Built node by node over the Column API the same plan made ~2,880.
     Object-release commands are not counted — py4j's finalizer thread
     sends them later, in batches that vary run to run."""
@@ -723,14 +723,44 @@ def test_fuzzy_dedup_keep_longest(spark):
         fuzzy_dedup(df, keep="newest")
 
 
+def on_pair_branch(branch, run):
+    """Return ``run()`` with the MinHash pair operators on ``branch``:
+    "driver" (as dispatched under the cap, asserted), "spark" (the
+    broadcast plan: band-collision cap below zero) or "merge" (the
+    big-corpus sort-merge plan: size gate at zero). Off "merge" the size
+    gate is above any estimate: a DataFrame made by ``createDataFrame``
+    estimates Long.MaxValue bytes, so it is otherwise a big corpus. Each
+    call's INFO dispatch record must name the branch. Hypothesis-safe
+    (no function-scoped fixture)."""
+    import logging
+    from unittest import mock
+
+    from rehiver_spark.operators import dedup
+
+    cap = -1 if branch == "spark" else dedup._NEARDUP_DRIVER_CAP
+    gate = 0 if branch == "merge" else 1 << 63
+    log = logging.getLogger(dedup.__name__)
+    with mock.patch.object(dedup, "_NEARDUP_DRIVER_CAP", cap), mock.patch.object(
+        dedup, "_SELFJOIN_MERGE_MIN_EST_BYTES", gate
+    ), mock.patch.object(log, "info", wraps=log.info) as info:
+        out = run()
+    taken = [c.args[-1] for c in info.call_args_list if "band collisions" in c.args[0]]
+    assert taken and set(taken) == {"driver" if branch == "driver" else "spark"}, info.call_args_list
+    return out
+
+
 def fuzzy_rows(branch, df):
     """``fuzzy_dedup`` rows by id on connected-components ``branch``
-    (see :func:`on_cc_branch`)."""
-    from rehiver_spark.operators.dedup import fuzzy_dedup
+    (see :func:`on_cc_branch`), which only the Spark pair branch reaches:
+    the driver pair branch solves its own pairs."""
+    from unittest import mock
 
-    return on_cc_branch(branch, lambda: {
-        r["doc_id"]: r for r in fuzzy_dedup(df, threshold=0.5).collect()
-    })
+    from rehiver_spark.operators import dedup
+
+    with mock.patch.object(dedup, "_NEARDUP_DRIVER_CAP", -1):
+        return on_cc_branch(branch, lambda: {
+            r["doc_id"]: r for r in dedup.fuzzy_dedup(df, threshold=0.5).collect()
+        })
 
 
 @pytest.mark.parametrize("id_type", ["bigint", "string"])
@@ -738,8 +768,12 @@ def test_fuzzy_dedup_cluster_size_is_group_count_on_both_branches(spark, id_type
     """The driver solve hands ``cluster_size`` back with its labels; on
     either branch it equals a groupBy count of ``cluster_id`` over the
     output, and both branches label identically — string ids and a
-    corpus with no near-dup pair included."""
+    corpus with no near-dup pair included. The driver pair branch, which
+    solves its pairs without ``connected_components``, labels
+    identically too."""
     from collections import Counter
+
+    from rehiver_spark.operators.dedup import fuzzy_dedup
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
     other = "a completely different document about spark plans and joins"
@@ -753,7 +787,11 @@ def test_fuzzy_dedup_cluster_size_is_group_count_on_both_branches(spark, id_type
     )
     for corpus in (df, lonely):
         both = [fuzzy_rows(branch, corpus) for branch in ("driver", "distributed")]
+        both.append(on_pair_branch("driver", lambda: {
+            r["doc_id"]: r for r in fuzzy_dedup(corpus, threshold=0.5).collect()
+        }))
         assert {k: tuple(v) for k, v in both[0].items()} == {k: tuple(v) for k, v in both[1].items()}
+        assert {k: tuple(v) for k, v in both[0].items()} == {k: tuple(v) for k, v in both[2].items()}
         rows = both[0]
         sizes = Counter(r["cluster_id"] for r in rows.values())
         assert all(r["cluster_size"] == sizes[r["cluster_id"]] for r in rows.values())
@@ -763,11 +801,15 @@ def test_fuzzy_dedup_cluster_size_is_group_count_on_both_branches(spark, id_type
 
 
 def test_fuzzy_dedup_warm_call_job_budget(spark):
-    """A warm ``fuzzy_dedup`` call, collect included, runs at most 7
-    Spark jobs, counted through a job group: 12 when the labeling still
-    sized clusters with a groupBy + join over the component map, 10
-    while the pair plan still read two cached relations, broadcast a
-    two-key band relation and took a ``distinct`` of the candidates."""
+    """A warm ``fuzzy_dedup`` call, collect included, runs at most 3
+    Spark jobs, counted through a job group: the driver branch's one
+    Arrow collect of the cached relation, then the labeling join's
+    broadcast of the local component map and the collect. The Spark
+    pair plan ran 7 (two verify broadcasts, a band broadcast and the CC
+    checkpoint); 12 when the labeling still sized clusters with a
+    groupBy + join over the component map, 10 while the pair plan still
+    read two cached relations, broadcast a two-key band relation and
+    took a ``distinct`` of the candidates."""
     import random
 
     from rehiver_spark.operators.dedup import fuzzy_dedup
@@ -797,7 +839,100 @@ def test_fuzzy_dedup_warm_call_job_budget(spark):
             assert sum(r.is_keeper for r in out) == 120
     finally:
         df.unpersist()
-    assert 0 < jobs[1] <= 7, jobs
+    assert 0 < jobs[1] <= 3, jobs
+
+
+def scala_items(seq):
+    """Python list of the elements of a Scala collection over py4j."""
+    it, out = seq.iterator(), []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def sql_plan_nodes(spark, after):
+    """``(names, last)``: the plan node names of the SQL executions with
+    an id above ``after``, and the highest execution id seen."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    names, last = [], after
+    for ex in scala_items(store.executionsList()):
+        if ex.executionId() > after:
+            last = max(last, ex.executionId())
+            names += [n.name() for n in scala_items(store.planGraph(ex.executionId()).allNodes())]
+    return names, last
+
+
+def test_minhash_neardup_warm_driver_call_runs_one_job(spark):
+    """A warm driver-branch ``minhash_neardup_pairs`` call, plus the
+    collect of its rows, runs exactly one Spark job — the Arrow collect
+    of the cached relation and its band keys — and no
+    ``BroadcastExchange``: the Spark plan broadcasts the band keys and
+    the cached relation twice, in 5 jobs."""
+    from rehiver_spark.operators.dedup import minhash_neardup_pairs
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    df = spark.createDataFrame(
+        [(i, f"{base} {i // 2} {'x' * (i % 2)}") for i in range(40)], "doc_id bigint, text string"
+    ).persist()
+    df.count()
+    sc = spark.sparkContext
+    try:
+        want = sorted(on_pair_branch("driver", lambda: minhash_neardup_pairs(df).collect()))
+        _, seen = sql_plan_nodes(spark, -1)
+        sc.setJobGroup("neardup-driver-jobs", "minhash_neardup_pairs")
+        try:
+            got = sorted(minhash_neardup_pairs(df).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        names, _ = sql_plan_nodes(spark, seen)
+    finally:
+        df.unpersist()
+    assert got == want and got
+    assert len(sc.statusTracker().getJobIdsForGroup("neardup-driver-jobs")) == 1
+    assert names and "BroadcastExchange" not in names, names
+
+
+def test_minhash_neardup_over_cap_takes_spark_plan(spark, monkeypatch, tmp_path):
+    """The driver branch runs only while the band collisions are at most
+    ``_NEARDUP_DRIVER_CAP``: one over it, the call returns the lazy
+    Spark plan (band and verify joins) with the same rows; at it, the
+    local frame. The dispatch record carries rows, collisions, cap and
+    branch."""
+    import logging
+    import re
+    from unittest import mock
+
+    from rehiver_spark.operators import dedup
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    texts = [f"{base} {i % 4}" for i in range(12)] + ["an unrelated line of text here", None]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string").write.parquet(path)
+    df = spark.read.parquet(path)
+    log = logging.getLogger(dedup.__name__)
+
+    def run():
+        with mock.patch.object(log, "info", wraps=log.info) as info:
+            out = dedup.minhash_neardup_pairs(df, threshold=0.5)
+        return out, info.call_args.args[0] % info.call_args.args[1:]
+
+    _, record = run()
+    hit = re.fullmatch(r"minhash_neardup_pairs: 13 rows, (\d+) band collisions "
+                       r"\(cap \d+\) -> driver", record)
+    assert hit, record
+    collisions = int(hit.group(1))
+    assert collisions >= 8 * 12  # 12 pairs of equal texts collide in all 8 bands
+    by_branch = {}
+    for cap, branch in ((collisions - 1, "spark"), (collisions, "driver")):
+        monkeypatch.setattr(dedup, "_NEARDUP_DRIVER_CAP", cap)
+        out, record = run()
+        assert record.endswith(f"{collisions} band collisions (cap {cap}) -> {branch}"), record
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("Join" in plan) == (branch == "spark"), plan
+        by_branch[branch] = sorted(out.collect())
+    # every pair of the 12 base variants verifies: J >= 9/11
+    assert by_branch["spark"] == by_branch["driver"] and len(by_branch["driver"]) == 66
 
 
 def test_incremental_minhash_neardup(spark):
@@ -940,13 +1075,16 @@ def test_null_text_rows_add_no_candidates(spark):
 
 
 @pytest.mark.parametrize("operator", ["minhash_neardup_pairs", "jaccard_pairs"])
-def test_pair_verify_computes_array_intersect_once(spark, operator):
+def test_pair_verify_computes_array_intersect_once(spark, operator, monkeypatch):
     """The verify step holds ONE ``array_intersect`` per candidate in
     the optimized plan. As a threshold Filter plus a projection it held
     three: the optimizer pushed the filter into the verify join's
     condition (numerator and denominator) and the projection computed
-    it again."""
+    it again. ``minhash_neardup_pairs`` runs its Spark plan (the
+    band-collision cap below zero), the plan this pins."""
     from rehiver_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_NEARDUP_DRIVER_CAP", -1)
 
     df = spark.createDataFrame(
         [(i, f"doc {i % 3} shared words for the sketch") for i in range(6)],
@@ -960,15 +1098,19 @@ def test_pair_verify_computes_array_intersect_once(spark, operator):
     assert out.count() == 3  # docs 0/3, 1/4, 2/5 are identical
 
 
-def test_minhash_neardup_small_plan_has_no_candidate_shuffle(spark, tmp_path):
+def test_minhash_neardup_small_plan_has_no_candidate_shuffle(spark, tmp_path, monkeypatch):
     """At small scale the executed pair plan has no hash shuffle and no
     aggregate: the band self-join is broadcast and keyed on one BIGINT
     (the two-key ``(band, bh)`` relation was 64.5 MiB for 15,680 band
     rows), and the first-colliding-band rule replaces the candidate
-    ``distinct``."""
+    ``distinct``. Pinned on the Spark plan (the band-collision cap
+    below zero), which over-cap corpora still run."""
     import re
 
+    from rehiver_spark.operators import dedup
     from rehiver_spark.operators.dedup import minhash_neardup_pairs
+
+    monkeypatch.setattr(dedup, "_NEARDUP_DRIVER_CAP", -1)
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = [(i, f"{base} {i // 2} {'x' * (i % 2)}") for i in range(40)]

@@ -802,6 +802,70 @@ def test_lsh_candidates_are_distinct_band_collisions(spark, texts):
     assert len(rows) == len(set(rows)), rows
     assert set(rows) == _py_band_collisions(sigs, 8)
 
+
+NEARDUP_WORDS = ["alpha", "beta", "gamma", "delta", "eps", "naïve", "東京", "straße", "𝄞x"]
+ODD_TEXTS = [None, "", "   ", "\t\n ", "naïve café 東京 の テキスト 𝄞 straße"]
+
+
+@st.composite
+def neardup_corpora(draw):
+    """``(rows, schema)`` of a corpus for the MinHash pair operators:
+    random docs over a small vocabulary with multibyte words, some with
+    a one-token edited copy (planted near-dups); one hot bucket, a
+    template of 20+ words plus copies with their last token edited, so
+    every pair of it verifies at t = 0.8; NULL, empty, whitespace-only
+    and multibyte texts; unique bigint or string ids, not in row order
+    (string ids sort differently from their numbers)."""
+    words = st.sampled_from(NEARDUP_WORDS)
+    docs = draw(st.lists(st.lists(words, max_size=25), min_size=1, max_size=10))
+    texts = [" ".join(d) for d in docs]
+    for d in draw(st.lists(st.sampled_from(docs), max_size=4)):
+        if d:
+            e = list(d)
+            e[draw(st.integers(0, len(e) - 1))] = "edited"
+            texts.append(" ".join(e))
+    template = draw(st.lists(words, min_size=20, max_size=30))
+    texts += [" ".join(template[:-1] + [f"hot{i}"]) for i in range(draw(st.integers(3, 8)))]
+    texts.append(" ".join(template))
+    texts += draw(st.lists(st.sampled_from(ODD_TEXTS), max_size=4))
+    ids = draw(st.permutations(range(len(texts))))
+    if draw(st.booleans()):
+        return [(f"id{i}", t) for i, t in zip(ids, texts)], "doc_id string, text string"
+    return list(zip(ids, texts)), "doc_id bigint, text string"
+
+
+@settings(max_examples=5, deadline=None)
+@given(neardup_corpora(), st.sampled_from([0.5, 0.8]))
+def test_neardup_driver_branch_equals_spark_plans(spark, corpus, threshold):
+    """The driver branch of ``minhash_neardup_pairs`` returns the rows
+    and column types of both Spark plans (broadcast, forced with the
+    band-collision cap; sort-merge, forced with the size gate), and
+    ``fuzzy_dedup`` on it the rows of the Spark branch, for both keep
+    policies — bit for bit, ``jaccard`` included."""
+    from test_dedup import on_pair_branch
+
+    from rehiver_spark.operators.dedup import fuzzy_dedup, minhash_neardup_pairs
+
+    rows, schema = corpus
+    df = spark.createDataFrame(rows, schema)
+
+    def result(out):
+        return out.schema.simpleString(), sorted(map(tuple, out.collect()), key=repr)
+
+    def pairs():
+        return result(minhash_neardup_pairs(df, threshold=threshold))
+
+    want = on_pair_branch("driver", pairs)
+    assert want[1]  # the hot bucket's pairs at least
+    assert on_pair_branch("spark", pairs) == want
+    assert on_pair_branch("merge", pairs) == want
+    for keep in ("min_id", "longest"):
+        def fuzzy():
+            return result(fuzzy_dedup(df, threshold=threshold, keep=keep))
+
+        assert on_pair_branch("driver", fuzzy) == on_pair_branch("spark", fuzzy), keep
+
+
 # Values at the hive-partition rail boundary: signs, `_`, non-ASCII
 # digits, %-escapes (well-formed, lone and malformed), `+`, `=`, a raw
 # newline, the literal `null` and the empty string

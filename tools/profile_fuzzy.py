@@ -1,4 +1,5 @@
-"""Per-call cost profile of ``fuzzy_dedup`` on the perfbench text corpus.
+"""Per-call cost profile of ``minhash_neardup_pairs`` and ``fuzzy_dedup``
+on the perfbench text corpus.
 
 Builds the seeded corpus with ``perfbench/gen.py`` (imported, never
 modified), keeps the exact-dedup survivors the way the
@@ -6,12 +7,18 @@ modified), keeps the exact-dedup survivors the way the
 ``--calls`` warm calls, and prints one JSON line with a list per metric,
 one entry per call. With ``--cold``, ``release_persisted()`` runs after
 every call, so each call recomputes the operator caches (shingle ids,
-signatures) that a warm call reads from the call before it:
+signatures) that a warm call reads from the call before it. With
+``--spark``, the driver branch's band-collision cap is set below zero,
+so every call takes the Spark plan and both branches can be profiled.
 
-- ``plan_gateway_calls``: py4j round trips made while building (not
-  running) the ``minhash_neardup_pairs`` plan that ``fuzzy_dedup``
-  hands to ``connected_components``, object releases excluded;
-- ``plan_build_s``: seconds spent building that plan;
+- ``branch``: the branch each ``fuzzy_dedup`` call took (``driver`` or
+  ``spark``), read from the operator's INFO dispatch record;
+- ``pairs_jobs`` / ``pairs_wall_s``: Spark jobs and seconds of one
+  ``minhash_neardup_pairs`` call plus the collect of its rows;
+- ``pairs_call_s`` / ``pairs_gateway_calls``: seconds and py4j round
+  trips (object releases excluded) of the ``minhash_neardup_pairs`` call
+  alone. On the Spark branch that is building the lazy plan; on the
+  driver branch the call is eager, so it is the whole collect and solve;
 - ``jobs_per_call``: Spark jobs of one ``fuzzy_dedup`` call including
   the caller's collect, read from ``statusTracker().getJobIdsForGroup``;
 - ``wall_s``: seconds for that call, collect included;
@@ -21,7 +28,7 @@ signatures) that a warm call reads from the call before it:
   stored formatted, e.g. ``64.5 MiB``, so the sum is good to 0.1 of the
   unit each value is printed in).
 
-Usage: ``python tools/profile_fuzzy.py [--seed 1] [--docs 2000] [--calls 3] [--cold]``
+Usage: ``python tools/profile_fuzzy.py [--seed 1] [--docs 2000] [--calls 3] [--cold] [--spark]``
 """
 
 from __future__ import annotations
@@ -29,6 +36,7 @@ from __future__ import annotations
 import argparse
 import contextlib
 import json
+import logging
 import os
 import re
 import sys
@@ -100,6 +108,31 @@ def broadcast_bytes(spark, after: int) -> tuple[int, int]:
     return total, last
 
 
+class Branches(logging.Handler):
+    """Collects the branch named at the end of each dispatch record."""
+
+    def __init__(self):
+        super().__init__(logging.INFO)
+        self.seen: list[str] = []
+
+    def emit(self, record):
+        msg = record.getMessage()
+        if " band collisions" in msg or "big corpus" in msg:
+            self.seen.append(msg.rsplit("-> ", 1)[-1])
+
+
+def timed_jobs(sc, group: str, fn):
+    """``(seconds, jobs)`` of ``fn()``, its jobs counted in job group ``group``."""
+    sc.setJobGroup(group, group)
+    t0 = time.perf_counter()
+    try:
+        fn()
+    finally:
+        wall_s = time.perf_counter() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return wall_s, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--seed", type=int, default=1)
@@ -107,52 +140,62 @@ def main() -> None:
     ap.add_argument("--calls", type=int, default=3)
     ap.add_argument("--cold", action="store_true",
                     help="release operator caches between calls")
+    ap.add_argument("--spark", action="store_true",
+                    help="force the Spark branch of the pair operators")
     args = ap.parse_args()
 
     from gen import Corpus
 
     from rehiver_spark import get_spark
+    from rehiver_spark.operators import dedup
     from rehiver_spark.session import release_persisted
-    from rehiver_spark.operators.dedup import (
-        exact_dedup, fuzzy_dedup, minhash_neardup_pairs,
-    )
 
+    if args.spark:
+        dedup._NEARDUP_DRIVER_CAP = -1
+    branches = Branches()
+    logger = logging.getLogger(dedup.__name__)
+    logger.addHandler(branches)
+    logger.setLevel(logging.INFO)
     spark = get_spark(app_name="profile-fuzzy")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
-    out = {"seed": args.seed, "docs": args.docs, "cold": args.cold, "plan_gateway_calls": [],
-           "plan_build_s": [], "jobs_per_call": [], "wall_s": [], "broadcast_bytes": []}
+    out = {"seed": args.seed, "docs": args.docs, "cold": args.cold, "spark": args.spark}
+    metrics = ("branch", "pairs_jobs", "pairs_wall_s", "pairs_call_s", "pairs_gateway_calls",
+               "jobs_per_call", "wall_s", "broadcast_bytes")
+    out.update({m: [] for m in metrics})
     _, seen = broadcast_bytes(spark, -1)
     with tempfile.TemporaryDirectory(prefix="profile-fuzzy-") as tmp:
         path = os.path.join(tmp, "corpus")
         Corpus(args.seed, args.docs).write(path)
         for call in range(args.calls + 1):
             df = spark.read.parquet(path)
-            kept = exact_dedup(df).filter("is_keeper").select("doc_id", "text").persist()
+            kept = dedup.exact_dedup(df).filter("is_keeper").select("doc_id", "text").persist()
             kept.count()
-            _, seen = broadcast_bytes(spark, seen)
             with count_gateway_calls(spark) as n:
                 t0 = time.perf_counter()
-                minhash_neardup_pairs(kept, threshold=JACCARD)
-                build_s = time.perf_counter() - t0
-            group = f"profile-fuzzy-{call}"
-            sc.setJobGroup(group, "fuzzy_dedup")
-            t0 = time.perf_counter()
-            fuzzy_dedup(kept, threshold=JACCARD).select(
-                "doc_id", "cluster_id", "is_keeper").collect()
-            wall_s = time.perf_counter() - t0
-            sc.setLocalProperty("spark.jobGroup.id", None)
+                pairs = dedup.minhash_neardup_pairs(kept, threshold=JACCARD)
+                call_s = time.perf_counter() - t0
+            pairs.collect()
+            if args.cold:
+                release_persisted()
+            pairs_s, pairs_jobs = timed_jobs(sc, f"profile-pairs-{call}", lambda: (
+                dedup.minhash_neardup_pairs(kept, threshold=JACCARD).collect()))
+            if args.cold:
+                release_persisted()
+            _, seen = broadcast_bytes(spark, seen)
+            del branches.seen[:]
+            wall_s, jobs = timed_jobs(sc, f"profile-fuzzy-{call}", lambda: (
+                dedup.fuzzy_dedup(kept, threshold=JACCARD).select(
+                    "doc_id", "cluster_id", "is_keeper").collect()))
             bcast, seen = broadcast_bytes(spark, seen)
             kept.unpersist()
             if args.cold:
                 release_persisted()
             if call == 0:
                 continue  # warm-up
-            out["plan_gateway_calls"].append(n[0])
-            out["plan_build_s"].append(round(build_s, 3))
-            out["jobs_per_call"].append(len(sc.statusTracker().getJobIdsForGroup(group)))
-            out["wall_s"].append(round(wall_s, 3))
-            out["broadcast_bytes"].append(bcast)
+            for m, v in zip(metrics, (branches.seen[-1], pairs_jobs, round(pairs_s, 3),
+                                      round(call_s, 3), n[0], jobs, round(wall_s, 3), bcast)):
+                out[m].append(v)
     spark.stop()
     print(json.dumps(out))
 
